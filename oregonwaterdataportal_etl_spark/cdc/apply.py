@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 from ..lake.table import (
     LakeTable,
     MergeResult,
+    _lww_order,
     _op_code,
     _op_decode,
     tiebreak_cols,
@@ -62,7 +63,7 @@ def lww_dedup(
     # numeric-leading per-partition sort (see LakeTable._resolve)
     kh = F.xxhash64(*[F.col(c) for c in key_cols])
     w = Window.partitionBy(kh, *[F.col(c) for c in key_cols]).orderBy(
-        F.desc(lsn_col), F.desc(t1), F.desc(t2)
+        *_lww_order(lsn_col, t1, t2)
     )
     return (
         changes.withColumn("__rn", F.row_number().over(w))

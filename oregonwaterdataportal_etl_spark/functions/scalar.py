@@ -130,13 +130,27 @@ def json_int_field(col: Column | str, key: str) -> Column:
     CDC ``props`` wire shape) without a full JSON parse.
 
     ``get_json_object`` spins up a Jackson parser per value: measured
-    2.1s for 1M tiny objects at local[32]; the anchored regex does the
-    identical extraction in 0.4s (5x) with the same null semantics
-    (missing key / null input / non-integer value -> null, via the
-    empty-match int cast). NOT valid for nested documents — a nested
-    ``"key":`` would match first; use ``get_json_object`` there."""
+    2.1s for 1M tiny objects at local[32]; the regex does the same
+    extraction in 0.4s (5x). On flat objects it agrees with
+    ``get_json_object(col, "$.<key>")`` cast to int:
+
+    - the key matches literally (``\\Q...\\E``-quoted, so ``.`` in a
+      key matches only a dot);
+    - the key's opening quote must follow ``{`` or ``,`` (whitespace
+      allowed), so ``"key":`` text inside a string value, whose quotes
+      are escaped, never matches;
+    - the value must be an integer literal not followed by ``.``, a
+      digit or an exponent, so ``1.5`` and ``1e3`` yield null instead
+      of a truncated prefix;
+    - a missing key, a null input or an out-of-range value yields null.
+
+    A quoted number (``"5"``) is a string, so it yields null here.
+    NOT valid for nested documents — a nested ``"key":`` after a ``{``
+    or ``,`` would match; use ``get_json_object`` there."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract(c, f'"{key}":\\s*(-?\\d+)', 1).cast("int")
+    quoted = "\\Q" + key.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+    pattern = '[{,]\\s*"' + quoted + '"\\s*:\\s*(-?\\d+)(?![.\\deE])'
+    return F.regexp_extract(c, pattern, 1).try_cast("int")
 
 
 def coalesce_default(col: Column | str, default) -> Column:

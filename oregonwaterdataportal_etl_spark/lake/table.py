@@ -402,6 +402,27 @@ def tiebreak_py(values) -> tuple[int, int]:
     return int(h[0:15], 16), int(h[16:31], 16)
 
 
+def _lww_order(lsn, tb1, tb2, src=None) -> list["F.Column"]:
+    """THE last-writer-wins total order, as an orderBy list (first row
+    wins): lsn desc, then the tie-break limbs desc with nulls last
+    (legacy null-limb rows lose an exact-LSN tie), then — for sides
+    that mix base and batch rows — src asc, so the base wins a full tie
+    and a redelivered identical event is a no-op. Arguments are column
+    names or Columns. The zero-exchange resolve compares the same order
+    as one struct (_zx_cand), whose null fields sort smallest."""
+    def col(c):
+        return F.col(c) if isinstance(c, str) else c
+
+    order = [
+        col(lsn).desc(),
+        col(tb1).desc_nulls_last(),
+        col(tb2).desc_nulls_last(),
+    ]
+    if src is not None:
+        order.append(col(src).asc())
+    return order
+
+
 def retry_on_conflict(fn, attempts: int = 4):
     """Run fn, retrying through CommitConflictError up to ``attempts``
     total tries — THE retry policy for writers sharing a versioned
@@ -419,7 +440,7 @@ def retry_on_conflict(fn, attempts: int = 4):
 
 def _and_all(exprs) -> "F.Column":
     """Conjunction fold — the one definition of 'rows match on every
-    key column' shared by lookup() and merge()'s pass-through split."""
+    key column' (lookup() and the changelog diff)."""
     out = None
     for e in exprs:
         out = e if out is None else (out & e)
@@ -449,6 +470,44 @@ def _rows_per_bucket(files_by_bucket: dict[str, list[str]]) -> dict[str, int]:
     return out
 
 
+# manifest fields a commit carries forward from its parent unless the
+# operation changes them, each with the value an older manifest that
+# lacks the field implies
+_SNAP_CARRIED = {
+    "schema": None,
+    "key_cols": None,
+    "num_buckets": None,
+    "dict_cols": {},
+    "tiebreak_family": "xxhash64",
+    "commit_mode": "pointer",
+    "files": {},
+    "deltas": {},
+    "tombstones": {},
+    "row_counts": {},
+}
+
+
+def _next_snapshot(parent: dict | None, summary: dict, **changed) -> dict:
+    """THE snapshot envelope: the child of ``parent`` (version + 1)
+    with every carried field that ``changed`` does not override copied
+    forward, so no commit can silently drop one (an omitted "deltas"
+    once lost pending MOR deltas). parent=None is the create commit:
+    version 0, only the given fields."""
+    unknown = set(changed) - set(_SNAP_CARRIED)
+    if unknown:
+        raise TypeError(f"not a carried snapshot field: {sorted(unknown)}")
+    if parent is None:
+        snap = {"version": 0, "parent": None}
+        snap.update((k, changed[k]) for k in _SNAP_CARRIED if k in changed)
+    else:
+        snap = {"version": parent["version"] + 1, "parent": parent["version"]}
+        for k, default in _SNAP_CARRIED.items():
+            v = changed[k] if k in changed else parent.get(k, default)
+            snap[k] = dict(v) if isinstance(v, dict) else v
+    snap["summary"] = summary
+    return snap
+
+
 @dataclass
 class MergeResult:
     """Counts + lineage for one MERGE (north_rule: per-partition
@@ -463,7 +522,6 @@ class MergeResult:
     rows_delta: int = 0  # merge-on-read: deduped events appended
     touched_buckets: list[int] = field(default_factory=list)
     partition_counts: dict[int, int] = field(default_factory=dict)
-    passthrough: bool = False  # uncontested base rows skipped the shuffle
 
     def as_dict(self) -> dict:
         return {
@@ -476,7 +534,6 @@ class MergeResult:
             "rows_delta": self.rows_delta,
             "touched_buckets": self.touched_buckets,
             "partition_counts": {str(k): v for k, v in self.partition_counts.items()},
-            "passthrough": self.passthrough,
         }
 
 
@@ -795,13 +852,11 @@ class LakeTable:
                 F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
             ).withColumnRenamed("__cand", "__cand_b")
         # delta LWW dedup over the bucketed scan: persisted limbs order
-        # cross-batch equal-LSN events, same total order as _resolve
+        # cross-batch equal-LSN events (_lww_order, no src: one side)
         ddf = spark.table(dname)
         kh = F.xxhash64(*[F.col(c) for c in key_cols])
         w = Window.partitionBy(kh, *[F.col(c) for c in key_cols]).orderBy(
-            F.desc(LSN_COL),
-            F.col(_TB1_COL).desc_nulls_last(),
-            F.col(_TB2_COL).desc_nulls_last(),
+            *_lww_order(LSN_COL, _TB1_COL, _TB2_COL)
         )
         d1 = (
             ddf.withColumn("__rn", F.row_number().over(w))
@@ -1346,13 +1401,9 @@ class LakeTable:
         # sort last: a batch event beats them on an exact-LSN tie,
         # rewriting identical content; state is unchanged, only the
         # noop-vs-update metric differs for legacy rows.)
-        order = [
-            F.desc("__lsn"),
-            F.col("__tb1").desc_nulls_last(),
-            F.col("__tb2").desc_nulls_last(),
-            F.asc("__src"),
-        ]
-        w = Window.partitionBy(*pb).orderBy(*order)
+        w = Window.partitionBy(*pb).orderBy(
+            *_lww_order("__lsn", "__tb1", "__tb2", src="__src")
+        )
         # the metrics min shares the rank's partition AND order spec
         # (its value is order-independent) with an unbounded frame, so
         # Catalyst collapses both into ONE Window operator — one pass
@@ -1397,49 +1448,13 @@ class LakeTable:
                     Window.partitionBy(
                         "__kh", *[F.col(c) for c in key_cols]
                     ).orderBy(
-                        F.desc("__lsn"),
-                        F.col("__tb1").desc_nulls_last(),
-                        F.col("__tb2").desc_nulls_last(),
-                        F.asc("__src"),
+                        *_lww_order("__lsn", "__tb1", "__tb2", src="__src")
                     )
                 )
                 .alias("__rn"),
             )
         )
         return ranked.filter(F.col("__rn") == 1).drop("__kh")
-
-    def _resolve_agg(self, base_tagged: DataFrame, upd_tagged: DataFrame,
-                     key_cols: list[str]) -> DataFrame:
-        """A/B alternative to _resolve: LWW as ONE aggregate —
-        max_by(payload struct, (lsn, -src, tb1, tb2)) + min(src) — so
-        Spark applies map-side PARTIAL aggregation before the exchange
-        (duplicate keys collapse before riding the wire; the window
-        formulation cannot, because the min-over-partition metric
-        column blocks the WindowGroupLimit rank pushdown). Semantics
-        are identical to _resolve iff the order is total — which the
-        tie-break limbs now guarantee. NOTE: the aggregate's own
-        exchange is hashpartitioning(key_cols, spark.sql.shuffle
-        .partitions); bucket-aligned single-exchange writes therefore
-        need shuffle_partitions == num_buckets in this mode. Kept
-        behind merge(resolve_strategy=...) for measured A/B — see
-        DESIGN.md for the recorded verdict."""
-        unioned = base_tagged.unionByName(upd_tagged)
-        data_cols = [c for c in unioned.columns if c not in key_cols]
-        # same total order as _resolve: lsn, limbs (struct comparison
-        # treats null as smallest == desc_nulls_last), then base-first
-        rank = F.struct(
-            F.col("__lsn").alias("l"),
-            F.col("__tb1").alias("t1"),
-            F.col("__tb2").alias("t2"),
-            (-F.col("__src")).alias("ns"),
-        )
-        agg = unioned.groupBy(*[F.col(c) for c in key_cols]).agg(
-            F.max_by(F.struct(*[F.col(c) for c in data_cols]), rank).alias("__w"),
-            F.min("__src").alias("__all_chg"),
-        )
-        return agg.select(
-            *key_cols, *[F.col(f"__w.{c}").alias(c) for c in data_cols], "__all_chg"
-        )
 
     def _read_internal(
         self,
@@ -1512,18 +1527,17 @@ class LakeTable:
                 raise ValueError(f"dict_cols[{c}] must be a non-empty list of strings")
         os.makedirs(t.data_dir, exist_ok=True)
         t._commit(
-            {
-                "version": 0,
-                "parent": None,
-                "schema": json.dumps(schema.jsonValue()),
-                "key_cols": key_cols,
-                "num_buckets": num_buckets,
-                "dict_cols": dict_cols or {},
-                "tiebreak_family": tiebreak_family,
-                "commit_mode": commit_mode,
-                "files": {},
-                "summary": {"operation": "create"},
-            }
+            _next_snapshot(
+                None,
+                {"operation": "create"},
+                schema=json.dumps(schema.jsonValue()),
+                key_cols=key_cols,
+                num_buckets=num_buckets,
+                dict_cols=dict_cols or {},
+                tiebreak_family=tiebreak_family,
+                commit_mode=commit_mode,
+                files={},
+            )
         )
         return t
 
@@ -1731,25 +1745,18 @@ class LakeTable:
             return out
 
         clone._commit(
-            {
-                "version": 1,
-                "parent": 0,
-                "schema": snap["schema"],
-                "key_cols": snap["key_cols"],
-                "num_buckets": snap["num_buckets"],
-                "dict_cols": snap.get("dict_cols", {}),
-                "tiebreak_family": snap.get("tiebreak_family", "xxhash64"),
-                "commit_mode": snap.get("commit_mode", "pointer"),
-                "files": copy_map(snap.get("files")),
-                "deltas": copy_map(snap.get("deltas")),
-                "tombstones": copy_map(snap.get("tombstones")),
-                "row_counts": dict(snap.get("row_counts", {})),
-                "summary": {
+            _next_snapshot(
+                clone.snapshot(),
+                {
                     "operation": "clone",
                     "cloned_from": self.path,
                     "cloned_version": snap["version"],
                 },
-            }
+                files=copy_map(snap.get("files")),
+                deltas=copy_map(snap.get("deltas")),
+                tombstones=copy_map(snap.get("tombstones")),
+                row_counts=snap.get("row_counts", {}),
+            )
         )
         return clone
 
@@ -1770,27 +1777,22 @@ class LakeTable:
             out = out.withColumn(LSN_COL, F.lit(lsn).cast("long"))
         out = out.withColumn(_BUCKET_COL, self._bucket_expr(snap))
         files = self._write_buckets(out, _snap=snap)
-        new_version = snap["version"] + 1
-        self._commit(
-            {
-                "version": new_version,
-                "parent": snap["version"],
-                "schema": json.dumps(
-                    T.StructType(
-                        [f for f in df.schema.fields if f.name != LSN_COL]
-                    ).jsonValue()
-                ),
-                "key_cols": snap["key_cols"],
-                "num_buckets": snap["num_buckets"],
-                "dict_cols": snap.get("dict_cols", {}),
-                "tiebreak_family": snap.get("tiebreak_family", "xxhash64"),
-                "commit_mode": snap.get("commit_mode", "pointer"),
-                "files": files,
-                "row_counts": _rows_per_bucket(files),
-                "summary": {"operation": "overwrite"},
-            }
+        new = _next_snapshot(
+            snap,
+            {"operation": "overwrite"},
+            schema=json.dumps(
+                T.StructType(
+                    [f for f in df.schema.fields if f.name != LSN_COL]
+                ).jsonValue()
+            ),
+            files=files,
+            # a full refresh replaces pending MOR state too
+            deltas={},
+            tombstones={},
+            row_counts=_rows_per_bucket(files),
         )
-        return new_version
+        self._commit(new)
+        return new["version"]
 
     # ---------------------------------------------------------- merge
     # Iceberg-safe type promotions. Parquet files written with the
@@ -1868,10 +1870,6 @@ class LakeTable:
         op_col: str = "op",
         lsn_col: str = "lsn",
         mode: str = "cow",
-        passthrough: bool = False,
-        passthrough_max_rows: int = 5_000_000,
-        resolve_strategy: str = "window",
-        _touched_override: list[int] | None = None,
         _operation_label: str = "merge",
         _summary_extra: dict | None = None,
     ) -> MergeResult:
@@ -1894,23 +1892,6 @@ class LakeTable:
         per-bucket delta files (delete tombstones included); reads and
         compact() resolve. Write-optimized: apply cost is independent
         of table size (the Hudi-MOR / Iceberg-v2-deletes pattern).
-
-        passthrough (cow only, auto-gated, DEFAULT OFF): when the
-        touched base dwarfs the batch (steady state), uncontested base
-        rows — keys absent from the batch — skip the resolve exchange
-        entirely via a broadcast anti-join and a map-side rewrite; only
-        contested rows + the batch ride the shuffle. Shuffle bytes drop
-        from O(touched base + batch) to O(batch + contested), at the
-        cost of scanning the touched base TWICE (semi-join job +
-        anti-join job). Measured locally (base 16M / batch 1M, 8
-        cores): 7.7s off vs 10.1s on — on single-node NVMe the extra
-        parquet decode costs more than the in-memory shuffle it avoids,
-        hence the default. Enable on network-bound clusters where
-        shuffle write+transfer+read dominates a column-pruned rescan;
-        for truly base-size-independent applies use mode="mor".
-        Requires a deterministic updates DataFrame (enforced at bucket
-        granularity by the stray guard below); passthrough_max_rows
-        bounds the broadcast key set.
         """
         spark = updates.sparkSession
         snap = self.snapshot()
@@ -1950,31 +1931,24 @@ class LakeTable:
         for c in key_cols:
             if c in upd_types and upd_types[c] != stored_keys[c]:
                 upd = upd.withColumn(c, F.col(c).cast(stored_keys[c]))
-        batch_rows: int | None = None
-        if _touched_override is not None:
-            touched = sorted(_touched_override)
-        elif snap["files"] or snap.get("deltas") or snap.get("tombstones"):
+        if snap["files"] or snap.get("deltas") or snap.get("tombstones"):
             bstats = upd.groupBy(bexpr.alias("b")).count().collect()
             touched = sorted(r["b"] for r in bstats)
-            batch_rows = sum(r["count"] for r in bstats)
         else:
             touched = list(range(n_buckets))
 
         dicts = snap.get("dict_cols") or {}
         tb_family = snap.get("tiebreak_family", "xxhash64")
 
-        def tag_updates(df):
-            t1, t2 = self._update_tiebreak(df.columns, evolved, op_col, tb_family)
-            return df.select(
-                *self._tag_select(df.columns, evolved, dicts),
-                F.col(lsn_col).cast("long").alias("__lsn"),
-                _op_code(F.col(op_col)).alias("__op"),
-                F.lit(1).alias("__src"),
-                t1.alias("__tb1"),
-                t2.alias("__tb2"),
-            )
-
-        upd_tagged = tag_updates(upd)
+        t1, t2 = self._update_tiebreak(upd.columns, evolved, op_col, tb_family)
+        upd_tagged = upd.select(
+            *self._tag_select(upd.columns, evolved, dicts),
+            F.col(lsn_col).cast("long").alias("__lsn"),
+            _op_code(F.col(op_col)).alias("__op"),
+            F.lit(1).alias("__src"),
+            t1.alias("__tb1"),
+            t2.alias("__tb2"),
+        )
 
         # -- merge-on-read fast path --------------------------------
         # Apply cost independent of table size: dedup the batch alone
@@ -2026,49 +2000,7 @@ class LakeTable:
                 )
             )
 
-        # -- steady-state pass-through split -------------------------
-        # At base >> batch (the 10^10-row steady state) most base rows
-        # in touched buckets are UNCONTESTED: no batch event shares
-        # their key, so the LWW window cannot change them. Split them
-        # out with a broadcast anti-join on the batch's (distinct) keys
-        # and write them back map-side — they never ride the resolve
-        # exchange. Shuffle bytes become O(batch + contested) instead of
-        # O(touched base + batch). Null-safe equality keeps null-keyed
-        # rows contested (preserving the window-path semantics).
-        # Gated on per-bucket row-count lineage (snapshot "row_counts")
-        # so small-base merges keep the cheaper single-path plan, and on
-        # batch size so the broadcast stays bounded.
         base = self._read_internal(spark, buckets=touched, _snap=snap)
-        row_counts = snap.get("row_counts") or {}
-        base_rows_touched = sum(row_counts.get(str(b), 0) for b in touched)
-        use_passthrough = bool(
-            passthrough
-            and existing_deltas is None
-            and batch_rows is not None
-            and 0 < batch_rows <= passthrough_max_rows
-            and base_rows_touched > 2 * batch_rows
-        )
-        passthru = None
-        if use_passthrough:
-            # pin ONE evaluation of the batch: if the broadcast key set
-            # and the window input came from different evaluations of a
-            # non-deterministic source, a key present in the window but
-            # absent from the keys would be written BOTH by the anti-join
-            # pass-through and by the window — silent duplicate rows
-            # (the bucket-granularity stray guard cannot see it). The
-            # checkpoint makes key-granularity divergence impossible.
-            upd = upd.localCheckpoint(eager=True)
-            upd_tagged = tag_updates(upd)
-            bkeys = upd.select(
-                *[F.col(c).alias(f"__k_{c}") for c in key_cols]
-            ).distinct()
-            cond = _and_all(
-                base[c].eqNullSafe(bkeys[f"__k_{c}"]) for c in key_cols
-            )
-            contested = base.join(F.broadcast(bkeys), cond, "left_semi")
-            passthru = base.join(F.broadcast(bkeys), cond, "left_anti")
-            base = contested
-
         base_tagged = base.select(
             *self._tag_select(base.columns, evolved, dicts),
             F.col(LSN_COL).alias("__lsn"),
@@ -2082,8 +2014,6 @@ class LakeTable:
         # a stale lower-LSN event for a deleted key loses to the
         # tombstone instead of resurrecting the row (LWW across the
         # delete horizon). Winning tombstones get re-emitted below.
-        # (They stay on the window path even under pass-through: the
-        # delete set is small and must compete with batch events.)
         tomb = self._read_tombstones(spark, snap, buckets=touched)
         if tomb is not None:
             base_tagged = base_tagged.unionByName(
@@ -2108,14 +2038,10 @@ class LakeTable:
         # the W1 LWW operator (userCode/awqms/dag.py:155-187), ordered
         # by lsn desc with base-first tie-break (replayed same-LSN
         # events are no-ops).
-        if resolve_strategy == "agg":
-            winners = self._resolve_agg(base_tagged, upd_tagged, key_cols)
-        else:
-            winners = self._resolve(base_tagged, upd_tagged, key_cols, n_buckets)
+        winners = self._resolve(base_tagged, upd_tagged, key_cols, n_buckets)
 
         return self._finalize_cow(
             spark, snap, evolved, dicts, winners, touched, bexpr,
-            passthru=passthru, use_passthrough=use_passthrough,
             _operation_label=_operation_label,
             _summary_extra=_summary_extra,
         )
@@ -2129,18 +2055,15 @@ class LakeTable:
         winners: DataFrame,
         touched: list[int],
         bexpr,
-        passthru: DataFrame | None = None,
-        use_passthrough: bool = False,
         _operation_label: str = "merge",
         _summary_extra: dict | None = None,
     ) -> MergeResult:
         """Shared copy-on-write tail: winners (columns = payload [dict-
         encoded per ``dicts``] + __lsn/__tb1/__tb2/__op/__all_chg[/__src])
         -> action classification -> single-pass bucketed write ->
-        metrics scan -> snapshot commit. Used by merge() (window/agg
-        resolve) and merge_prebucketed() (join resolve)."""
-        key_cols: list[str] = snap["key_cols"]
-        n_buckets = snap["num_buckets"]
+        metrics scan -> snapshot commit. Used by merge() (window
+        resolve), merge_prebucketed() (join resolve) and the
+        zero-exchange delta fold."""
         # -- single-pass write + metrics ----------------------------
         # ONE Spark job writes everything: surviving rows land in
         # _del=false; winning deletes AND carried tombstones land in
@@ -2193,51 +2116,28 @@ class LakeTable:
         new_files: dict[str, list[str]] = {}
         new_tombs: dict[str, list[str]] = {}
         all_files: list[str] = []
-
-        def collect_written(d: str) -> None:
-            for entry in os.listdir(d):
-                if not entry.startswith(f"{_BUCKET_COL}="):
-                    continue
-                b = entry.split("=")[1]
-                for sub in os.listdir(os.path.join(d, entry)):
-                    subdir = os.path.join(d, entry, sub)
-                    flist = [
-                        os.path.join(subdir, f)
-                        for f in os.listdir(subdir)
-                        if f.endswith(".parquet")
-                    ]
-                    all_files.extend(flist)
-                    if sub == f"{_DEL_COL}=false":
-                        new_files[b] = sorted(new_files.get(b, []) + flist)
-                    else:
-                        new_tombs[b] = sorted(new_tombs.get(b, []) + flist)
-
-        collect_written(out_dir)
-        if passthru is not None:
-            # map-side write: parquet scan -> broadcast anti-join ->
-            # partitionBy — NO exchange (each base file is single-bucket,
-            # so tasks write at most a few partition dirs). Uncontested
-            # rows keep their stored (possibly narrower) schema; reads
-            # null-fill evolved columns.
-            pout = passthru.select(
-                "*",
-                F.lit("noop").alias(_ACTION_COL),
-                bexpr.alias(_BUCKET_COL),
-                F.lit(False).alias(_DEL_COL),
-            )
-            ob_pass = Observation()
-            pout = pout.observe(ob_pass, F.count(F.lit(1)).alias("noop"))
-            pass_dir = os.path.join(self.data_dir, f"p-{uuid.uuid4().hex}")
-            pout.write.partitionBy(_BUCKET_COL, _DEL_COL).mode("overwrite").parquet(
-                pass_dir
-            )
-            collect_written(pass_dir)
+        for entry in os.listdir(out_dir):
+            if not entry.startswith(f"{_BUCKET_COL}="):
+                continue
+            b = entry.split("=")[1]
+            for sub in os.listdir(os.path.join(out_dir, entry)):
+                subdir = os.path.join(out_dir, entry, sub)
+                flist = [
+                    os.path.join(subdir, f)
+                    for f in os.listdir(subdir)
+                    if f.endswith(".parquet")
+                ]
+                all_files.extend(flist)
+                if sub == f"{_DEL_COL}=false":
+                    new_files[b] = sorted(new_files.get(b, []) + flist)
+                else:
+                    new_tombs[b] = sorted(new_tombs.get(b, []) + flist)
         # -- non-deterministic-source guard --------------------------
-        # `updates` is evaluated multiple times (touched-bucket scan,
-        # pass-through key set, resolve/write). A non-deterministic
-        # source whose later evaluation buckets outside `touched` would
-        # replace those buckets with ONLY the new rows, silently
-        # dropping their unread base rows. Abort BEFORE commit instead:
+        # `updates` is evaluated twice (touched-bucket scan, then
+        # resolve/write). A non-deterministic source whose later
+        # evaluation buckets outside `touched` would replace those
+        # buckets with ONLY the new rows, silently dropping their
+        # unread base rows. Abort BEFORE commit instead:
         # no snapshot is written, the orphan write dir is vacuum-safe
         # (age-gated), and the caller is told to checkpoint the batch.
         stray = {
@@ -2257,10 +2157,6 @@ class LakeTable:
             # metrics are final; guard on all_files keeps the empty-
             # write case identical to the old read-back behavior
             counts = {k: v for k, v in ob.get.items() if v}
-            if passthru is not None:
-                pn = ob_pass.get.get("noop", 0)
-                if pn:
-                    counts["noop"] = counts.get("noop", 0) + pn
 
         # carry untouched buckets forward (copy-on-write pruning);
         # deltas and tombstones of touched buckets were folded in and
@@ -2277,7 +2173,7 @@ class LakeTable:
         for b, flist in new_files.items():
             files[b] = flist
         # per-bucket row lineage from parquet footers (no data scan,
-        # threaded opens); powers the pass-through gate + metrics
+        # threaded opens); read by stats, metadata frames and maintenance
         row_counts.update(_rows_per_bucket(new_files))
         for b, flist in new_tombs.items():
             tombstones[b] = flist
@@ -2292,25 +2188,18 @@ class LakeTable:
             rows_dropped=counts.get("dropped", 0),
             touched_buckets=touched,
             partition_counts=part_counts,
-            passthrough=use_passthrough,
         )
         self._commit(
-            {
-                "version": new_version,
-                "parent": snap["version"],
-                "schema": json.dumps(evolved.jsonValue()),
-                "key_cols": key_cols,
-                "num_buckets": n_buckets,
-                "dict_cols": snap.get("dict_cols", {}),
-                "tiebreak_family": snap.get("tiebreak_family", "xxhash64"),
-                "commit_mode": snap.get("commit_mode", "pointer"),
-                "files": files,
-                "deltas": deltas,
-                "tombstones": tombstones,
-                "row_counts": row_counts,
-                "summary": {"operation": _operation_label, **result.as_dict(),
-                            **(_summary_extra or {})},
-            }
+            _next_snapshot(
+                snap,
+                {"operation": _operation_label, **result.as_dict(),
+                 **(_summary_extra or {})},
+                schema=json.dumps(evolved.jsonValue()),
+                files=files,
+                deltas=deltas,
+                tombstones=tombstones,
+                row_counts=row_counts,
+            )
         )
         return result
 
@@ -2320,7 +2209,7 @@ class LakeTable:
                  key_cols: list[str], nonkey: list,
                  extra: tuple = ()) -> DataFrame:
         """One side's per-key candidate struct: rank fields FIRST so a
-        single greatest() applies the exact _resolve total order —
+        single greatest() applies the _lww_order total order —
         (lsn, tb1, tb2, -src); struct comparison treats null fields as
         smallest, matching desc_nulls_last. ``src`` is an int for a
         homogeneous side or a Column of per-row src values (the
@@ -2371,8 +2260,8 @@ class LakeTable:
         disjoint but deltas overlap both and repeat per key, so the
         combined side is pre-deduped to one row per key by a window
         whose clustering the bucketed scan already satisfies, ordered
-        by the exact _resolve total order (lsn desc, limbs
-        desc_nulls_last, src asc — base beats batch on a full tie).
+        by _lww_order with the src bit (base beats batch on a full
+        tie).
         __had_bt preserves merge()'s __all_chg semantics (min(__src)
         over b/t rows only): a delta-only key still counts as
         all-changed, keeping insert-vs-update / delete-vs-dropped
@@ -2440,10 +2329,7 @@ class LakeTable:
         kh = F.xxhash64(*[F.col(c) for c in key_cols])
         pb = [kh, *[F.col(c) for c in key_cols]]
         w = Window.partitionBy(*pb).orderBy(
-            F.desc(LSN_COL),
-            F.col(_TB1_COL).desc_nulls_last(),
-            F.col(_TB2_COL).desc_nulls_last(),
-            src.asc(),
+            *_lww_order(LSN_COL, _TB1_COL, _TB2_COL, src=src)
         )
         # share the rank's partition+order spec with an unbounded frame
         # so both functions collapse into ONE Window operator (the max
@@ -2482,7 +2368,10 @@ class LakeTable:
         per-key winner — already resolved by _zx_base_tomb_side's
         no-exchange dedup window — passes straight through, no join."""
         if upd_side is None:
-            assert base_side is not None
+            if base_side is None:
+                raise ValueError(
+                    "_zx_winners needs an update side, a base side, or both"
+                )
             winner = F.col("__cand_b")
             base_side_present = (
                 F.col("__had_bt").eqNullSafe(F.lit(True))
@@ -2663,7 +2552,7 @@ class LakeTable:
             t1, t2 = self._update_tiebreak(upd.columns, evolved, op_col, tb_family)
             kh = F.xxhash64(*[F.col(c) for c in key_cols])
             w = Window.partitionBy(kh, *[F.col(c) for c in key_cols]).orderBy(
-                F.desc(lsn_col), t1.desc_nulls_last(), t2.desc_nulls_last()
+                *_lww_order(lsn_col, t1, t2)
             )
             upd1 = (
                 upd.withColumn("__rn", F.row_number().over(w))
@@ -2709,9 +2598,12 @@ class LakeTable:
         window-resolve fold inside compact() shuffled ~3 GB per pass
         and dominated the MOR runner loop (BENCH.md §6b: 48-88s of each
         compaction cycle); this path does the same state transition
-        with KB-level shuffle. Semantics identical to
-        merge(empty, _touched_override=touched): same candidate
-        encoding, same total order, same action metrics."""
+        with KB-level shuffle. Semantics identical to a cow merge of an
+        empty batch over the touched buckets: same total order, same
+        action metrics. The fold rewrites storage but not the RESOLVED
+        row set, so it is labeled "compact-fold", not "merge":
+        logical-staleness consumers (AnnIndex.stale) must not treat it
+        as a data change."""
         import shutil
 
         snap = self.snapshot()
@@ -2792,24 +2684,16 @@ class LakeTable:
             touched_buckets=sorted(int(b) for b in new_delta),
             partition_counts={int(b): len(fl) for b, fl in new_delta.items()},
         )
+        # base files, tombstones and base row lineage carry as-is:
+        # deltas are not base rows
         self._commit(
-            {
-                "version": new_version,
-                "parent": snap["version"],
-                "schema": json.dumps(evolved.jsonValue()),
-                "key_cols": key_cols,
-                "num_buckets": n_buckets,
-                "dict_cols": snap.get("dict_cols", {}),
-                "tiebreak_family": snap.get("tiebreak_family", "xxhash64"),
-                "commit_mode": snap.get("commit_mode", "pointer"),
-                "files": dict(snap["files"]),
-                "deltas": deltas,
-                "tombstones": dict(snap.get("tombstones", {})),
-                # deltas are not base rows: base row lineage carries as-is
-                "row_counts": dict(snap.get("row_counts", {})),
-                "summary": {"operation": "merge-mor", **result.as_dict(),
-                            **(_summary_extra or {})},
-            }
+            _next_snapshot(
+                snap,
+                {"operation": "merge-mor", **result.as_dict(),
+                 **(_summary_extra or {})},
+                schema=json.dumps(evolved.jsonValue()),
+                deltas=deltas,
+            )
         )
         return result
 
@@ -2861,23 +2745,19 @@ class LakeTable:
                 f"cannot roll back to version {version}: {len(missing)} data "
                 f"files already vacuumed (first: {missing[0]})"
             )
+        # the target's layout and data, committed on top of cur: history
+        # moves forward, so the commit mode stays cur's
         new_version = cur["version"] + 1
         self._commit(
-            {
-                "version": new_version,
-                "parent": cur["version"],
-                "schema": target["schema"],
-                "key_cols": target["key_cols"],
-                "num_buckets": target["num_buckets"],
-                "dict_cols": target.get("dict_cols", {}),
-                "tiebreak_family": target.get("tiebreak_family", "xxhash64"),
-                "commit_mode": cur.get("commit_mode", "pointer"),
-                "files": dict(target["files"]),
-                "deltas": dict(target.get("deltas", {})),
-                "tombstones": dict(target.get("tombstones", {})),
-                "row_counts": dict(target.get("row_counts", {})),
-                "summary": {"operation": "rollback", "to_version": version},
-            }
+            _next_snapshot(
+                cur,
+                {"operation": "rollback", "to_version": version},
+                **{
+                    k: target.get(k, default)
+                    for k, default in _SNAP_CARRIED.items()
+                    if k != "commit_mode"
+                },
+            )
         )
         # check-then-commit race: a vacuum that started BEFORE this commit
         # may delete the target's files (they looked expired to it). Once
@@ -2901,7 +2781,6 @@ class LakeTable:
         spark: SparkSession,
         target_files_per_bucket: int = 1,
         min_delta_files: int = 1,
-        fold_strategy: str = "zx",
         cluster_by: list[str] | None = None,
         cluster_bits: int = 16,
         row_group_bytes: int | None = None,
@@ -2914,16 +2793,13 @@ class LakeTable:
         already-compact buckets (their file refs carry forward).
 
         Merge-on-read deltas are folded into the base first (the MOR
-        compaction step): replaying the delta rows through the cow
-        merge resolves LWW + tombstones and clears the delta list.
-        min_delta_files selects WHICH buckets fold: only those carrying
-        at least that many delta files (at 10^10 scale you fold the
-        read-amplified tail, not the whole table).
-
-        fold_strategy='zx' (default) folds deltas through the
-        zero-exchange resolve (_fold_deltas_zx — KB-level shuffle
-        instead of re-shuffling the touched base; see DESIGN.md §13);
-        'window' keeps the original one-exchange merge fold.
+        compaction step) through the zero-exchange resolve
+        (_fold_deltas_zx — KB-level shuffle instead of re-shuffling the
+        touched base; see DESIGN.md §13), which resolves LWW +
+        tombstones and clears the delta list. min_delta_files selects
+        WHICH buckets fold: only those carrying at least that many
+        delta files (at 10^10 scale you fold the read-amplified tail,
+        not the whole table).
 
         cluster_by: Z-ORDER the rewrite (Delta OPTIMIZE ZORDER analog).
         Every bucket is rewritten (re-clustering is the point, so the
@@ -2936,40 +2812,13 @@ class LakeTable:
         key lookups. The resolved row SET is unchanged either way.
         row_group_bytes caps parquet row-group size (finer stats
         granularity; also the knob the clustering tests pin)."""
-        if fold_strategy not in ("zx", "window"):
-            raise ValueError(f"unknown fold_strategy {fold_strategy!r}")
         snap = self.snapshot()
         fold_buckets = [
             int(b) for b, fl in snap.get("deltas", {}).items()
             if len(fl) >= min_delta_files
         ]
-        if fold_buckets and fold_strategy == "zx":
+        if fold_buckets:
             self._fold_deltas_zx(spark, fold_buckets)
-            snap = self.snapshot()
-        elif fold_buckets:
-            # an empty updates batch + explicit touched set: merge's own
-            # existing-deltas fold does the work, so delta files are read
-            # once, not twice
-            schema = T.StructType.fromJson(json.loads(snap["schema"]))
-            empty = spark.createDataFrame(
-                [],
-                T.StructType(
-                    list(schema.fields)
-                    + [
-                        T.StructField("lsn", T.LongType()),
-                        T.StructField("op", T.StringType()),
-                    ]
-                ),
-            )
-            # the fold rewrites storage but not the RESOLVED row set, so
-            # it is labeled as file churn: logical-staleness consumers
-            # (AnnIndex.stale) must not treat a delta-folding compact as
-            # a data change (review finding — it previously read as
-            # operation="merge" and forced spurious index rebuilds)
-            self.merge(
-                empty, mode="cow", _touched_override=fold_buckets,
-                _operation_label="compact-fold",
-            )
             snap = self.snapshot()
         to_rewrite = {
             b: fl for b, fl in snap["files"].items()
@@ -3018,37 +2867,25 @@ class LakeTable:
         # get it backfilled here from the fresh files' parquet footers
         row_counts = dict(snap.get("row_counts", {}))
         row_counts.update(_rows_per_bucket(new_files))
-        new_version = snap["version"] + 1
-        self._commit(
+        # unfolded deltas and the tombstones carry forward
+        new = _next_snapshot(
+            snap,
             {
-                "version": new_version,
-                "parent": snap["version"],
-                "schema": snap["schema"],
-                "key_cols": snap["key_cols"],
-                "num_buckets": snap["num_buckets"],
-                "dict_cols": snap.get("dict_cols", {}),
-                "tiebreak_family": snap.get("tiebreak_family", "xxhash64"),
-                "commit_mode": snap.get("commit_mode", "pointer"),
-                "files": files,
-                # unfolded deltas MUST carry forward — omitting this key
-                # silently dropped them from the snapshot (review find)
-                "deltas": dict(snap.get("deltas", {})),
-                "tombstones": dict(snap.get("tombstones", {})),
-                "row_counts": row_counts,
-                "summary": {
-                    "operation": "compact",
-                    "rewritten_buckets": sorted(int(b) for b in to_rewrite),
-                    "files_before": len(all_small),
-                    "files_after": sum(len(fl) for fl in new_files.values()),
-                    **(
-                        {"clustered_by": list(cluster_by)}
-                        if cluster_by is not None
-                        else {}
-                    ),
-                },
-            }
+                "operation": "compact",
+                "rewritten_buckets": sorted(int(b) for b in to_rewrite),
+                "files_before": len(all_small),
+                "files_after": sum(len(fl) for fl in new_files.values()),
+                **(
+                    {"clustered_by": list(cluster_by)}
+                    if cluster_by is not None
+                    else {}
+                ),
+            },
+            files=files,
+            row_counts=row_counts,
         )
-        return new_version
+        self._commit(new)
+        return new["version"]
 
     @staticmethod
     def _snap_files(snap: dict) -> set[str]:
@@ -3114,29 +2951,21 @@ class LakeTable:
         new_files = rewrite(snap["files"], stored)
         new_tombs = rewrite(snap.get("tombstones"), stored)
         new_deltas = rewrite(snap.get("deltas"), delta_schema)
-        new_version = snap["version"] + 1
-        self._commit(
+        new = _next_snapshot(
+            snap,
             {
-                "version": new_version,
-                "parent": snap["version"],
-                "schema": snap["schema"],
-                "key_cols": snap["key_cols"],
-                "num_buckets": new_num_buckets,
-                "dict_cols": snap.get("dict_cols", {}),
-                "tiebreak_family": snap.get("tiebreak_family", "xxhash64"),
-                "commit_mode": snap.get("commit_mode", "pointer"),
-                "files": new_files,
-                "deltas": new_deltas,
-                "tombstones": new_tombs,
-                "row_counts": _rows_per_bucket(new_files),
-                "summary": {
-                    "operation": "rebucket",
-                    "from_buckets": snap["num_buckets"],
-                    "to_buckets": new_num_buckets,
-                },
-            }
+                "operation": "rebucket",
+                "from_buckets": snap["num_buckets"],
+                "to_buckets": new_num_buckets,
+            },
+            num_buckets=new_num_buckets,
+            files=new_files,
+            deltas=new_deltas,
+            tombstones=new_tombs,
+            row_counts=_rows_per_bucket(new_files),
         )
-        return new_version
+        self._commit(new)
+        return new["version"]
 
     def vacuum(self, keep_last: int = 1, orphan_grace_seconds: float = 86400.0) -> int:
         """GC data files not referenced by the newest ``keep_last``
@@ -3339,24 +3168,14 @@ class LakeTable:
                     if f.endswith(".parquet")
                 ]
         self._commit(
-            {
-                "version": snap["version"] + 1,
-                "parent": snap["version"],
-                "schema": snap["schema"],
-                "key_cols": snap["key_cols"],
-                "num_buckets": snap["num_buckets"],
-                "dict_cols": snap.get("dict_cols", {}),
-                "tiebreak_family": snap.get("tiebreak_family", "xxhash64"),
-                "commit_mode": snap.get("commit_mode", "pointer"),
-                "files": dict(snap["files"]),
-                "deltas": dict(snap.get("deltas", {})),
-                "tombstones": new_tombs,
-                "row_counts": dict(snap.get("row_counts", {})),
-                "summary": {
+            _next_snapshot(
+                snap,
+                {
                     "operation": "expire-tombstones",
                     "below_lsn": below_lsn,
                     "removed": removed,
                 },
-            }
+                tombstones=new_tombs,
+            )
         )
         return removed

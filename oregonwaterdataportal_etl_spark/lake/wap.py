@@ -656,7 +656,13 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
                 intent[value] = {"pre": pre, "pub": pre + 1}
                 self._write_intent(intent)
                 pub = WapStage(self.partition_dir(value), self.wap_id).publish()
-                assert pub == pre + 1
+                if pub != pre + 1:
+                    # the marker above already recorded pre + 1: a
+                    # mismatch would misclassify this child on rollback
+                    raise RuntimeError(
+                        f"wap stage {self.wap_id!r}: child {value!r} "
+                        f"published version {pub}, expected {pre + 1}"
+                    )
                 vector[value] = pub
                 undo.append((value, pre, pub))
             snap["partitions"] = vector

@@ -118,7 +118,7 @@ def zero_exchange_fold_plan(spark, tmp) -> str:
 
 
 def zero_exchange_compact_fold_plan(spark, tmp) -> str:
-    """compact(fold_strategy='zx'): the delta fold with NO update side
+    """compact()'s delta fold: NO update side
     and NO join — base/tomb/delta winners resolve from the bucketed
     scan's own partitioning and pass straight to the write."""
     t = LakeTable.create(
@@ -180,10 +180,10 @@ def main() -> None:
         ),
         (
             "Zero-exchange compaction delta fold (round 5)",
-            "compact(fold_strategy='zx') — the fold has no update side and "
+            "compact() — the fold has no update side and "
             "no join: base/tomb/delta winners resolve from the bucketed "
             "scan's own partitioning. Pinned by "
-            "test_zx_delta_fold_equals_window_fold",
+            "test_zx_delta_fold_equals_oracle_fold",
             zero_exchange_compact_fold_plan(spark, tmp),
         ),
         (

@@ -353,33 +353,42 @@ def test_prebucketed_delta_fold_keeps_untouched_buckets(spark, tmp_path):
     assert _state(spark, twin) == _state(spark, zx)
 
 
-def test_zx_delta_fold_equals_window_fold(spark, tmp_path):
-    """compact(fold_strategy='zx') — the zero-exchange delta fold —
-    reaches exactly the state of the original window-resolve fold
-    (same rows, no pending deltas, tombstones preserved), and the fold
-    plan itself carries zero Exchange. Covers base+delta overlap,
-    delta-only keys, deletes, and cross-batch equal-LSN limbs."""
-    win, zx = _twins(spark, tmp_path, name="fold")
+def test_zx_delta_fold_equals_oracle_fold(spark, tmp_path):
+    """compact()'s zero-exchange delta fold reaches exactly the
+    sequential oracle fold of the three batches (same rows, no pending
+    deltas, tombstones preserved), and the fold plan itself carries
+    zero Exchange. Covers base+delta overlap, delta-only keys, deletes
+    and two stacked delta layers."""
+    from oregonwaterdataportal_etl_spark.cdc import oracle_fold
+
+    zx = LakeTable.create(
+        str(tmp_path / "fold_zx"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=NB
+    )
     b1 = _stream(spark, 3000, seed=61).localCheckpoint()
     b2 = _stream(spark, 1500, seed=62, lsn_start=3000).localCheckpoint()
     b3 = _stream(spark, 1200, seed=63, lsn_start=4500).localCheckpoint()
-    for t in (win, zx):
-        t.merge(b1)           # cow base
-        t.merge(b2, mode="mor")  # pending deltas on top
-        t.merge(b3, mode="mor")  # second delta layer (cross-batch ties)
-        assert t.snapshot().get("deltas")
+    zx.merge(b1)              # cow base
+    zx.merge(b2, mode="mor")  # pending deltas on top
+    zx.merge(b3, mode="mor")  # second delta layer
+    assert zx.snapshot().get("deltas")
 
-    win.compact(spark, fold_strategy="window")
+    events = [r.asDict() for b in (b1, b2, b3) for r in b.collect()]
+    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
+    expected = sorted(
+        tuple(v[c] for c in cols)
+        for v in oracle_fold(
+            events, columns=[f.name for f in TRANSCRIPT_SCHEMA.fields]
+        ).values()
+    )
+
     plans = []
     fold_buckets = [int(b) for b in zx.snapshot()["deltas"]]
     zx._fold_deltas_zx(spark, fold_buckets, _plan_out=plans)
     zx.compact(spark)  # bin-pack only: deltas already folded
 
-    assert not win.snapshot().get("deltas")
     assert not zx.snapshot().get("deltas")
-    assert _state(spark, win) == _state(spark, zx)
-    # tombstones survive the fold on both paths
-    assert win.stats()["tombstone_files"] > 0
+    assert _state(spark, zx) == expected
+    # tombstones survive the fold
     assert zx.stats()["tombstone_files"] > 0
     plan = plans[0]
     assert "Exchange" not in plan, plan
@@ -392,10 +401,8 @@ def test_zx_delta_fold_equals_window_fold(spark, tmp_path):
 
     # and a later ordinary merge on the folded table behaves (LWW guard
     # still wins over stale replays of already-folded LSNs)
-    b2_replay = b2
-    win.merge(b2_replay)
-    zx.merge(b2_replay)
-    assert _state(spark, win) == _state(spark, zx)
+    zx.merge(b2)
+    assert _state(spark, zx) == expected
 
 
 def test_runner_mor_cadence_uses_zx_fold(spark, tmp_path):

@@ -151,3 +151,58 @@ def test_circle_polygon(spark):
                     + math.cos(p1) * math.cos(p2) * math.cos(dlam))
             ) * EARTH_RADIUS_M
             assert abs(d - radius_m) < 1.0, (d, radius_m)
+
+
+# ------------------------------------------------------ json_int_field
+def _json_k(spark, payloads, key="k"):
+    df = spark.createDataFrame([(i, p) for i, p in enumerate(payloads)], "i int, s string")
+    rows = df.select(
+        "i",
+        scalar.json_int_field("s", key).alias("fast"),
+        F.get_json_object("s", f"$.{key}").try_cast("int").alias("parsed"),
+    ).collect()
+    return {r["i"]: (r["fast"], r["parsed"]) for r in sorted(rows)}
+
+
+def test_json_int_field_equals_get_json_object_on_flat_payloads(spark):
+    payloads = [
+        '{"k":5}',
+        '{"k": -7 ,"x":1}',
+        '{ "k" : 12 }',
+        '{"kk":3,"k":4}',
+        '{"x":"a,b","k":0}',
+        '{"k":null}',
+        "{}",
+        None,
+        '{"k":99999999999}',
+    ]
+    got = _json_k(spark, payloads)
+    for i, p in enumerate(payloads):
+        fast, parsed = got[i]
+        assert fast == parsed, (p, fast, parsed)
+    # plain cast agrees wherever the value is an in-range integer
+    assert [got[i][0] for i in range(5)] == [5, -7, 12, 4, 0]
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        r'{"m":"\"k\": 9","k":5}',  # "k": text inside a string value
+        '{"m":"\"k\": 9","k":5}',  # the same with its escapes dropped
+        r'{"\"k":9,"k":5}',  # a key ending in k after an escaped quote
+    ],
+)
+def test_json_int_field_ignores_key_text_inside_strings(spark, payload):
+    assert _json_k(spark, [payload])[0][0] == 5
+
+
+@pytest.mark.parametrize("payload", ['{"k":1.5}', '{"k":1e3}', '{"k":2E1}', '{"x":1}'])
+def test_json_int_field_non_integral_or_missing_is_null(spark, payload):
+    assert _json_k(spark, [payload])[0] == (None, None)
+
+
+def test_json_int_field_escapes_the_key(spark):
+    """A '.' in the key matches only a dot, not any character."""
+    got = _json_k(spark, ['{"aXb":9,"a.b":5}', '{"aXb":9}'], key="a.b")
+    assert got[0][0] == 5
+    assert got[1][0] is None

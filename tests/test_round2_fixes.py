@@ -193,11 +193,42 @@ def test_runner_expires_tombstones_on_compact_cycle(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["conv_id"] == "c2"
 
 
-# --------------------------------------------------- passthrough merge
-def test_passthrough_merge_equals_window_merge(spark, tmp_path):
-    """Steady-state split (uncontested base rows skip the shuffle) must
-    produce EXACTLY the same table state as the pure window path, across
-    updates, deletes, stale events, and new keys."""
+# ------------------------------------------------- snapshot lineage
+def _assert_lineage(spark, t, created, version=None):
+    """Per-bucket row_counts equal the base files' parquet footer rows;
+    with no pending deltas they also sum to the rows read; and the
+    create-time settings ride every snapshot."""
+    import pyarrow.parquet as pq
+
+    snap = t.snapshot(version)
+    footers = {
+        b: sum(pq.ParquetFile(f).metadata.num_rows for f in fl)
+        for b, fl in snap["files"].items()
+    }
+    assert snap["row_counts"] == footers, snap["summary"]["operation"]
+    if not snap.get("deltas"):
+        rows = t.read(spark, version=snap["version"]).count()
+        assert sum(snap["row_counts"].values()) == rows
+    for k, v in created.items():
+        assert snap[k] == v, (snap["summary"]["operation"], k)
+
+
+def test_snapshot_lineage_carries_through_every_commit(spark, tmp_path):
+    """Every commit path carries the snapshot envelope forward: row-count
+    lineage stays exact and dict_cols, tiebreak_family and commit_mode
+    survive cow and mor merges, compaction (fold and bin-pack),
+    tombstone expiry, rebucket, rollback and clone."""
+    from oregonwaterdataportal_etl_spark.cdc import oracle_fold
+    from oregonwaterdataportal_etl_spark.cdc.changegen import TRANSCRIPT_DICT_COLS
+
+    created = {
+        "dict_cols": TRANSCRIPT_DICT_COLS,
+        "tiebreak_family": "md5",
+        "commit_mode": "rename-free",
+    }
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=4, **created
+    )
     base_pdf = generate_changes_pdf(400, 40, seed=6)
     batch = [
         ("update", 10**6, "conv_00000001", 0, "user", "upd", None, None),
@@ -205,51 +236,51 @@ def test_passthrough_merge_equals_window_merge(spark, tmp_path):
         ("update", -5, "conv_00000003", 0, "user", "stale", None, None),
         ("insert", 10**6 + 2, "brand_new", 0, "user", "new", None, None),
     ]
-    states = {}
-    for label, pt in (("fast", True), ("window", False)):
-        t = make(tmp_path, name=label, nb=4)
-        t.merge(spark.createDataFrame(base_pdf))
-        r = t.merge(spark.createDataFrame(batch, schema=CHANGE_SCHEMA), passthrough=pt)
-        assert r.passthrough is pt, f"gate: expected passthrough={pt}"
-        states[label] = sorted(
-            tuple(row) for row in t.read(spark).collect()
-        )
-        # lineage: per-bucket row counts recorded and consistent
-        rc = t.snapshot()["row_counts"]
-        assert sum(rc.values()) == len(states[label])
-    assert states["fast"] == states["window"]
-
-
-def test_passthrough_gate_off_for_small_base(spark, tmp_path):
-    """base <= 2x batch -> single-path merge (no extra jobs)."""
-    t = make(tmp_path)
-    t.merge(spark.createDataFrame(
-        [("insert", 1, "c1", 0, "user", "a", None, None)], schema=CHANGE_SCHEMA))
-    r = t.merge(spark.createDataFrame(
-        [("update", 2, "c1", 0, "user", "b", None, None)], schema=CHANGE_SCHEMA))
-    assert r.passthrough is False
-
-
-def test_passthrough_plan_shapes(spark, tmp_path):
-    """The split's building blocks: key semi/anti joins broadcast, and
-    the pass-through write plan has NO Exchange."""
-    import re
-
-    t = make(tmp_path, nb=4)
-    t.merge(spark.createDataFrame(generate_changes_pdf(400, 40, seed=6)))
-    base = t._read_internal(spark, buckets=list(range(4)))
-    keys = spark.createDataFrame(
-        [("conv_00000001", 0)], ["__k_conv_id", "__k_turn_idx"]
+    t.merge(spark.createDataFrame(base_pdf))
+    _assert_lineage(spark, t, created)
+    t.merge(spark.createDataFrame(batch, schema=CHANGE_SCHEMA))
+    _assert_lineage(spark, t, created)
+    events = base_pdf.to_dict("records") + [
+        dict(zip(CHANGE_SCHEMA.names, r)) for r in batch
+    ]
+    expected = sorted(
+        (k[0], k[1], v["text"]) for k, v in oracle_fold(events).items()
     )
-    from pyspark.sql import functions as F
+    state = sorted(
+        (r["conv_id"], r["turn_idx"], r["text"]) for r in t.read(spark).collect()
+    )
+    assert state == expected
+    v_cow = t.current_version()
 
-    cond = base["conv_id"].eqNullSafe(keys["__k_conv_id"]) & base[
-        "turn_idx"
-    ].eqNullSafe(keys["__k_turn_idx"])
-    anti = base.join(F.broadcast(keys), cond, "left_anti")
-    plan = anti._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert len(re.findall(r"\bExchange hashpartitioning", plan)) == 0
+    mor = generate_changes_pdf(300, 40, seed=7, lsn_start=2 * 10**6)
+    t.merge(spark.createDataFrame(mor), mode="mor")
+    assert t.snapshot()["deltas"]
+    _assert_lineage(spark, t, created)
+    v_mor = t.current_version()
+    t.compact(spark, target_files_per_bucket=0)  # fold, then rewrite all
+    assert t.current_version() == v_mor + 2
+    assert t.snapshot(v_mor + 1)["summary"]["operation"] == "compact-fold"
+    assert t.snapshot()["summary"]["operation"] == "compact"
+    assert not t.snapshot().get("deltas")
+    _assert_lineage(spark, t, created, version=v_mor + 1)
+    _assert_lineage(spark, t, created)
+    assert t.expire_tombstones(spark, below_lsn=10**7) > 0
+    _assert_lineage(spark, t, created)
+    t.rebucket(spark, 8)
+    assert t.snapshot()["num_buckets"] == 8
+    _assert_lineage(spark, t, created)
+
+    t.rollback(v_cow)
+    assert t.snapshot()["row_counts"] == t.snapshot(v_cow)["row_counts"]
+    assert t.snapshot()["num_buckets"] == 4
+    _assert_lineage(spark, t, created)
+    assert sorted(
+        (r["conv_id"], r["turn_idx"], r["text"]) for r in t.read(spark).collect()
+    ) == expected
+
+    clone = t.clone_to(str(tmp_path / "clone"))
+    assert clone.snapshot()["version"] == 1
+    _assert_lineage(spark, clone, created)
 
 
 # ------------------------------------------------------- dict columns

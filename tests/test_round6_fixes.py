@@ -203,6 +203,29 @@ def test_tree_abort_refuses_foreign_commit_on_published_child(
         t.begin_wap("foreign").abort()
 
 
+def test_tree_publish_rejects_unexpected_child_version(
+    spark, tmp_path, monkeypatch
+):
+    """The intent marker records pub = pre + 1 before each child
+    publish; a child that publishes any other version must stop the
+    publish with an explicit error (not a bare assert, which python -O
+    strips)."""
+    from oregonwaterdataportal_etl_spark.lake.wap import WapStage
+
+    t = _create(tmp_path)
+    t.merge(_events(spark, [(1, 1, 1, "insert", "a")]))
+    stage = t.begin_wap("skew")
+    stage.merge(_events(spark, [(1, 1, 10, "update", "STAGED")]))
+
+    publish = WapStage.publish
+    monkeypatch.setattr(
+        WapStage, "publish", lambda self, *a, **k: publish(self, *a, **k) + 1
+    )
+    with pytest.raises(RuntimeError, match="published version") as ei:
+        stage.publish(spark)
+    assert ei.type is RuntimeError
+
+
 def test_tree_publish_sweeps_in_stage_dropped_child(spark, tmp_path):
     """A child merged and then drop_partitions'd INSIDE the stage is
     absent from the published vector; publish must still abort its
