@@ -13,7 +13,8 @@ as an idiomatic Spark engine:
 - the reference's full operator surface (scans, filters, joins, aggs,
   ranking windows, set ops, scalar functions) re-expressed Spark-first,
 - large-scale training-data operators (dedup, similarity search, text
-  analysis, multimodal plumbing).
+  analysis); binary attachments are listed and fetched as raw bytes
+  (sources.read_binary_attachments), not decoded.
 
 Reference semantics mapped per SURVEY.md section 2; e.g. the LWW dedup
 mirrors userCode/awqms/dag.py:155-187 and the watermark resume mirrors

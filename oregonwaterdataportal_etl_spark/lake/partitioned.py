@@ -60,6 +60,7 @@ from pyspark.sql import types as T
 
 from .table import (
     LakeTable,
+    _next_snapshot,
     latest_manifest_version,
     retry_on_conflict,
     versioned_commit,
@@ -328,16 +329,13 @@ class PartitionedLakeTable:
                     cs.get("files") or cs.get("deltas") or cs.get("tombstones")
                 )
             if need:
-                new = dict(cs)
-                new.pop("committed_at", None)
-                new.update(
-                    version=cs["version"] + 1,
-                    parent=cs["version"],
+                new = _next_snapshot(
+                    cs,
+                    {"operation": "truncate-reincarnate"},
                     files={},
                     deltas={},
                     tombstones={},
                     row_counts={},
-                    summary={"operation": "truncate-reincarnate"},
                 )
                 try:
                     child._commit(new)
@@ -487,25 +485,18 @@ class PartitionedLakeTable:
         """
         snap = self.snapshot()
         pexpr = self._partition_expr(snap)
+        # Pin the batch BEFORE routing: the routing list and every
+        # child's filtered slice then come from the same materialized
+        # rows, so a non-deterministic source can neither route a row
+        # to a value missing from the list (the child filters would
+        # silently drop it, even with a single touched partition) nor
+        # route it twice, and the source is scanned once.
+        updates = updates.localCheckpoint(eager=True)
         pstats = updates.groupBy(pexpr.alias("__p")).count().collect()
         if not pstats:
             # empty batch: no child changed, so no root snapshot either
             # (repeated empty applies must not churn root history)
             return PartitionedMergeResult(version=snap["version"])
-        if len(pstats) > 1:
-            # each partition filters the batch once; pin the batch so a
-            # non-deterministic source can't route a row twice (and the
-            # source isn't re-scanned per partition). The routing list
-            # is then RECOMPUTED from the checkpointed frame so the
-            # value list and the filtered slices come from the same
-            # materialized data — a non-deterministic source could
-            # otherwise route a row to a value absent from the first
-            # pass's list and the per-partition filters would silently
-            # drop it (the pre-pin list predates the pin).
-            updates = updates.localCheckpoint(eager=True)
-            pstats = updates.groupBy(pexpr.alias("__p")).count().collect()
-        # validations run on the FINAL routing list (post-pin when one
-        # was taken)
         if any(r["__p"] is None for r in pstats):
             n = sum(r["count"] for r in pstats if r["__p"] is None)
             raise ValueError(

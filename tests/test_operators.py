@@ -1,5 +1,5 @@
 """Operator tests: relational parity ops (SURVEY.md 2.2-2.7), dedup
-family, similarity search, as-of join, multimodal plumbing."""
+family, similarity search, as-of join."""
 
 import numpy as np
 import pytest
@@ -11,7 +11,6 @@ from oregonwaterdataportal_etl_spark.operators import (
     relational,
     similarity,
 )
-from oregonwaterdataportal_etl_spark.operators import multimodal
 
 
 # ---------------------------------------------------------------- relational
@@ -309,25 +308,6 @@ def test_asof_join_union_window(spark):
     out = asof.asof_join(left, right, ["k"], "ts", "ts")
     got = {(r["k"], r["ts"]): r["state"] for r in out.collect()}
     assert got == {("c1", 5): "v3", ("c1", 10): "v10", ("c2", 1): None}
-
-
-# -------------------------------------------------------------- multimodal
-def test_multimodal_features_and_frames(spark):
-    rows = [
-        (1, "image/png", b"\x89PNG-fake-bytes-here", {"w": "10"}),
-        (2, "audio/wav", b"RIFF-fake-audio", {"dur": "3"}),
-    ]
-    media = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
-    feats = multimodal.extract_features(media).collect()
-    assert {r["media_id"] for r in feats} == {1, 2}
-    for r in feats:
-        assert len(r["feature"]) == 32 and r["n_bytes"] > 0 and len(r["sha256"]) == 64
-    frames = multimodal.sample_frames(media, every_n=5).collect()
-    assert max(r["frame_idx"] for r in frames) >= 1
-    # unknown mime -> NotImplementedError surfaces from the stub
-    bad = spark.createDataFrame([(3, "application/pdf", b"x", {})], schema=multimodal.MEDIA_SCHEMA)
-    with pytest.raises(Exception, match="no decoder"):
-        multimodal.extract_features(bad).collect()
 
 
 def test_ivf_topk(spark, vectors):

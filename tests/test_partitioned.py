@@ -755,6 +755,59 @@ def test_reincarnation_arbitration_under_stale_root(spark, tmp_path):
     assert {r["v"] for r in child.read(spark).collect()} == {"bnew"}
 
 
+def test_reincarnated_child_carries_config_and_starts_empty(spark, tmp_path):
+    """The truncate-reincarnate child commit is built by the shared
+    snapshot envelope: the table config carries forward, the file maps
+    start empty, and only the new incarnation's rows read back."""
+    t = _create(tmp_path, dict_cols={"v": ["old", "new"]},
+                tiebreak_family="md5", commit_mode="rename-free")
+    t.merge(_events(spark, [(1, 1, 1, "insert", "old"),
+                            (2, 1, 2, "insert", "old")]))
+    t.drop_partitions(values=["2024-01-01"])
+    t.merge(_events(spark, [(3, 1, 3, "insert", "new")]))
+    child = t.partition_table("2024-01-01")
+    hist = child.history()
+    (trunc,) = [s for s in hist
+                if s["summary"]["operation"] == "truncate-reincarnate"]
+    prior = next(s for s in hist if s["version"] == trunc["parent"])
+    assert prior["files"]  # the old incarnation held data
+    for k in ("schema", "key_cols", "num_buckets", "dict_cols",
+              "tiebreak_family", "commit_mode"):
+        assert trunc[k] == prior[k], k
+    assert trunc["dict_cols"] == {"v": ["old", "new"]}
+    assert trunc["tiebreak_family"] == "md5"
+    assert trunc["commit_mode"] == "rename-free"
+    for k in ("files", "deltas", "tombstones", "row_counts"):
+        assert trunc[k] == {}, k
+    assert _state(t, spark) == {(3, 1): "new"}
+    assert [r["v"] for r in child.read(spark).collect()] == ["new"]
+
+
+def test_single_partition_batch_routes_from_one_evaluation(spark, tmp_path):
+    """A batch whose rows all fall in ONE partition, from a source that
+    evaluates differently each time, must still land every row: the
+    routing list and the child's filtered slice have to come from the
+    same evaluation. The UDF routes each row to day 1 on its first
+    evaluation and to day 2 on every later one."""
+    marks = str(tmp_path / "marks")
+    os.makedirs(marks)
+
+    def drifting_ts(i):
+        try:
+            os.close(os.open(os.path.join(marks, str(i)),
+                             os.O_CREAT | os.O_EXCL))
+            return datetime.datetime(2024, 1, 1)
+        except FileExistsError:
+            return datetime.datetime(2024, 1, 2)
+
+    drift = F.udf(drifting_ts, T.TimestampType()).asNondeterministic()
+    t = _create(tmp_path)
+    batch = _events(spark, [(i, 1, i, "insert", f"v{i}") for i in range(1, 9)])
+    t.merge(batch.withColumn("ts", drift("id")))
+    assert sorted(t.partitions()) == ["2024-01-01"]
+    assert _state(t, spark) == {(i, 1): f"v{i}" for i in range(1, 9)}
+
+
 def test_tree_rebucket_is_root_level_under_policy(spark, tmp_path):
     """max_rows_per_bucket acts on the WHOLE tree (never one child):
     every child and the root agree on the new count afterwards."""

@@ -6,8 +6,6 @@
   maintenance commits no longer fail a window)
 - WatermarkStore updates are incremental (O(batch) delta files, not a
   full-store rewrite) and safe under concurrent updaters
-- multimodal features carry a `decoded` flag (stub fallback is
-  distinguishable from a real decode)
 - type-widening schema evolution (int->long, float->double)
 - oracle mutation check: perturbing a hash-family constant must FAIL
   the driver-style value comparison (the generated DuckDB oracles have
@@ -213,44 +211,6 @@ def test_ann_index_versioned_against_table(spark, tmp_path):
     # old layout collectible past grace; current survives
     assert ix.vacuum(keep_last=1, grace_seconds=0.0) == 1
     assert probe_rows() == after
-
-
-def test_bmp_codec_roundtrip_and_features(spark):
-    """Real in-tree BMP path: encode->decode roundtrips pixels exactly
-    (24-bit BI_RGB, padded strides), extract_features marks BMP decodes
-    as real (decoded=True) with the same luminance histogram the PNG
-    path computes, resize_images resizes for real, and unsupported BMP
-    variants fall back to the flagged stub."""
-    import numpy as np
-
-    from oregonwaterdataportal_etl_spark.operators import multimodal
-    from oregonwaterdataportal_etl_spark.operators.bmpcodec import (
-        decode_bmp,
-        encode_bmp,
-    )
-    from oregonwaterdataportal_etl_spark.operators.pngcodec import (
-        luminance_histogram,
-    )
-
-    rng = np.random.default_rng(5)
-    arr = rng.integers(0, 256, size=(5, 3, 3), dtype=np.uint8)  # odd width: padding
-    bmp = encode_bmp(arr)
-    assert (decode_bmp(bmp) == arr).all()
-
-    media = spark.createDataFrame(
-        [(1, "image/bmp", bmp, {}),
-         (2, "image/bmp", b"BMtruncated-garbage-not-a-real-bmp-file-here-at-all-ok", {})],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in multimodal.extract_features(media).collect()}
-    assert feats[1]["decoded"] is True
-    assert np.allclose(feats[1]["feature"], luminance_histogram(arr, bins=32))
-    assert feats[2]["decoded"] is False  # unparseable -> flagged stub
-
-    resized = multimodal.resize_images(
-        media.filter("media_id = 1"), width=8, height=4
-    ).collect()[0]["payload"]
-    assert decode_bmp(bytes(resized)).shape == (4, 8, 3)
 
 
 def test_runner_refreshes_ann_index_on_compact_cycle(spark, tmp_path):
@@ -1008,35 +968,6 @@ def test_type_widening_rejected_on_key_columns(spark, tmp_path):
         t.merge(spark.createDataFrame(
             [("insert", 2, "a", 0, "y")],
             "op string, lsn long, conv_id string, turn_idx long, text string"))
-
-
-# ------------------------------------------------ multimodal decoded flag
-def test_feature_stub_fallback_is_flagged(spark):
-    """Stub (sha256-derived) features must be distinguishable from real
-    decodes: decoded=True only when a real codec ran (round-2 judge:
-    silent fallback let similarity compare histograms to hash noise)."""
-    import numpy as np
-
-    from oregonwaterdataportal_etl_spark.operators import multimodal
-    from oregonwaterdataportal_etl_spark.operators.pngcodec import (
-        PNG_MAGIC,
-        encode_png,
-    )
-
-    good_png = encode_png(np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3))
-    truncated = PNG_MAGIC + b"\x00\x00\x00\x0dIHDRtruncated-garbage"
-    rows = [
-        (1, "image/png", good_png, {}),
-        (2, "image/png", truncated, {}),
-        (3, "video/mp4", b"not-really-video", {}),
-    ]
-    media = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_features(media)
-    assert "decoded" in out.columns
-    got = {r["media_id"]: r["decoded"] for r in out.collect()}
-    assert got == {1: True, 2: False, 3: False}
-    # the consumer-side filter the flag exists for
-    assert [r["media_id"] for r in out.filter("decoded").collect()] == [1]
 
 
 # -------------------------------------------- runner commit retry

@@ -333,204 +333,6 @@ def test_watermark_legacy_vdir_swept_after_supersession(spark, tmp_path):
     assert not os.path.isdir(os.path.join(store, legacy)), "legacy v- dir leaked"
 
 
-# ------------------------------------------------ baseline JPEG codec
-def test_jpeg_codec_roundtrip_and_features(spark):
-    """Real in-tree baseline JPEG: encode->decode agrees within JPEG
-    loss (MAE < 2 on a smooth gradient at q90), extract_features marks
-    baseline JPEGs decoded=True with the shared luminance histogram,
-    resize_images resizes for real, and PROGRESSIVE payloads fall back
-    to the flagged stub instead of a fake decode."""
-    import numpy as np
-
-    from oregonwaterdataportal_etl_spark.operators import multimodal
-    from oregonwaterdataportal_etl_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-    from oregonwaterdataportal_etl_spark.operators.pngcodec import (
-        luminance_histogram,
-    )
-
-    yy, xx = np.mgrid[0:24, 0:40]
-    rgb = np.stack(
-        [(xx * 5) % 256, (yy * 7) % 256, ((xx + yy) * 3) % 256], axis=-1
-    ).astype(np.uint8)
-    jpg = encode_jpeg(rgb, quality=90)
-    dec = decode_jpeg(jpg)
-    assert dec.shape == rgb.shape
-    assert float(np.abs(dec.astype(int) - rgb.astype(int)).mean()) < 2.0
-    # grayscale source, odd dimensions (edge-extend padding path)
-    gray = ((xx + yy) * 2 % 256).astype(np.uint8)[:17, :23]
-    decg = decode_jpeg(encode_jpeg(gray, quality=90))
-    assert decg.shape == (17, 23, 3)
-    assert float(np.abs(decg[:, :, 0].astype(int) - gray.astype(int)).mean()) < 2.0
-
-    # a TRUNCATED SOF2 shell (no scans) still flags decoded=False;
-    # real progressive JPEGs decode since round 5 (test_round5_codec)
-    progressive_stub = b"\xff\xd8\xff\xc2\x00\x0b" + bytes(9) + b"\xff\xd9"
-    from oregonwaterdataportal_etl_spark.operators.jpegcodec import (
-        encode_jpeg_progressive,
-    )
-
-    prog_real = encode_jpeg_progressive(rgb, quality=90)
-    media = spark.createDataFrame(
-        [
-            (1, "image/jpeg", jpg, {}),
-            (2, "image/jpeg", progressive_stub, {}),
-            (3, "image/jpeg", prog_real, {}),
-        ],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in multimodal.extract_features(media).collect()}
-    assert feats[1]["decoded"] is True
-    assert np.allclose(
-        feats[1]["feature"], luminance_histogram(decode_jpeg(jpg), bins=32)
-    )
-    assert feats[2]["decoded"] is False  # truncated shell -> flagged stub
-    assert feats[3]["decoded"] is True  # real progressive decodes (r5)
-    assert np.allclose(
-        feats[3]["feature"],
-        luminance_histogram(decode_jpeg(prog_real), bins=32),
-    )
-
-    resized = multimodal.resize_images(
-        media.filter("media_id = 1"), width=16, height=8
-    ).collect()[0]["payload"]
-    assert decode_jpeg(bytes(resized)).shape == (8, 16, 3)
-
-
-def test_avi_mjpeg_codec_frames_features_resize(spark):
-    """Real in-tree Motion-JPEG AVI: container roundtrip preserves
-    frame payloads bit-exactly and avih metadata; sample_frames emits
-    every-nth REAL frame (decoded=True, original stream indexes) that
-    the jpeg codec decodes back within JPEG loss; extract_features
-    histograms the first frame; resize_images repacks a resized AVI;
-    and a non-AVI video payload falls back to the flagged slice stub."""
-    import numpy as np
-
-    from oregonwaterdataportal_etl_spark.operators import multimodal
-    from oregonwaterdataportal_etl_spark.operators.avicodec import (
-        avi_info,
-        decode_avi_frames,
-        encode_avi_mjpeg,
-    )
-    from oregonwaterdataportal_etl_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-    from oregonwaterdataportal_etl_spark.operators.pngcodec import (
-        luminance_histogram,
-    )
-
-    yy, xx = np.mgrid[0:16, 0:24]
-    frames_rgb = [
-        np.stack(
-            [(xx * 5 + t * 11) % 256, (yy * 7) % 256, ((xx + yy) * 3) % 256],
-            axis=-1,
-        ).astype(np.uint8)
-        for t in range(7)
-    ]
-    jpgs = [encode_jpeg(a, quality=90) for a in frames_rgb]
-    avi = encode_avi_mjpeg(jpgs, width=24, height=16, fps=12)
-
-    # container roundtrip: bit-exact frame payloads + header metadata
-    assert decode_avi_frames(avi) == jpgs
-    info = avi_info(avi)
-    assert (info["total_frames"], info["width"], info["height"]) == (7, 24, 16)
-    assert info["fps"] == pytest.approx(12, abs=0.01)
-
-    media = spark.createDataFrame(
-        [
-            (1, "video/x-msvideo", avi, {}),
-            (2, "video/mp4", b"\x00\x00\x00\x18ftypmp42" + bytes(64), {}),
-        ],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
-    rows = multimodal.sample_frames(media, every_n=3).collect()
-    real = sorted(
-        [r for r in rows if r["media_id"] == 1], key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in real] == [0, 3, 6]
-    assert all(r["decoded"] for r in real)
-    got = decode_jpeg(bytes(real[1]["frame"]))
-    assert float(np.abs(got.astype(int) - frames_rgb[3].astype(int)).mean()) < 2.0
-    stub = [r for r in rows if r["media_id"] == 2]
-    assert stub and not any(r["decoded"] for r in stub)
-
-    feats = {r["media_id"]: r for r in multimodal.extract_features(media).collect()}
-    assert feats[1]["decoded"] is True
-    assert np.allclose(
-        feats[1]["feature"], luminance_histogram(decode_jpeg(jpgs[0]), bins=32)
-    )
-    assert feats[2]["decoded"] is False
-
-    resized = multimodal.resize_images(
-        media.filter("media_id = 1"), width=12, height=8
-    ).collect()[0]["payload"]
-    rframes = decode_avi_frames(bytes(resized))
-    assert len(rframes) == 7
-    assert decode_jpeg(rframes[0]).shape == (8, 12, 3)
-    assert avi_info(bytes(resized))["width"] == 12
-
-
-def test_mp3_header_parse_and_probe_media(spark):
-    """Real MPEG frame-header walk: a synthetic CBR stream (known frame
-    count/bitrate/rate, with an ID3v2 prefix and trailing junk) parses
-    to exact metadata; probe_media serves typed metadata for every
-    in-tree container (png/bmp/jpeg/wav/avi/mp3) with probed=True and
-    flags opaque payloads probed=False."""
-    import numpy as np
-
-    from oregonwaterdataportal_etl_spark.operators import multimodal
-    from oregonwaterdataportal_etl_spark.operators.avicodec import encode_avi_mjpeg
-    from oregonwaterdataportal_etl_spark.operators.bmpcodec import encode_bmp
-    from oregonwaterdataportal_etl_spark.operators.jpegcodec import encode_jpeg
-    from oregonwaterdataportal_etl_spark.operators.mp3codec import (
-        encode_mp3_cbr_stub,
-        parse_mp3_info,
-    )
-    from oregonwaterdataportal_etl_spark.operators.pngcodec import encode_png
-    from oregonwaterdataportal_etl_spark.operators.wavcodec import encode_wav
-
-    mp3 = encode_mp3_cbr_stub(n_frames=25, bitrate_kbps=128, sample_rate=44100)
-    # ID3v2 prefix (syncsafe size 0) + APE-ish trailing junk both skip
-    tagged = b"ID3\x04\x00\x00\x00\x00\x00\x00" + mp3 + b"APETAGEX" + bytes(16)
-    for payload in (mp3, tagged):
-        info = parse_mp3_info(payload)
-        assert info["n_frames"] == 25
-        assert info["sample_rate"] == 44100
-        assert info["bit_rate"] == pytest.approx(128_000, rel=0.01)
-        assert info["duration_s"] == pytest.approx(25 * 1152 / 44100, abs=1e-6)
-    with pytest.raises(ValueError, match="sync"):
-        parse_mp3_info(b"\x00" * 512)
-
-    yy, xx = np.mgrid[0:8, 0:12]
-    rgb = np.stack([(xx * 9) % 256, (yy * 5) % 256, (xx + yy) % 256], axis=-1
-                   ).astype(np.uint8)
-    jpg = encode_jpeg(rgb, quality=90)
-    rows = [
-        (1, "image/png", encode_png(rgb), {}),
-        (2, "image/bmp", encode_bmp(rgb), {}),
-        (3, "image/jpeg", jpg, {}),
-        (4, "audio/wav", encode_wav(np.sin(np.arange(8000) / 20.0), rate=16000), {}),
-        (5, "video/x-msvideo", encode_avi_mjpeg([jpg] * 6, 12, 8, fps=3), {}),
-        (6, "audio/mpeg", tagged, {}),
-        (7, "application/octet-stream", b"\x00opaque", {}),
-    ]
-    media = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
-    probes = {r["media_id"]: r for r in multimodal.probe_media(media).collect()}
-    for mid in (1, 2, 3):
-        assert probes[mid]["probed"] and (probes[mid]["width"],
-                                          probes[mid]["height"]) == (12, 8)
-    assert probes[4]["probed"] and probes[4]["sample_rate"] == 16000
-    assert probes[4]["duration_s"] == pytest.approx(0.5, abs=1e-6)
-    assert probes[5]["probed"] and probes[5]["n_frames"] == 6
-    assert probes[5]["duration_s"] == pytest.approx(2.0, abs=0.01)
-    assert probes[6]["probed"] and probes[6]["n_frames"] == 25
-    assert probes[6]["bit_rate"] == pytest.approx(128_000, rel=0.01)
-    assert probes[7]["probed"] is False and probes[7]["n_bytes"] == 7
-
-
 def test_rebucket_preserves_state_and_serves_new_layout(spark, tmp_path):
     """Bucket-count evolution: rebucket(4 -> 8) must preserve the
     resolved row set bit-exactly WITH pending MOR deltas and tombstones

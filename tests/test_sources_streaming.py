@@ -1,6 +1,7 @@
 """Source readers (SURVEY.md 2.1) + Structured Streaming CDC tail."""
 
 import os
+import zipfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,6 +10,7 @@ from oregonwaterdataportal_etl_spark.cdc import ManifestLog, generate_changes
 from oregonwaterdataportal_etl_spark.cdc.changegen import TRANSCRIPT_SCHEMA
 from oregonwaterdataportal_etl_spark.lake import LakeTable
 from oregonwaterdataportal_etl_spark.sources import readers
+from oregonwaterdataportal_etl_spark.sources.readers import read_xlsx
 from oregonwaterdataportal_etl_spark.streaming import (
     start_cdc_stream,
     start_cdc_stream_zx,
@@ -68,6 +70,74 @@ def test_read_binary_attachments(spark, tmp_path):
     df = readers.read_binary_attachments(spark, str(tmp_path / "*.bin"))
     got = {os.path.basename(r["path"]): bytes(r["content"]) for r in df.collect()}
     assert got == {"a.bin": b"hello", "b.bin": b"world!"}
+
+
+def _handmade_xlsx(path):
+    """Two-sheet xlsx written with stdlib zipfile: shared strings,
+    inline strings, numbers, booleans, and a skipped (sparse) cell."""
+    ns = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
+    rns = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    workbook = f"""<?xml version="1.0"?>
+<workbook {ns} xmlns:r="{rns}"><sheets>
+  <sheet name="sites" sheetId="1" r:id="rId1"/>
+  <sheet name="data" sheetId="2" r:id="rId2"/>
+  <sheet name="blank" sheetId="3" r:id="rId3"/>
+</sheets></workbook>"""
+    rels = f"""<?xml version="1.0"?>
+<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+  <Relationship Id="rId1" Type="{rns}/worksheet" Target="worksheets/sheet1.xml"/>
+  <Relationship Id="rId2" Type="{rns}/worksheet" Target="worksheets/sheet2.xml"/>
+  <Relationship Id="rId3" Type="{rns}/worksheet" Target="worksheets/sheet3.xml"/>
+</Relationships>"""
+    sst = f"""<?xml version="1.0"?>
+<sst {ns} count="3" uniqueCount="3">
+  <si><t>site_id</t></si><si><t>name</t></si><si><t>Upper Gauge</t></si>
+</sst>"""
+    sheet1 = f"""<?xml version="1.0"?>
+<worksheet {ns}><sheetData>
+  <row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>
+  <row r="2"><c r="A2" t="str"><v>S1</v></c><c r="B2" t="s"><v>2</v></c></row>
+</sheetData></worksheet>"""
+    sheet2 = f"""<?xml version="1.0"?>
+<worksheet {ns}><sheetData>
+  <row r="1"><c r="A1" t="str"><v>site</v></c><c r="B1" t="str"><v>value</v></c>
+              <c r="C1" t="str"><v>ok</v></c></row>
+  <row r="2"><c r="A2" t="inlineStr"><is><t>S1</t></is></c><c r="B2"><v>12.5</v></c>
+              <c r="C2" t="b"><v>1</v></c></row>
+  <row r="3"><c r="A3" t="str"><v>S1</v></c><c r="C3" t="b"><v>0</v></c></row>
+  <row r="4"><c r="A4" t="str"><v>S2</v></c><c r="B4" t="e"><v>#DIV/0!</v></c>
+              <c r="C4" t="b"><v>1</v></c></row>
+</sheetData></worksheet>"""
+    sheet3 = f'<?xml version="1.0"?><worksheet {ns}><sheetData/></worksheet>'
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("xl/workbook.xml", workbook)
+        z.writestr("xl/_rels/workbook.xml.rels", rels)
+        z.writestr("xl/sharedStrings.xml", sst)
+        z.writestr("xl/worksheets/sheet1.xml", sheet1)
+        z.writestr("xl/worksheets/sheet2.xml", sheet2)
+        z.writestr("xl/worksheets/sheet3.xml", sheet3)
+
+
+def test_read_xlsx_native(spark, tmp_path):
+    # openpyxl must genuinely be absent for this container's fallback
+    with pytest.raises(ImportError):
+        import openpyxl  # noqa: F401
+    p = str(tmp_path / "wb.xlsx")
+    _handmade_xlsx(p)
+    frames = read_xlsx(spark, p)
+    # fully blank sheet dropped instead of breaking schema inference
+    assert set(frames) == {"sites", "data"}
+    sites = frames["sites"].collect()
+    assert sites[0]["site_id"] == "S1" and sites[0]["name"] == "Upper Gauge"
+    data = {r["site"]: r for r in frames["data"].collect() if r["value"] == 12.5}
+    assert data["S1"]["ok"] is True
+    rows = frames["data"].collect()
+    assert len(rows) == 3
+    # error cell (#DIV/0!) -> null, not a crash
+    s2 = [r for r in rows if r["site"] == "S2"][0]
+    assert s2["value"] is None and s2["ok"] is True
+    only = read_xlsx(spark, p, sheets=["data"])
+    assert set(only) == {"data"}
 
 
 def test_streaming_cdc_tail(spark, tmp_path):
