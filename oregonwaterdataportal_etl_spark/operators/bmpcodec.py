@@ -1,12 +1,12 @@
-"""Minimal in-tree BMP codec (stdlib struct + numpy) — real pixels for
-the multimodal path, like pngcodec/wavcodec.
+"""Minimal in-tree BMP codec (stdlib struct + numpy) that decodes
+attachment bytes (e.g. the ``content`` column of
+``sources.read_binary_attachments``) into pixel arrays.
 
-Covers uncompressed BI_RGB 24/32-bit, PALETTED 1/4/8-bit (color
-table lookup), and RLE8/RLE4 compressed images (encoded + absolute
-runs, end-of-line/bitmap and delta escapes) on BITMAPINFOHEADER-or-
-later headers, bottom-up or top-down. Anything else (16-bit
-bitfields, embedded PNG/JPEG) raises so callers fall back to the
-flagged stub instead of mis-decoding.
+Covers uncompressed BI_RGB 16/24/32-bit, BI_BITFIELDS 16/32-bit,
+PALETTED 1/4/8-bit (color table lookup), and RLE8/RLE4 compressed
+images (encoded + absolute runs, end-of-line/bitmap and delta escapes)
+on BITMAPINFOHEADER-or-later headers, bottom-up or top-down. Anything
+else (e.g. embedded PNG/JPEG) raises instead of mis-decoding.
 
 Capability gates, not stubs: decode_bmp returns REAL pixel arrays and
 encode_bmp writes files any image viewer opens (encode_bmp_rle8 /
