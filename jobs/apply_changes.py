@@ -10,7 +10,7 @@ Usage (north_rule packaging surface):
 --bucketed-wal declares the stream a bucketed-layout change log
 (written with lake.bucketed.write_bucketed_wal using THIS table's keys
 and bucket count): windows then apply through the ZERO-exchange
-merge_prebucketed path instead of the window resolve.
+merge_prebucketed path, which does not shuffle the batch either.
 
 The package arrives on executors via --py-files; this script imports it
 exactly as a cluster job would (no sys.path surgery). Prints one JSON

@@ -440,7 +440,8 @@ def retry_on_conflict(fn, attempts: int = 4):
 
 def _and_all(exprs) -> "F.Column":
     """Conjunction fold — the one definition of 'rows match on every
-    key column' (lookup() and the changelog diff)."""
+    key column' (lookup() and the changelog diff) and of 'no key value
+    is null' (the cow merge's null-key split)."""
     out = None
     for e in exprs:
         out = e if out is None else (out & e)
@@ -453,6 +454,25 @@ def _parquet_rows(path: str) -> int:
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(path).metadata.num_rows
+
+
+def _parquet_may_hold_nulls(paths: list[str], cols: list[str]) -> bool:
+    """Whether any of ``cols`` may hold a null in these files, from the
+    footers' per-row-group null counts (a missing count counts as a
+    possible null) — metadata only, no data scan."""
+    import pyarrow.parquet as pq
+
+    for path in paths:
+        md = pq.ParquetFile(path).metadata
+        for g in range(md.num_row_groups):
+            for i in range(md.num_columns):
+                col = md.row_group(g).column(i)
+                st = col.statistics
+                if col.path_in_schema in cols and (
+                    st is None or not st.has_null_count or st.null_count
+                ):
+                    return True
+    return False
 
 
 def _rows_per_bucket(files_by_bucket: dict[str, list[str]]) -> dict[str, int]:
@@ -1370,7 +1390,9 @@ class LakeTable:
 
     def _resolve(self, base_tagged: DataFrame, upd_tagged: DataFrame,
                  key_cols: list[str], n_buckets: int) -> DataFrame:
-        """Shared LWW resolution: union base+updates, ONE repartition
+        """The MOR read resolve (_resolved_view; copy-on-write merges
+        join the batch against the bucketed base instead, _cow_commit):
+        union base+updates, ONE repartition
         on the key columns (satisfies both the ranking window and the
         bucket layout — see _bucket_expr), rank by (lsn desc, base
         first, payload-hash limbs desc) — a TOTAL order, so equal-LSN
@@ -1424,14 +1446,13 @@ class LakeTable:
     ) -> DataFrame:
         """Batch-only LWW dedup (no base side): the same total order as
         _resolve but WITHOUT the min(__src) over-partition metrics
-        column. That column exists to classify insert-vs-update against
-        base rows — the MOR append path has no base side and never
-        reads __all_chg — and it is precisely what blocks Spark's
-        WindowGroupLimit rank pushdown. With a pure rank filter the
-        optimizer inserts a PARTIAL top-1-per-key below the exchange,
-        so intra-batch duplicates collapse map-side before riding the
-        wire (the MOR apply's dominant shuffle volume at typical
-        duplication rates)."""
+        column, which blocks Spark's WindowGroupLimit rank pushdown.
+        With a pure rank filter the optimizer can insert a PARTIAL
+        top-1-per-key below the exchange, so intra-batch duplicates
+        collapse map-side before riding the wire. Both the MOR append
+        and the copy-on-write merge dedup their batch here; the cow
+        merge then classifies insert-vs-update in its join against the
+        bucketed base (_zx_winners), not with min(__src)."""
         # the radix-prefix hash is materialized BELOW the repartition:
         # if the window partitioned by an expression computed above the
         # exchange, the optimizer could not push the Partial group
@@ -1578,10 +1599,13 @@ class LakeTable:
     def _bucket_expr(self, snap: dict | None = None):
         """Bucket id = pmod(hash(key_cols), n) with Spark's own Murmur3
         F.hash — DELIBERATELY identical to Spark's internal
-        HashPartitioning. Consequence: after ``repartition(n, *keys)``
-        every task holds exactly one bucket, so the merge's window
-        shuffle and the bucketed file layout share ONE exchange (the
-        moral equivalent of Iceberg storage-partitioned writes).
+        HashPartitioning. Consequences: after ``repartition(n, *keys)``
+        every task holds exactly one bucket, and the table's own files,
+        registered as a catalog bucketed table, report that same
+        partitioning. So the merge's one exchange moves the batch alone
+        and joins the base in place, and the bucketed file layout needs
+        no second exchange (the moral equivalent of Iceberg
+        storage-partitioned joins and writes).
         Pass the caller's pinned snapshot to avoid a CURRENT re-read
         (the function's inputs are immutable post-create anyway)."""
         if snap is None:
@@ -1878,8 +1902,8 @@ class LakeTable:
         ``updates`` columns: key cols + ``op`` (insert|update|delete) +
         ``lsn`` (monotonic long) + payload columns. The batch may
         contain multiple events per key (intra-batch duplicates,
-        out-of-order); a single ranking window resolves them together
-        with the base rows, which is the engine's one shuffle.
+        out-of-order); a ranking window dedups them after the merge's
+        one shuffle, which moves the batch alone.
 
         Semantics (north_rule LWW): per key, highest LSN wins; base
         row participates with its stored ``_lsn`` so replayed or
@@ -1887,7 +1911,10 @@ class LakeTable:
         delete removes the row.
 
         mode="cow" (default): copy-on-write — resolve against the base
-        now, rewrite touched buckets. Read-optimized.
+        now, rewrite touched buckets. Read-optimized. The deduplicated
+        batch joins the touched buckets' base, tombstone and pending
+        delta files through their bucketed scan (_cow_commit), so base
+        rows are read in place and never shuffled.
         mode="mor": merge-on-read — dedup the batch and append it as
         per-bucket delta files (delete tombstones included); reads and
         compact() resolve. Write-optimized: apply cost is independent
@@ -1931,9 +1958,16 @@ class LakeTable:
         for c in key_cols:
             if c in upd_types and upd_types[c] != stored_keys[c]:
                 upd = upd.withColumn(c, F.col(c).cast(stored_keys[c]))
+        # The same pass notes whether any key value is null: the cow
+        # join cannot match those (see _zx_winners).
+        null_keys = False
         if snap["files"] or snap.get("deltas") or snap.get("tombstones"):
-            bstats = upd.groupBy(bexpr.alias("b")).count().collect()
+            keyed = _and_all([F.col(c).isNotNull() for c in key_cols])
+            bstats = (
+                upd.groupBy(bexpr.alias("b")).agg(F.max(~keyed).alias("nk")).collect()
+            )
             touched = sorted(r["b"] for r in bstats)
+            null_keys = any(r["nk"] for r in bstats)
         else:
             touched = list(range(n_buckets))
 
@@ -1960,110 +1994,103 @@ class LakeTable:
                 _summary_extra=_summary_extra,
             )
 
-        # -- empty-table fast path ----------------------------------
-        # First load into a fresh table: there is no base side at all,
-        # so the resolve degenerates to the batch-only LWW dedup. That
-        # formulation matters for performance, not just simplicity:
-        # _resolve's min(__src)-over-partition metrics column blocks
-        # Spark's WindowGroupLimit rank pushdown, while the pure rank
-        # filter of _resolve_batch gets a PARTIAL top-1-per-key below
-        # the exchange — intra-batch duplicates collapse map-side
-        # before riding the wire (2M events -> ~751k keys on the bench
-        # stream). With no base row anywhere, min(__src) == 1 for
-        # every key, so __all_chg is the constant 1 and the resolved
-        # winners are identical to the window path's.
-        if not (snap["files"] or snap.get("deltas") or snap.get("tombstones")):
-            winners = self._resolve_batch(
-                upd_tagged, key_cols, n_buckets
-            ).withColumn("__all_chg", F.lit(1))
+        # -- THE one shuffle: the batch alone -------------------------
+        # _resolve_batch's repartition(num_buckets, keys), on keys
+        # already cast to the stored types, is Spark's HashPartitioning,
+        # bit-identical to _bucket_expr() and to the bucketed scan of the
+        # touched buckets' base, tombstone and delta files. The full-outer
+        # join against that scan therefore needs no exchange on either
+        # side, each task holds one storage bucket for the write, and no
+        # base row crosses the wire: the hash-build side is one bucket's
+        # deduplicated batch slice. Dict columns decode after the
+        # exchange, so strings never ride it.
+        batch = self._resolve_batch(upd_tagged, key_cols, n_buckets).select(
+            *self._payload_out(evolved, dicts),
+            "__lsn", "__op", "__tb1", "__tb2",
+        )
+        return self._cow_commit(
+            spark, snap, evolved, touched,
+            lambda reg_root, tables, nonkey: self._zx_cand(
+                batch, 1, F.col("__lsn"), F.col("__op"),
+                F.col("__tb1"), F.col("__tb2"), key_cols, nonkey,
+            ).withColumnRenamed("__cand", "__cand_u"),
+            _operation_label=_operation_label,
+            _summary_extra=_summary_extra,
+            null_keys=null_keys,
+        )
+
+    def _cow_commit(
+        self,
+        spark: SparkSession,
+        snap: dict,
+        evolved: T.StructType,
+        touched: list[int],
+        upd_side,
+        _operation_label: str,
+        _summary_extra: dict | None = None,
+        _plan_out: list | None = None,
+        null_keys: bool = False,
+    ) -> MergeResult:
+        """THE copy-on-write resolve, shared by merge(),
+        merge_prebucketed() and the delta fold: register the touched
+        buckets' base, tombstone and pending-delta files as one bucketed
+        table (_zx_base_tomb_side), full-outer join it with the batch's
+        candidate side (_zx_winners), hand the winners to _finalize_cow,
+        and always drop the session tables and the hardlink dir, also
+        when the merge aborts.
+
+        ``upd_side(reg_root, tables, nonkey)`` builds the batch's
+        __cand_u side; it may register its own bucketed tables under
+        ``reg_root`` and append their names to ``tables``. None is the
+        delta fold: no batch, the base side's winners pass through.
+        ``null_keys`` says the batch may hold a null key value
+        (_zx_winners)."""
+        import shutil
+
+        key_cols: list[str] = snap["key_cols"]
+        reg_root = os.path.join(self.path, "_bucketed", f"reg-{uuid.uuid4().hex}")
+        tables: list[str] = []
+        try:
+            nonkey = [f for f in evolved.fields if f.name not in key_cols]
+            upd = upd_side(reg_root, tables, nonkey) if upd_side else None
+            base_side = self._zx_base_tomb_side(
+                spark, snap, touched, reg_root, tables, key_cols, nonkey
+            )
+            if upd is None and base_side is None:
+                return MergeResult(version=snap["version"])
+            winners = self._zx_winners(upd, base_side, key_cols, nonkey, null_keys)
+            if _plan_out is not None:
+                _plan_out.append(
+                    winners._jdf.queryExecution().executedPlan().toString()
+                )
             return self._finalize_cow(
-                spark, snap, evolved, dicts, winners, touched, bexpr,
+                spark, snap, evolved, winners, touched,
                 _operation_label=_operation_label,
                 _summary_extra=_summary_extra,
             )
-
-        # existing MOR deltas for the touched buckets fold into this
-        # copy-on-write merge (they are just more updates); untouched
-        # buckets keep their deltas.
-        existing_deltas = self._read_deltas(spark, snap, buckets=touched)
-        if existing_deltas is not None:
-            upd_tagged = upd_tagged.unionByName(
-                existing_deltas.select(
-                    *self._tag_select(existing_deltas.columns, evolved, dicts),
-                    F.col(LSN_COL).alias("__lsn"),
-                    _op_code(F.col(_OP_COL)).alias("__op"),
-                    F.lit(1).alias("__src"),
-                    # limbs persisted at delta-write time (null for
-                    # pre-upgrade delta files)
-                    F.col(_TB1_COL).alias("__tb1"),
-                    F.col(_TB2_COL).alias("__tb2"),
-                )
-            )
-
-        base = self._read_internal(spark, buckets=touched, _snap=snap)
-        base_tagged = base.select(
-            *self._tag_select(base.columns, evolved, dicts),
-            F.col(LSN_COL).alias("__lsn"),
-            F.lit(_OP_BASE).cast("tinyint").alias("__op"),
-            F.lit(0).alias("__src"),
-            # base rows carry their winning event's persisted limbs
-            F.col(_TB1_COL).alias("__tb1"),
-            F.col(_TB2_COL).alias("__tb2"),
-        )
-        # tombstones of touched buckets re-enter as base-side deletes:
-        # a stale lower-LSN event for a deleted key loses to the
-        # tombstone instead of resurrecting the row (LWW across the
-        # delete horizon). Winning tombstones get re-emitted below.
-        tomb = self._read_tombstones(spark, snap, buckets=touched)
-        if tomb is not None:
-            base_tagged = base_tagged.unionByName(
-                tomb.select(
-                    *self._tag_select(tomb.columns, evolved, dicts),
-                    F.col(LSN_COL).alias("__lsn"),
-                    F.lit(_OP_TOMBSTONE).cast("tinyint").alias("__op"),
-                    F.lit(0).alias("__src"),
-                    F.col(_TB1_COL).alias("__tb1"),
-                    F.col(_TB2_COL).alias("__tb2"),
-                )
-            )
-
-        # -- THE one shuffle ----------------------------------------
-        # repartition(num_buckets, keys) inside _resolve uses Spark's
-        # HashPartitioning, bit-identical to _bucket_expr(). The single
-        # exchange (a) satisfies the ranking window's required
-        # clustering — Catalyst inserts NO second exchange — and
-        # (b) leaves every task holding exactly one storage bucket, so
-        # the bucketed write below needs no shuffle either. This is
-        # the storage-partitioned-write pattern; the window itself is
-        # the W1 LWW operator (userCode/awqms/dag.py:155-187), ordered
-        # by lsn desc with base-first tie-break (replayed same-LSN
-        # events are no-ops).
-        winners = self._resolve(base_tagged, upd_tagged, key_cols, n_buckets)
-
-        return self._finalize_cow(
-            spark, snap, evolved, dicts, winners, touched, bexpr,
-            _operation_label=_operation_label,
-            _summary_extra=_summary_extra,
-        )
+        finally:
+            for name in tables:
+                try:
+                    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+                except Exception:
+                    pass
+            shutil.rmtree(reg_root, ignore_errors=True)
 
     def _finalize_cow(
         self,
         spark: SparkSession,
         snap: dict,
         evolved: T.StructType,
-        dicts: dict,
         winners: DataFrame,
         touched: list[int],
-        bexpr,
         _operation_label: str = "merge",
         _summary_extra: dict | None = None,
     ) -> MergeResult:
-        """Shared copy-on-write tail: winners (columns = payload [dict-
-        encoded per ``dicts``] + __lsn/__tb1/__tb2/__op/__all_chg[/__src])
-        -> action classification -> single-pass bucketed write ->
-        metrics scan -> snapshot commit. Used by merge() (window
-        resolve), merge_prebucketed() (join resolve) and the
-        zero-exchange delta fold."""
+        """Shared copy-on-write tail: winners (columns = decoded payload
+        + __lsn/__tb1/__tb2/__op/__src/__all_chg, one storage bucket per
+        task) -> action classification -> single-pass bucketed write
+        with observed metrics -> snapshot commit. Called only by
+        _cow_commit."""
         # -- single-pass write + metrics ----------------------------
         # ONE Spark job writes everything: surviving rows land in
         # _del=false; winning deletes AND carried tombstones land in
@@ -2087,14 +2114,14 @@ class LakeTable:
             .otherwise(F.lit("insert"))
         )
         out = winners.select(
-            *self._payload_out(evolved, dicts),
+            *[F.col(f.name) for f in evolved.fields],
             F.col("__lsn").alias(LSN_COL),
             # the winner's limbs persist into base/tombstone files so the
             # NEXT merge can order an exact-LSN rematch deterministically
             F.col("__tb1").alias(_TB1_COL),
             F.col("__tb2").alias(_TB2_COL),
             action.alias(_ACTION_COL),
-            bexpr.alias(_BUCKET_COL),
+            self._bucket_expr(snap).alias(_BUCKET_COL),
             F.col("__op").isin(_OP_DELETE, _OP_TOMBSTONE).alias(_DEL_COL),
         )
         from pyspark.sql import Observation
@@ -2109,8 +2136,9 @@ class LakeTable:
             ],
         )
         out_dir = os.path.join(self.data_dir, f"w-{uuid.uuid4().hex}")
-        # rows are already clustered one-bucket-per-task by the
-        # repartition above — no shuffle in this write
+        # rows are already clustered one-bucket-per-task: the batch's
+        # repartition and the bucketed base scan share the bucket
+        # function, and the join keeps that layout — no shuffle here
         out.write.partitionBy(_BUCKET_COL, _DEL_COL).mode("overwrite").parquet(out_dir)
 
         new_files: dict[str, list[str]] = {}
@@ -2253,19 +2281,19 @@ class LakeTable:
         candidate-struct side, or None for an empty table.
 
         Delta folding (side=d): touched buckets' merge-on-read deltas
-        are just more already-committed updates, so they fold into this
-        copy-on-write merge exactly as merge() folds them — but with
-        ZERO exchange: deltas were written one-bucket-per-file, so they
-        register into the same bucketed table. Base/tomb keys are
+        are just more already-committed updates, so they fold into every
+        copy-on-write merge with ZERO exchange: deltas were written
+        one-bucket-per-file, so they register into the same bucketed
+        table. Base/tomb keys are
         disjoint but deltas overlap both and repeat per key, so the
         combined side is pre-deduped to one row per key by a window
         whose clustering the bucketed scan already satisfies, ordered
         by _lww_order with the src bit (base beats batch on a full
         tie).
-        __had_bt preserves merge()'s __all_chg semantics (min(__src)
-        over b/t rows only): a delta-only key still counts as
-        all-changed, keeping insert-vs-update / delete-vs-dropped
-        metrics identical to the window path."""
+        __had_bt carries the __all_chg semantics (is there a base or
+        tombstone row for the key?): a delta-only key still counts as
+        all-changed, so insert-vs-update / delete-vs-dropped metrics
+        do not depend on whether the earlier events were compacted."""
         from . import bucketed as B
 
         stored = T.StructType(
@@ -2354,57 +2382,65 @@ class LakeTable:
 
     @staticmethod
     def _zx_winners(upd_side: DataFrame | None, base_side: DataFrame | None,
-                    key_cols: list[str], nonkey: list) -> DataFrame:
+                    key_cols: list[str], nonkey: list,
+                    null_keys: bool = False) -> DataFrame:
         """Full-outer SHUFFLE_HASH join + greatest-of-candidates. With
         both scans reporting the same HashPartitioning the planner uses
         a no-shuffle ShuffledHashJoin — unlike sort-merge it needs NO
         per-task sorts either (measured 10.2s SMJ -> 7.5s SHJ on the
         32M steady-state regime); build memory is one bucket's deduped
-        update slice. Output columns match the window resolve's
-        contract: payload + __lsn/__tb1/__tb2/__op/__src/__all_chg.
+        update slice. A batch side repartitioned on the keys into the
+        same bucket count (merge()) reports the same partitioning, so
+        the join adds no exchange there either. Output columns are
+        _finalize_cow's contract: payload +
+        __lsn/__tb1/__tb2/__op/__src/__all_chg.
 
         upd_side=None is the delta-FOLD degenerate case (zero-exchange
         compaction): no update batch at all, the base/tomb/delta side's
         per-key winner — already resolved by _zx_base_tomb_side's
-        no-exchange dedup window — passes straight through, no join."""
-        if upd_side is None:
-            if base_side is None:
-                raise ValueError(
-                    "_zx_winners needs an update side, a base side, or both"
+        no-exchange dedup window — passes straight through, no join.
+
+        Null key values are ordinary keys (lookup and read_changes match
+        them null-safely), but the join's EqualTo never matches them, and
+        a null-safe join key would no longer be the scans' partitioning.
+        So with ``null_keys`` (the batch holds a null key value) the
+        null-keyed rows of both sides skip the join and meet in a
+        groupBy, which treats null as one value. Like the join, the
+        grouping is satisfied by both sides' HashPartitioning(keys), so
+        the base still never crosses an exchange (pinned by
+        tests/test_plans.py). Without ``null_keys``, a null-keyed base
+        row just passes through the join unmatched."""
+        if upd_side is None and base_side is None:
+            raise ValueError(
+                "_zx_winners needs an update side, a base side, or both"
+            )
+        if base_side is None:
+            joined, winner = upd_side, F.col("__cand_u")
+            base_side_present = F.lit(False)
+        else:
+            if upd_side is None:
+                joined, winner = base_side, F.col("__cand_b")
+            else:
+                joined = upd_side.hint("SHUFFLE_HASH").join(
+                    base_side, on=key_cols, how="full_outer"
                 )
-            winner = F.col("__cand_b")
-            base_side_present = (
-                F.col("__had_bt").eqNullSafe(F.lit(True))
-                if "__had_bt" in base_side.columns
-                else F.lit(True)
-            )
-            return base_side.select(
-                *[F.col(c) for c in key_cols],
-                *[winner[f"p_{f.name}"].alias(f.name) for f in nonkey],
-                winner["l"].alias("__lsn"),
-                winner["t1"].alias("__tb1"),
-                winner["t2"].alias("__tb2"),
-                winner["op"].alias("__op"),
-                F.when(winner["ns"] == 0, 0).otherwise(1).alias("__src"),
-                F.when(base_side_present, 0).otherwise(1).alias("__all_chg"),
-            )
-        if base_side is not None:
-            joined = upd_side.hint("SHUFFLE_HASH").join(
-                base_side, on=key_cols, how="full_outer"
-            )
-            winner = F.greatest("__cand_u", "__cand_b")
+                if null_keys:
+                    keyed = _and_all([F.col(c).isNotNull() for c in key_cols])
+                    joined = joined.filter(keyed).unionByName(
+                        upd_side.filter(~keyed)
+                        .unionByName(base_side.filter(~keyed), allowMissingColumns=True)
+                        .groupBy(*key_cols)
+                        .agg(*[F.max(c).alias(c) for c in joined.columns
+                               if c not in key_cols])
+                    )
+                winner = F.greatest("__cand_u", "__cand_b")
             # __had_bt (nullable through the outer join) distinguishes a
-            # real base/tombstone row from a folded delta-only key, so
-            # __all_chg matches merge()'s min(__src)-over-b/t semantics
+            # real base/tombstone row from a folded delta-only key
             base_side_present = (
                 F.col("__had_bt").eqNullSafe(F.lit(True))
                 if "__had_bt" in base_side.columns
                 else F.col("__cand_b").isNotNull()
             )
-        else:
-            joined = upd_side
-            winner = F.col("__cand_u")
-            base_side_present = F.lit(False)
         return joined.select(
             *[F.col(c) for c in key_cols],
             *[winner[f"p_{f.name}"].alias(f.name) for f in nonkey],
@@ -2450,6 +2486,8 @@ class LakeTable:
         single greatest() over per-side candidate structs, and the
         winner feeds the same _finalize_cow tail (action metrics,
         bucketed write, snapshot commit).
+        A WAL whose footers show a null key value takes _zx_winners'
+        null-key split.
 
         Restriction: key column types in the WAL must EXACTLY match
         the stored key types (the bucket layout hashed them; a cast
@@ -2470,8 +2508,6 @@ class LakeTable:
         lsn_range=(lo, hi) applies the runner's window predicate inside
         the bucketed scan (filters do not disturb the reported
         partitioning)."""
-        import shutil
-
         from . import bucketed as B
 
         snap = self.snapshot()
@@ -2509,10 +2545,8 @@ class LakeTable:
                 [f for f in wal_schema.fields if f.name not in (op_col, lsn_col)]
             )
         )
-        bexpr = self._bucket_expr(snap)
-        reg_root = os.path.join(self.path, "_bucketed", f"reg-{uuid.uuid4().hex}")
-        tables: list[str] = []
-        try:
+
+        def wal_side(reg_root: str, tables: list[str], nonkey: list) -> DataFrame:
             # normalize ANY WAL layout (flat, batch-subdirs, pruned
             # link dirs) into one flat hardlink dir for registration —
             # catalog bucketed tables do not walk non-partition subdirs
@@ -2533,7 +2567,7 @@ class LakeTable:
                 bad = (
                     spark.table(wal_name)
                     .select(*[F.col(c) for c in key_cols], fb.alias("__fb"))
-                    .filter(bexpr != F.col("__fb"))
+                    .filter(self._bucket_expr(snap) != F.col("__fb"))
                     .limit(1)
                     .count()
                 )
@@ -2543,9 +2577,6 @@ class LakeTable:
                         "from its file-name bucket (wrong keys or bucket "
                         "count at write time)"
                     )
-
-            nonkey = [f for f in evolved.fields if f.name not in key_cols]
-
             # batch side: LWW dedup window over the bucketed scan (no
             # exchange — HashPartitioning(keys) satisfies the window's
             # clustering; the xxhash64 radix prefix rides a projection)
@@ -2559,30 +2590,18 @@ class LakeTable:
                 .filter(F.col("__rn") == 1)
                 .drop("__rn")
             )
-            upd_side = self._zx_cand(
+            return self._zx_cand(
                 upd1, 1, F.col(lsn_col), _op_code(F.col(op_col)), t1, t2,
                 key_cols, nonkey,
             ).withColumnRenamed("__cand", "__cand_u")
 
-            base_side = self._zx_base_tomb_side(
-                spark, snap, touched, reg_root, tables, key_cols, nonkey
-            )
-            winners = self._zx_winners(upd_side, base_side, key_cols, nonkey)
-            if _plan_out is not None:
-                _plan_out.append(
-                    winners._jdf.queryExecution().executedPlan().toString()
-                )
-            return self._finalize_cow(
-                spark, snap, evolved, {}, winners, touched, bexpr,
-                _operation_label="merge-prebucketed",
-            )
-        finally:
-            for name in tables:
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-                except Exception:
-                    pass
-            shutil.rmtree(reg_root, ignore_errors=True)
+        return self._cow_commit(
+            spark, snap, evolved, touched, wal_side,
+            _operation_label="merge-prebucketed", _plan_out=_plan_out,
+            null_keys=_parquet_may_hold_nulls(
+                [f for fl in wal_files.values() for f in fl], key_cols
+            ),
+        )
 
     def _fold_deltas_zx(
         self, spark: SparkSession, touched: list[int],
@@ -2604,37 +2623,11 @@ class LakeTable:
         row set, so it is labeled "compact-fold", not "merge":
         logical-staleness consumers (AnnIndex.stale) must not treat it
         as a data change."""
-        import shutil
-
         snap = self.snapshot()
-        key_cols: list[str] = snap["key_cols"]
-        evolved = T.StructType.fromJson(json.loads(snap["schema"]))
-        bexpr = self._bucket_expr(snap)
-        reg_root = os.path.join(self.path, "_bucketed", f"reg-{uuid.uuid4().hex}")
-        tables: list[str] = []
-        try:
-            nonkey = [f for f in evolved.fields if f.name not in key_cols]
-            base_side = self._zx_base_tomb_side(
-                spark, snap, touched, reg_root, tables, key_cols, nonkey
-            )
-            if base_side is None:
-                return MergeResult(version=snap["version"])
-            winners = self._zx_winners(None, base_side, key_cols, nonkey)
-            if _plan_out is not None:
-                _plan_out.append(
-                    winners._jdf.queryExecution().executedPlan().toString()
-                )
-            return self._finalize_cow(
-                spark, snap, evolved, {}, winners, touched, bexpr,
-                _operation_label="compact-fold",
-            )
-        finally:
-            for name in tables:
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-                except Exception:
-                    pass
-            shutil.rmtree(reg_root, ignore_errors=True)
+        return self._cow_commit(
+            spark, snap, T.StructType.fromJson(json.loads(snap["schema"])),
+            touched, None, _operation_label="compact-fold", _plan_out=_plan_out,
+        )
 
     def _merge_mor(self, spark, snap, upd_tagged, evolved, dicts, touched, bexpr,
                    _summary_extra: dict | None = None) -> MergeResult:
@@ -3064,10 +3057,11 @@ class LakeTable:
                 os.rmdir(root)  # fails (kept) if a concurrent writer added files
             except OSError:
                 pass
-        # sweep crashed merge_prebucketed registration dirs: hardlink
-        # dirs under _bucketed/ are dropped by the merge itself on
-        # success; one orphaned by a crash is dead weight (links only —
-        # removing them never touches the snapshot's own file paths).
+        # sweep registration dirs of crashed copy-on-write merges:
+        # hardlink dirs under _bucketed/ are dropped by the merge
+        # itself, even when it aborts; one orphaned by a crash is dead
+        # weight (links only — removing them never touches the
+        # snapshot's own file paths).
         # Same grace window as other in-flight debris.
         breg = os.path.join(self.path, "_bucketed")
         if os.path.isdir(breg):

@@ -90,9 +90,9 @@ def start_cdc_stream_zx(
     resolve plan has ZERO Exchange: the batch LWW dedup window and the
     full-outer join against base + tombstones all read their required
     distribution straight from storage. Compared to
-    ``start_cdc_stream`` (window-resolve merge, ~O(batch+base) shuffle
-    per batch) this moves the steady-state per-batch shuffle from
-    hundreds of MB to ~KB at 32M-row bases (BENCH.md §6).
+    ``start_cdc_stream`` (ordinary merge: one shuffle of the batch,
+    the base joined in place) this also drops the per-batch batch
+    shuffle.
 
     Exactly-once is the same two-layer story as the batch runner:
     Spark's checkpoint replays foreachBatch at-least-once; the

@@ -65,6 +65,25 @@ def resolve_plan(spark, tmp):
     return t._resolve(base_tagged, upd_tagged, ["conv_id", "turn_idx"], 4)
 
 
+def cow_merge_plan(spark, tmp) -> str:
+    """The plan an ordinary copy-on-write merge() executed, from the SQL
+    status store (adaptive final plan + initial plan)."""
+    t = LakeTable.create(
+        os.path.join(tmp, "cow"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
+        num_buckets=4,
+    )
+    t.merge(spark.createDataFrame(generate_changes_pdf(2000, 100, seed=1)))
+    t.merge(spark.createDataFrame(
+        generate_changes_pdf(500, 100, seed=2, lsn_start=2000)
+    ))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        desc = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc:
+            return desc
+    raise RuntimeError("no merge write in the SQL status store")
+
+
 def zero_exchange_plan(spark, tmp) -> str:
     """merge_prebucketed's resolve over a bucketed WAL + base +
     tombstones: zero Exchange, zero sorts (ShuffledHashJoin)."""
@@ -194,11 +213,20 @@ def main() -> None:
             changelog_plan(spark, tmp),
         ),
         (
-            "CDC merge resolve (the one exchange)",
-            "union(base+tombstones, updates) -> ONE repartition on the keys "
+            "Copy-on-write merge (one exchange: the batch)",
+            "batch -> ONE repartition on the keys -> LWW dedup window -> "
+            "full-outer SHUFFLE_HASH join (build = the batch) against the "
+            "bucketed scan of the touched buckets' base+tombstones+deltas, "
+            "which needs no exchange -> bucket-aligned write. Pinned by "
+            "test_cow_merge_write_plan_shuffles_only_the_batch",
+            cow_merge_plan(spark, tmp),
+        ),
+        (
+            "MOR read resolve (union + window)",
+            "union(base+tombstones, deltas) -> ONE repartition on the keys "
             "-> rank + metrics windows (tie-break limbs in the sort, "
-            "min(__src) blocks WindowGroupLimit by design — DESIGN.md §10) "
-            "-> bucket-aligned write. Pinned by test_real_resolve_plan_*",
+            "min(__src) blocks WindowGroupLimit by design — DESIGN.md §10). "
+            "Pinned by test_real_resolve_plan_*",
             resolve_plan(spark, tmp),
         ),
         (

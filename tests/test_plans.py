@@ -82,13 +82,16 @@ def test_merge_plan_single_exchange(spark, tmp_path):
 
 
 def test_real_resolve_plan_single_exchange_no_python(spark, tmp_path):
-    """The ACTUAL merge resolve (not the simplified pipeline above): one
-    Exchange total, the ranking + metrics windows reuse it, the window
-    sort carries the tie-break limbs, and no Python evaluation appears
-    anywhere. Round-3 honesty note: the real plan has NO
-    WindowGroupLimit — the min-over-partition metrics column blocks the
-    rank pushdown (the measured map-side alternative was rejected,
-    DESIGN.md §10) — so this test pins what the plan really is."""
+    """The union+window resolve, which is now the MOR read resolve
+    (``_resolved_view``; the copy-on-write merge joins the batch against
+    the bucketed base instead, pinned by
+    test_cow_merge_write_plan_shuffles_only_the_batch): one Exchange
+    total, the ranking + metrics windows reuse it, the window sort
+    carries the tie-break limbs, and no Python evaluation appears
+    anywhere. The plan has NO WindowGroupLimit — the
+    min-over-partition metrics column blocks the rank pushdown (the
+    measured map-side alternative was rejected, DESIGN.md §10) — so
+    this test pins what the plan really is."""
     from pyspark.sql import types as T
 
     from oregonwaterdataportal_etl_spark.cdc.changegen import (
@@ -137,6 +140,111 @@ def test_real_resolve_plan_single_exchange_no_python(spark, tmp_path):
     assert "row_number" in plan and "min(__src" in plan  # both in that one op
     assert "__tb1" in plan  # total-order limbs ride the window sort
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _last_write_plan(spark) -> tuple[str, str]:
+    """(tree, details) of the physical plan of the last executed write,
+    read from the SQL status store (the plan the write really ran, after
+    adaptive re-planning: the tree is the final plan)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        desc = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc:
+            tree, _, details = desc.partition("\n\n")
+            return tree.split("== Initial Plan ==")[0], details
+    raise AssertionError("no write in the SQL status store")
+
+
+def _subtree(tree: str, node: str) -> list[str]:
+    """Lines of ``tree`` below the first line containing ``node``
+    (its descendants: the lines indented deeper than it)."""
+    def depth(ln: str) -> int:
+        m = re.search(r"[+:]- ", ln)
+        return m.start() if m else -1
+
+    lines = tree.splitlines()
+    top = next(i for i, ln in enumerate(lines) if node in ln)
+    below = []
+    for ln in lines[top + 1:]:
+        if depth(ln) <= depth(lines[top]):
+            break
+        below.append(ln)
+    return below
+
+
+def test_cow_merge_write_plan_shuffles_only_the_batch(spark, tmp_path):
+    """A copy-on-write merge into a non-empty table (base files,
+    tombstones and pending MOR deltas in the touched buckets) runs ONE
+    exchange, and only the batch is under it: the batch's LWW dedup
+    rides a repartition on the keys, and a no-shuffle full-outer
+    ShuffledHashJoin resolves it against the bucketed scan of the
+    base, which reports the same HashPartitioning."""
+    from oregonwaterdataportal_etl_spark.cdc.changegen import (
+        TRANSCRIPT_SCHEMA,
+        generate_changes_pdf,
+    )
+    from oregonwaterdataportal_etl_spark.lake import LakeTable
+
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"], num_buckets=4
+    )
+    t.merge(spark.createDataFrame(generate_changes_pdf(2000, 100, seed=1)))
+    t.merge(
+        spark.createDataFrame(generate_changes_pdf(300, 100, seed=3, lsn_start=2000)),
+        mode="mor",
+    )
+    snap = t.snapshot()
+    assert snap["files"] and snap["tombstones"] and snap["deltas"]
+    batch_path = str(tmp_path / "batch.parquet")
+    spark.createDataFrame(
+        generate_changes_pdf(500, 100, seed=2, lsn_start=3000)
+    ).write.parquet(batch_path)
+    r = t.merge(spark.read.parquet(batch_path))
+    assert r.version == snap["version"] + 1
+
+    tree, details = _last_write_plan(spark)
+    assert len(set(re.findall(r"\bExchange \((\d+)\)", tree))) == 1, tree
+    below = _subtree(tree, "Exchange (")
+    assert any("Scan parquet" in ln for ln in below), tree
+    assert not any("spark_catalog" in ln for ln in below), tree
+    assert "ShuffledHashJoin FullOuter" in tree, tree
+    assert "SortMergeJoin" not in tree, tree
+    base_scan = re.search(
+        r"\(\d+\) Scan parquet spark_catalog\.\S+\n(?:.+\n)*?Bucketed: true",
+        details,
+    )
+    assert base_scan, details
+
+
+def test_cow_merge_null_keys_never_shuffle_the_base(spark, tmp_path):
+    """A batch holding a null key value resolves its null-keyed rows
+    apart from the join (which never matches null), but the base still
+    stays in place: no exchange has the bucketed base scan below it."""
+    from oregonwaterdataportal_etl_spark.cdc.changegen import (
+        CHANGE_SCHEMA,
+        TRANSCRIPT_SCHEMA,
+        generate_changes_pdf,
+    )
+    from oregonwaterdataportal_etl_spark.lake import LakeTable
+
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"], num_buckets=4
+    )
+    t.merge(spark.createDataFrame(generate_changes_pdf(2000, 100, seed=1)))
+    pdf = generate_changes_pdf(500, 100, seed=2, lsn_start=3000)
+    pdf.loc[0, "conv_id"] = None
+    batch_path = str(tmp_path / "batch.parquet")
+    spark.createDataFrame(pdf, schema=CHANGE_SCHEMA).write.parquet(batch_path)
+    t.merge(spark.read.parquet(batch_path))
+
+    tree, _ = _last_write_plan(spark)
+    assert "ShuffledHashJoin FullOuter" in tree, tree
+    exchanges = set(re.findall(r"\bExchange \((\d+)\)", tree))
+    assert exchanges, tree
+    for n in exchanges:
+        assert not any(
+            "spark_catalog" in ln for ln in _subtree(tree, f"Exchange ({n})")
+        ), tree
 
 
 def test_pack_documents_single_exchange(spark):

@@ -84,8 +84,8 @@ def test_harvest_watermark_store_never_scans_base(spark, stations, tmp_path):
     """With a WatermarkStore the harvest must NOT read the base table to
     derive watermarks (round-1 judge: full-base aggregation per batch is
     a scale-killer at 10^10 rows). table.read is poisoned to prove it;
-    merge() reads touched buckets internally via _read_internal, which
-    is fine and untouched by the poison."""
+    merge() reads touched buckets internally through their bucketed
+    registration, which is fine and untouched by the poison."""
     from oregonwaterdataportal_etl_spark.cdc import WatermarkStore
 
     table = LakeTable.create(

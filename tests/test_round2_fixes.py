@@ -23,7 +23,7 @@ from oregonwaterdataportal_etl_spark.cdc.changegen import (
     generate_changes_pdf,
 )
 from oregonwaterdataportal_etl_spark.cdc.manifests import batch_id_for_window
-from oregonwaterdataportal_etl_spark.lake import LakeTable
+from oregonwaterdataportal_etl_spark.lake import LakeTable, write_bucketed_wal
 from oregonwaterdataportal_etl_spark.operators.dedup import exact_dedup
 
 KEYS = ["conv_id", "turn_idx"]
@@ -51,16 +51,10 @@ def test_exact_dedup_second_limb_disambiguates(spark):
 
 
 # ------------------------------------------------- merge stray guard
-def test_merge_rejects_nondeterministic_batch(spark, tmp_path):
-    """A source that re-evaluates to different keys must abort the merge
-    BEFORE commit (silent base-row loss otherwise — advisor finding)."""
-    t = make(tmp_path)
-    t.merge(spark.createDataFrame(
-        [("insert", 1, "base", 0, "user", "x", None, None)], schema=CHANGE_SCHEMA))
-    v = t.current_version()
-    base_rows = t.read(spark).count()
-
-    # two conv ids landing in different buckets (nb=4, turn_idx=0)
+def _flipping_batch(spark, tmp_path):
+    """A one-row batch whose key lands in a different bucket on every
+    evaluation after the first (nb=4, turn_idx=0): the merge's touched
+    scan sees one bucket, its write another."""
     cands = spark.createDataFrame([(f"c{i}",) for i in range(32)], ["conv_id"]).select(
         "conv_id", F.pmod(F.hash("conv_id", F.lit(0)), F.lit(4)).alias("b")
     ).collect()
@@ -89,12 +83,94 @@ def test_merge_rejects_nondeterministic_batch(spark, tmp_path):
             "ts": [pd.Timestamp("2024-01-01")],
         })[list(names)]
 
-    updates = spark.range(1).repartition(1).mapInPandas(gen, schema=CHANGE_SCHEMA)
+    return spark.range(1).repartition(1).mapInPandas(gen, schema=CHANGE_SCHEMA)
+
+
+def test_merge_rejects_nondeterministic_batch(spark, tmp_path):
+    """A source that re-evaluates to different keys must abort the merge
+    BEFORE commit (silent base-row loss otherwise — advisor finding)."""
+    t = make(tmp_path)
+    t.merge(spark.createDataFrame(
+        [("insert", 1, "base", 0, "user", "x", None, None)], schema=CHANGE_SCHEMA))
+    v = t.current_version()
+    base_rows = t.read(spark).count()
+
     with pytest.raises(RuntimeError, match="non-deterministic"):
-        t.merge(updates)
+        t.merge(_flipping_batch(spark, tmp_path))
     # nothing committed, base intact
     assert t.current_version() == v
     assert t.read(spark).count() == base_rows
+
+
+def test_cow_merges_leave_no_registration_behind(spark, tmp_path):
+    """Every copy-on-write merge registers the touched buckets' files
+    as a session catalog table over a hardlink dir under
+    ``<table>/_bucketed/``. Both must be gone after the merge, whether
+    it committed or aborted on the stray guard."""
+    t = make(tmp_path)
+    t.merge(spark.createDataFrame(generate_changes_pdf(400, 30, seed=4)))
+    t.merge(spark.createDataFrame(
+        generate_changes_pdf(200, 30, seed=5, lsn_start=400)), mode="mor")
+    t.merge(spark.createDataFrame(
+        generate_changes_pdf(200, 30, seed=6, lsn_start=600)))
+    with pytest.raises(RuntimeError, match="non-deterministic"):
+        t.merge(_flipping_batch(spark, tmp_path))
+    t.merge(spark.createDataFrame(
+        generate_changes_pdf(200, 30, seed=7, lsn_start=800)))
+    assert t.snapshot()["summary"]["operation"] == "merge"
+    assert os.listdir(os.path.join(t.path, "_bucketed")) == []
+    leaked = [x.name for x in spark.catalog.listTables() if x.name.startswith("zx_")]
+    assert leaked == []
+
+
+@pytest.mark.parametrize("via", ["merge", "merge_prebucketed"])
+def test_cow_merge_matches_null_keys_null_safely(spark, tmp_path, via):
+    """Null key values are ordinary keys (lookup and the changelog match
+    them null-safely): a cow update, replay or delete of a key such as
+    (None, 7) must resolve against its stored row, never leave a second
+    live copy beside it or a delete that does nothing. Each batch also
+    carries non-null keys, so both kinds of row share one merge."""
+    t = make(tmp_path)
+    t.merge(spark.createDataFrame(generate_changes_pdf(400, 30, seed=4)))
+
+    def merge(*events):
+        rows = [(op, lsn, conv, ti, "user", text, None, None)
+                for op, lsn, conv, ti, text in events]
+        lsn = events[0][1]
+        batch = spark.createDataFrame(
+            rows + [("insert", lsn + 1, f"nn{lsn}", 0, "user", "x", None, None)],
+            schema=CHANGE_SCHEMA)
+        if via == "merge":
+            t.merge(batch)
+        else:
+            wal = str(tmp_path / f"wal{lsn}")
+            write_bucketed_wal(batch, wal, 4, KEYS)
+            t.merge_prebucketed(spark, wal)
+
+    def null_rows():
+        rows = t.read(spark).filter(F.col("conv_id").isNull()).collect()
+        return sorted(((r["turn_idx"], r["text"]) for r in rows), key=str)
+
+    merge(("insert", 1000, None, 7, "v1"), ("insert", 1000, None, None, "w1"))
+    assert null_rows() == [(7, "v1"), (None, "w1")]
+    merge(("update", 1010, None, 7, "v2"))
+    assert null_rows() == [(7, "v2"), (None, "w1")]
+    # replayed insert: lower LSN than the stored row, a no-op
+    merge(("insert", 1000, None, 7, "v1"), ("insert", 1000, None, None, "w1"))
+    assert null_rows() == [(7, "v2"), (None, "w1")]
+    # a pending merge-on-read delta for the key folds in null-safely and
+    # outranks the batch's older update of the same key
+    t.merge(spark.createDataFrame(
+        [("update", 1030, None, 7, "user", "v3", None, None)],
+        schema=CHANGE_SCHEMA), mode="mor")
+    merge(("update", 1025, None, 7, "older"), ("update", 1040, None, None, "w2"))
+    assert null_rows() == [(7, "v3"), (None, "w2")]
+    merge(("delete", 1050, None, 7, None), ("delete", 1050, None, None, None))
+    assert null_rows() == []
+    # the tombstones keep a stale insert from resurrecting the keys
+    merge(("insert", 1020, None, 7, "stale"), ("insert", 1020, None, None, "stale"))
+    assert null_rows() == []
+    assert t.read(spark).count() == t.read(spark).dropDuplicates(KEYS).count()
 
 
 # --------------------------------------------------------- vacuum

@@ -766,8 +766,13 @@ def test_narrow_key_batch_buckets_correctly(spark, tmp_path):
     t.merge(spark.createDataFrame(
         [("update", 2, "a", 7, "y"), ("insert", 3, "b", 9, "z")],
         "op string, lsn long, conv_id string, turn_idx int, text string"))
-    got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in t.read(spark).collect()}
+    rows = t.read(spark).collect()
+    got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in rows}
     assert got == {("a", 7): "y", ("b", 9): "z"}
+    # the dict above would hide a second copy of a key: a batch hashed
+    # on the wrong key type misses its base bucket and lands beside it
+    assert len(rows) == 2
+    assert len({(r["conv_id"], r["turn_idx"]) for r in rows}) == len(rows)
     # and the bucket-pruned point lookup still finds the updated key
     assert t.lookup(spark, conv_id="a", turn_idx=7).collect()[0]["text"] == "y"
 
