@@ -448,6 +448,32 @@ def _and_all(exprs) -> "F.Column":
     return out
 
 
+def _outer_join_on_keys(left: DataFrame, right: DataFrame, key_cols: list[str],
+                        null_keys: bool, hint: str | None = None) -> DataFrame:
+    """Full-outer join of two one-row-per-key sides on plain EqualTo
+    keys, so two scans bucketed on the keys join in place, with no
+    exchange. EqualTo never matches a null key value, and a null-safe
+    join key would no longer be the scans' partitioning. So with
+    ``null_keys`` (a side may hold a null key value) the null-keyed rows
+    of both sides skip the join and meet in a groupBy, which treats null
+    as one value; with one row per key and side, the per-column max
+    picks the present side's value, as the join would. The groupBy reads
+    only rows that pass the pushed null-key filter. Shared by the cow
+    merge (_zx_winners) and the changelog (read_changes)."""
+    joined = (left.hint(hint) if hint else left).join(
+        right, on=key_cols, how="full_outer"
+    )
+    if not null_keys:
+        return joined
+    keyed = _and_all([F.col(c).isNotNull() for c in key_cols])
+    return joined.filter(keyed).unionByName(
+        left.filter(~keyed)
+        .unionByName(right.filter(~keyed), allowMissingColumns=True)
+        .groupBy(*key_cols)
+        .agg(*[F.max(c).alias(c) for c in joined.columns if c not in key_cols])
+    )
+
+
 def _parquet_rows(path: str) -> int:
     """Row count from the parquet footer — metadata only, no data scan
     (the Iceberg-manifest-statistics analog for snapshot lineage)."""
@@ -684,7 +710,6 @@ class LakeTable:
         buckets: list[int] | None = None,
         key_pred=None,
         n_buckets: int | None = None,
-        _internal_cols: bool = False,
         files_allow: set[str] | None = None,
     ) -> DataFrame:
         """Shared MOR read path for one PINNED snapshot version: base (+
@@ -700,11 +725,7 @@ class LakeTable:
         selects whole key-groups and cannot change any winner. A payload
         predicate here would silently promote stale events (their
         higher-LSN competitors get filtered out pre-window); payload
-        filters belong ABOVE read().
-
-        _internal_cols=True (read_changes' substrate) keeps the
-        per-key winner's `__lsn` and includes delete winners with a
-        `__deleted` flag instead of filtering them out."""
+        filters belong ABOVE read()."""
         snap = self.snapshot(version)
         schema = T.StructType.fromJson(json.loads(snap["schema"]))
         dicts = snap.get("dict_cols") or {}
@@ -716,25 +737,6 @@ class LakeTable:
         deltas = self._read_deltas(spark, snap, buckets=buckets,
                                    files_allow=files_allow)
         if deltas is None:
-            if _internal_cols:
-                live = base.select(
-                    *[F.col(f.name) for f in schema.fields],
-                    F.col(LSN_COL).alias("__lsn"),
-                    F.lit(False).alias("__deleted"),
-                )
-                tomb0 = self._read_tombstones(spark, snap, buckets=buckets,
-                                              files_allow=files_allow)
-                if tomb0 is not None:
-                    if key_pred is not None:
-                        tomb0 = tomb0.filter(key_pred)
-                    live = live.unionByName(
-                        tomb0.select(
-                            *[F.col(f.name) for f in schema.fields],
-                            F.col(LSN_COL).alias("__lsn"),
-                            F.lit(True).alias("__deleted"),
-                        )
-                    )
-                return live
             return base.drop(LSN_COL, _TB1_COL, _TB2_COL)
 
         def tag(df, op_expr, src, filtered=False):
@@ -767,15 +769,50 @@ class LakeTable:
             base_tagged, upd_tagged, snap["key_cols"],
             n_buckets if n_buckets is not None else snap["num_buckets"],
         )
-        if _internal_cols:
-            return winners.select(
-                *self._payload_out(schema, dicts),
-                F.col("__lsn"),
-                F.col("__op").isin(_OP_DELETE, _OP_TOMBSTONE).alias("__deleted"),
-            )
         return winners.filter(
             ~F.col("__op").isin(_OP_DELETE, _OP_TOMBSTONE)
         ).select(*self._payload_out(schema, dicts))
+
+    def _kept_registration(self, label: str, snaps: list[dict], build) -> tuple[str, str]:
+        """Registration dir and catalog-name prefix for a LAZY frame,
+        whose registration must outlive the call that returns it (unlike
+        _cow_commit's, dropped when its merge ends).
+
+        The dir is ``_bucketed/<label>-<digest>``, where the digest
+        covers the file lists of ``snaps``: snapshots are immutable, so
+        equal file lists mean equal content, and a WAP stage's version N
+        (which shares the table dir and the version numbers) never
+        reuses main's version N registration. ``build(tmp)`` links the
+        files into a private tmp dir that is renamed into place, so the
+        dir appears complete or not at all (concurrent readers race
+        benignly: a rival that renamed first wins). Reuse refreshes the
+        dir's mtime, and vacuum's ``_bucketed/`` grace sweep collects
+        dirs no read has touched within its grace window. Catalog names
+        derive from the dir; callers CREATE them IF NOT EXISTS, so a
+        re-read adds no session catalog entry."""
+        import hashlib
+        import shutil
+
+        digest = hashlib.md5(json.dumps(
+            [[s.get(k) or {} for k in ("files", "tombstones", "deltas")] for s in snaps],
+            sort_keys=True,
+        ).encode()).hexdigest()[:12]
+        reg_root = os.path.join(self.path, "_bucketed", f"{label}-{digest}")
+        if not os.path.isdir(reg_root):
+            tmp = reg_root + f".tmp-{uuid.uuid4().hex[:8]}"
+            os.makedirs(tmp)
+            build(tmp)
+            try:
+                os.rename(tmp, reg_root)
+            except OSError:
+                shutil.rmtree(tmp, ignore_errors=True)  # a rival built it
+        else:
+            try:
+                os.utime(reg_root)  # keep the grace sweep off a live reg
+            except OSError:
+                pass
+        name = hashlib.md5(os.path.abspath(reg_root).encode()).hexdigest()[:16]
+        return reg_root, f"zxr_{name}"
 
     def _resolved_view_bucketed(self, spark: SparkSession, version: int) -> DataFrame:
         """Zero-exchange MOR read: base+tombstones and delta files all
@@ -786,16 +823,8 @@ class LakeTable:
         merge_prebucketed (DESIGN.md §11).
 
         Lifetime: the returned DataFrame is LAZY, so its registration
-        dir and catalog entries must outlive it. Both are DETERMINISTIC
-        per (table, snapshot version) and reused across reads —
-        snapshots are immutable, so a version's registration is built
-        once (atomic tmp+rename; concurrent readers race benignly) and
-        its mtime refreshed on reuse; vacuum's grace sweep collects
-        superseded ones. Catalog entries are session-scoped
-        (CREATE IF NOT EXISTS; one per version read in this session)."""
-        import hashlib
-        import shutil
-
+        dir and catalog entries must outlive it — one per snapshot
+        version, reused across reads (_kept_registration)."""
         from . import bucketed as B
 
         snap = self.snapshot(version)
@@ -818,11 +847,7 @@ class LakeTable:
                 T.StructField(_TB2_COL, T.LongType(), True),
             ]
         )
-        reg_root = os.path.join(
-            self.path, "_bucketed", f"read-v{snap['version']:08d}"
-        )
-        if not os.path.isdir(reg_root):
-            tmp = reg_root + f".tmp-{uuid.uuid4().hex[:8]}"
+        def build(tmp: str) -> None:
             B.link_files_bucketed(snap["deltas"], os.path.join(tmp, "deltas"))
             if snap["files"]:
                 B.link_files_bucketed(
@@ -832,20 +857,13 @@ class LakeTable:
                 B.link_files_bucketed(
                     snap["tombstones"], os.path.join(tmp, "basetomb", "side=t")
                 )
-            try:
-                os.rename(tmp, reg_root)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # a rival built it
-        else:
-            try:
-                os.utime(reg_root)  # keep the grace sweep off a live reg
-            except OSError:
-                pass
-        pid = hashlib.md5(os.path.abspath(self.path).encode()).hexdigest()[:8]
+
+        reg_root, reg = self._kept_registration(
+            f"read-v{snap['version']:08d}", [snap], build
+        )
         dname = B.register_bucketed_table(
             spark, stored_plus, os.path.join(reg_root, "deltas"), key_cols,
-            n_buckets, name=f"zxr_{pid}_v{snap['version']}_d",
-            if_not_exists=True,
+            n_buckets, name=f"{reg}_d", if_not_exists=True,
         )
         base_side = None
         if os.path.isdir(os.path.join(reg_root, "basetomb")):
@@ -860,7 +878,7 @@ class LakeTable:
             )
             btname = B.register_bucketed_table(
                 spark, part_schema, os.path.join(reg_root, "basetomb"),
-                key_cols, n_buckets, name=f"zxr_{pid}_v{snap['version']}_bt",
+                key_cols, n_buckets, name=f"{reg}_bt",
                 if_not_exists=True, partition_col="side",
             )
             spark.sql(f"ALTER TABLE `{btname}` RECOVER PARTITIONS")
@@ -1116,12 +1134,40 @@ class LakeTable:
         read prunes to the same buckets; the full-outer join runs over
         touched buckets only.
 
+        And it moves no row across the network: each version's touched
+        base, tombstone and pending-delta files register as one catalog
+        bucketed table (_zx_base_tomb_side), whose scan reports
+        HashPartitioning(keys, num_buckets) and whose per-key winner
+        comes from a dedup window that partitioning already satisfies.
+        The two versions then join full-outer on plain EqualTo keys,
+        which both sides' partitioning satisfies too: no Exchange in the
+        plan (pinned by tests/test_plans.py). It stays a sort-merge join
+        (no SHUFFLE_HASH hint): both sides are version-sized, and a
+        sort-merge join spills where a hash build would run out of
+        memory.
+
+        Null key values match null-safely, as in merge(). EqualTo never
+        matches them, so when the touched files' footers show a possible
+        null key, the null-keyed rows of both versions resolve in a
+        groupBy beside the join (_outer_join_on_keys). Only those rows
+        cross an exchange; the footer check itself runs no job.
+
+        The returned frame is lazy, so its registration outlives this
+        call: one ``_bucketed/chg-v<from>-v<to>-<digest>`` dir per hop,
+        reused by later reads of the same hop, with catalog entries
+        created IF NOT EXISTS (_kept_registration). vacuum's grace sweep
+        removes it once no read has touched it within the grace window.
+
         Contract: LSNs applied between the versions must exceed
         from_version's high-watermark (the CdcRunner window discipline;
         arbitrary hand merges of past LSN ranges can change equal-LSN
         tie winners invisibly to footer stats). Rebucketing between the
         versions is supported — the from-side just reads unpruned
-        (bucket ids are not comparable across layouts)."""
+        (bucket ids are not comparable across layouts), registered under
+        its own bucket count, and the planner shuffles to match the
+        layouts. from_version 0 has no from-side and no join."""
+        from . import bucketed as B
+
         v2 = self.current_version() if to_version is None else to_version
         v1 = from_version
         if v1 > v2:
@@ -1206,59 +1252,55 @@ class LakeTable:
         if not touched:
             return empty
         tb = sorted(touched)
-
-        cur = self._resolved_view(spark, v2, buckets=tb, _internal_cols=True)
-        prev_buckets = (
-            tb if snap1["num_buckets"] == snap2["num_buckets"] else None
-        )
-        if v1 == 0:
-            prev = spark.createDataFrame(
-                [],
-                T.StructType(
-                    list(schema2.fields)
-                    + [
-                        T.StructField("__lsn", T.LongType(), True),
-                        T.StructField("__deleted", T.BooleanType(), True),
-                    ]
-                ),
-            )
-        else:
-            prev = (
-                self._resolved_view(
-                    spark, v1, buckets=prev_buckets, _internal_cols=True
-                )
-                .filter(~F.col("__deleted"))
-            )
         key_cols: list[str] = snap2["key_cols"]
-        schema1_names = {
-            f.name for f in T.StructType.fromJson(json.loads(snap1["schema"])).fields
-        }
-        prev = prev.select(
-            # renamed keys + null-safe join condition: merge() matches
-            # null key values null-safely, so the changelog must too
-            *[F.col(c).alias(f"__pk_{c}") for c in key_cols],
-            *[
-                (
-                    F.col(f.name) if f.name in schema1_names
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f"__prev_{f.name}")
-                for f in schema2.fields
-                if f.name not in key_cols
-            ],
-            F.col("__lsn").alias("__prev_lsn"),
-        )
-        j = cur.join(
-            prev,
-            on=_and_all(
-                F.col(c).eqNullSafe(F.col(f"__pk_{c}")) for c in key_cols
-            ),
-            how="full_outer",
+        nonkey = [f for f in schema2.fields if f.name not in key_cols]
+        # the from-side reads the same buckets, or all of its own when the
+        # hop rebucketed (bucket ids are not comparable across layouts)
+        from_buckets = (
+            tb if snap1["num_buckets"] == snap2["num_buckets"]
+            else range(snap1["num_buckets"])
         )
 
-        cur_missing = F.col("__lsn").isNull()
-        prev_present = F.col("__prev_lsn").isNotNull()
-        fresh = F.col("__lsn") > F.lit(wm1)
-        live = ~F.coalesce(F.col("__deleted"), F.lit(True))
+        def build(tmp: str) -> None:
+            self._link_base_tomb(snap2, tb, os.path.join(tmp, "to"))
+            self._link_base_tomb(snap1, from_buckets, os.path.join(tmp, "from"))
+
+        reg_root, reg = self._kept_registration(
+            f"chg-v{v1}-v{v2}", [snap1, snap2], build
+        )
+        # each version's per-key winner (base, tombstones and pending
+        # deltas) from its own bucketed scan: one candidate struct per key
+        sides = {}
+        for side, snap in (("to", snap2), ("from", snap1)):
+            bt_dir = os.path.join(reg_root, side)
+            if os.path.isdir(bt_dir):
+                sides[side] = self._zx_base_tomb_side(
+                    spark, snap, bt_dir, f"{reg}_{side}", key_cols, nonkey
+                ).select(*key_cols, F.col("__cand_b").alias(f"__{side}"))
+        if "from" in sides:
+            sides["from"] = sides["from"].filter(
+                ~F.col("__from.op").isin(_OP_DELETE, _OP_TOMBSTONE)
+            )
+        if not sides:
+            return empty
+        if len(sides) == 1:
+            # empty origin (or one side without files): nothing to join
+            (side, j), = sides.items()
+            other = "__from" if side == "to" else "__to"
+            j = j.withColumn(other, F.lit(None).cast(j.schema[f"__{side}"].dataType))
+        else:
+            linked = B.collect_wal_files(reg_root).values()
+            j = _outer_join_on_keys(
+                sides["to"], sides["from"], key_cols,
+                _parquet_may_hold_nulls([f for fl in linked for f in fl], key_cols),
+            )
+
+        cur, prev = F.col("__to"), F.col("__from")
+        lsn = cur["l"]
+        cur_missing = cur.isNull()
+        prev_present = prev.isNotNull()
+        fresh = lsn > F.lit(wm1)
+        live = ~F.coalesce(cur["op"].isin(_OP_DELETE, _OP_TOMBSTONE), F.lit(True))
         change = (
             F.when(live & fresh & ~prev_present, F.lit("insert"))
             .when(live & fresh & prev_present, F.lit("update"))
@@ -1267,22 +1309,13 @@ class LakeTable:
             .when((cur_missing | ~live) & prev_present
                   & (cur_missing | fresh), F.lit("delete"))
         )
-        nonkey = [f for f in schema2.fields if f.name not in key_cols]
         classified = j.withColumn("_change_type", change).filter(
             F.col("_change_type").isNotNull()
         )
-        # cur-missing (expired-tombstone delete) rows carry the
-        # key only on the prev side
-        keys_out = [
-            F.coalesce(F.col(c), F.col(f"__pk_{c}")).alias(c)
-            for c in key_cols
-        ]
+        keys_out = [F.col(c) for c in key_cols]
         post_payload = [
-            F.when(
-                F.col("_change_type") == "delete",
-                F.col(f"__prev_{f.name}"),
-            )
-            .otherwise(F.col(f.name))
+            F.when(F.col("_change_type") == "delete", prev[f"p_{f.name}"])
+            .otherwise(cur[f"p_{f.name}"])
             .alias(f.name)
             for f in nonkey
         ]
@@ -1291,7 +1324,7 @@ class LakeTable:
                 *keys_out,
                 *post_payload,
                 F.col("_change_type"),
-                F.col("__lsn").alias("_commit_lsn"),
+                lsn.alias("_commit_lsn"),
             )
         # pre-image companion rows: same keys + same commit LSN as the
         # post-image, payload from the from_version side. Built as a
@@ -1301,13 +1334,13 @@ class LakeTable:
             *keys_out,
             *post_payload,
             F.col("_change_type").alias("_change_type"),
-            F.col("__lsn").alias("_commit_lsn"),
+            lsn.alias("_commit_lsn"),
         )
         pre_struct = F.struct(
             *keys_out,
-            *[F.col(f"__prev_{f.name}").alias(f.name) for f in nonkey],
+            *[prev[f"p_{f.name}"].alias(f.name) for f in nonkey],
             F.lit("update_preimage").alias("_change_type"),
-            F.col("__lsn").alias("_commit_lsn"),
+            lsn.alias("_commit_lsn"),
         )
         rows = F.when(
             F.col("_change_type") == "update",
@@ -2053,9 +2086,13 @@ class LakeTable:
         try:
             nonkey = [f for f in evolved.fields if f.name not in key_cols]
             upd = upd_side(reg_root, tables, nonkey) if upd_side else None
-            base_side = self._zx_base_tomb_side(
-                spark, snap, touched, reg_root, tables, key_cols, nonkey
-            )
+            bt_dir = os.path.join(reg_root, "basetomb")
+            base_side = None
+            if self._link_base_tomb(snap, touched, bt_dir):
+                tables.append(f"zx_{uuid.uuid4().hex[:12]}")
+                base_side = self._zx_base_tomb_side(
+                    spark, snap, bt_dir, tables[-1], key_cols, nonkey
+                )
             if upd is None and base_side is None:
                 return MergeResult(version=snap["version"])
             winners = self._zx_winners(upd, base_side, key_cols, nonkey, null_keys)
@@ -2266,19 +2303,37 @@ class LakeTable:
             *extra,
         )
 
+    @staticmethod
+    def _link_base_tomb(snap: dict, touched, bt_dir: str) -> bool:
+        """Hardlink the touched buckets' base, tombstone and pending
+        delta files under ``bt_dir``'s side=b / side=t / side=d dirs
+        (the layout _zx_base_tomb_side registers). False if the touched
+        buckets hold no file at all."""
+        from . import bucketed as B
+
+        linked = False
+        for side, coll in (("b", snap["files"]), ("t", snap.get("tombstones", {})),
+                           ("d", snap.get("deltas", {}))):
+            sel = {b: fl for b, fl in coll.items() if int(b) in touched}
+            if sel:
+                B.link_files_bucketed(sel, os.path.join(bt_dir, f"side={side}"))
+                linked = True
+        return linked
+
     def _zx_base_tomb_side(
-        self, spark, snap: dict, touched: list[int], reg_root: str,
-        tables: list[str], key_cols: list[str], nonkey: list,
-    ) -> DataFrame | None:
-        """Base rows, tombstones AND pending MOR delta files registered
-        as ONE bucketed table partitioned by a side= directory column —
-        a second full-outer join would coalesce the first join's key
+        self, spark, snap: dict, bt_dir: str, name: str,
+        key_cols: list[str], nonkey: list,
+    ) -> DataFrame:
+        """Base rows, tombstones AND pending MOR delta files (linked
+        under ``bt_dir`` by _link_base_tomb) registered as ONE bucketed
+        table ``name`` (IF NOT EXISTS) partitioned by a side= directory
+        column — a second full-outer join would coalesce the first join's key
         columns, hiding their partitioning from Catalyst and forcing an
         exchange (measured, then fixed with this single-table design).
         Stored schema derives from the PINNED snap (no CURRENT re-read
         racing a concurrent commit); evolved columns the files lack
         null-fill through _zx_cand's missing-column arm. Returns the
-        candidate-struct side, or None for an empty table.
+        candidate-struct side: one row per key.
 
         Delta folding (side=d): touched buckets' merge-on-read deltas
         are just more already-committed updates, so they fold into every
@@ -2304,28 +2359,6 @@ class LakeTable:
                 T.StructField(_TB2_COL, T.LongType(), True),
             ]
         )
-        base_files = {
-            b: fl for b, fl in snap["files"].items() if int(b) in touched
-        }
-        tomb_files = {
-            b: fl
-            for b, fl in snap.get("tombstones", {}).items()
-            if int(b) in touched
-        }
-        delta_files = {
-            b: fl
-            for b, fl in snap.get("deltas", {}).items()
-            if int(b) in touched
-        }
-        if not base_files and not tomb_files and not delta_files:
-            return None
-        bt_dir = os.path.join(reg_root, "basetomb")
-        if base_files:
-            B.link_files_bucketed(base_files, os.path.join(bt_dir, "side=b"))
-        if tomb_files:
-            B.link_files_bucketed(tomb_files, os.path.join(bt_dir, "side=t"))
-        if delta_files:
-            B.link_files_bucketed(delta_files, os.path.join(bt_dir, "side=d"))
         part_schema = T.StructType(
             list(stored.fields)
             + [
@@ -2335,19 +2368,18 @@ class LakeTable:
                 T.StructField("side", T.StringType()),
             ]
         )
-        bt_name = B.register_bucketed_table(
+        B.register_bucketed_table(
             spark, part_schema, bt_dir, key_cols, snap["num_buckets"],
-            partition_col="side",
+            name=name, partition_col="side", if_not_exists=True,
         )
-        tables.append(bt_name)
-        spark.sql(f"ALTER TABLE `{bt_name}` RECOVER PARTITIONS")
-        bt = spark.table(bt_name)
+        spark.sql(f"ALTER TABLE `{name}` RECOVER PARTITIONS")
+        bt = spark.table(name)
         op_expr = (
             F.when(F.col("side") == "t", F.lit(_OP_TOMBSTONE))
             .when(F.col("side") == "d", _op_code(F.col(_OP_COL)))
             .otherwise(F.lit(_OP_BASE))
         )
-        if not delta_files:
+        if not os.path.isdir(os.path.join(bt_dir, "side=d")):
             return self._zx_cand(
                 bt, 0, F.col(LSN_COL), op_expr,
                 F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
@@ -2401,15 +2433,12 @@ class LakeTable:
         no-exchange dedup window — passes straight through, no join.
 
         Null key values are ordinary keys (lookup and read_changes match
-        them null-safely), but the join's EqualTo never matches them, and
-        a null-safe join key would no longer be the scans' partitioning.
-        So with ``null_keys`` (the batch holds a null key value) the
-        null-keyed rows of both sides skip the join and meet in a
-        groupBy, which treats null as one value. Like the join, the
-        grouping is satisfied by both sides' HashPartitioning(keys), so
-        the base still never crosses an exchange (pinned by
-        tests/test_plans.py). Without ``null_keys``, a null-keyed base
-        row just passes through the join unmatched."""
+        them null-safely). With ``null_keys`` (the batch holds a null key
+        value) the null-keyed rows of both sides resolve in
+        _outer_join_on_keys' groupBy split, and the base still never
+        crosses an exchange (pinned by tests/test_plans.py). Without
+        ``null_keys``, a null-keyed base row just passes through the
+        join unmatched."""
         if upd_side is None and base_side is None:
             raise ValueError(
                 "_zx_winners needs an update side, a base side, or both"
@@ -2421,18 +2450,9 @@ class LakeTable:
             if upd_side is None:
                 joined, winner = base_side, F.col("__cand_b")
             else:
-                joined = upd_side.hint("SHUFFLE_HASH").join(
-                    base_side, on=key_cols, how="full_outer"
+                joined = _outer_join_on_keys(
+                    upd_side, base_side, key_cols, null_keys, hint="SHUFFLE_HASH"
                 )
-                if null_keys:
-                    keyed = _and_all([F.col(c).isNotNull() for c in key_cols])
-                    joined = joined.filter(keyed).unionByName(
-                        upd_side.filter(~keyed)
-                        .unionByName(base_side.filter(~keyed), allowMissingColumns=True)
-                        .groupBy(*key_cols)
-                        .agg(*[F.max(c).alias(c) for c in joined.columns
-                               if c not in key_cols])
-                    )
                 winner = F.greatest("__cand_u", "__cand_b")
             # __had_bt (nullable through the outer join) distinguishes a
             # real base/tombstone row from a folded delta-only key
@@ -3057,12 +3077,13 @@ class LakeTable:
                 os.rmdir(root)  # fails (kept) if a concurrent writer added files
             except OSError:
                 pass
-        # sweep registration dirs of crashed copy-on-write merges:
-        # hardlink dirs under _bucketed/ are dropped by the merge
-        # itself, even when it aborts; one orphaned by a crash is dead
-        # weight (links only — removing them never touches the
+        # sweep registration dirs under _bucketed/: a copy-on-write
+        # merge drops its own, even when it aborts, so one left by a
+        # crash is dead weight; the read and changelog registrations
+        # (_kept_registration) stay for their lazy frames and are
+        # collected here once no read has refreshed them within the
+        # grace window (links only — removing them never touches the
         # snapshot's own file paths).
-        # Same grace window as other in-flight debris.
         breg = os.path.join(self.path, "_bucketed")
         if os.path.isdir(breg):
             import shutil as _shutil

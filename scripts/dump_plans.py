@@ -160,8 +160,10 @@ def zero_exchange_compact_fold_plan(spark, tmp) -> str:
 
 
 def changelog_plan(spark, tmp):
-    """read_changes between two versions: bucket-pruned resolved views
-    on both sides + one full-outer join over touched buckets only."""
+    """read_changes between two versions: each version's touched
+    buckets register as one bucketed table (base, tombstones, pending
+    deltas), and the two per-key winner sides join full-outer in place:
+    a sort-merge join on plain key equality with no Exchange."""
     t = LakeTable.create(
         os.path.join(tmp, "chg"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
         num_buckets=4,
@@ -206,10 +208,12 @@ def main() -> None:
             zero_exchange_compact_fold_plan(spark, tmp),
         ),
         (
-            "Incremental changelog read (round 5)",
-            "read_changes: bucket-pruned resolved views of both snapshots "
-            "+ one full-outer join over touched buckets only. Scan pruning "
-            "pinned by test_changelog_scans_only_touched_buckets",
+            "Incremental changelog read (zero exchange)",
+            "read_changes: the touched buckets of both snapshots as bucketed "
+            "scans -> per-key winners -> full-outer sort-merge join on the "
+            "keys, which both scans' partitioning satisfies: NO Exchange. "
+            "Pinned by test_changelog_joins_both_versions_in_place; scan "
+            "pruning by test_changelog_scans_only_touched_buckets",
             changelog_plan(spark, tmp),
         ),
         (

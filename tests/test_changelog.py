@@ -341,3 +341,135 @@ def test_changelog_from_vacuumed_version_errors_clearly(spark, tmp_path):
         t.read_changes(spark, v1)
     # the bootstrap full sync still works against the synthetic origin
     assert t.read_changes(spark, 0).count() > 0
+
+
+def test_changelog_matches_null_keys_null_safely(spark, tmp_path):
+    """Null key values are ordinary keys: inserts, updates and deletes
+    of (None, 7) and (None, None), beside non-null keys, classify and
+    carry pre-images exactly like any other key, across a cow hop, a
+    MOR hop and the two together."""
+    from oregonwaterdataportal_etl_spark.cdc.changegen import CHANGE_SCHEMA
+
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=4
+    )
+
+    def merge(mode, *events):
+        t.merge(spark.createDataFrame(
+            [(op, lsn, conv, ti, "user", text, None, None)
+             for op, lsn, conv, ti, text in events],
+            CHANGE_SCHEMA,
+        ), mode=mode)
+        return t.current_version()
+
+    def changes(v1, v2):
+        return sorted(
+            ((r["conv_id"], r["turn_idx"], r["_change_type"], r["_commit_lsn"],
+              r["text"])
+             for r in t.read_changes(spark, v1, v2, include_preimages=True).collect()),
+            key=str,
+        )
+
+    def want(*rows):
+        return sorted(rows, key=str)
+
+    v1 = merge("cow", ("insert", 10, None, 7, "a"), ("insert", 11, None, None, "b"),
+               ("insert", 12, "c1", 0, "x"), ("insert", 13, "c1", 1, "y"))
+    v2 = merge("cow", ("update", 20, None, 7, "a2"), ("delete", 21, None, None, None),
+               ("update", 22, "c1", 0, "x2"), ("insert", 23, "c2", 0, "z"))
+    v3 = merge("mor", ("insert", 30, None, None, "b2"), ("delete", 31, None, 7, None),
+               ("update", 32, "c2", 0, "z2"), ("delete", 33, "c1", 1, None))
+    assert t.snapshot(v3)["deltas"]
+    assert changes(v1, v2) == want(
+        (None, 7, "update", 20, "a2"), (None, 7, "update_preimage", 20, "a"),
+        (None, None, "delete", 21, "b"),
+        ("c1", 0, "update", 22, "x2"), ("c1", 0, "update_preimage", 22, "x"),
+        ("c2", 0, "insert", 23, "z"),
+    )
+    assert changes(v2, v3) == want(
+        (None, None, "insert", 30, "b2"),
+        (None, 7, "delete", 31, "a2"),
+        ("c2", 0, "update", 32, "z2"), ("c2", 0, "update_preimage", 32, "z"),
+        ("c1", 1, "delete", 33, "y"),
+    )
+    assert changes(v1, v3) == want(
+        (None, None, "update", 30, "b2"), (None, None, "update_preimage", 30, "b"),
+        (None, 7, "delete", 31, "a"),
+        ("c1", 0, "update", 22, "x2"), ("c1", 0, "update_preimage", 22, "x"),
+        ("c1", 1, "delete", 33, "y"),
+        ("c2", 0, "insert", 32, "z2"),
+    )
+    # the empty origin sees the null keys as plain inserts
+    assert changes(0, v3) == want(
+        (None, None, "insert", 30, "b2"), ("c1", 0, "insert", 22, "x2"),
+        ("c2", 0, "insert", 32, "z2"),
+    )
+
+
+def test_changelog_registration_outlives_the_call(spark, tmp_path):
+    """read_changes returns a lazy frame over a per-hop registration:
+    it still reads the hop's rows after later commits, a second read of
+    the hop reuses the registration dir and catalog entries, and vacuum's
+    grace sweep collects the dir."""
+    import os
+
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=4
+    )
+    t.merge(_stream(spark, 1500, seed=71))
+    v1 = t.current_version()
+    t.merge(_stream(spark, 600, seed=72, lsn_start=1500), mode="mor")
+    v2 = t.current_version()
+    breg = os.path.join(t.path, "_bucketed")
+
+    def regs():
+        return sorted(e for e in os.listdir(breg) if e.startswith("chg-"))
+
+    def tables():
+        return sorted(x.name for x in spark.catalog.listTables()
+                      if x.name.startswith("zxr_"))
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=str)
+
+    lazy = t.read_changes(spark, v1, v2, include_preimages=True)
+    now = rows(t.read_changes(spark, v1, v2, include_preimages=True))
+    assert len(regs()) == 1 and len(now) > 0
+    seen = tables()
+    t.merge(_stream(spark, 600, seed=73, lsn_start=2100))
+    t.compact(spark)
+    assert rows(lazy) == now
+    assert len(regs()) == 1 and tables() == seen
+    t.vacuum(keep_last=10, orphan_grace_seconds=0.0)
+    assert regs() == []
+
+
+def test_changelog_registration_never_crosses_a_wap_stage(spark, tmp_path):
+    """A WAP stage shares the table dir and numbers its versions after
+    main's, so the stage's hop (v, v+1) and main's later hop (v, v+1)
+    hold different files: each read must see its own rows, never the
+    other's registration."""
+    from oregonwaterdataportal_etl_spark.cdc.changegen import CHANGE_SCHEMA
+
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=2
+    )
+
+    def batch(lsn, conv, text):
+        return spark.createDataFrame(
+            [("insert", lsn, conv, 0, "user", text, None, None)], CHANGE_SCHEMA
+        )
+
+    def changes(tbl, v1):
+        return [(r["conv_id"], r["text"], r["_change_type"])
+                for r in tbl.read_changes(spark, v1).collect()]
+
+    t.merge(batch(10, "c0", "base"))
+    v1 = t.current_version()
+    stage = t.begin_wap("w1")
+    stage.merge(batch(20, "staged", "s"))
+    assert changes(stage, v1) == [("staged", "s", "insert")]
+    stage.abort()
+    t.merge(batch(30, "main", "m"))
+    assert t.current_version() == v1 + 1
+    assert changes(t, v1) == [("main", "m", "insert")]

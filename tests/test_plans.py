@@ -247,6 +247,80 @@ def test_cow_merge_null_keys_never_shuffle_the_base(spark, tmp_path):
         ), tree
 
 
+def test_changelog_joins_both_versions_in_place(spark, tmp_path):
+    """read_changes joins the two versions' bucketed scans where they
+    lie: no Exchange between two compacted versions, none when the
+    to-version carries MOR deltas and tombstones, and with a null-keyed
+    row only the rows passing the pushed null-key filter cross one."""
+    from oregonwaterdataportal_etl_spark.cdc.changegen import (
+        CHANGE_SCHEMA,
+        TRANSCRIPT_SCHEMA,
+        generate_changes_pdf,
+    )
+    from oregonwaterdataportal_etl_spark.lake import LakeTable
+
+    def batch(n, seed, lsn_start):
+        return spark.createDataFrame(
+            generate_changes_pdf(n, 100, seed=seed, lsn_start=lsn_start)
+        )
+
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"], num_buckets=4
+    )
+    t.merge(batch(2000, 1, 0))
+    v1 = t.current_version()
+    t.merge(batch(300, 2, 2000), mode="mor")
+    t.compact(spark)
+    assert not t.snapshot()["deltas"]
+    # (a) two compacted versions
+    plan = plan_of(t.read_changes(spark, v1))
+    assert "Exchange" not in plan, plan
+    for side in ("_to[", "_from["):
+        scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln and side in ln]
+        assert scans and all("Bucketed: true" in ln for ln in scans), plan
+
+    # (b) a to-version carrying MOR deltas and tombstones
+    v2 = t.current_version()
+    t.merge(batch(300, 3, 3000), mode="mor")
+    snap = t.snapshot()
+    assert snap["deltas"] and snap["tombstones"]
+    ch = t.read_changes(spark, v2)
+    assert "Exchange" not in plan_of(ch), plan_of(ch)
+    assert ch.count() > 0
+
+    # (c) a null-keyed row in both versions, one of them in a MOR delta
+    null_row = ("insert", 4000, None, 7, "user", "n", None, None)
+    t.merge(spark.createDataFrame([null_row], schema=CHANGE_SCHEMA))
+    v3 = t.current_version()
+    t.merge(
+        spark.createDataFrame(
+            [("update", 4001, None, 7, "user", "n2", None, None)], schema=CHANGE_SCHEMA
+        ),
+        mode="mor",
+    )
+    ch = t.read_changes(spark, v3)
+    lines = plan_of(ch).splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert exchanges, "\n".join(lines)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :|+-"))
+
+    for i in exchanges:
+        below = []
+        for ln in lines[i + 1:]:
+            if depth(ln) <= depth(lines[i]):
+                break
+            below.append(ln)
+        scans = [ln for ln in below if "FileScan parquet" in ln]
+        assert scans and all(
+            "PushedFilters: [Or(IsNull(conv_id),IsNull(turn_idx))" in ln for ln in scans
+        ), "\n".join(lines)
+    assert [(r["turn_idx"], r["text"], r["_change_type"]) for r in ch.collect()] == [
+        (7, "n2", "update")
+    ]
+
+
 def test_pack_documents_single_exchange(spark):
     """Sequence packing must be ONE hash exchange (shard) + window —
     no extra sort-merge machinery, no Python."""
