@@ -84,27 +84,6 @@ def worker(path_kind: str, stream_dir: str, workdir: str) -> None:
     # base build + plan warmup in one (same plan family as the timed run)
     table.merge(changes.filter(f"lsn < {cut}"))
 
-    if path_kind in ("read_window", "read_bucketed"):
-        # MOR serving-read A/B: 2M-event delta batch over the 30M base,
-        # then time the full resolved read (noop sink)
-        table.merge(changes.filter(f"lsn >= {cut}"), mode="mor")
-        resolve = "window" if path_kind == "read_window" else "bucketed"
-        table.read(spark, resolve=resolve).write.format("noop").mode(
-            "overwrite"
-        ).save()  # warm (plan + page cache)
-        sb0 = _shuffle_bytes(spark)
-        t0 = time.perf_counter()
-        table.read(spark, resolve=resolve).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        sec = time.perf_counter() - t0
-        print(json.dumps({
-            "path": path_kind, "cpus": CPUS, "apply_sec": round(sec, 3),
-            "events_per_sec": 0.0, "rows": -1,
-            "apply_shuffle_bytes": _shuffle_bytes(spark) - sb0,
-        }))
-        spark.stop()
-        return
     if path_kind in ("fold", "compactfirst"):
         # delta-fold A/B: a MOR window leaves pending deltas, then a
         # second window arrives as a bucketed WAL. "fold" absorbs the

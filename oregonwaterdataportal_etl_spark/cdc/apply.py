@@ -60,7 +60,7 @@ def lww_dedup(
         tb_in.append(_op_decode(_op_code(F.col(op_col))))
     t1, t2 = tiebreak_cols(tb_in, family=tiebreak_family)
     # xxhash64 radix prefix on the partition keys — identical grouping,
-    # numeric-leading per-partition sort (see LakeTable._resolve)
+    # numeric-leading per-partition sort (see LakeTable._side_winners)
     kh = F.xxhash64(*[F.col(c) for c in key_cols])
     w = Window.partitionBy(kh, *[F.col(c) for c in key_cols]).orderBy(
         *_lww_order(lsn_col, t1, t2)

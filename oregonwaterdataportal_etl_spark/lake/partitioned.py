@@ -663,7 +663,6 @@ class PartitionedLakeTable:
         between: tuple[str, str] | None = None,
         values: list[str] | None = None,
         columns: list[str] | None = None,
-        resolve: str = "window",
         as_of: float | None = None,
     ) -> DataFrame:
         """Snapshot-consistent read: every child at its PINNED version.
@@ -682,7 +681,7 @@ class PartitionedLakeTable:
         chosen = self._select_values(vector, between, values)
         frames = [
             self.partition_table(v).read(
-                spark, version=vector[v], columns=columns, resolve=resolve
+                spark, version=vector[v], columns=columns
             )
             for v in chosen
         ]
@@ -865,6 +864,12 @@ class PartitionedLakeTable:
                     continue
                 if age >= orphan_grace_seconds:
                     removed += sum(len(fs) for _, _, fs in os.walk(full))
+                    # the child's kept registrations go with it
+                    breg = os.path.join(full, "_bucketed")
+                    if os.path.isdir(breg):
+                        LakeTable._drop_registrations(
+                            [os.path.join(breg, e) for e in os.listdir(breg)]
+                        )
                     shutil.rmtree(full, ignore_errors=True)
                 continue
             child = self.partition_table(value)

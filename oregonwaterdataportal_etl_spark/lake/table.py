@@ -48,6 +48,7 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -407,7 +408,10 @@ def _lww_order(lsn, tb1, tb2, src=None) -> list["F.Column"]:
     wins): lsn desc, then the tie-break limbs desc with nulls last
     (legacy null-limb rows lose an exact-LSN tie), then — for sides
     that mix base and batch rows — src asc, so the base wins a full tie
-    and a redelivered identical event is a no-op. Arguments are column
+    and a redelivered identical event is a no-op. The limbs come BEFORE
+    src so a cross-batch same-(key, lsn) tie has the same winner whether
+    the earlier event already reached the base (cow) or still sits in a
+    delta (mor). Arguments are column
     names or Columns. The zero-exchange resolve compares the same order
     as one struct (_zx_cand), whose null fields sort smallest."""
     def col(c):
@@ -421,6 +425,17 @@ def _lww_order(lsn, tb1, tb2, src=None) -> list["F.Column"]:
     if src is not None:
         order.append(col(src).asc())
     return order
+
+
+def _side_op() -> "F.Column":
+    """Op code of a row of a side-tagged base/tombstone/delta frame
+    (LakeTable._side_winners): tombstones and base rows by their side,
+    delta rows by their stored op."""
+    return (
+        F.when(F.col("side") == "t", F.lit(_OP_TOMBSTONE))
+        .when(F.col("side") == "d", _op_code(F.col(_OP_COL)))
+        .otherwise(F.lit(_OP_BASE))
+    )
 
 
 def retry_on_conflict(fn, attempts: int = 4):
@@ -708,70 +723,58 @@ class LakeTable:
         spark: SparkSession,
         version: int,
         buckets: list[int] | None = None,
-        key_pred=None,
-        n_buckets: int | None = None,
-        files_allow: set[str] | None = None,
     ) -> DataFrame:
-        """Shared MOR read path for one PINNED snapshot version: base (+
-        tombstones as base-side deletes) LWW-resolved against delta
-        files. Pinning the version ONCE keeps base/delta/tombstone file
-        lists mutually consistent under concurrent commits (mixing
-        CURRENT re-reads could resurrect a deleted key or hit vacuumed
-        paths).
+        """Shared MOR read path for one PINNED snapshot version (all
+        buckets, or the ``buckets`` given): base and tombstones resolved
+        LWW against the pending delta files. Pinning the version ONCE
+        keeps base/delta/tombstone file lists mutually consistent under
+        concurrent commits (mixing CURRENT re-reads could resurrect a
+        deleted key or hit vacuumed paths).
 
-        key_pred: optional pre-filter pushed below the resolve. SAFETY
-        PRECONDITION: it must be a function of the KEY COLUMNS ONLY —
-        the LWW window partitions by key, so a key-complete predicate
-        selects whole key-groups and cannot change any winner. A payload
-        predicate here would silently promote stale events (their
-        higher-LSN competitors get filtered out pre-window); payload
-        filters belong ABOVE read()."""
+        Without pending deltas in the chosen buckets it is a plain base
+        scan: tombstones cannot change the view (their keys are absent
+        from base by construction). Otherwise the chosen buckets' files
+        register as one bucketed table (_zx_base_tomb_side), whose
+        per-key winner comes from a dedup window that the scan's
+        HashPartitioning already satisfies: no Exchange. The frame is
+        lazy, so the registration outlives this call: one
+        ``_bucketed/read-v<version>-<digest>`` dir per version and bucket
+        choice, reused by later reads (_kept_registration)."""
         snap = self.snapshot(version)
+        chosen = range(snap["num_buckets"]) if buckets is None else buckets
+        picked = {
+            k: {b: fl for b, fl in (snap.get(k) or {}).items() if int(b) in chosen}
+            for k in ("files", "tombstones", "deltas")
+        }
+        if not picked["deltas"]:
+            return self._read_internal(
+                spark, version, buckets=buckets, _snap=snap
+            ).drop(LSN_COL, _TB1_COL, _TB2_COL)
         schema = T.StructType.fromJson(json.loads(snap["schema"]))
-        dicts = snap.get("dict_cols") or {}
-        base = self._read_internal(
-            spark, version, buckets=buckets, _snap=snap, files_allow=files_allow
+        key_cols = snap["key_cols"]
+        reg_root, reg = self._kept_registration(
+            f"read-v{snap['version']:08d}", [picked],
+            lambda tmp: self._link_base_tomb(snap, chosen, tmp),
         )
-        if key_pred is not None:
-            base = base.filter(key_pred)
-        deltas = self._read_deltas(spark, snap, buckets=buckets,
-                                   files_allow=files_allow)
-        if deltas is None:
-            return base.drop(LSN_COL, _TB1_COL, _TB2_COL)
-
-        def tag(df, op_expr, src, filtered=False):
-            if key_pred is not None and not filtered:
-                df = df.filter(key_pred)
-            return df.select(
-                *self._tag_select(df.columns, schema, dicts),
-                F.col(LSN_COL).alias("__lsn"),
-                op_expr.alias("__op"),
-                F.lit(src).alias("__src"),
-                # every side carries PERSISTED limbs (base, tombstones
-                # and deltas all store them at write time) — no payload
-                # hash at read time, so column pruning through the
-                # resolve survives
-                F.col(_TB1_COL).alias("__tb1"),
-                F.col(_TB2_COL).alias("__tb2"),
-            )
-
-        base_tagged = tag(base, F.lit(_OP_BASE).cast("tinyint"), 0, filtered=True)
-        # tombstones participate so a stale lower-LSN delta event for a
-        # deleted key cannot resurrect it at read time
-        tomb = self._read_tombstones(spark, snap, buckets=buckets,
-                                     files_allow=files_allow)
-        if tomb is not None:
-            base_tagged = base_tagged.unionByName(
-                tag(tomb, F.lit(_OP_DELETE).cast("tinyint"), 0)
-            )
-        upd_tagged = tag(deltas, _op_code(F.col(_OP_COL)), 1)
-        winners = self._resolve(
-            base_tagged, upd_tagged, snap["key_cols"],
-            n_buckets if n_buckets is not None else snap["num_buckets"],
+        side = self._zx_base_tomb_side(
+            spark, snap, reg_root, f"{reg}_bt", key_cols,
+            [f for f in schema.fields if f.name not in key_cols],
         )
-        return winners.filter(
-            ~F.col("__op").isin(_OP_DELETE, _OP_TOMBSTONE)
-        ).select(*self._payload_out(schema, dicts))
+        return self._live_rows(side, key_cols, schema)
+
+    @staticmethod
+    def _live_rows(side: DataFrame, key_cols: list[str],
+                   schema: T.StructType) -> DataFrame:
+        """The readable rows of a per-key winner side (_side_winners):
+        drop winners that are deletes or tombstones, and project the
+        payload in schema order."""
+        return side.filter(
+            ~F.col("__cand_b.op").isin(_OP_DELETE, _OP_TOMBSTONE)
+        ).select(*[
+            F.col(f.name) if f.name in key_cols
+            else F.col(f"__cand_b.p_{f.name}").alias(f.name)
+            for f in schema.fields
+        ])
 
     def _kept_registration(self, label: str, snaps: list[dict], build) -> tuple[str, str]:
         """Registration dir and catalog-name prefix for a LAZY frame,
@@ -788,8 +791,9 @@ class LakeTable:
         benignly: a rival that renamed first wins). Reuse refreshes the
         dir's mtime, and vacuum's ``_bucketed/`` grace sweep collects
         dirs no read has touched within its grace window. Catalog names
-        derive from the dir; callers CREATE them IF NOT EXISTS, so a
-        re-read adds no session catalog entry."""
+        derive from the dir (_reg_prefix); callers CREATE them IF NOT
+        EXISTS, so a re-read adds no session catalog entry, and vacuum
+        drops them with the dir."""
         import hashlib
         import shutil
 
@@ -811,111 +815,21 @@ class LakeTable:
                 os.utime(reg_root)  # keep the grace sweep off a live reg
             except OSError:
                 pass
-        name = hashlib.md5(os.path.abspath(reg_root).encode()).hexdigest()[:16]
-        return reg_root, f"zxr_{name}"
+        return reg_root, self._reg_prefix(reg_root)
 
-    def _resolved_view_bucketed(self, spark: SparkSession, version: int) -> DataFrame:
-        """Zero-exchange MOR read: base+tombstones and delta files all
-        live one-bucket-per-file already, so they register as catalog
-        bucketed tables (hardlinked under bucket-suffix names) and the
-        resolve — delta LWW dedup window + full-outer SHUFFLE_HASH join
-        — runs with NO exchange, the serving-side twin of
-        merge_prebucketed (DESIGN.md §11).
+    @staticmethod
+    def _reg_prefix(reg_root: str) -> str:
+        """Catalog-name prefix of a kept registration dir: its tables are
+        ``<prefix>_<suffix>``."""
+        import hashlib
 
-        Lifetime: the returned DataFrame is LAZY, so its registration
-        dir and catalog entries must outlive it — one per snapshot
-        version, reused across reads (_kept_registration)."""
-        from . import bucketed as B
-
-        snap = self.snapshot(version)
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
-        if not snap.get("deltas"):
-            # no deltas: tombstones cannot change the view (their keys
-            # are absent from base by construction) — plain base scan
-            return self._read_internal(spark, version, _snap=snap).drop(
-                LSN_COL, _TB1_COL, _TB2_COL
-            )
-        key_cols = snap["key_cols"]
-        n_buckets = snap["num_buckets"]
-        nonkey = [f for f in schema.fields if f.name not in key_cols]
-        stored_plus = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                T.StructField(_OP_COL, T.StringType(), True),
-                T.StructField(_TB1_COL, T.LongType(), True),
-                T.StructField(_TB2_COL, T.LongType(), True),
-            ]
-        )
-        def build(tmp: str) -> None:
-            B.link_files_bucketed(snap["deltas"], os.path.join(tmp, "deltas"))
-            if snap["files"]:
-                B.link_files_bucketed(
-                    snap["files"], os.path.join(tmp, "basetomb", "side=b")
-                )
-            if snap.get("tombstones"):
-                B.link_files_bucketed(
-                    snap["tombstones"], os.path.join(tmp, "basetomb", "side=t")
-                )
-
-        reg_root, reg = self._kept_registration(
-            f"read-v{snap['version']:08d}", [snap], build
-        )
-        dname = B.register_bucketed_table(
-            spark, stored_plus, os.path.join(reg_root, "deltas"), key_cols,
-            n_buckets, name=f"{reg}_d", if_not_exists=True,
-        )
-        base_side = None
-        if os.path.isdir(os.path.join(reg_root, "basetomb")):
-            part_schema = T.StructType(
-                list(schema.fields)
-                + [
-                    T.StructField(LSN_COL, T.LongType(), True),
-                    T.StructField(_TB1_COL, T.LongType(), True),
-                    T.StructField(_TB2_COL, T.LongType(), True),
-                    T.StructField("side", T.StringType()),
-                ]
-            )
-            btname = B.register_bucketed_table(
-                spark, part_schema, os.path.join(reg_root, "basetomb"),
-                key_cols, n_buckets, name=f"{reg}_bt",
-                if_not_exists=True, partition_col="side",
-            )
-            spark.sql(f"ALTER TABLE `{btname}` RECOVER PARTITIONS")
-            base_side = self._zx_cand(
-                spark.table(btname), 0, F.col(LSN_COL),
-                F.when(F.col("side") == "t", F.lit(_OP_TOMBSTONE)).otherwise(
-                    F.lit(_OP_BASE)
-                ),
-                F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
-            ).withColumnRenamed("__cand", "__cand_b")
-        # delta LWW dedup over the bucketed scan: persisted limbs order
-        # cross-batch equal-LSN events (_lww_order, no src: one side)
-        ddf = spark.table(dname)
-        kh = F.xxhash64(*[F.col(c) for c in key_cols])
-        w = Window.partitionBy(kh, *[F.col(c) for c in key_cols]).orderBy(
-            *_lww_order(LSN_COL, _TB1_COL, _TB2_COL)
-        )
-        d1 = (
-            ddf.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        upd_side = self._zx_cand(
-            d1, 1, F.col(LSN_COL), _op_code(F.col(_OP_COL)),
-            F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
-        ).withColumnRenamed("__cand", "__cand_u")
-        winners = self._zx_winners(upd_side, base_side, key_cols, nonkey)
-        return winners.filter(
-            ~F.col("__op").isin(_OP_DELETE, _OP_TOMBSTONE)
-        ).select(*[f.name for f in schema.fields])
+        return "zxr_" + hashlib.md5(os.path.abspath(reg_root).encode()).hexdigest()[:16]
 
     def read(
         self,
         spark: SparkSession,
         version: int | None = None,
         columns: list[str] | None = None,
-        resolve: str = "window",
         as_of: float | None = None,
     ) -> DataFrame:
         """Read the table at a snapshot (time travel). Missing columns
@@ -925,14 +839,15 @@ class LakeTable:
 
         If the snapshot carries merge-on-read deltas, they are resolved
         here (base LWW-merged with delta events, delete tombstones
-        applied) — the Hudi/Iceberg-v2 MOR read path.
+        applied) — the Hudi/Iceberg-v2 MOR read path, with no Exchange
+        (_resolved_view).
 
         columns: validated projection sugar. NOTE: this does NOT beat a
         plain `.select()` above read() — verified on Spark 4.1.2 that
-        Catalyst's ColumnPruning pushes the projection through the
-        window/union/repartition identically (the rank depends only on
-        keys/__lsn/__src), so both forms prune `text` from every scan
-        and the resolve exchange. Pinned by
+        Catalyst pushes the projection through the dedup window and the
+        winner struct identically (the rank depends only on keys, _lsn,
+        the tie-break limbs and the side), so both forms prune `text`
+        from the scan. Pinned by
         tests/test_round2_fixes.py::test_read_column_pruning_through_mor_resolve,
         which exists to catch a Catalyst regression, not to justify
         manual plumbing.
@@ -949,13 +864,7 @@ class LakeTable:
             unknown = set(columns) - {f.name for f in schema.fields}
             if unknown:
                 raise ValueError(f"unknown columns: {sorted(unknown)}")
-        if resolve == "bucketed":
-            # zero-exchange serving read (see _resolved_view_bucketed)
-            out = self._resolved_view_bucketed(spark, v)
-        elif resolve == "window":
-            out = self._resolved_view(spark, v)
-        else:
-            raise ValueError(f"unknown resolve strategy {resolve!r}")
+        out = self._resolved_view(spark, v)
         return out.select(*columns) if columns is not None else out
 
     @property
@@ -1011,12 +920,37 @@ class LakeTable:
                     side = load_sidecar(self.bloom_dir, fl)
                     if side is None or side.might_contain(pr["__bh1"], pr["__bh2"]):
                         files_allow.add(fl)
+        # the predicate covers the KEY COLUMNS ONLY, so filtering below
+        # the dedup window selects whole key groups and changes no winner
         pred = _and_all(
             F.col(c).eqNullSafe(F.lit(key_values[c])) for c in key_cols
         )
-        return self._resolved_view(
-            spark, v, buckets=[b], key_pred=pred, n_buckets=1,
-            files_allow=files_allow,
+        scans = {
+            side: [
+                f for k, fl in (coll or {}).items() if int(k) == b for f in fl
+                if files_allow is None or f in files_allow
+            ]
+            for side, coll in (("b", snap["files"]), ("t", snap.get("tombstones")),
+                               ("d", snap.get("deltas")))
+        }
+        if not scans["d"]:
+            return self._read_internal(
+                spark, v, buckets=[b], _snap=snap, files_allow=files_allow
+            ).filter(pred).drop(LSN_COL, _TB1_COL, _TB2_COL)
+        # no registration: the key's files are few, so one task runs the
+        # shared dedup window, whose clustering the coalesce(1)'s
+        # SinglePartition satisfies — no Exchange
+        stored = self._side_stored(snap)
+        union = reduce(DataFrame.unionByName, [
+            spark.read.schema(stored).parquet(*fl).filter(pred)
+            .withColumn("side", F.lit(side))
+            for side, fl in scans.items() if fl
+        ]).coalesce(1)
+        return self._live_rows(
+            self._side_winners(
+                union, key_cols, [f for f in schema.fields if f.name not in key_cols]
+            ),
+            key_cols, schema,
         )
 
     def build_blooms(
@@ -1348,57 +1282,6 @@ class LakeTable:
         ).otherwise(F.array(post_struct))
         return classified.select(F.explode(rows).alias("__r")).select("__r.*")
 
-    def _read_deltas(self, spark: SparkSession, snap: dict,
-                     buckets: list[int] | None = None,
-                     files_allow: set[str] | None = None) -> DataFrame | None:
-        """Read merge-on-read delta files (payload + _lsn + _op)."""
-        dfiles: list[str] = []
-        for b, flist in snap.get("deltas", {}).items():
-            if buckets is None or int(b) in buckets:
-                dfiles.extend(
-                    f for f in flist if files_allow is None or f in files_allow
-                )
-        if not dfiles:
-            return None
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
-        stored = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                T.StructField(_OP_COL, T.StringType(), True),
-                # pre-upgrade delta files lack the persisted tie-break
-                # limbs; parquet null-fills them (desc_nulls_last keeps
-                # their legacy nondeterministic-tie behavior)
-                T.StructField(_TB1_COL, T.LongType(), True),
-                T.StructField(_TB2_COL, T.LongType(), True),
-            ]
-        )
-        return spark.read.schema(stored).parquet(*dfiles)
-
-    def _read_tombstones(self, spark: SparkSession, snap: dict,
-                         buckets: list[int] | None = None,
-                         files_allow: set[str] | None = None) -> DataFrame | None:
-        """Read retained tombstone files (winning-delete rows with
-        their _lsn). Schema = stored schema; payload columns are null."""
-        tfiles: list[str] = []
-        for b, flist in snap.get("tombstones", {}).items():
-            if buckets is None or int(b) in buckets:
-                tfiles.extend(
-                    f for f in flist if files_allow is None or f in files_allow
-                )
-        if not tfiles:
-            return None
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
-        stored = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                T.StructField(_TB1_COL, T.LongType(), True),
-                T.StructField(_TB2_COL, T.LongType(), True),
-            ]
-        )
-        return spark.read.schema(stored).parquet(*tfiles)
-
     @staticmethod
     def _update_tiebreak(
         df_cols: list[str], evolved: T.StructType, op_col: str,
@@ -1421,66 +1304,13 @@ class LakeTable:
         cols.append(_op_decode(_op_code(F.col(op_col))))
         return tiebreak_cols(cols, family=family)
 
-    def _resolve(self, base_tagged: DataFrame, upd_tagged: DataFrame,
-                 key_cols: list[str], n_buckets: int) -> DataFrame:
-        """The MOR read resolve (_resolved_view; copy-on-write merges
-        join the batch against the bucketed base instead, _cow_commit):
-        union base+updates, ONE repartition
-        on the key columns (satisfies both the ranking window and the
-        bucket layout — see _bucket_expr), rank by (lsn desc, base
-        first, payload-hash limbs desc) — a TOTAL order, so equal-LSN
-        batch events have one deterministic winner; keep winners. Both
-        inputs must carry __tb1/__tb2 (null on the base side: base
-        beats batch via __src before the limbs are consulted). Adds
-        __rn/__all_chg."""
-        unioned = base_tagged.unionByName(upd_tagged).repartition(
-            n_buckets, *[F.col(c) for c in key_cols]
-        )
-        # the window groups by an xxhash64 PREFIX of the keys plus the
-        # keys themselves: grouping is identical (hash is a function of
-        # the keys; the keys after it break hash collisions), the
-        # HashPartitioning([keys]) above still satisfies the clustering
-        # (keys ⊆ partition expressions → no second exchange), but the
-        # per-partition sort now leads with an 8-byte numeric radix
-        # prefix instead of comparing conv_id STRINGS row-by-row —
-        # measured 3-7% off the 32M apply at 2-8 cores
-        kh = F.xxhash64(*[F.col(c) for c in key_cols])
-        pb = [kh, *[F.col(c) for c in key_cols]]
-        # limbs order BEFORE the source bit: a cross-batch same-(key,
-        # lsn) tie must resolve to the same winner whether the earlier
-        # event already reached the base (COW, limbs persisted there)
-        # or still sits in a delta (MOR) — mode/batching/compaction
-        # independence. IDENTICAL payloads have identical limbs, so the
-        # src bit still makes redelivered events base-wins no-ops.
-        # (Null limbs — pre-upgrade or overwrite()-loaded base rows —
-        # sort last: a batch event beats them on an exact-LSN tie,
-        # rewriting identical content; state is unchanged, only the
-        # noop-vs-update metric differs for legacy rows.)
-        w = Window.partitionBy(*pb).orderBy(
-            *_lww_order("__lsn", "__tb1", "__tb2", src="__src")
-        )
-        # the metrics min shares the rank's partition AND order spec
-        # (its value is order-independent) with an unbounded frame, so
-        # Catalyst collapses both into ONE Window operator — one pass
-        # over each sorted partition instead of two (measured ~12% off
-        # the incremental resolve; plan: 2 Window ops -> 1)
-        wfull = w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        ranked = unioned.select(
-            "*",
-            F.row_number().over(w).alias("__rn"),
-            F.min("__src").over(wfull).alias("__all_chg"),
-        )
-        return ranked.filter(F.col("__rn") == 1)
-
     def _resolve_batch(
         self, upd_tagged: DataFrame, key_cols: list[str], n_buckets: int
     ) -> DataFrame:
-        """Batch-only LWW dedup (no base side): the same total order as
-        _resolve but WITHOUT the min(__src) over-partition metrics
-        column, which blocks Spark's WindowGroupLimit rank pushdown.
-        With a pure rank filter the optimizer can insert a PARTIAL
+        """Batch-only LWW dedup (no base side), in the _lww_order total
+        order, with a rank filter only: a min(__src) over-partition
+        metrics column would block Spark's WindowGroupLimit rank
+        pushdown. With a pure rank filter the optimizer can insert a PARTIAL
         top-1-per-key below the exchange, so intra-batch duplicates
         collapse map-side before riding the wire. Both the MOR append
         and the copy-on-write merge dedup their batch here; the cow
@@ -1556,7 +1386,7 @@ class LakeTable:
         commit_mode: str = "pointer",
     ) -> "LakeTable":
         """dict_cols: {string_column: [expected values...]} — declared
-        low-cardinality columns ride the merge/read shuffles as 2-byte
+        low-cardinality columns ride the merge shuffles as 2-byte
         dictionary codes instead of strings (values outside the declared
         set survive via a lossless fallback). A ~10-25% shuffle-byte cut
         on transcript-shaped payloads (see DESIGN.md section 7).
@@ -1597,10 +1427,9 @@ class LakeTable:
 
     # ------------------------------------------------- shuffle encode
     def _tag_select(self, df_cols: list[str], evolved: T.StructType, dicts: dict):
-        """Projection list for one side of the resolve union: evolved
-        payload columns (missing -> typed null), with declared dict
-        columns split into (code, fallback) pairs so strings don't ride
-        the exchange."""
+        """Projection list for a merge batch: evolved payload columns
+        (missing -> typed null), with declared dict columns split into
+        (code, fallback) pairs so strings don't ride the exchange."""
         out = []
         for f in evolved.fields:
             src = (
@@ -2344,29 +2173,16 @@ class LakeTable:
         combined side is pre-deduped to one row per key by a window
         whose clustering the bucketed scan already satisfies, ordered
         by _lww_order with the src bit (base beats batch on a full
-        tie).
+        tie): _side_winners.
         __had_bt carries the __all_chg semantics (is there a base or
         tombstone row for the key?): a delta-only key still counts as
         all-changed, so insert-vs-update / delete-vs-dropped metrics
         do not depend on whether the earlier events were compacted."""
         from . import bucketed as B
 
-        stored = T.StructType(
-            list(T.StructType.fromJson(json.loads(snap["schema"])).fields)
-            + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                T.StructField(_TB1_COL, T.LongType(), True),
-                T.StructField(_TB2_COL, T.LongType(), True),
-            ]
-        )
         part_schema = T.StructType(
-            list(stored.fields)
-            + [
-                # delta files carry an op column; base/tomb files lack
-                # it and null-fill (parquet by-name resolution)
-                T.StructField(_OP_COL, T.StringType(), True),
-                T.StructField("side", T.StringType()),
-            ]
+            list(self._side_stored(snap).fields)
+            + [T.StructField("side", T.StringType())]
         )
         B.register_bucketed_table(
             spark, part_schema, bt_dir, key_cols, snap["num_buckets"],
@@ -2374,18 +2190,47 @@ class LakeTable:
         )
         spark.sql(f"ALTER TABLE `{name}` RECOVER PARTITIONS")
         bt = spark.table(name)
-        op_expr = (
-            F.when(F.col("side") == "t", F.lit(_OP_TOMBSTONE))
-            .when(F.col("side") == "d", _op_code(F.col(_OP_COL)))
-            .otherwise(F.lit(_OP_BASE))
-        )
         if not os.path.isdir(os.path.join(bt_dir, "side=d")):
             return self._zx_cand(
-                bt, 0, F.col(LSN_COL), op_expr,
+                bt, 0, F.col(LSN_COL), _side_op(),
                 F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
                 extra=(F.lit(True).alias("__had_bt"),),
             ).withColumnRenamed("__cand", "__cand_b")
+        return self._side_winners(bt, key_cols, nonkey)
+
+    @staticmethod
+    def _side_stored(snap: dict) -> T.StructType:
+        """Stored schema of base, tombstone and delta files alike, from
+        the pinned snap. Delta files carry an op column; base and
+        tombstone files lack it and null-fill (parquet by-name
+        resolution), as do files written before the tie-break limbs
+        were persisted (null limbs sort last)."""
+        return T.StructType(
+            list(T.StructType.fromJson(json.loads(snap["schema"])).fields)
+            + [
+                T.StructField(LSN_COL, T.LongType(), True),
+                T.StructField(_TB1_COL, T.LongType(), True),
+                T.StructField(_TB2_COL, T.LongType(), True),
+                T.StructField(_OP_COL, T.StringType(), True),
+            ]
+        )
+
+    @classmethod
+    def _side_winners(cls, df: DataFrame, key_cols: list[str],
+                      nonkey: list) -> DataFrame:
+        """THE per-key LWW resolve of base, tombstone and delta rows: one
+        winner per key, as the __cand_b candidate struct plus __had_bt.
+        ``df`` holds _side_stored columns plus ``side`` ('b' base, 't'
+        tombstone, 'd' delta), which sets each row's op and src bit.
+        Every reader of a version (read, lookup), the copy-on-write
+        merge's base side, the compaction fold and the changelog resolve
+        here. ``df`` must already be clustered by key — a bucketed scan's
+        HashPartitioning or a coalesce(1)'s SinglePartition satisfies
+        the window — so the resolve adds no Exchange."""
         src = F.when(F.col("side") == "d", F.lit(1)).otherwise(F.lit(0))
+        # grouping by an xxhash64 PREFIX of the keys plus the keys is the
+        # same grouping, but the per-task sort leads with an 8-byte
+        # numeric radix prefix instead of comparing key strings
         kh = F.xxhash64(*[F.col(c) for c in key_cols])
         pb = [kh, *[F.col(c) for c in key_cols]]
         w = Window.partitionBy(*pb).orderBy(
@@ -2393,12 +2238,12 @@ class LakeTable:
         )
         # share the rank's partition+order spec with an unbounded frame
         # so both functions collapse into ONE Window operator (the max
-        # is order-independent; same trick as _resolve)
+        # is order-independent)
         wfull = w.rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
         bt1 = (
-            bt.select(
+            df.select(
                 "*",
                 F.row_number().over(w).alias("__rn"),
                 F.max(F.col("side") != "d").over(wfull).alias("__had_bt"),
@@ -2406,8 +2251,8 @@ class LakeTable:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        return self._zx_cand(
-            bt1, src, F.col(LSN_COL), op_expr,
+        return cls._zx_cand(
+            bt1, src, F.col(LSN_COL), _side_op(),
             F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
             extra=(F.col("__had_bt"),),
         ).withColumnRenamed("__cand", "__cand_b")
@@ -3083,18 +2928,22 @@ class LakeTable:
         # (_kept_registration) stay for their lazy frames and are
         # collected here once no read has refreshed them within the
         # grace window (links only — removing them never touches the
-        # snapshot's own file paths).
+        # snapshot's own file paths), together with the catalog entries
+        # the active session holds for them.
         breg = os.path.join(self.path, "_bucketed")
         if os.path.isdir(breg):
             import shutil as _shutil
 
+            swept = []
             for entry in os.listdir(breg):
                 p = os.path.join(breg, entry)
                 try:
                     if now - os.path.getmtime(p) >= orphan_grace_seconds:
                         _shutil.rmtree(p, ignore_errors=True)
+                        swept.append(p)
                 except OSError:
                     pass
+            self._drop_registrations(swept)
         # sweep bloom sidecars whose data file is gone: sidecars are
         # only ever built for COMMITTED snapshot files (the data file
         # always exists first), so a sidecar with no on-disk parquet
@@ -3121,6 +2970,24 @@ class LakeTable:
             if os.path.exists(p):
                 os.remove(p)
         return removed
+
+    @classmethod
+    def _drop_registrations(cls, reg_roots: list[str]) -> None:
+        """Drop the active session's catalog tables of the kept
+        registration dirs ``reg_roots`` (_reg_prefix; no session in this
+        process: nothing to drop)."""
+        from pyspark.errors import PySparkRuntimeError
+
+        if not reg_roots:
+            return
+        try:
+            spark = SparkSession.active()
+        except PySparkRuntimeError:
+            return
+        prefixes = tuple(cls._reg_prefix(p) + "_" for p in reg_roots)
+        for r in spark.sql("SHOW TABLES LIKE 'zxr_*'").collect():
+            if not r["isTemporary"] and r["tableName"].startswith(prefixes):
+                spark.sql(f"DROP TABLE IF EXISTS `{r['tableName']}`")
 
     def expire_tombstones(
         self,

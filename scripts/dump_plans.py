@@ -14,7 +14,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql import types as T  # noqa: E402
 
 import __spark_entry__ as em  # noqa: E402
 from oregonwaterdataportal_etl_spark.cdc.changegen import (  # noqa: E402
@@ -35,34 +34,22 @@ def formatted(df) -> str:
     )
 
 
-def resolve_plan(spark, tmp):
+def mor_read_plan(spark, tmp):
+    """read() of a version with base rows, tombstones and pending MOR
+    deltas, plus a lookup() of one of the delta batch's keys."""
     t = LakeTable.create(
         os.path.join(tmp, "t"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
         num_buckets=4,
     )
-    t.merge(spark.createDataFrame(generate_changes_pdf(2000, 100, seed=1)))
-    upd = spark.createDataFrame(generate_changes_pdf(500, 100, seed=2, lsn_start=2000))
-    snap = t.snapshot()
-    evolved = t.evolve_schema(
-        T.StructType([f for f in upd.schema.fields if f.name not in ("op", "lsn")])
+    t.merge(spark.createDataFrame(
+        generate_changes_pdf(2000, 100, seed=1, delete_rate=0.1)
+    ))
+    pdf = generate_changes_pdf(500, 100, seed=2, lsn_start=2000)
+    t.merge(spark.createDataFrame(pdf), mode="mor")
+    row = pdf.iloc[-1]
+    return t.read(spark), t.lookup(
+        spark, conv_id=row["conv_id"], turn_idx=int(row["turn_idx"])
     )
-    base = t._read_internal(spark, _snap=snap)
-    tb1, tb2 = t._update_tiebreak(upd.columns, evolved, "op")
-    upd_tagged = upd.select(
-        *t._tag_select(upd.columns, evolved, {}),
-        F.col("lsn").cast("long").alias("__lsn"),
-        F.lit(1).cast("tinyint").alias("__op"),
-        F.lit(1).alias("__src"),
-        tb1.alias("__tb1"), tb2.alias("__tb2"),
-    )
-    base_tagged = base.select(
-        *t._tag_select(base.columns, evolved, {}),
-        F.col("_lsn").alias("__lsn"),
-        F.lit(0).cast("tinyint").alias("__op"),
-        F.lit(0).alias("__src"),
-        F.col("_tb1").alias("__tb1"), F.col("_tb2").alias("__tb2"),
-    )
-    return t._resolve(base_tagged, upd_tagged, ["conv_id", "turn_idx"], 4)
 
 
 def cow_merge_plan(spark, tmp) -> str:
@@ -182,6 +169,7 @@ def main() -> None:
 
     spark = get_spark(app_name="plans", master="local[4]", shuffle_partitions=4)
     tmp = tempfile.mkdtemp(prefix="plansdump_")
+    mor_read, mor_lookup = mor_read_plan(spark, tmp)
     sections = [
         (
             "Zero-exchange pre-bucketed merge resolve (round 4)",
@@ -226,12 +214,21 @@ def main() -> None:
             cow_merge_plan(spark, tmp),
         ),
         (
-            "MOR read resolve (union + window)",
-            "union(base+tombstones, deltas) -> ONE repartition on the keys "
-            "-> rank + metrics windows (tie-break limbs in the sort, "
-            "min(__src) blocks WindowGroupLimit by design — DESIGN.md §10). "
-            "Pinned by test_real_resolve_plan_*",
-            resolve_plan(spark, tmp),
+            "MOR read (zero exchange)",
+            "read() with pending deltas: the version's base, tombstone and "
+            "delta files as one side-partitioned bucketed scan -> ONE LWW "
+            "dedup window (tie-break limbs and side in the sort), which the "
+            "scan's partitioning satisfies: NO Exchange. Pinned by "
+            "test_mor_read_and_lookup_plans_have_no_exchange",
+            mor_read,
+        ),
+        (
+            "Point lookup (zero exchange)",
+            "lookup(): the key's bucket files, key predicate pushed into each "
+            "scan, unioned and coalesced to one partition -> the same dedup "
+            "window: NO Exchange, no registration. Pinned by "
+            "test_mor_read_and_lookup_plans_have_no_exchange",
+            mor_lookup,
         ),
         (
             "Grouped aggregate (tpch1_agg)",

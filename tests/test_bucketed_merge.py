@@ -225,12 +225,14 @@ def test_runner_uses_zero_exchange_path_over_bucketed_wal(spark, tmp_path):
     assert not [e for e in os.listdir(wal) if e.startswith(".walwin-")]
 
 
-def test_bucketed_mor_read_matches_window_read(spark, tmp_path):
+def test_mor_read_matches_oracle_fold(spark, tmp_path):
     """Zero-exchange serving read: a MOR table with base rows,
-    multiple delta batches, deletes AND tombstones resolves identically
-    via read(resolve='bucketed') and the window path — and the bucketed
-    plan contains no Exchange. Repeated reads reuse one registration
-    dir per snapshot version."""
+    multiple delta batches, deletes AND tombstones reads exactly the
+    sequential oracle fold of its batches — and the read plan contains
+    no Exchange. Repeated reads reuse one registration dir per
+    snapshot version."""
+    from oregonwaterdataportal_etl_spark.cdc import oracle_fold
+
     t = LakeTable.create(
         str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=NB
     )
@@ -243,11 +245,16 @@ def test_bucketed_mor_read_matches_window_read(spark, tmp_path):
     t.merge(b3, mode="mor")
     assert t.stats()["delta_files"] > 0
 
-    win = t.read(spark)
-    zx = t.read(spark, resolve="bucketed")
     cols = ["conv_id", "turn_idx", "role", "text", "tool"]
+    events = [r.asDict() for b in (b1, b2, b3) for r in b.collect()]
+    want = sorted(
+        tuple(v[c] for c in cols)
+        for v in oracle_fold(
+            events, columns=[f.name for f in TRANSCRIPT_SCHEMA.fields]
+        ).values()
+    )
+    zx = t.read(spark)
     got = sorted(map(tuple, zx.select(*cols).collect()))
-    want = sorted(map(tuple, win.select(*cols).collect()))
     assert got == want and len(got) > 0
 
     plan = zx._jdf.queryExecution().executedPlan().toString()
@@ -255,7 +262,7 @@ def test_bucketed_mor_read_matches_window_read(spark, tmp_path):
     assert "Bucketed: true" in plan
 
     # second read of the same version reuses the registration dir
-    t.read(spark, resolve="bucketed").count()
+    t.read(spark).count()
     regs = [
         e for e in os.listdir(os.path.join(str(tmp_path / "t"), "_bucketed"))
         if e.startswith("read-v")
@@ -263,7 +270,7 @@ def test_bucketed_mor_read_matches_window_read(spark, tmp_path):
     assert len(regs) == 1, regs
     # column projection sugar works on the bucketed path too
     assert sorted(
-        t.read(spark, resolve="bucketed", columns=["conv_id", "text"]).columns
+        t.read(spark, columns=["conv_id", "text"]).columns
     ) == ["conv_id", "text"]
 
 

@@ -444,6 +444,34 @@ def test_changelog_registration_outlives_the_call(spark, tmp_path):
     assert regs() == []
 
 
+def test_vacuum_drops_the_catalog_entries_of_swept_registrations(spark, tmp_path):
+    """Changelog hops and MOR reads register catalog tables named after
+    their _bucketed/ dirs; vacuum's sweep of those dirs drops the
+    session's entries too, so a long-lived session does not gain
+    catalog entries without bound."""
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=4
+    )
+
+    def tables():
+        return {x.name for x in spark.catalog.listTables()
+                if x.name.startswith("zxr_")}
+
+    before = tables()
+    t.merge(_stream(spark, 900, seed=81))
+    versions = [t.current_version()]
+    for i in range(3):
+        t.merge(_stream(spark, 300, seed=82 + i, lsn_start=900 + 300 * i),
+                mode="mor")
+        versions.append(t.current_version())
+        t.read(spark).count()
+    for v1, v2 in zip(versions, versions[1:]):
+        t.read_changes(spark, v1, v2).count()
+    assert tables() - before
+    t.vacuum(keep_last=1, orphan_grace_seconds=0.0)
+    assert tables() - before == set()
+
+
 def test_changelog_registration_never_crosses_a_wap_stage(spark, tmp_path):
     """A WAP stage shares the table dir and numbers its versions after
     main's, so the stage's hop (v, v+1) and main's later hop (v, v+1)

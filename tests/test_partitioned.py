@@ -144,6 +144,14 @@ def test_drop_partitions_metadata_only_then_vacuum(spark, tmp_path):
         (3, 3, 3, "insert", "c"),
     ]))
     v_pre = t.current_version()
+
+    def tables():
+        return {x.name for x in spark.catalog.listTables()
+                if x.name.startswith("zxr_")}
+
+    before = tables()
+    t.read_changes(spark, 0, v_pre).collect()  # registers in every child
+    assert tables() - before
     dropped = t.drop_partitions(before="2024-01-03")
     assert dropped == ["2024-01-01", "2024-01-02"]
     assert _state(t, spark) == {(3, 3): "c"}
@@ -159,6 +167,8 @@ def test_drop_partitions_metadata_only_then_vacuum(spark, tmp_path):
     assert not os.path.isdir(t.partition_dir("2024-01-02"))
     assert os.path.isdir(t.partition_dir("2024-01-03"))
     assert _state(t, spark) == {(3, 3): "c"}
+    # the reaped children's catalog entries went with their dirs
+    assert tables() - before == set()
 
 
 def test_drop_noop_when_nothing_matches(spark, tmp_path):

@@ -81,21 +81,16 @@ def test_merge_plan_single_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", prior)
 
 
-def test_real_resolve_plan_single_exchange_no_python(spark, tmp_path):
-    """The union+window resolve, which is now the MOR read resolve
-    (``_resolved_view``; the copy-on-write merge joins the batch against
-    the bucketed base instead, pinned by
-    test_cow_merge_write_plan_shuffles_only_the_batch): one Exchange
-    total, the ranking + metrics windows reuse it, the window sort
-    carries the tie-break limbs, and no Python evaluation appears
-    anywhere. The plan has NO WindowGroupLimit — the
-    min-over-partition metrics column blocks the rank pushdown (the
-    measured map-side alternative was rejected, DESIGN.md §10) — so
-    this test pins what the plan really is."""
-    from pyspark.sql import types as T
+def test_mor_read_and_lookup_plans_have_no_exchange(spark, tmp_path):
+    """Every MOR reader resolves through the one dedup window
+    (LakeTable._side_winners) with no Exchange. read() of a version with
+    base rows, tombstones and pending deltas: ONE Window over the
+    bucketed scan, the tie-break limbs in its sort, no Python
+    evaluation. lookup(): the key's files, unioned and coalesced to one
+    partition, with no registration dir and no catalog entry."""
+    import os
 
     from oregonwaterdataportal_etl_spark.cdc.changegen import (
-        CHANGE_SCHEMA,
         TRANSCRIPT_SCHEMA,
         generate_changes_pdf,
     )
@@ -104,41 +99,36 @@ def test_real_resolve_plan_single_exchange_no_python(spark, tmp_path):
     t = LakeTable.create(
         str(tmp_path / "t"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"], num_buckets=4
     )
-    t.merge(spark.createDataFrame(generate_changes_pdf(2000, 100, seed=1)))
-    upd = spark.createDataFrame(
-        generate_changes_pdf(500, 100, seed=2, lsn_start=2000)
-    )
+    t.merge(spark.createDataFrame(
+        generate_changes_pdf(2000, 100, seed=1, delete_rate=0.1)
+    ))
+    pdf = generate_changes_pdf(500, 100, seed=2, lsn_start=2000)
+    t.merge(spark.createDataFrame(pdf), mode="mor")
     snap = t.snapshot()
-    evolved = t.evolve_schema(
-        T.StructType([f for f in upd.schema.fields if f.name not in ("op", "lsn")])
-    )
-    base = t._read_internal(spark, _snap=snap)
-    tb1, tb2 = t._update_tiebreak(upd.columns, evolved, "op")
-    upd_tagged = upd.select(
-        *t._tag_select(upd.columns, evolved, {}),
-        F.col("lsn").cast("long").alias("__lsn"),
-        F.lit(1).cast("tinyint").alias("__op"),
-        F.lit(1).alias("__src"),
-        tb1.alias("__tb1"),
-        tb2.alias("__tb2"),
-    )
-    base_tagged = base.select(
-        *t._tag_select(base.columns, evolved, {}),
-        F.col("_lsn").alias("__lsn"),
-        F.lit(0).cast("tinyint").alias("__op"),
-        F.lit(0).alias("__src"),
-        F.lit(None).cast("long").alias("__tb1"),
-        F.lit(None).cast("long").alias("__tb2"),
-    )
-    winners = t._resolve(base_tagged, upd_tagged, ["conv_id", "turn_idx"], 4)
-    plan = plan_of(winners)
-    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
-    # r6: the metrics min shares the rank's partition+order spec with
-    # an unbounded frame, so BOTH functions collapse into ONE Window
-    # operator — one pass per sorted partition (was 2 ops pre-r6)
-    assert len(re.findall(r"\bWindow\b", plan)) == 1, plan
-    assert "row_number" in plan and "min(__src" in plan  # both in that one op
-    assert "__tb1" in plan  # total-order limbs ride the window sort
+    assert snap["tombstones"] and snap["deltas"]
+    breg = os.path.join(t.path, "_bucketed")
+
+    def regs():
+        return sorted(os.listdir(breg)) if os.path.isdir(breg) else []
+
+    def tables():
+        return {x.name for x in spark.catalog.listTables()
+                if x.name.startswith("zxr_")}
+
+    regs0, tables0 = regs(), tables()
+    row = pdf.iloc[-1]
+    lk = t.lookup(spark, conv_id=row["conv_id"], turn_idx=int(row["turn_idx"]))
+    lk.collect()
+    plan = plan_of(lk)
+    assert "Exchange" not in plan, plan
+    assert "Window" in plan, plan  # the key's bucket holds deltas
+    assert regs() == regs0 and tables() == tables0
+
+    plan = plan_of(t.read(spark))
+    assert "Exchange" not in plan, plan
+    windows = [ln for ln in plan.splitlines() if re.search(r"\bWindow\b", ln)]
+    assert len(windows) == 1, plan
+    assert re.search(r"(?<!_)_tb1#", windows[0]) and re.search(r"(?<!_)_tb2#", windows[0])
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 

@@ -344,6 +344,7 @@ def test_rebucket_preserves_state_and_serves_new_layout(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from oregonwaterdataportal_etl_spark.cdc import oracle_fold
     from oregonwaterdataportal_etl_spark.cdc.changegen import (
         TRANSCRIPT_SCHEMA,
         generate_changes_pdf,
@@ -392,10 +393,17 @@ def test_rebucket_preserves_state_and_serves_new_layout(spark, tmp_path):
     got = t.lookup(spark, conv_id=k[0], turn_idx=k[1]).collect()
     assert len(got) == 1 and got[0]["text"] == k[3]
 
-    # zero-exchange serving read at the new count
-    zx = t.read(spark, resolve="bucketed")
-    assert sorted(map(tuple, zx.select(
-        "conv_id", "turn_idx", "role", "text", "tool").collect())) == before
+    # zero-exchange serving read at the new count, against the
+    # sequential oracle fold of both batches
+    events = [r.asDict() for b in (b1, b2) for r in b.collect()]
+    zx = t.read(spark)
+    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
+    assert sorted(map(tuple, zx.select(*cols).collect())) == sorted(
+        tuple(v[c] for c in cols)
+        for v in oracle_fold(
+            events, columns=[f.name for f in TRANSCRIPT_SCHEMA.fields]
+        ).values()
+    )
     plan = zx._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
