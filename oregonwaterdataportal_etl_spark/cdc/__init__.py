@@ -1,7 +1,7 @@
 from .changegen import CHANGE_SCHEMA, TRANSCRIPT_SCHEMA, generate_changes
 from .offsets import OffsetLog
 from .manifests import ManifestLog
-from .apply import lww_dedup, apply_batch, oracle_fold
+from .apply import lww_dedup, oracle_fold
 from .runner import CdcRunner
 from .source import (
     BucketedWalSource,
@@ -27,7 +27,6 @@ __all__ = [
     "OffsetLog",
     "ManifestLog",
     "lww_dedup",
-    "apply_batch",
     "oracle_fold",
     "CdcRunner",
     "LsnRangedParquetSource",

@@ -1,10 +1,11 @@
-"""Batch apply path: LWW dedup -> MERGE, plus the pure-Python oracle.
+"""LWW dedup of a change batch, plus the pure-Python oracle.
 
 lww_dedup is operator W1 (SURVEY.md 2.5): the reference keeps the
 first row per deterministic id unless a later "Final"-status record
 arrives (userCode/awqms/dag.py:155-187). Recast per north_rule: per
 (conv_id, turn_idx) the event with the highest monotonic LSN wins —
-ranking window over desc(lsn).
+the engine's one LWW window (lake.table._lww_top1). Applying a batch
+to a table is LakeTable.merge.
 
 oracle_fold is the hypothesis-test oracle from SURVEY.md section 5:
 a sequential fold of the change stream into a dict, against which the
@@ -15,12 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..lake.table import (
-    LakeTable,
-    MergeResult,
-    _lww_order,
+    _lww_top1,
     _op_code,
     _op_decode,
     tiebreak_cols,
@@ -59,35 +57,7 @@ def lww_dedup(
         # oracle fold (unknown ops are upserts -> hash as "insert")
         tb_in.append(_op_decode(_op_code(F.col(op_col))))
     t1, t2 = tiebreak_cols(tb_in, family=tiebreak_family)
-    # xxhash64 radix prefix on the partition keys — identical grouping,
-    # numeric-leading per-partition sort (see LakeTable._side_winners)
-    kh = F.xxhash64(*[F.col(c) for c in key_cols])
-    w = Window.partitionBy(kh, *[F.col(c) for c in key_cols]).orderBy(
-        *_lww_order(lsn_col, t1, t2)
-    )
-    return (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def apply_batch(
-    table: LakeTable,
-    changes: DataFrame,
-    op_col: str = "op",
-    lsn_col: str = "lsn",
-    mode: str = "cow",
-) -> MergeResult:
-    """Dedup a change batch and MERGE it into the lake table.
-
-    Note the merge's own ranking window already resolves intra-batch
-    duplicates together with base rows in a single shuffle, so we do
-    NOT pre-dedup here — one shuffle, not two. lww_dedup remains the
-    standalone operator for pipelines that need a clean batch without
-    a sink.
-    """
-    return table.merge(changes, op_col=op_col, lsn_col=lsn_col, mode=mode)
+    return _lww_top1(changes, list(key_cols), lsn_col, t1, t2)
 
 
 def oracle_fold(

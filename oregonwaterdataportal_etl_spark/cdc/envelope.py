@@ -253,7 +253,7 @@ def ingest_envelopes(
     """Full front-end: (ready changes, dead letters, still_pending).
 
     ``ready`` carries the payload columns + op/lsn (txn_* dropped) —
-    directly consumable by cdc.apply.apply_batch / LakeTable.merge;
+    directly consumable by LakeTable.merge;
     feed ``still_pending`` back in next window."""
     clean, dlq = split_dlq(
         parse_envelopes(raw, payload_schema, value_col, json_options), value_col

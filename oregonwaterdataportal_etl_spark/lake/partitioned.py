@@ -110,6 +110,8 @@ def write_partitioned_wal(
 _TRANSFORMS = ("days", "months", "identity")
 # identity partition values become directory names; keep them safe
 _SAFE_VALUE = re.compile(r"^[A-Za-z0-9._\-]{1,128}$")
+_ROW_COUNTERS = ("rows_inserted", "rows_updated", "rows_deleted",
+                 "rows_noop", "rows_dropped", "rows_delta")
 
 
 @dataclass
@@ -130,12 +132,7 @@ class PartitionedMergeResult:
     def as_dict(self) -> dict:
         return {
             "version": self.version,
-            "rows_inserted": self.rows_inserted,
-            "rows_updated": self.rows_updated,
-            "rows_deleted": self.rows_deleted,
-            "rows_noop": self.rows_noop,
-            "rows_dropped": self.rows_dropped,
-            "rows_delta": self.rows_delta,
+            **{k: getattr(self, k) for k in _ROW_COUNTERS},
             "partitions": self.partitions,
         }
 
@@ -439,7 +436,9 @@ class PartitionedLakeTable:
         return t
 
     # --------------------------------------------------------- write
-    def _apply_children(self, values: list[str], fn) -> dict:
+    def _apply_children(
+        self, values: list[str], fn
+    ) -> tuple[PartitionedMergeResult, dict[str, int]]:
         """Run ``fn(value)`` for every touched child, overlapping
         independent children from a small driver thread pool.
 
@@ -456,14 +455,28 @@ class PartitionedLakeTable:
         back keyed by value; any child failure re-raises before the
         root commit, exactly like a mid-loop crash in the sequential
         path (committed-but-unpinned children are re-pinned by the
-        replayed window's no-op merges)."""
+        replayed window's no-op merges).
+
+        Returns the children's results folded for the caller's root
+        commit: each child's committed version (the vector to pin), its
+        per-partition result, and the summed row counters."""
         env = os.environ.get("SPARK_GRAFT_TREE_PARALLELISM")
         par = max(1, min(int(env) if env else 4, len(values)))
         if par == 1:
-            return {v: fn(v) for v in values}
-        with ThreadPoolExecutor(max_workers=par) as pool:
-            futs = {v: pool.submit(fn, v) for v in values}
-            return {v: futs[v].result() for v in values}
+            results = {v: fn(v) for v in values}
+        else:
+            with ThreadPoolExecutor(max_workers=par) as pool:
+                futs = {v: pool.submit(fn, v) for v in values}
+                results = {v: futs[v].result() for v in values}
+        out = PartitionedMergeResult(version=-1)
+        pinned: dict[str, int] = {}
+        for v in values:
+            res = results[v]
+            pinned[v] = res.version
+            out.partitions[v] = res.as_dict()
+            for k in _ROW_COUNTERS:
+                setattr(out, k, getattr(out, k) + getattr(res, k))
+        return out, pinned
 
     def merge(
         self,
@@ -508,8 +521,6 @@ class PartitionedLakeTable:
             bad = [v for v in values if not _SAFE_VALUE.match(v)]
             if bad:
                 raise ValueError(f"unsafe identity partition values: {bad[:5]}")
-        out = PartitionedMergeResult(version=-1)
-        pinned: dict[str, int] = {}
 
         def apply_one(v: str):
             child = self._ensure_partition(v, snap)
@@ -520,14 +531,7 @@ class PartitionedLakeTable:
                 mode=mode,
                 **merge_kwargs,
             )
-        results = self._apply_children(values, apply_one)
-        for v in values:
-            res = results[v]
-            pinned[v] = res.version
-            out.partitions[v] = res.as_dict()
-            for k in ("rows_inserted", "rows_updated", "rows_deleted",
-                      "rows_noop", "rows_dropped", "rows_delta"):
-                setattr(out, k, getattr(out, k) + getattr(res, k))
+        out, pinned = self._apply_children(values, apply_one)
 
         # root schema evolves additively with its children: append any
         # field a touched child now carries that the root hasn't seen
@@ -545,9 +549,7 @@ class PartitionedLakeTable:
                 "operation": "merge",
                 "mode": mode,
                 "touched_partitions": values,
-                **{k: getattr(out, k) for k in (
-                    "rows_inserted", "rows_updated", "rows_deleted",
-                    "rows_noop", "rows_dropped", "rows_delta")},
+                **{k: getattr(out, k) for k in _ROW_COUNTERS},
             },
             add_missing=True,
             schema_fields=evolved_fields,
@@ -606,8 +608,6 @@ class PartitionedLakeTable:
                     "subdirs — a flat WAL cannot route into a partitioned "
                     "tree (produce it with write_partitioned_wal)"
                 )
-        out = PartitionedMergeResult(version=-1)
-        pinned: dict[str, int] = {}
 
         def apply_one(v: str):
             child = self._ensure_partition(v, snap)
@@ -616,14 +616,7 @@ class PartitionedLakeTable:
                 op_col=op_col, lsn_col=lsn_col, lsn_range=lsn_range,
                 _plan_out=_plan_out,
             )
-        results = self._apply_children(values, apply_one)
-        for v in values:
-            res = results[v]
-            pinned[v] = res.version
-            out.partitions[v] = res.as_dict()
-            for k in ("rows_inserted", "rows_updated", "rows_deleted",
-                      "rows_noop", "rows_dropped", "rows_delta"):
-                setattr(out, k, getattr(out, k) + getattr(res, k))
+        out, pinned = self._apply_children(values, apply_one)
 
         if pinned:
             out.version = self._pin_commit(

@@ -427,6 +427,34 @@ def _lww_order(lsn, tb1, tb2, src=None) -> list["F.Column"]:
     return order
 
 
+def _lww_top1(df: DataFrame, key_cols: list[str], lsn, tb1, tb2, src=None,
+              kh=None, full_frame: dict | None = None) -> DataFrame:
+    """THE per-key LWW window: each key's first row in the _lww_order
+    total order. The incoming batch (LakeTable._resolve_batch), the
+    stored versions (LakeTable._side_winners) and cdc.apply.lww_dedup
+    all rank here. Grouping by an xxhash64 PREFIX of the keys plus the
+    keys is the same grouping, but the per-task sort leads with an
+    8-byte numeric radix prefix instead of comparing key strings;
+    ``kh`` is that prefix as an already-materialized column (default:
+    the expression). ``full_frame`` maps output names to
+    order-independent aggregates over the same spec's unbounded frame,
+    so they share the rank's one Window operator."""
+    keys = [F.col(c) for c in key_cols]
+    w = Window.partitionBy(F.xxhash64(*keys) if kh is None else kh, *keys).orderBy(
+        *_lww_order(lsn, tb1, tb2, src=src)
+    )
+    wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return (
+        df.select(
+            "*",
+            F.row_number().over(w).alias("__rn"),
+            *[agg.over(wfull).alias(n) for n, agg in (full_frame or {}).items()],
+        )
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def _side_op() -> "F.Column":
     """Op code of a row of a side-tagged base/tombstone/delta frame
     (LakeTable._side_winners): tombstones and base rows by their side,
@@ -1304,41 +1332,35 @@ class LakeTable:
         cols.append(_op_decode(_op_code(F.col(op_col))))
         return tiebreak_cols(cols, family=family)
 
+    @staticmethod
     def _resolve_batch(
-        self, upd_tagged: DataFrame, key_cols: list[str], n_buckets: int
+        tagged: DataFrame, key_cols: list[str], n_buckets: int | None = None
     ) -> DataFrame:
-        """Batch-only LWW dedup (no base side), in the _lww_order total
-        order, with a rank filter only: a min(__src) over-partition
-        metrics column would block Spark's WindowGroupLimit rank
-        pushdown. With a pure rank filter the optimizer can insert a PARTIAL
-        top-1-per-key below the exchange, so intra-batch duplicates
-        collapse map-side before riding the wire. Both the MOR append
-        and the copy-on-write merge dedup their batch here; the cow
-        merge then classifies insert-vs-update in its join against the
-        bucketed base (_zx_winners), not with min(__src)."""
+        """THE batch resolve: per-key LWW dedup of a tagged batch
+        (_tag_batch) in the _lww_order total order, with no base side.
+        The MOR append and both copy-on-write merges (_batch_cand) dedup
+        their batch here. With ``n_buckets`` the batch first
+        repartitions on the keys into that many buckets (merge(): the
+        apply's one exchange); without, it must already be clustered by
+        key (merge_prebucketed's bucketed WAL scan reports
+        HashPartitioning(keys, n)), and the window adds no exchange.
+        A rank filter only: an over-partition metrics column would block
+        Spark's WindowGroupLimit rank pushdown, and with a pure rank
+        filter the optimizer can insert a PARTIAL top-1-per-key below
+        the exchange, so intra-batch duplicates collapse map-side before
+        riding the wire. The cow merges classify insert-vs-update in
+        their join against the bucketed base (_zx_winners)."""
+        keys = [F.col(c) for c in key_cols]
         # the radix-prefix hash is materialized BELOW the repartition:
         # if the window partitioned by an expression computed above the
         # exchange, the optimizer could not push the Partial group
         # limit under it (the partition key would not exist there)
-        ranked = (
-            upd_tagged.withColumn(
-                "__kh", F.xxhash64(*[F.col(c) for c in key_cols])
-            )
-            .repartition(n_buckets, *[F.col(c) for c in key_cols])
-            .select(
-                "*",
-                F.row_number()
-                .over(
-                    Window.partitionBy(
-                        "__kh", *[F.col(c) for c in key_cols]
-                    ).orderBy(
-                        *_lww_order("__lsn", "__tb1", "__tb2", src="__src")
-                    )
-                )
-                .alias("__rn"),
-            )
-        )
-        return ranked.filter(F.col("__rn") == 1).drop("__kh")
+        ranked = tagged.withColumn("__kh", F.xxhash64(*keys))
+        if n_buckets is not None:
+            ranked = ranked.repartition(n_buckets, *keys)
+        return _lww_top1(
+            ranked, key_cols, "__lsn", "__tb1", "__tb2", kh=F.col("__kh")
+        ).drop("__kh")
 
     def _read_internal(
         self,
@@ -1443,6 +1465,42 @@ class LakeTable:
             else:
                 out.append(src.alias(f.name))
         return out
+
+    def _tag_batch(self, upd: DataFrame, snap: dict, evolved: T.StructType,
+                   op_col: str, lsn_col: str, dicts: dict) -> DataFrame:
+        """The tagged batch _resolve_batch ranks: the _tag_select payload
+        plus __lsn, the op code __op and the tie-break limbs
+        __tb1/__tb2."""
+        t1, t2 = self._update_tiebreak(
+            upd.columns, evolved, op_col, snap.get("tiebreak_family", "xxhash64")
+        )
+        return upd.select(
+            *self._tag_select(upd.columns, evolved, dicts),
+            F.col(lsn_col).cast("long").alias("__lsn"),
+            _op_code(F.col(op_col)).alias("__op"),
+            t1.alias("__tb1"),
+            t2.alias("__tb2"),
+        )
+
+    def _batch_cand(self, upd: DataFrame, snap: dict, evolved: T.StructType,
+                    op_col: str, lsn_col: str, nonkey: list,
+                    n_buckets: int | None = None) -> DataFrame:
+        """The copy-on-write merges' batch side, as the __cand_u
+        candidate struct: tag, resolve (_resolve_batch), decode, and
+        _zx_cand. merge() passes ``n_buckets``, the batch's one
+        exchange; merge_prebucketed() passes none, since its bucketed
+        WAL scan is already clustered by key. Declared dict columns ride
+        as codes only when an exchange follows, so strings never ride
+        it."""
+        dicts = (snap.get("dict_cols") or {}) if n_buckets else {}
+        batch = self._resolve_batch(
+            self._tag_batch(upd, snap, evolved, op_col, lsn_col, dicts),
+            snap["key_cols"], n_buckets,
+        ).select(*self._payload_out(evolved, dicts), "__lsn", "__op", "__tb1", "__tb2")
+        return self._zx_cand(
+            batch, 1, F.col("__lsn"), F.col("__op"),
+            F.col("__tb1"), F.col("__tb2"), snap["key_cols"], nonkey,
+        ).withColumnRenamed("__cand", "__cand_u")
 
     @staticmethod
     def _payload_out(evolved: T.StructType, dicts: dict):
@@ -1833,26 +1891,13 @@ class LakeTable:
         else:
             touched = list(range(n_buckets))
 
-        dicts = snap.get("dict_cols") or {}
-        tb_family = snap.get("tiebreak_family", "xxhash64")
-
-        t1, t2 = self._update_tiebreak(upd.columns, evolved, op_col, tb_family)
-        upd_tagged = upd.select(
-            *self._tag_select(upd.columns, evolved, dicts),
-            F.col(lsn_col).cast("long").alias("__lsn"),
-            _op_code(F.col(op_col)).alias("__op"),
-            F.lit(1).alias("__src"),
-            t1.alias("__tb1"),
-            t2.alias("__tb2"),
-        )
-
         # -- merge-on-read fast path --------------------------------
         # Apply cost independent of table size: dedup the batch alone
         # (one shuffle of the BATCH, no base read), append per-bucket
         # delta files with op tombstones; reads/compaction resolve.
         if mode == "mor":
             return self._merge_mor(
-                spark, snap, upd_tagged, evolved, dicts, touched, bexpr,
+                spark, snap, upd, evolved, op_col, lsn_col, bexpr,
                 _summary_extra=_summary_extra,
             )
 
@@ -1864,18 +1909,12 @@ class LakeTable:
         # join against that scan therefore needs no exchange on either
         # side, each task holds one storage bucket for the write, and no
         # base row crosses the wire: the hash-build side is one bucket's
-        # deduplicated batch slice. Dict columns decode after the
-        # exchange, so strings never ride it.
-        batch = self._resolve_batch(upd_tagged, key_cols, n_buckets).select(
-            *self._payload_out(evolved, dicts),
-            "__lsn", "__op", "__tb1", "__tb2",
-        )
+        # deduplicated batch slice.
         return self._cow_commit(
             spark, snap, evolved, touched,
-            lambda reg_root, tables, nonkey: self._zx_cand(
-                batch, 1, F.col("__lsn"), F.col("__op"),
-                F.col("__tb1"), F.col("__tb2"), key_cols, nonkey,
-            ).withColumnRenamed("__cand", "__cand_u"),
+            lambda reg_root, tables, nonkey: self._batch_cand(
+                upd, snap, evolved, op_col, lsn_col, nonkey, n_buckets
+            ),
             _operation_label=_operation_label,
             _summary_extra=_summary_extra,
             null_keys=null_keys,
@@ -2226,30 +2265,13 @@ class LakeTable:
         merge's base side, the compaction fold and the changelog resolve
         here. ``df`` must already be clustered by key — a bucketed scan's
         HashPartitioning or a coalesce(1)'s SinglePartition satisfies
-        the window — so the resolve adds no Exchange."""
+        the window — so the resolve adds no Exchange. The __had_bt max
+        shares the rank's window spec (_lww_top1's ``full_frame``), so
+        the plan holds one Window operator."""
         src = F.when(F.col("side") == "d", F.lit(1)).otherwise(F.lit(0))
-        # grouping by an xxhash64 PREFIX of the keys plus the keys is the
-        # same grouping, but the per-task sort leads with an 8-byte
-        # numeric radix prefix instead of comparing key strings
-        kh = F.xxhash64(*[F.col(c) for c in key_cols])
-        pb = [kh, *[F.col(c) for c in key_cols]]
-        w = Window.partitionBy(*pb).orderBy(
-            *_lww_order(LSN_COL, _TB1_COL, _TB2_COL, src=src)
-        )
-        # share the rank's partition+order spec with an unbounded frame
-        # so both functions collapse into ONE Window operator (the max
-        # is order-independent)
-        wfull = w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        bt1 = (
-            df.select(
-                "*",
-                F.row_number().over(w).alias("__rn"),
-                F.max(F.col("side") != "d").over(wfull).alias("__had_bt"),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        bt1 = _lww_top1(
+            df, key_cols, LSN_COL, _TB1_COL, _TB2_COL, src=src,
+            full_frame={"__had_bt": F.max(F.col("side") != "d")},
         )
         return cls._zx_cand(
             bt1, src, F.col(LSN_COL), _side_op(),
@@ -2344,7 +2366,10 @@ class LakeTable:
         dedup window, full-outer join against base and tombstones —
         therefore satisfies every required distribution from storage:
         no Exchange anywhere in the plan (pinned by tests/test_plans).
-        Per-task sorts remain (sort-merge join); sorts are local.
+        The batch side is merge()'s (_batch_cand), minus the
+        repartition. The join is a ShuffledHashJoin, which sorts
+        nothing; the one per-task Sort is the batch window's (plus the
+        base side's window when deltas are pending).
 
         Semantics are IDENTICAL to merge(): the join compares the same
         (lsn, tb1 desc-nulls-last, tb2, base-first) total order via a
@@ -2378,7 +2403,6 @@ class LakeTable:
         snap = self.snapshot()
         key_cols: list[str] = snap["key_cols"]
         n_buckets = snap["num_buckets"]
-        tb_family = snap.get("tiebreak_family", "xxhash64")
         wal_files = B.collect_wal_files(source_path)
         touched = sorted(int(b) for b in wal_files)
         if not touched:
@@ -2442,23 +2466,9 @@ class LakeTable:
                         "from its file-name bucket (wrong keys or bucket "
                         "count at write time)"
                     )
-            # batch side: LWW dedup window over the bucketed scan (no
-            # exchange — HashPartitioning(keys) satisfies the window's
-            # clustering; the xxhash64 radix prefix rides a projection)
-            t1, t2 = self._update_tiebreak(upd.columns, evolved, op_col, tb_family)
-            kh = F.xxhash64(*[F.col(c) for c in key_cols])
-            w = Window.partitionBy(kh, *[F.col(c) for c in key_cols]).orderBy(
-                *_lww_order(lsn_col, t1, t2)
-            )
-            upd1 = (
-                upd.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            return self._zx_cand(
-                upd1, 1, F.col(lsn_col), _op_code(F.col(op_col)), t1, t2,
-                key_cols, nonkey,
-            ).withColumnRenamed("__cand", "__cand_u")
+            # no n_buckets: HashPartitioning(keys) of the bucketed scan
+            # already satisfies the batch window's clustering
+            return self._batch_cand(upd, snap, evolved, op_col, lsn_col, nonkey)
 
         return self._cow_commit(
             spark, snap, evolved, touched, wal_side,
@@ -2494,13 +2504,16 @@ class LakeTable:
             touched, None, _operation_label="compact-fold", _plan_out=_plan_out,
         )
 
-    def _merge_mor(self, spark, snap, upd_tagged, evolved, dicts, touched, bexpr,
+    def _merge_mor(self, spark, snap, upd, evolved, op_col, lsn_col, bexpr,
                    _summary_extra: dict | None = None) -> MergeResult:
-        """Append path: within-batch LWW dedup, then per-bucket delta
-        files carrying (_lsn, _op). No base read, no base rewrite."""
-        key_cols = snap["key_cols"]
-        n_buckets = snap["num_buckets"]
-        winners = self._resolve_batch(upd_tagged, key_cols, n_buckets)
+        """Append path: within-batch LWW dedup (_resolve_batch), then
+        per-bucket delta files carrying (_lsn, _op). No base read, no
+        base rewrite. Dict columns ride the batch's exchange as codes."""
+        dicts = snap.get("dict_cols") or {}
+        winners = self._resolve_batch(
+            self._tag_batch(upd, snap, evolved, op_col, lsn_col, dicts),
+            snap["key_cols"], snap["num_buckets"],
+        )
         out = winners.select(
             *self._payload_out(evolved, dicts),
             F.col("__lsn").alias(LSN_COL),

@@ -15,6 +15,7 @@ batch runner uses, so crash/replay semantics are identical.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +69,41 @@ def start_cdc_stream(
     return writer.start()
 
 
+def _sweep_wal_orphans(wal_dir: str) -> None:
+    """Start-of-stream sweep of the WAL route: no batch is in flight
+    yet, so every surviving batch-* subdir is a crash orphan (its
+    window either committed — data already in the table — or will be
+    rewritten fresh by checkpoint replay)."""
+    if os.path.isdir(wal_dir):
+        for entry in os.listdir(wal_dir):
+            if entry.startswith("batch-"):
+                shutil.rmtree(os.path.join(wal_dir, entry), ignore_errors=True)
+
+
+def _merge_via_wal(table, batch_df: DataFrame, wal_dir: str, plan_log: list | None):
+    """The WAL route for one micro-batch: write it under ``wal_dir`` as
+    a bucketed WAL in the table's layout (day-partitioned for a
+    PartitionedLakeTable), apply it with merge_prebucketed, and delete
+    the batch's subdir. Once the merge has committed the subdir is only
+    disk: a replay writes a fresh one, and a crash before the delete
+    leaves an orphan for _sweep_wal_orphans."""
+    from ..lake.bucketed import write_bucketed_wal
+    from ..lake.partitioned import write_partitioned_wal
+
+    if hasattr(table, "partition_table"):
+        batch_dir = write_partitioned_wal(batch_df, wal_dir, table)
+    else:
+        snap = table.snapshot()
+        batch_dir = write_bucketed_wal(
+            batch_df, wal_dir, snap["num_buckets"], snap["key_cols"]
+        )
+    result = table.merge_prebucketed(
+        batch_df.sparkSession, batch_dir, _plan_out=plan_log
+    )
+    shutil.rmtree(batch_dir, ignore_errors=True)
+    return result
+
+
 def start_cdc_stream_zx(
     spark: SparkSession,
     stream_dir: str,
@@ -81,25 +117,26 @@ def start_cdc_stream_zx(
     plan_log: list | None = None,
     max_files_per_trigger: int | None = None,
 ):
-    """Zero-exchange streaming apply — the production steady-state loop.
+    """Streaming apply through a bucketed WAL and the zero-exchange
+    resolve — the production steady-state loop.
 
     Per micro-batch: the batch is written as a Spark-native bucketed
-    WAL under ``wal_dir`` (lake.bucketed.write_bucketed_wal — this is
-    the ONE producer-side shuffle, aligned to the table's own layout)
-    and then applied with ``LakeTable.merge_prebucketed``, whose
-    resolve plan has ZERO Exchange: the batch LWW dedup window and the
-    full-outer join against base + tombstones all read their required
-    distribution straight from storage. Compared to
-    ``start_cdc_stream`` (ordinary merge: one shuffle of the batch,
-    the base joined in place) this also drops the per-batch batch
-    shuffle.
+    WAL under ``wal_dir`` (lake.bucketed.write_bucketed_wal, which
+    repartitions the batch into the table's own layout: the route's
+    one shuffle) and then applied with ``LakeTable.merge_prebucketed``,
+    whose resolve plan has ZERO Exchange: the batch LWW dedup window
+    and the full-outer join against base + tombstones all read their
+    required distribution straight from storage. ``start_cdc_stream``
+    (ordinary merge) also shuffles the batch once and joins the base in
+    place; the WAL route moves that one shuffle into the WAL write, it
+    does not remove it.
 
     Exactly-once is the same two-layer story as the batch runner:
     Spark's checkpoint replays foreachBatch at-least-once; the
     ManifestLog turns an already-committed LSN window into a no-op, and
     a crash BETWEEN merge-commit and manifest-commit replays a merge
     that the per-row LSN guard resolves to zero row changes. Each
-    batch's WAL subdir is deleted after its manifest commits; leftovers
+    batch's WAL subdir is deleted after its merge commits; leftovers
     from a crash are swept on the next stream start (never mid-stream —
     a replayed batch rewrites its own fresh subdir, so stale dirs are
     only disk, not state).
@@ -113,22 +150,9 @@ def start_cdc_stream_zx(
     tree's merge_prebucketed — per-day plans stay Exchange-free and
     the same manifest/LSN-guard exactly-once story holds.
     """
-    import shutil
-
     from ..cdc.manifests import batch_id_for_window
-    from ..lake.bucketed import write_bucketed_wal
-    from ..lake.partitioned import write_partitioned_wal
 
-    is_tree = hasattr(table, "partition_table")
-
-    # start-of-stream sweep: no batch is in flight yet, so every
-    # surviving batch-* subdir is a crash orphan (its window either
-    # committed — data already in the table — or will be rewritten
-    # fresh by checkpoint replay)
-    if os.path.isdir(wal_dir):
-        for entry in os.listdir(wal_dir):
-            if entry.startswith("batch-"):
-                shutil.rmtree(os.path.join(wal_dir, entry), ignore_errors=True)
+    _sweep_wal_orphans(wal_dir)
 
     if schema is None:
         schema = spark.read.parquet(stream_dir).schema
@@ -137,9 +161,6 @@ def start_cdc_stream_zx(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     src = reader.parquet(stream_dir)
-    snap = table.snapshot()
-    key_cols = snap["key_cols"]
-    num_buckets = snap["num_buckets"]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -151,17 +172,8 @@ def start_cdc_stream_zx(
         if manifests.is_committed(bid):
             return
         manifests.begin(bid, bounds["lo"], bounds["hi"])
-        if is_tree:
-            batch_dir = write_partitioned_wal(batch_df, wal_dir, table)
-        else:
-            batch_dir = write_bucketed_wal(
-                batch_df, wal_dir, num_buckets, key_cols
-            )
-        result = table.merge_prebucketed(
-            batch_df.sparkSession, batch_dir, _plan_out=plan_log
-        )
+        result = _merge_via_wal(table, batch_df, wal_dir, plan_log)
         manifests.commit(bid, result.as_dict())
-        shutil.rmtree(batch_dir, ignore_errors=True)
 
     writer = src.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -198,10 +210,9 @@ def start_envelope_stream(
 
     ``zero_exchange=True`` routes each micro-batch's ready rows
     through the bucketed-WAL + ``merge_prebucketed`` path (see
-    ``start_cdc_stream_zx``): the gate's window shuffle is then the
-    ONLY exchange in the whole pipeline — the WAL write aligns the
-    batch to the table's layout and the resolve itself runs with
-    zero Exchange. Requires ``wal_dir``; ``plan_log`` captures each
+    ``start_cdc_stream_zx``): the gate's window shuffle and the WAL
+    write's repartition into the table's layout are then the only
+    exchanges, and the resolve itself runs with zero Exchange. Requires ``wal_dir``; ``plan_log`` captures each
     batch's executed resolve plan (test hook).
 
     Crash/replay discipline (Spark's file-source checkpoint replays a
@@ -229,8 +240,6 @@ def start_envelope_stream(
     engine's normal one-exchange apply. The DLQ and pending stores
     write O(bad + in-flight) rows, not O(batch).
     """
-    import shutil
-
     from ..cdc.envelope import gate_transactions, parse_envelopes, split_dlq
     from ..cdc.manifests import batch_id_for_window
 
@@ -239,15 +248,7 @@ def start_envelope_stream(
             raise ValueError("zero_exchange=True needs wal_dir")
         if mode != "cow":
             raise ValueError("zero_exchange applies to mode='cow'")
-        # start-of-stream sweep, same contract as start_cdc_stream_zx
-        if os.path.isdir(wal_dir):
-            for entry in os.listdir(wal_dir):
-                if entry.startswith("batch-"):
-                    shutil.rmtree(
-                        os.path.join(wal_dir, entry), ignore_errors=True
-                    )
-        zx_snap = table.snapshot()
-        zx_keys, zx_buckets = zx_snap["key_cols"], zx_snap["num_buckets"]
+        _sweep_wal_orphans(wal_dir)
 
     src_reader = spark.readStream.schema("value string")
     if max_files_per_trigger is not None:
@@ -292,28 +293,10 @@ def start_envelope_stream(
             if not manifests.is_committed(bid):
                 manifests.begin(bid, bounds["lo"], bounds["hi"])
                 if zero_exchange:
-                    from ..lake.bucketed import write_bucketed_wal
-                    from ..lake.partitioned import write_partitioned_wal
-
-                    if hasattr(table, "partition_table"):
-                        # PartitionedLakeTable: day-routed WAL, per-day
-                        # exchange-free resolve (same contract as
-                        # start_cdc_stream_zx's tree path)
-                        batch_dir = write_partitioned_wal(
-                            ready, wal_dir, table
-                        )
-                    else:
-                        batch_dir = write_bucketed_wal(
-                            ready, wal_dir, zx_buckets, zx_keys
-                        )
-                    result = table.merge_prebucketed(
-                        sess, batch_dir, _plan_out=plan_log
-                    )
-                    manifests.commit(bid, result.as_dict())
-                    shutil.rmtree(batch_dir, ignore_errors=True)
+                    result = _merge_via_wal(table, ready, wal_dir, plan_log)
                 else:
                     result = table.merge(ready, mode=mode)
-                    manifests.commit(bid, result.as_dict())
+                manifests.commit(bid, result.as_dict())
         # sweep states older than the predecessor (kept for replay)
         try:
             for e in os.listdir(pending_dir):
@@ -377,7 +360,6 @@ def replay_dlq(
     Returns ``{"quarantined", "recovered", "still_dead", "held"}``
     row counts (``still_dead`` includes ``txn_incomplete`` rows).
     """
-    import shutil
     import uuid
 
     from ..cdc.envelope import gate_transactions, parse_envelopes

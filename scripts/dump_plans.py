@@ -73,7 +73,8 @@ def cow_merge_plan(spark, tmp) -> str:
 
 def zero_exchange_plan(spark, tmp) -> str:
     """merge_prebucketed's resolve over a bucketed WAL + base +
-    tombstones: zero Exchange, zero sorts (ShuffledHashJoin)."""
+    tombstones: zero Exchange; the ShuffledHashJoin sorts nothing, so
+    the one per-task Sort is the batch dedup window's."""
     from oregonwaterdataportal_etl_spark.lake.bucketed import write_bucketed_wal
 
     t = LakeTable.create(
@@ -164,6 +165,16 @@ def changelog_plan(spark, tmp):
     return t.read_changes(spark, v1)
 
 
+def lww_dedup_plan(spark):
+    """cdc.apply.lww_dedup of a raw change batch: one exchange, then the
+    engine's one LWW window."""
+    from oregonwaterdataportal_etl_spark.cdc import lww_dedup
+
+    return lww_dedup(
+        spark.createDataFrame(generate_changes_pdf(2000, 100, seed=12))
+    )
+
+
 def main() -> None:
     import tempfile
 
@@ -174,9 +185,9 @@ def main() -> None:
         (
             "Zero-exchange pre-bucketed merge resolve (round 4)",
             "batch LWW dedup window + full-outer SHUFFLE_HASH join against "
-            "base+tombstones, all from catalog bucketed scans: NO Exchange, "
-            "NO per-task sorts. Pinned by "
-            "test_prebucketed_plan_has_zero_exchanges",
+            "base+tombstones, all from catalog bucketed scans: NO Exchange. "
+            "The join sorts nothing; the one per-task Sort is the batch "
+            "window's. Pinned by test_prebucketed_plan_has_zero_exchanges",
             zero_exchange_plan(spark, tmp),
         ),
         (
@@ -229,6 +240,14 @@ def main() -> None:
             "window: NO Exchange, no registration. Pinned by "
             "test_mor_read_and_lookup_plans_have_no_exchange",
             mor_lookup,
+        ),
+        (
+            "Standalone LWW dedup (lww_dedup)",
+            "one hash exchange on the keys' xxhash64 radix prefix and the "
+            "keys -> the engine's one LWW window (_lww_top1, the window "
+            "every resolve ranks with), tie-break limbs hashed JVM-side. "
+            "Pinned by test_lww_dedup_plan_one_exchange_one_window",
+            lww_dedup_plan(spark),
         ),
         (
             "Grouped aggregate (tpch1_agg)",

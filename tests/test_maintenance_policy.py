@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from oregonwaterdataportal_etl_spark.cdc import (
     OffsetLog,
-    apply_batch,
     generate_changes,
 )
 from oregonwaterdataportal_etl_spark.cdc.changegen import TRANSCRIPT_SCHEMA
@@ -31,7 +30,7 @@ def _state(spark, t):
 
 def test_healthy_table_plans_nothing(spark, tmp_path):
     t = _table(tmp_path)
-    apply_batch(t, generate_changes(spark, 500, 20, seed=1))
+    t.merge(generate_changes(spark, 500, 20, seed=1))
     pol = MaintenancePolicy(max_files_per_bucket=8, keep_snapshots=5)
     assert plan_maintenance(t, pol) == {}
     assert maintain(spark, t, pol) == {}
@@ -43,7 +42,7 @@ def test_compact_trigger_and_convergence(spark, tmp_path):
     # does (maxRecordsPerFile bounds file size; small cap -> many files)
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "40")
     try:
-        apply_batch(t, generate_changes(spark, 1200, 20, seed=1))
+        t.merge(generate_changes(spark, 1200, 20, seed=1))
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     assert max(len(fl) for fl in t.snapshot()["files"].values()) > 3
@@ -59,10 +58,9 @@ def test_compact_trigger_and_convergence(spark, tmp_path):
 
 def test_delta_fold_trigger(spark, tmp_path):
     t = _table(tmp_path)
-    apply_batch(t, generate_changes(spark, 400, 20, seed=9))
+    t.merge(generate_changes(spark, 400, 20, seed=9))
     for i in range(5):
-        apply_batch(
-            t,
+        t.merge(
             generate_changes(spark, 200, 20, seed=20 + i, lsn_start=400 + 200 * i),
             mode="mor",
         )
@@ -79,7 +77,7 @@ def test_delta_fold_trigger(spark, tmp_path):
 
 def test_rebucket_trigger_scales_to_power_of_two_multiple(spark, tmp_path):
     t = _table(tmp_path, buckets=2)
-    apply_batch(t, generate_changes(spark, 4000, 50, seed=3))
+    t.merge(generate_changes(spark, 4000, 50, seed=3))
     before = _state(spark, t)
     rows = sum(t.snapshot()["row_counts"].values())
     pol = MaintenancePolicy(max_rows_per_bucket=rows // 7)  # needs 2 doublings
@@ -93,7 +91,7 @@ def test_rebucket_trigger_scales_to_power_of_two_multiple(spark, tmp_path):
 def test_tombstone_expiry_under_watermark(spark, tmp_path):
     t = _table(tmp_path)
     ch = generate_changes(spark, 800, 20, seed=4, delete_rate=0.3)
-    apply_batch(t, ch)
+    t.merge(ch)
     assert t.snapshot().get("tombstones")
     off = OffsetLog(str(tmp_path / "off"), "s")
     off.commit(799, "b1")
@@ -111,7 +109,7 @@ def test_tombstone_expiry_under_watermark(spark, tmp_path):
 def test_vacuum_trigger_bounds_history(spark, tmp_path):
     t = _table(tmp_path)
     for i in range(5):
-        apply_batch(t, generate_changes(spark, 200, 10, seed=i, lsn_start=200 * i))
+        t.merge(generate_changes(spark, 200, 10, seed=i, lsn_start=200 * i))
     pol = MaintenancePolicy(
         max_files_per_bucket=None,
         max_delta_files_per_bucket=None,

@@ -5,7 +5,7 @@ import time
 
 import pytest
 
-from oregonwaterdataportal_etl_spark.cdc import apply_batch, generate_changes
+from oregonwaterdataportal_etl_spark.cdc import generate_changes
 from oregonwaterdataportal_etl_spark.cdc.changegen import TRANSCRIPT_SCHEMA
 from oregonwaterdataportal_etl_spark.lake import LakeTable
 
@@ -19,9 +19,9 @@ def _table(tmp_path):
 
 def test_metadata_frames_match_stats(spark, tmp_path):
     t = _table(tmp_path)
-    apply_batch(t, generate_changes(spark, 800, 20, seed=1, delete_rate=0.2))
-    apply_batch(
-        t, generate_changes(spark, 400, 20, seed=2, lsn_start=800), mode="mor"
+    t.merge(generate_changes(spark, 800, 20, seed=1, delete_rate=0.2))
+    t.merge(
+        generate_changes(spark, 400, 20, seed=2, lsn_start=800), mode="mor"
     )
     stats = t.stats()
 
@@ -49,10 +49,10 @@ def test_metadata_frames_match_stats(spark, tmp_path):
 
 def test_timestamp_time_travel(spark, tmp_path):
     t = _table(tmp_path)
-    apply_batch(t, generate_changes(spark, 300, 10, seed=3))
+    t.merge(generate_changes(spark, 300, 10, seed=3))
     t_after_v1 = time.time()
     time.sleep(0.05)
-    apply_batch(t, generate_changes(spark, 300, 10, seed=4, lsn_start=300))
+    t.merge(generate_changes(spark, 300, 10, seed=4, lsn_start=300))
 
     assert t.version_at(t_after_v1) == 1
     assert t.version_at(time.time()) == t.current_version() == 2
@@ -70,9 +70,9 @@ def test_clone_is_deep_and_independent(spark, tmp_path):
     identically, and source-side merge + zero-grace vacuum afterwards
     cannot disturb it."""
     t = _table(tmp_path)
-    apply_batch(t, generate_changes(spark, 600, 15, seed=5, delete_rate=0.2))
-    apply_batch(
-        t, generate_changes(spark, 300, 15, seed=6, lsn_start=600), mode="mor"
+    t.merge(generate_changes(spark, 600, 15, seed=5, delete_rate=0.2))
+    t.merge(
+        generate_changes(spark, 300, 15, seed=6, lsn_start=600), mode="mor"
     )
     v = t.current_version()
     want = sorted(map(tuple, t.read(spark).collect()))
@@ -83,12 +83,12 @@ def test_clone_is_deep_and_independent(spark, tmp_path):
     assert clone.snapshot()["summary"]["cloned_version"] == v
 
     # source moves on and vacuums aggressively; the clone is untouched
-    apply_batch(t, generate_changes(spark, 300, 15, seed=7, lsn_start=900))
+    t.merge(generate_changes(spark, 300, 15, seed=7, lsn_start=900))
     t.compact(spark)
     t.vacuum(keep_last=1, orphan_grace_seconds=0.0)
     assert sorted(map(tuple, clone.read(spark).collect())) == want
     # and the clone is writable on its own chain
-    apply_batch(clone, generate_changes(spark, 100, 15, seed=8, lsn_start=2000))
+    clone.merge(generate_changes(spark, 100, 15, seed=8, lsn_start=2000))
     assert clone.current_version() == 2
 
 
@@ -99,7 +99,7 @@ def test_delete_where_retention_sweep(spark, tmp_path):
     from pyspark.sql import functions as F
 
     t = _table(tmp_path)
-    apply_batch(t, generate_changes(spark, 600, 15, seed=9, delete_rate=0.0))
+    t.merge(generate_changes(spark, 600, 15, seed=9, delete_rate=0.0))
     before = t.read(spark)
     n_before = before.count()
     n_user = before.filter(F.col("role") == "user").count()
@@ -124,7 +124,7 @@ def test_delete_where_retention_sweep(spark, tmp_path):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp, op string, lsn long",
     )
-    apply_batch(t, stale)
+    t.merge(stale)
     assert (
         t.read(spark)
         .filter(

@@ -132,6 +132,21 @@ def test_mor_read_and_lookup_plans_have_no_exchange(spark, tmp_path):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_lww_dedup_plan_one_exchange_one_window(spark):
+    """cdc.apply.lww_dedup ranks through the engine's one LWW window
+    (lake.table._lww_top1): ONE Exchange on the keys' radix prefix and
+    the keys, ONE Window, and the tie-break limbs hash JVM-side (no
+    Python evaluation)."""
+    from oregonwaterdataportal_etl_spark.cdc import lww_dedup
+    from oregonwaterdataportal_etl_spark.cdc.changegen import generate_changes_pdf
+
+    df = spark.createDataFrame(generate_changes_pdf(500, 20, seed=1))
+    plan = plan_of(lww_dedup(df))
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert len(re.findall(r"\bWindow\b", plan)) == 1, plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
 def _last_write_plan(spark) -> tuple[str, str]:
     """(tree, details) of the physical plan of the last executed write,
     read from the SQL status store (the plan the write really ran, after

@@ -364,7 +364,7 @@ def test_dict_cols_roundtrip_all_paths(spark, tmp_path):
     """Declared dictionary columns ride the shuffle as codes but must
     round-trip EXACTLY: known values, values outside the declared set
     (lossless fallback), and nulls — through cow merge, mor deltas,
-    read-resolve and compaction."""
+    read-resolve, compaction and the zero-exchange merge_prebucketed."""
     dicts = {"role": ["user", "assistant"], "tool": ["bash", "python"]}
     t = LakeTable.create(
         str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=4, dict_cols=dicts
@@ -397,6 +397,30 @@ def test_dict_cols_roundtrip_all_paths(spark, tmp_path):
         for r in t.read(spark).collect()
     }
     assert got2 == expected
+    # zero-exchange leg: a bucketed WAL with in-dictionary values,
+    # values outside the dictionary, and nulls
+    rows3 = [
+        ("update", 20, "c1", 1, "user", "b3", "python", None),   # in dict
+        ("update", 21, "c2", 0, "critic", "d3", "grep", None),   # outside dict
+        ("insert", 22, "c3", 0, None, "e", None, None),          # nulls
+        ("update", 23, "c1", 0, "assistant", "a3", "perl", None),  # mixed
+    ]
+    wal = str(tmp_path / "wal")
+    write_bucketed_wal(
+        spark.createDataFrame(rows3, schema=CHANGE_SCHEMA), wal, 4, KEYS
+    )
+    t.merge_prebucketed(spark, wal)
+    expected.update({
+        ("c1", 0): ("assistant", "perl"),
+        ("c1", 1): ("user", "python"),
+        ("c2", 0): ("critic", "grep"),
+        ("c3", 0): (None, None),
+    })
+    got3 = {
+        (r["conv_id"], r["turn_idx"]): (r["role"], r["tool"])
+        for r in t.read(spark).collect()
+    }
+    assert got3 == expected
     # dict_cols survive snapshot lineage
     assert t.snapshot()["dict_cols"] == dicts
 

@@ -382,9 +382,14 @@ def test_rebucket_preserves_state_and_serves_new_layout(spark, tmp_path):
     assert snap["deltas"] and snap["tombstones"]
     assert all(int(b) < 8 for b in
                list(snap["files"]) + list(snap["deltas"]) + list(snap["tombstones"]))
-    # row_counts lineage matches the real per-bucket footprint
-    assert sum(t.stats()["rows_per_bucket"].values()) == sum(
-        1 for _ in before) + 0 or True  # base rows only; deltas excluded
+    # row_counts lineage matches the real per-bucket footprint: the
+    # footer row counts of each bucket's base files (deltas excluded)
+    import pyarrow.parquet as pq
+
+    assert t.stats()["rows_per_bucket"] == {
+        int(b): sum(pq.ParquetFile(f).metadata.num_rows for f in fl)
+        for b, fl in snap["files"].items()
+    }
     # same-count rebucket is a no-op commit-wise
     assert t.rebucket(spark, 8) == v
 

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from oregonwaterdataportal_etl_spark.cdc import apply_batch, generate_changes
+from oregonwaterdataportal_etl_spark.cdc import generate_changes
 from oregonwaterdataportal_etl_spark.cdc.changegen import TRANSCRIPT_SCHEMA
 from oregonwaterdataportal_etl_spark.lake import (
     ExprHolds,
@@ -44,13 +44,13 @@ def _state(spark, table):
 def test_staged_commits_invisible_until_publish(spark, tmp_path, commit_mode):
     table = _table(tmp_path, commit_mode=commit_mode)
     b1 = generate_changes(spark, 800, 20, seed=1)
-    apply_batch(table, b1)
+    table.merge(b1)
     v_main = table.current_version()
     before = _state(spark, table)
 
     stage = table.begin_wap("nightly")
     b2 = generate_changes(spark, 800, 20, seed=2, lsn_start=800)
-    apply_batch(stage, b2)
+    stage.merge(b2)
 
     # main: untouched (version AND data), in both commit modes
     assert table.current_version() == v_main
@@ -76,11 +76,11 @@ def test_multi_commit_stage_publishes_once(spark, tmp_path):
     control = _table(tmp_path, "control")
     b1 = generate_changes(spark, 600, 15, seed=3)
     b2 = generate_changes(spark, 600, 15, seed=4, lsn_start=600)
-    apply_batch(table, b1)
-    apply_batch(control, b1)
+    table.merge(b1)
+    control.merge(b1)
 
     stage = table.begin_wap("w2")
-    apply_batch(stage, b2, mode="mor")
+    stage.merge(b2, mode="mor")
     stage.compact(spark)  # fold the MOR deltas inside the stage
     assert len(stage.staged_versions()) == 2
     v_main = table.current_version()
@@ -89,13 +89,13 @@ def test_multi_commit_stage_publishes_once(spark, tmp_path):
     assert table.snapshot()["summary"]["staged_commits"] == 2
     assert not table.snapshot().get("deltas")
 
-    apply_batch(control, b2)
+    control.merge(b2)
     assert _state(spark, table) == _state(spark, control)
 
 
 def test_audit_failure_keeps_stage_and_main(spark, tmp_path):
     table = _table(tmp_path)
-    apply_batch(table, generate_changes(spark, 400, 10, seed=5))
+    table.merge(generate_changes(spark, 400, 10, seed=5))
     v_main = table.current_version()
 
     stage = table.begin_wap("audited")
@@ -104,7 +104,7 @@ def test_audit_failure_keeps_stage_and_main(spark, tmp_path):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp, op string, lsn long",
     )
-    apply_batch(stage, bad)
+    stage.merge(bad)
     audits = [
         NotNull("text"),
         ExprHolds("turn_idx>=0", F.col("turn_idx") >= 0),
@@ -127,11 +127,11 @@ def test_audit_failure_keeps_stage_and_main(spark, tmp_path):
 
 def test_publish_conflict_and_eager_abort(spark, tmp_path):
     table = _table(tmp_path)
-    apply_batch(table, generate_changes(spark, 400, 10, seed=6))
+    table.merge(generate_changes(spark, 400, 10, seed=6))
     before = _state(spark, table)
 
     stage = table.begin_wap("loser")
-    apply_batch(stage, generate_changes(spark, 400, 10, seed=7, lsn_start=400))
+    stage.merge(generate_changes(spark, 400, 10, seed=7, lsn_start=400))
     staged_only = {
         f
         for v in stage.staged_versions()
@@ -140,7 +140,7 @@ def test_publish_conflict_and_eager_abort(spark, tmp_path):
     assert staged_only and all(os.path.exists(f) for f in staged_only)
 
     # main commits while the stage is open -> publish must refuse
-    apply_batch(table, generate_changes(spark, 200, 10, seed=8, lsn_start=900))
+    table.merge(generate_changes(spark, 200, 10, seed=8, lsn_start=900))
     with pytest.raises(WapConflictError):
         stage.publish()
     removed = stage.abort()
@@ -155,9 +155,9 @@ def test_publish_conflict_and_eager_abort(spark, tmp_path):
 
 def test_vacuum_protects_open_stage(spark, tmp_path):
     table = _table(tmp_path)
-    apply_batch(table, generate_changes(spark, 400, 10, seed=9))
+    table.merge(generate_changes(spark, 400, 10, seed=9))
     stage = table.begin_wap("held")
-    apply_batch(stage, generate_changes(spark, 400, 10, seed=10, lsn_start=400))
+    stage.merge(generate_changes(spark, 400, 10, seed=10, lsn_start=400))
     staged_state = _state(spark, stage)
     # zero grace: without wap-awareness this would sweep the staged files
     table.vacuum(keep_last=1, orphan_grace_seconds=0.0)
@@ -168,9 +168,9 @@ def test_vacuum_protects_open_stage(spark, tmp_path):
 
 def test_stage_reattach_after_crash(spark, tmp_path):
     table = _table(tmp_path)
-    apply_batch(table, generate_changes(spark, 300, 8, seed=11))
+    table.merge(generate_changes(spark, 300, 8, seed=11))
     stage = table.begin_wap("crashy")
-    apply_batch(stage, generate_changes(spark, 300, 8, seed=12, lsn_start=300))
+    stage.merge(generate_changes(spark, 300, 8, seed=12, lsn_start=300))
     expect = _state(spark, stage)
     del stage  # "crash": the process forgets the object, manifests persist
 
@@ -212,7 +212,7 @@ def test_runner_ingests_into_wap_stage(spark, tmp_path):
     stream_dir = str(tmp_path / "stream")
     stream.write.parquet(stream_dir)
     table = _table(tmp_path)
-    apply_batch(table, generate_changes(spark, 500, 30, seed=16, lsn_start=-500))
+    table.merge(generate_changes(spark, 500, 30, seed=16, lsn_start=-500))
     v_main = table.current_version()
 
     stage = table.begin_wap("ingest")
@@ -235,8 +235,8 @@ def test_runner_ingests_into_wap_stage(spark, tmp_path):
     assert v_pub == v_main + 1                      # one audited commit
     # final state equals main-batch + stream folded directly
     control = _table(tmp_path, "control")
-    apply_batch(control, generate_changes(spark, 500, 30, seed=16, lsn_start=-500))
-    apply_batch(control, stream)
+    control.merge(generate_changes(spark, 500, 30, seed=16, lsn_start=-500))
+    control.merge(stream)
     assert _state(spark, table) == _state(spark, control)
 
 
@@ -247,7 +247,7 @@ def test_change_audit_delta_bounds(spark, tmp_path):
     from oregonwaterdataportal_etl_spark.lake import DeltaBounds
 
     table = _table(tmp_path)
-    apply_batch(table, generate_changes(
+    table.merge(generate_changes(
         spark, 800, 20, seed=20, update_rate=0.0, delete_rate=0.0))
     base_rows = table.read(spark).count()
 
@@ -260,7 +260,7 @@ def test_change_audit_delta_bounds(spark, tmp_path):
         F.lit("delete").alias("op"), (F.lit(10_000) + F.monotonically_increasing_id()).alias("lsn"),
     )
     stage = table.begin_wap("wipe")
-    apply_batch(stage, wipe)
+    stage.merge(wipe)
     with pytest.raises(WapAuditError) as exc:
         stage.publish(spark, audits=[DeltaBounds(max_deleted_frac=0.5)])
     assert "base rows" in str(exc.value)
@@ -268,7 +268,7 @@ def test_change_audit_delta_bounds(spark, tmp_path):
 
     # a modest incremental stage passes the same audit
     stage2 = table.begin_wap("ok")
-    apply_batch(stage2, generate_changes(
+    stage2.merge(generate_changes(
         spark, 200, 20, seed=21, lsn_start=800, delete_rate=0.05))
     v = stage2.publish(
         spark,
