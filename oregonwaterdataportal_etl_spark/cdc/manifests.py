@@ -23,13 +23,13 @@ replay-safe.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
-import uuid
 from datetime import datetime, timezone
 
-from ..lake.table import _fsync_dir
+from ..lake.table import _fsync_dir, durable_link, durable_replace
 
 
 def batch_id_for_window(source_id: str, lsn_lo: int, lsn_hi: int) -> str:
@@ -61,20 +61,8 @@ class ManifestLog:
 
     def _publish(self, path: str, doc: dict) -> None:
         """Link-after-fsync immutable publish; existing name = replay."""
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            pass
-        finally:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
+        with contextlib.suppress(FileExistsError):
+            durable_link(path, json.dumps(doc))
         _fsync_dir(self.path)
 
     def _doc(self, batch_id: str) -> dict | None:
@@ -97,13 +85,7 @@ class ManifestLog:
         return self.status(batch_id) == "committed"
 
     def _write(self, batch_id: str, doc: dict) -> None:
-        tmp = self._file(batch_id) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._file(batch_id))
-        _fsync_dir(self.path)
+        durable_replace(self._file(batch_id), json.dumps(doc))
 
     def begin(self, batch_id: str, lsn_lo: int, lsn_hi: int) -> None:
         doc = {

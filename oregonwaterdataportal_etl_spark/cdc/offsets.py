@@ -15,12 +15,17 @@ checkpointLocation, not a data table).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-import uuid
 from datetime import datetime, timezone
 
-from ..lake.table import _fsync_dir
+from ..lake.table import (
+    _fsync_dir,
+    durable_link,
+    durable_replace,
+    latest_manifest_version,
+)
 
 
 class OffsetLog:
@@ -50,14 +55,8 @@ class OffsetLog:
         if os.path.exists(self._ptr):
             with open(self._ptr) as f:
                 return json.load(f)["last_lsn"]
-        pre = self._entry_prefix()
-        best = -1
-        for name in os.listdir(self.path):
-            if name.startswith(pre) and name.endswith(".json"):
-                mid = name[len(pre):-5]
-                if mid.isdigit():
-                    best = max(best, int(mid))
-        return best
+        best = latest_manifest_version(self.path, self._entry_prefix())
+        return -1 if best is None else best
 
     def resume_lsn(self) -> int:
         """Exclusive restart bound: first LSN of the next window."""
@@ -82,29 +81,11 @@ class OffsetLog:
             final = os.path.join(
                 self.path, f"{self._entry_prefix()}{int(last_lsn):020d}.json"
             )
-            tmp = final + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, final)
-            except FileExistsError:
-                pass
-            finally:
-                try:
-                    os.unlink(tmp)
-                except OSError:
-                    pass
+            with contextlib.suppress(FileExistsError):
+                durable_link(final, json.dumps(entry))
             _fsync_dir(self.path)
             return
-        tmp = self._ptr + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._ptr)
-        _fsync_dir(self.path)
+        durable_replace(self._ptr, json.dumps(entry))
 
     def history(self) -> list[dict]:
         log = os.path.join(self.path, f"log-{self.source_id}.jsonl")

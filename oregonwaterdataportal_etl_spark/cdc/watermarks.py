@@ -31,7 +31,6 @@ MOR discipline at miniature scale:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -40,11 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lake.table import (
-    CommitConflictError,
-    latest_manifest_version,
-    versioned_commit,
-)
+from ..lake.table import CommitConflictError, ManifestChain
 
 
 class WatermarkStore:
@@ -68,53 +63,37 @@ class WatermarkStore:
         self.keep_last_versions = keep_last_versions
         self.commit_mode = commit_mode
         os.makedirs(path, exist_ok=True)
+        # v-<8 digits>.json manifests; legacy v-<hex> DATA dirs never
+        # count as versions
+        self._chain = ManifestChain(path, "v-")
 
     # ------------------------------------------------------------ meta
-    @property
-    def _ptr(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
     def _current_version(self) -> int | None:
-        if not os.path.exists(self._ptr):
-            # rename-free stores have no pointer: derive CURRENT as the
-            # highest published manifest (complete by construction —
-            # see lake.table.versioned_commit). Manifests are
-            # v-<8 digits>.json; legacy v-<hex> DATA dirs never match.
-            return latest_manifest_version(self.path, "v-")
-        with open(self._ptr) as f:
-            raw = f.read().strip()
         try:
-            return int(raw)
+            return self._chain.current()
         except ValueError:
             # round-2 stores pointed CURRENT at the data DIRECTORY
             # itself (single full-rewrite layout, no manifests).
             # Migrate transparently: adopt that dir as version 0's base
             # (review finding: int-parsing the legacy pointer crashed
             # every pre-upgrade store with no migration path).
+            raw = self._chain.pointer_text()
             if raw.startswith("v-") and os.path.isdir(os.path.join(self.path, raw)):
                 try:
                     self._commit({"version": 0, "base": raw, "deltas": []})
                 except CommitConflictError:
                     pass  # a concurrent migrator won; fall through
-                with open(self._ptr) as f:
-                    return int(f.read().strip())
+                return self._chain.current()
             raise
 
     def _manifest(self, version: int) -> dict:
-        with open(os.path.join(self.path, f"v-{version:08d}.json")) as f:
-            return json.load(f)
+        return self._chain.read(version)
 
     def _commit(self, manifest: dict) -> None:
-        """The shared ``versioned_commit`` discipline over v-N.json; the
+        """The chain's ``versioned_commit`` publish of v-N.json; the
         loser of a concurrent race gets CommitConflictError and retries
         with a re-read parent."""
-        versioned_commit(
-            self.path,
-            f"v-{manifest['version']:08d}.json",
-            manifest["version"],
-            manifest,
-            pointer_name=None if self.commit_mode == "rename-free" else "CURRENT",
-        )
+        self._chain.commit(manifest, rename_free=self.commit_mode == "rename-free")
 
     def exists(self) -> bool:
         return self._current_version() is not None
@@ -236,15 +215,15 @@ class WatermarkStore:
                         os.remove(marker)
                 except (OSError, ValueError):
                     pass
-            elif entry.startswith("v-") and entry.endswith(".json"):
-                try:
-                    mv = int(entry[2:-5])
-                    if mv <= v - self.keep_last_versions and (
-                        now - os.path.getmtime(p) >= self.cleanup_grace_seconds
-                    ):
-                        os.remove(p)
-                except (ValueError, OSError):
-                    pass
+        for mv in self._chain.versions():
+            try:
+                if mv <= v - self.keep_last_versions and (
+                    now - os.path.getmtime(self._chain.path(mv))
+                    >= self.cleanup_grace_seconds
+                ):
+                    self._chain.expire([mv])
+            except OSError:
+                pass
         # orphaned markers (their dir is gone)
         for entry in os.listdir(self.path):
             if entry.startswith("gc-") and not os.path.isdir(

@@ -58,13 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .table import (
-    LakeTable,
-    _next_snapshot,
-    latest_manifest_version,
-    retry_on_conflict,
-    versioned_commit,
-)
+from .table import ChainedTable, LakeTable, _next_snapshot, retry_on_conflict
 
 def write_partitioned_wal(
     df: DataFrame, path: str, table: "PartitionedLakeTable"
@@ -137,7 +131,7 @@ class PartitionedMergeResult:
         }
 
 
-class PartitionedLakeTable:
+class PartitionedLakeTable(ChainedTable):
     """Directory layout::
 
         <root>/_meta/snap-NNNNNNNN.json   root manifests (version vector)
@@ -151,79 +145,9 @@ class PartitionedLakeTable:
     I/O to plan a time-sliced read.
     """
 
-    def __init__(self, path: str):
-        self.path = path
-        self.meta_dir = os.path.join(path, "_meta")
-
-    # ---------------------------------------------------------- meta
-    @property
-    def _current_ptr(self) -> str:
-        return os.path.join(self.meta_dir, "CURRENT")
-
-    def exists(self) -> bool:
-        return (
-            os.path.exists(self._current_ptr)
-            or latest_manifest_version(self.meta_dir, "snap-") is not None
-        )
-
-    def current_version(self) -> int:
-        try:
-            with open(self._current_ptr) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            v = latest_manifest_version(self.meta_dir, "snap-")
-            if v is None:
-                raise
-            return v
-
-    def snapshot(self, version: int | None = None) -> dict:
-        v = self.current_version() if version is None else version
-        with open(os.path.join(self.meta_dir, f"snap-{v:08d}.json")) as f:
-            return json.load(f)
-
-    def history(self) -> list[dict]:
-        out = []
-        for name in sorted(os.listdir(self.meta_dir)):
-            if name.startswith("snap-"):
-                with open(os.path.join(self.meta_dir, name)) as f:
-                    out.append(json.load(f))
-        return out
-
-    def version_at(self, timestamp: float) -> int:
-        """Timestamp time travel on the ROOT chain (same contract as
-        LakeTable.version_at; the stamp is set by versioned_commit)."""
-        current = self.current_version()
-        best = None
-        for snap in self.history():
-            ts = snap.get("committed_at")
-            if (
-                snap["version"] <= current
-                and ts is not None
-                and ts <= timestamp
-                and (best is None or snap["version"] > best)
-            ):
-                best = snap["version"]
-        if best is None:
-            raise ValueError(
-                f"no snapshot committed at or before {timestamp} "
-                f"(table created later, or that history was vacuumed)"
-            )
-        return best
-
-    def schema(self) -> T.StructType:
-        """User-visible schema (same shape as LakeTable.schema())."""
-        return T.StructType.fromJson(json.loads(self.snapshot()["schema"]))
-
     def _commit(self, snap: dict) -> None:
         snap.pop("committed_at", None)  # fresh stamp per root commit
-        pointer = None if snap.get("commit_mode") == "rename-free" else "CURRENT"
-        versioned_commit(
-            self.meta_dir,
-            f"snap-{snap['version']:08d}.json",
-            snap["version"],
-            snap,
-            pointer_name=pointer,
-        )
+        super()._commit(snap)
 
     def _commit_root(self, mutate) -> dict:
         """Commit-with-retry: ``mutate(snap) -> snap`` is re-applied to
@@ -412,11 +336,7 @@ class PartitionedLakeTable:
         t = PartitionedLakeTable(path)
         if t.exists():
             raise ValueError(f"table already exists at {path}")
-        os.makedirs(t.meta_dir, exist_ok=True)
-        versioned_commit(
-            t.meta_dir,
-            "snap-00000000.json",
-            0,
+        t._commit(
             {
                 "version": 0,
                 "parent": None,
@@ -430,8 +350,7 @@ class PartitionedLakeTable:
                 "commit_mode": commit_mode,
                 "partitions": {},
                 "summary": {"operation": "create"},
-            },
-            pointer_name=None if commit_mode == "rename-free" else "CURRENT",
+            }
         )
         return t
 
@@ -872,13 +791,7 @@ class PartitionedLakeTable:
                 keep_last=max(1, keep_child),
                 orphan_grace_seconds=orphan_grace_seconds,
             )
-        for s in expired:
-            p = os.path.join(self.meta_dir, f"snap-{s['version']:08d}.json")
-            try:
-                os.unlink(p)
-                removed += 1
-            except OSError:
-                pass
+        removed += self._chain.expire(s["version"] for s in expired)
         return removed
 
     # -------------------------------------------------- maintenance
@@ -1034,8 +947,6 @@ class PartitionedLakeTable:
         clone = PartitionedLakeTable(dest)
         if clone.exists():
             raise ValueError(f"table already exists at {dest}")
-        os.makedirs(clone.meta_dir, exist_ok=True)
-        pointer = None if snap.get("commit_mode") == "rename-free" else "CURRENT"
         base = {
             k: snap[k]
             for k in (
@@ -1050,18 +961,14 @@ class PartitionedLakeTable:
                 clone.partition_dir(val), version=child_v
             )
             pinned[val] = cloned.current_version()
-        versioned_commit(
-            clone.meta_dir, "snap-00000000.json", 0,
+        clone._commit(
             {**base, "version": 0, "parent": None, "partitions": {},
-             "summary": {"operation": "create"}},
-            pointer_name=pointer,
+             "summary": {"operation": "create"}}
         )
-        versioned_commit(
-            clone.meta_dir, "snap-00000001.json", 1,
+        clone._commit(
             {**base, "version": 1, "parent": 0, "partitions": pinned,
              "summary": {"operation": "clone",
-                         "source": self.path, "source_version": v}},
-            pointer_name=pointer,
+                         "source": self.path, "source_version": v}}
         )
         return clone
 

@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -57,6 +58,9 @@ from pyspark.sql.window import Window
 
 class CommitConflictError(RuntimeError):
     """Another writer committed the same snapshot version first."""
+
+
+POINTER = "CURRENT"  # the pointer file of a pointer-mode ManifestChain
 
 
 def _fsync_dir(path: str) -> None:
@@ -72,15 +76,51 @@ def _fsync_dir(path: str) -> None:
         pass
 
 
+def _fsynced_tmp(path: str, text: str) -> str:
+    """Write ``text`` to a private ``<path>.tmp-<hex>`` file, fsync it
+    and return its name."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    return tmp
+
+
+def durable_replace(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` so that a crash leaves the old or
+    the new content, complete, and the new one survives power loss:
+    tmp + fsync, os.replace, fsync of the directory."""
+    os.replace(_fsynced_tmp(path, text), path)
+    _fsync_dir(os.path.dirname(path))
+
+
+def durable_link(path: str, text: str) -> None:
+    """Publish ``text`` as the immutable file ``path``, complete before
+    it is named: tmp + fsync, then os.link, which raises
+    FileExistsError when ``path`` already exists (fail-if-exists, the
+    arbitration of every optimistic commit). The caller fsyncs the
+    directory once its publishes are done."""
+    tmp = _fsynced_tmp(path, text)
+    try:
+        os.link(tmp, path)
+    finally:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+
+
 def versioned_commit(
     meta_dir: str,
     manifest_name: str,
     version: int,
     manifest: dict,
-    pointer_name: str | None = "CURRENT",
+    pointer_name: str | None = POINTER,
 ) -> None:
-    """THE commit discipline, shared by LakeTable, WatermarkStore and
-    AnnIndex (one implementation so a durability fix lands everywhere):
+    """THE commit discipline, under every ManifestChain and, through
+    its durable_link/durable_replace steps, the cdc offset and batch
+    logs (one implementation so a durability fix lands everywhere):
 
     1. write the manifest JSON to a PRIVATE tmp file and fsync it;
     2. publish it with os.link(tmp, manifest_name) — link has the same
@@ -120,14 +160,7 @@ def versioned_commit(
     """
 
     def _swing(to_version: int) -> None:
-        ptr = os.path.join(meta_dir, pointer_name)
-        tmp = ptr + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(to_version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, ptr)
-        _fsync_dir(meta_dir)
+        durable_replace(os.path.join(meta_dir, pointer_name), str(to_version))
 
     # wall-clock commit stamp (additive, shared by every versioned
     # store): powers timestamp time travel (LakeTable.version_at) and
@@ -135,13 +168,8 @@ def versioned_commit(
     # manifest keeps its original time when the caller carries one.
     manifest.setdefault("committed_at", time.time())
     mpath = os.path.join(meta_dir, manifest_name)
-    tmp_manifest = mpath + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp_manifest, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        os.link(tmp_manifest, mpath)
+        durable_link(mpath, json.dumps(manifest))
     except FileExistsError as e:
         if pointer_name is None:
             raise CommitConflictError(
@@ -179,11 +207,6 @@ def versioned_commit(
             f"version {version} ({manifest_name}) was committed "
             "concurrently; re-read and retry"
         ) from e
-    finally:
-        try:
-            os.unlink(tmp_manifest)
-        except OSError:
-            pass
     if pointer_name is not None:
         _swing(version)
     else:
@@ -237,26 +260,215 @@ def _files_max_lsn(files: list[str]) -> int | None:
     return out
 
 
+def _manifest_versions(meta_dir: str, prefix: str, suffix: str) -> list[int]:
+    """Versions of the complete ``<prefix><digits><suffix>`` names in a
+    directory. Tmp files carry a ``.tmp-<hex>`` suffix and never match."""
+    try:
+        names = os.listdir(meta_dir)
+    except FileNotFoundError:
+        return []
+    mids = (name[len(prefix): len(name) - len(suffix)] for name in names
+            if name.startswith(prefix) and name.endswith(suffix))
+    return [int(m) for m in mids if m.isdigit()]
+
+
 def latest_manifest_version(
     meta_dir: str, prefix: str, suffix: str = ".json"
 ) -> int | None:
     """Highest published manifest version in a directory — the CURRENT
     derivation for rename-free commit mode. Safe because
     ``versioned_commit`` publishes manifests complete (link-after-fsync):
-    any listed name is a finished commit. Tmp files carry a
-    ``.tmp-<hex>`` suffix and never match."""
-    try:
-        names = os.listdir(meta_dir)
-    except FileNotFoundError:
-        return None
-    best = None
-    for name in names:
-        if name.startswith(prefix) and name.endswith(suffix):
-            mid = name[len(prefix): len(name) - len(suffix)]
-            if mid.isdigit():
-                v = int(mid)
-                best = v if best is None or v > best else best
-    return best
+    any listed name is a finished commit."""
+    return max(_manifest_versions(meta_dir, prefix, suffix), default=None)
+
+
+class ManifestChain:
+    """THE version-chain format: versions ``<prefix>NNNNNNNN.json`` in
+    ``meta_dir``, published by ``versioned_commit``. Every versioned
+    store reads and commits its versions here (LakeTable and
+    PartitionedLakeTable ``snap-``, a WAP stage ``wap-<id>-``,
+    WatermarkStore ``v-``, AnnIndex ``ix-``), so the naming, the
+    current-version rule and the history listing exist once.
+
+    The current version follows the ``CURRENT`` pointer when it exists
+    and is otherwise derived as the highest published manifest (the
+    rename-free rule). ``pointer=False`` gives a chain that never
+    reads or writes a pointer: a WAP stage overlays its main chain's
+    directory and must not follow the main pointer. Versions, history
+    and the derivation count only complete ``<prefix><digits>.json``
+    names, so a crashed writer's ``.tmp-<hex>`` debris is never read."""
+
+    def __init__(self, meta_dir: str, prefix: str, pointer: bool = True):
+        self.meta_dir = meta_dir
+        self.prefix = prefix
+        self.pointer = pointer
+
+    def path(self, version: int) -> str:
+        return os.path.join(self.meta_dir, f"{self.prefix}{version:08d}.json")
+
+    def aux_path(self, name: str) -> str:
+        """A side file of this chain, ``<prefix><name>``, never listed
+        as a version."""
+        return os.path.join(self.meta_dir, self.prefix + name)
+
+    @property
+    def _pointer_path(self) -> str:
+        return os.path.join(self.meta_dir, POINTER)
+
+    def pointer_text(self) -> str | None:
+        """The pointer's raw content; None when there is no pointer."""
+        if not self.pointer:
+            return None
+        try:
+            with open(self._pointer_path) as f:
+                return f.read().strip()
+        except FileNotFoundError:
+            return None
+
+    def latest(self) -> int | None:
+        return latest_manifest_version(self.meta_dir, self.prefix)
+
+    def current(self) -> int | None:
+        """Pointer read, else the highest published manifest; None for
+        an empty chain. A pointer that is not a version number raises
+        ValueError."""
+        raw = self.pointer_text()
+        return self.latest() if raw is None else int(raw)
+
+    def exists(self) -> bool:
+        return (
+            self.pointer and os.path.exists(self._pointer_path)
+        ) or self.latest() is not None
+
+    def versions(self) -> list[int]:
+        return sorted(_manifest_versions(self.meta_dir, self.prefix, ".json"))
+
+    def read(self, version: int) -> dict:
+        with open(self.path(version)) as f:
+            return json.load(f)
+
+    def history(self) -> list[dict]:
+        return [self.read(v) for v in self.versions()]
+
+    def version_at(self, timestamp: float) -> int:
+        """Timestamp time travel (Iceberg TIMESTAMP AS OF): the highest
+        settled version whose commit stamp is <= ``timestamp`` (epoch
+        seconds). Versions beyond the current one (crashed-committer
+        orphans) are excluded: they are not readable state yet. Raises
+        ValueError when the chain did not exist at that time or the
+        relevant history has been vacuumed away."""
+        current = self.current()
+        best = None
+        for m in self.history():
+            ts = m.get("committed_at")
+            if m["version"] <= current and ts is not None and ts <= timestamp:
+                best = m["version"] if best is None else max(best, m["version"])
+        if best is None:
+            raise ValueError(
+                f"no snapshot committed at or before {timestamp} "
+                f"(table created later, or that history was vacuumed)"
+            )
+        return best
+
+    def commit(self, manifest: dict, rename_free: bool = False) -> None:
+        """Publish ``manifest`` as version ``manifest["version"]``;
+        swing the pointer unless the chain has none or the commit is
+        ``rename_free``. Raises CommitConflictError when the version
+        was committed concurrently."""
+        os.makedirs(self.meta_dir, exist_ok=True)
+        v = manifest["version"]
+        versioned_commit(
+            self.meta_dir,
+            os.path.basename(self.path(v)),
+            v,
+            manifest,
+            pointer_name=POINTER if self.pointer and not rename_free else None,
+        )
+
+    def expire(self, versions) -> int:
+        """Remove the manifests of ``versions``; returns how many were
+        removed."""
+        removed = 0
+        for v in versions:
+            try:
+                os.remove(self.path(v))
+                removed += 1
+            except FileNotFoundError:
+                pass
+        return removed
+
+
+_WAP_MANIFEST = re.compile(r"wap-.+-\d+\.json")
+
+
+def staged_manifests(meta_dir: str, but_prefix: str | None = None) -> list[dict]:
+    """Every manifest of every WAP stage chain (``wap-<id>-<digits>.json``)
+    in ``meta_dir``, except those of the chain ``but_prefix``;
+    unreadable ones are skipped."""
+    out = []
+    for name in sorted(os.listdir(meta_dir)):
+        if not _WAP_MANIFEST.fullmatch(name) or (
+            but_prefix is not None and name.startswith(but_prefix)
+        ):
+            continue
+        try:
+            with open(os.path.join(meta_dir, name)) as f:
+                out.append(json.load(f))
+        except (OSError, ValueError):
+            continue
+    return out
+
+
+def wap_chain(meta_dir: str, wap_id: str) -> ManifestChain:
+    """The staged chain of WAP stage ``wap_id``: ``wap-<id>-`` manifests
+    beside the main chain, never a pointer."""
+    return ManifestChain(meta_dir, f"wap-{wap_id}-", pointer=False)
+
+
+class ChainedTable:
+    """The versioned-table surface of LakeTable and PartitionedLakeTable:
+    one ``snap-`` ManifestChain in ``<path>/_meta``. Each manifest
+    records its table's commit mode, and a ``rename-free`` one is
+    published without a pointer."""
+
+    def __init__(self, path: str):
+        self.path = path
+        self.meta_dir = os.path.join(path, "_meta")
+        self._chain = ManifestChain(self.meta_dir, "snap-")
+
+    def exists(self) -> bool:
+        return self._chain.exists()
+
+    def current_version(self) -> int:
+        """Pointer read, or (rename-free tables / object stores without
+        atomic rename) the highest published snapshot manifest — valid
+        because versioned_commit publishes manifests complete."""
+        v = self._chain.current()
+        if v is None:
+            raise FileNotFoundError(f"no table at {self.path}")
+        return v
+
+    def snapshot(self, version: int | None = None) -> dict:
+        return self._chain.read(
+            self.current_version() if version is None else version
+        )
+
+    def history(self) -> list[dict]:
+        return self._chain.history()
+
+    def version_at(self, timestamp: float) -> int:
+        return self._chain.version_at(timestamp)
+
+    def schema(self) -> T.StructType:
+        """User-visible schema (excludes the hidden LSN guard column)."""
+        return T.StructType.fromJson(json.loads(self.snapshot()["schema"]))
+
+    def _commit(self, snap: dict) -> None:
+        """Atomic snapshot commit with optimistic concurrency: the
+        chain's ``versioned_commit`` publish of snap-N.json."""
+        self._chain.commit(
+            snap, rename_free=snap.get("commit_mode") == "rename-free"
+        )
 
 
 LSN_COL = "_lsn"  # per-row last-applied LSN, the MERGE guard column
@@ -626,75 +838,12 @@ class MergeResult:
         }
 
 
-class LakeTable:
+class LakeTable(ChainedTable):
     """A bucketed, snapshot-versioned parquet table supporting MERGE."""
 
     def __init__(self, path: str):
-        self.path = path
-        self.meta_dir = os.path.join(path, "_meta")
+        super().__init__(path)
         self.data_dir = os.path.join(path, "data")
-
-    # ---------------------------------------------------------- meta
-    @property
-    def _current_ptr(self) -> str:
-        return os.path.join(self.meta_dir, "CURRENT")
-
-    def exists(self) -> bool:
-        return (
-            os.path.exists(self._current_ptr)
-            or latest_manifest_version(self.meta_dir, "snap-") is not None
-        )
-
-    def current_version(self) -> int:
-        """Pointer read, or (rename-free tables / object stores without
-        atomic rename) the highest published snapshot manifest — valid
-        because versioned_commit publishes manifests complete."""
-        try:
-            with open(self._current_ptr) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            v = latest_manifest_version(self.meta_dir, "snap-")
-            if v is None:
-                raise
-            return v
-
-    def snapshot(self, version: int | None = None) -> dict:
-        v = self.current_version() if version is None else version
-        with open(os.path.join(self.meta_dir, f"snap-{v:08d}.json")) as f:
-            return json.load(f)
-
-    def history(self) -> list[dict]:
-        out = []
-        for name in sorted(os.listdir(self.meta_dir)):
-            if name.startswith("snap-"):
-                with open(os.path.join(self.meta_dir, name)) as f:
-                    out.append(json.load(f))
-        return out
-
-    def version_at(self, timestamp: float) -> int:
-        """Timestamp time travel (Iceberg TIMESTAMP AS OF): the highest
-        settled version whose commit stamp is <= ``timestamp`` (epoch
-        seconds). Snapshots beyond CURRENT (crashed-committer orphans)
-        are excluded — they are not readable state yet. Raises
-        ValueError when the table did not exist at that time or the
-        relevant history has been vacuumed away."""
-        current = self.current_version()
-        best = None
-        for snap in self.history():
-            ts = snap.get("committed_at")
-            if (
-                snap["version"] <= current
-                and ts is not None
-                and ts <= timestamp
-                and (best is None or snap["version"] > best)
-            ):
-                best = snap["version"]
-        if best is None:
-            raise ValueError(
-                f"no snapshot committed at or before {timestamp} "
-                f"(table created later, or that history was vacuumed)"
-            )
-        return best
 
     def metadata_df(self, spark: SparkSession, kind: str) -> DataFrame:
         """Queryable metadata frames (Iceberg's ``t.files`` /
@@ -705,29 +854,7 @@ class LakeTable:
 
         return build_metadata_df(spark, self, kind)
 
-    def _commit(self, snap: dict) -> None:
-        """Atomic snapshot commit with optimistic concurrency — the
-        shared ``versioned_commit`` discipline over snap-N.json. Tables
-        created with commit_mode="rename-free" never write a pointer
-        (object-store-safe: O_EXCL-style link publish only; CURRENT is
-        derived as the max published manifest)."""
-        os.makedirs(self.meta_dir, exist_ok=True)
-        pointer = (
-            None if snap.get("commit_mode") == "rename-free" else "CURRENT"
-        )
-        versioned_commit(
-            self.meta_dir,
-            f"snap-{snap['version']:08d}.json",
-            snap["version"],
-            snap,
-            pointer_name=pointer,
-        )
-
     # --------------------------------------------------------- schema
-    def schema(self) -> T.StructType:
-        """User-visible schema (excludes the hidden LSN guard column)."""
-        return T.StructType.fromJson(json.loads(self.snapshot()["schema"]))
-
     def _stored_schema(self) -> T.StructType:
         s = self.schema()
         return T.StructType(
@@ -2873,13 +3000,8 @@ class LakeTable:
         # files referenced by an open write-audit-publish stage are live
         # until the stage is explicitly published or aborted — a crashed
         # stage must survive vacuum so the session can re-attach to it
-        for name in os.listdir(self.meta_dir):
-            if name.startswith("wap-") and name.endswith(".json"):
-                try:
-                    with open(os.path.join(self.meta_dir, name)) as f:
-                        live.update(self._snap_files(json.load(f)))
-                except (OSError, ValueError):
-                    continue
+        for staged in staged_manifests(self.meta_dir):
+            live.update(self._snap_files(staged))
         dead: set[str] = set()
         for snap in expired:
             dead.update(self._snap_files(snap))
@@ -2978,10 +3100,7 @@ class LakeTable:
                         pass
         # expire old snapshot manifests too (never the orphans past
         # CURRENT — they roll forward at the next commit)
-        for snap in expired:
-            p = os.path.join(self.meta_dir, f"snap-{snap['version']:08d}.json")
-            if os.path.exists(p):
-                os.remove(p)
+        self._chain.expire(s["version"] for s in expired)
         return removed
 
     @classmethod

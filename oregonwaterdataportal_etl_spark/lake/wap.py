@@ -12,14 +12,14 @@ WAP is that discipline recast for snapshot commits — validate the
 
 Mechanics on the LakeTable substrate:
 
-* :class:`WapStage` is a LakeTable whose commits are rerouted to
-  ``wap-<id>-NNNN.json`` manifests via the same ``versioned_commit``
-  publish (fsync + fail-if-exists link, never a pointer). Staged
-  manifests sit outside the ``snap-`` namespace, so both commit modes
-  ignore them: pointer-mode readers follow CURRENT, rename-free
-  readers derive CURRENT from ``snap-`` names only. Every LakeTable
-  operation — merge (cow/mor), merge_prebucketed, compact, read,
-  read_changes — works unchanged inside a stage because only
+* :class:`WapStage` is a LakeTable whose commits are rerouted to its
+  ``wap-<id>-NNNN.json`` ManifestChain (lake/table.py): the same
+  ``versioned_commit`` publish (fsync + fail-if-exists link), never a
+  pointer. Staged manifests sit outside the ``snap-`` namespace, so
+  both commit modes ignore them: pointer-mode readers follow CURRENT,
+  rename-free readers derive CURRENT from ``snap-`` names only. Every
+  LakeTable operation — merge (cow/mor), merge_prebucketed, compact,
+  read, read_changes — works unchanged inside a stage because only
   manifest naming differs.
 * Data files are written into the table's own data dir, so PUBLISH
   IS METADATA-ONLY: the staged tip manifest (self-contained file
@@ -55,10 +55,12 @@ from pyspark.sql import functions as F
 
 from .partitioned import PartitionedLakeTable
 from .table import (
+    ChainedTable,
     CommitConflictError,
     LakeTable,
-    latest_manifest_version,
-    versioned_commit,
+    durable_replace,
+    staged_manifests,
+    wap_chain,
 )
 
 
@@ -254,48 +256,50 @@ def run_audits(df: DataFrame, audits: list[Audit]) -> dict[str, str]:
 # ------------------------------------------------------------ stage
 class _StagedChain:
     """Shared staged-manifest mechanics for WAP stages (flat table and
-    partition tree): a ``wap-<id>-NNNN.json`` chain overlaying a main
-    chain. Subclasses provide ``_main_current()``/``_main_snapshot(v)``
-    (the un-staged fallbacks) and set ``self._prefix``/``self.meta_dir``
-    before use."""
+    partition tree): the stage's ``wap-<id>-`` chain (``self._staged``)
+    overlaying the main chain (``self._chain``, the fallback for every
+    version the stage has not committed). Subclasses call ``_attach``
+    from their constructor."""
 
-    @staticmethod
-    def _check_wap_id(wap_id: str) -> None:
+    def _attach(self, wap_id: str) -> None:
         if not wap_id or any(ch in wap_id for ch in "/\\ \t\n"):
             raise ValueError(f"invalid wap_id {wap_id!r}")
+        self.wap_id = wap_id
+        self._staged = wap_chain(self.meta_dir, wap_id)
+        tip = self._staged.latest()
+        if tip is not None:
+            self._base_version = self._staged.read(tip)["wap"]["base_version"]
+        else:
+            self._base_version = ChainedTable.current_version(self)
 
     def _staged_tip(self) -> int | None:
-        return latest_manifest_version(self.meta_dir, self._prefix)
+        return self._staged.latest()
 
     def staged_versions(self) -> list[int]:
-        out = []
-        for name in sorted(os.listdir(self.meta_dir)):
-            if name.startswith(self._prefix) and name.endswith(".json"):
-                mid = name[len(self._prefix):-5]
-                if mid.isdigit():
-                    out.append(int(mid))
-        return out
+        return self._staged.versions()
 
     def current_version(self) -> int:
         tip = self._staged_tip()
-        return tip if tip is not None else self._main_current()
+        return tip if tip is not None else ChainedTable.current_version(self)
 
     def snapshot(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
-        staged = os.path.join(self.meta_dir, f"{self._prefix}{v:08d}.json")
-        if os.path.exists(staged):
-            with open(staged) as f:
-                return json.load(f)
-        return self._main_snapshot(v)
+        try:
+            return self._staged.read(v)
+        except FileNotFoundError:
+            return self._chain.read(v)
+
+    def _commit(self, snap: dict) -> None:
+        """Publish onto the staged chain: same complete-before-named
+        manifest discipline, never a pointer, never a snap- name. Two
+        sessions staging under the same wap_id arbitrate on the link
+        exactly like two main-line committers."""
+        snap = dict(snap)
+        snap["wap"] = {"id": self.wap_id, "base_version": self._base_version}
+        self._staged.commit(snap)
 
     def _drop_staged_manifests(self) -> None:
-        for v in self.staged_versions():
-            try:
-                os.remove(
-                    os.path.join(self.meta_dir, f"{self._prefix}{v:08d}.json")
-                )
-            except FileNotFoundError:
-                pass
+        self._staged.expire(self.staged_versions())
 
 
 class WapStage(_StagedChain, LakeTable):
@@ -306,36 +310,8 @@ class WapStage(_StagedChain, LakeTable):
     manifests are durable)."""
 
     def __init__(self, path: str, wap_id: str):
-        self._check_wap_id(wap_id)
         super().__init__(path)
-        self.wap_id = wap_id
-        self._prefix = f"wap-{wap_id}-"
-        tip = latest_manifest_version(self.meta_dir, self._prefix)
-        if tip is not None:
-            self._base_version = self.snapshot(tip)["wap"]["base_version"]
-        else:
-            self._base_version = LakeTable.current_version(self)
-
-    def _main_current(self) -> int:
-        return LakeTable.current_version(self)
-
-    def _main_snapshot(self, v: int) -> dict:
-        return LakeTable.snapshot(self, v)
-
-    def _commit(self, snap: dict) -> None:
-        """Publish onto the staged chain: same complete-before-named
-        manifest discipline, never a pointer, never a snap- name. Two
-        sessions staging under the same wap_id arbitrate on the link
-        exactly like two main-line committers."""
-        snap = dict(snap)
-        snap["wap"] = {"id": self.wap_id, "base_version": self._base_version}
-        versioned_commit(
-            self.meta_dir,
-            f"{self._prefix}{snap['version']:08d}.json",
-            snap["version"],
-            snap,
-            pointer_name=None,
-        )
+        self._attach(wap_id)
 
     # -- lifecycle -------------------------------------------------
     def publish(
@@ -432,17 +408,10 @@ class WapStage(_StagedChain, LakeTable):
         removed = 0
         if drop_data and staged_files:
             keep: set[str] = set()
-            for name in os.listdir(self.meta_dir):
-                if name.startswith("snap-") and name.endswith(".json"):
-                    with open(os.path.join(self.meta_dir, name)) as f:
-                        keep.update(self._snap_files(json.load(f)))
-                elif (
-                    name.startswith("wap-")
-                    and name.endswith(".json")
-                    and not name.startswith(self._prefix)
-                ):
-                    with open(os.path.join(self.meta_dir, name)) as f:
-                        keep.update(self._snap_files(json.load(f)))
+            for snap in self.history() + staged_manifests(
+                self.meta_dir, but_prefix=self._staged.prefix
+            ):
+                keep.update(self._snap_files(snap))
             for p in staged_files - keep:
                 try:
                     os.remove(p)
@@ -476,21 +445,8 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
     main merge."""
 
     def __init__(self, path: str, wap_id: str):
-        self._check_wap_id(wap_id)
         super().__init__(path)
-        self.wap_id = wap_id
-        self._prefix = f"wap-{wap_id}-"
-        tip = latest_manifest_version(self.meta_dir, self._prefix)
-        if tip is not None:
-            self._base_version = self.snapshot(tip)["wap"]["base_version"]
-        else:
-            self._base_version = PartitionedLakeTable.current_version(self)
-
-    def _main_current(self) -> int:
-        return PartitionedLakeTable.current_version(self)
-
-    def _main_snapshot(self, v: int) -> dict:
-        return PartitionedLakeTable.snapshot(self, v)
+        self._attach(wap_id)
 
     def partition_table(self, value: str):
         path = self.partition_dir(value)
@@ -503,25 +459,15 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
     def _commit(self, snap: dict) -> None:
         snap = dict(snap)
         snap.pop("committed_at", None)
-        snap["wap"] = {"id": self.wap_id, "base_version": self._base_version}
-        versioned_commit(
-            self.meta_dir,
-            f"{self._prefix}{snap['version']:08d}.json",
-            snap["version"],
-            snap,
-            pointer_name=None,
-        )
+        super()._commit(snap)
+
+    def _child_staged(self, value: str) -> bool:
+        """Whether partition ``value`` holds a chain of this stage."""
+        md = os.path.join(self.partition_dir(value), "_meta")
+        return wap_chain(md, self.wap_id).latest() is not None
 
     def _staged_children(self, vector: dict) -> list[str]:
-        out = []
-        for value in sorted(vector):
-            pd = self.partition_dir(value)
-            if os.path.isdir(os.path.join(pd, "_meta")):
-                if latest_manifest_version(
-                    os.path.join(pd, "_meta"), self._prefix
-                ) is not None:
-                    out.append(value)
-        return out
+        return [v for v in sorted(vector) if self._child_staged(v)]
 
     # -- publish-intent marker -------------------------------------
     # Durable record of each child's PUBLISHED main version, written
@@ -532,7 +478,7 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
     # coincidence (single staged commit) or not at all. A re-attached
     # publish resolves those children from this marker instead.
     def _intent_path(self) -> str:
-        return os.path.join(self.meta_dir, f"{self._prefix}publish-intent.json")
+        return self._staged.aux_path("publish-intent.json")
 
     def _read_intent(self) -> dict:
         try:
@@ -542,10 +488,7 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
             return {}
 
     def _write_intent(self, intent: dict) -> None:
-        tmp = f"{self._intent_path()}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(intent, f)
-        os.replace(tmp, self._intent_path())
+        durable_replace(self._intent_path(), json.dumps(intent))
 
     def _clear_intent(self) -> None:
         try:
@@ -569,10 +512,7 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
                 parts = dict(snap.get("partitions") or {})
                 changed = False
                 for v, rec in intent.items():
-                    if v not in parts:
-                        continue
-                    md = os.path.join(self.partition_dir(v), "_meta")
-                    if latest_manifest_version(md, self._prefix) is None:
+                    if v in parts and not self._child_staged(v):
                         parts[v] = rec["pub"]
                         changed = True
                 if changed:
@@ -739,14 +679,14 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
         except FileNotFoundError:
             names = []
         for name in names:
-            if not name.startswith("p=") or name[2:] in vector:
-                continue
-            pd = os.path.join(self.path, name)
-            if os.path.isdir(os.path.join(pd, "_meta")) and (
-                latest_manifest_version(os.path.join(pd, "_meta"), self._prefix)
-                is not None
+            if (
+                name.startswith("p=")
+                and name[2:] not in vector
+                and self._child_staged(name[2:])
             ):
-                WapStage(pd, self.wap_id).abort(drop_data=True)
+                WapStage(self.partition_dir(name[2:]), self.wap_id).abort(
+                    drop_data=True
+                )
 
     def abort(self, drop_data: bool = True) -> int:
         removed = 0
@@ -771,14 +711,10 @@ class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
         except FileNotFoundError:
             names = []
         for name in names:
-            if not name.startswith("p="):
-                continue
-            pd = os.path.join(self.path, name)
-            if os.path.isdir(os.path.join(pd, "_meta")) and (
-                latest_manifest_version(os.path.join(pd, "_meta"), self._prefix)
-                is not None
-            ):
-                removed += WapStage(pd, self.wap_id).abort(drop_data=drop_data)
+            if name.startswith("p=") and self._child_staged(name[2:]):
+                removed += WapStage(
+                    self.partition_dir(name[2:]), self.wap_id
+                ).abort(drop_data=drop_data)
         self._drop_staged_manifests()
         if foreign:
             # keep only the foreign entries so the condition stays

@@ -24,7 +24,6 @@ metadata:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -32,7 +31,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..lake.table import LakeTable, latest_manifest_version, versioned_commit
+from ..lake.table import LakeTable, ManifestChain
 from . import similarity
 
 # snapshot operations KNOWN to rewrite storage without changing the
@@ -71,36 +70,22 @@ class AnnIndex:
         self.id_col = id_col
         self.params = params  # lsh: bits/seed; ivf: n_centroids/seed/sample_size
         os.makedirs(path, exist_ok=True)
+        # ix-<digits>.json manifests; layout DIRS are ix-<hex>
+        self._chain = ManifestChain(path, "ix-")
 
     # ------------------------------------------------------------ meta
-    @property
-    def _ptr(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
     def current_version(self) -> int | None:
-        if not os.path.exists(self._ptr):
-            # rename-free mode: CURRENT = highest published manifest
-            # (ix-<digits>.json; layout DIRS are ix-<hex> and non-.json)
-            return latest_manifest_version(self.path, "ix-")
-        with open(self._ptr) as f:
-            return int(f.read().strip())
+        return self._chain.current()
 
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
         if v is None:
             raise FileNotFoundError("index was never built")
-        with open(os.path.join(self.path, f"ix-{v:08d}.json")) as f:
-            return json.load(f)
+        return self._chain.read(v)
 
     def _commit(self, manifest: dict) -> None:
-        """The shared ``versioned_commit`` discipline over ix-N.json."""
-        versioned_commit(
-            self.path,
-            f"ix-{manifest['version']:08d}.json",
-            manifest["version"],
-            manifest,
-            pointer_name=None if self.commit_mode == "rename-free" else "CURRENT",
-        )
+        """The chain's ``versioned_commit`` publish of ix-N.json."""
+        self._chain.commit(manifest, rename_free=self.commit_mode == "rename-free")
 
     # ----------------------------------------------------------- build
     def build(self, spark: SparkSession) -> int:

@@ -34,6 +34,15 @@ def formatted(df) -> str:
     )
 
 
+def parquet_batch(spark, tmp, name, pdf):
+    """A change batch as the runner reads it: written to parquet and
+    read back. An in-memory batch plans differently (Catalyst folds the
+    tagging projection into its LocalRelation)."""
+    path = os.path.join(tmp, name)
+    spark.createDataFrame(pdf).write.parquet(path)
+    return spark.read.parquet(path)
+
+
 def mor_read_plan(spark, tmp):
     """read() of a version with base rows, tombstones and pending MOR
     deltas, plus a lookup() of one of the delta batch's keys."""
@@ -41,11 +50,12 @@ def mor_read_plan(spark, tmp):
         os.path.join(tmp, "t"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
         num_buckets=4,
     )
-    t.merge(spark.createDataFrame(
-        generate_changes_pdf(2000, 100, seed=1, delete_rate=0.1)
+    t.merge(parquet_batch(
+        spark, tmp, "mor_b1",
+        generate_changes_pdf(2000, 100, seed=1, delete_rate=0.1),
     ))
     pdf = generate_changes_pdf(500, 100, seed=2, lsn_start=2000)
-    t.merge(spark.createDataFrame(pdf), mode="mor")
+    t.merge(parquet_batch(spark, tmp, "mor_b2", pdf), mode="mor")
     row = pdf.iloc[-1]
     return t.read(spark), t.lookup(
         spark, conv_id=row["conv_id"], turn_idx=int(row["turn_idx"])
@@ -59,9 +69,12 @@ def cow_merge_plan(spark, tmp) -> str:
         os.path.join(tmp, "cow"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
         num_buckets=4,
     )
-    t.merge(spark.createDataFrame(generate_changes_pdf(2000, 100, seed=1)))
-    t.merge(spark.createDataFrame(
-        generate_changes_pdf(500, 100, seed=2, lsn_start=2000)
+    t.merge(parquet_batch(
+        spark, tmp, "cow_b1", generate_changes_pdf(2000, 100, seed=1)
+    ))
+    t.merge(parquet_batch(
+        spark, tmp, "cow_b2",
+        generate_changes_pdf(500, 100, seed=2, lsn_start=2000),
     ))
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     for i in reversed(range(execs.size())):
