@@ -99,7 +99,7 @@ def make_replica_sink(
 
     def sink(changes: DataFrame, frm: int, to: int) -> None:
         from .source import LsnRangedParquetSource  # noqa: F401 (docs)
-        from ..lake.table import _files_max_lsn
+        from ..lake.table import _files_max_lsn, snapshot_files
 
         snap = source.snapshot(to)
         if hasattr(source, "partition_table"):
@@ -118,11 +118,9 @@ def make_replica_sink(
                 f
                 for vec in vecs
                 for val, cv in vec.items()
-                for key in ("files", "tombstones", "deltas")
-                for fl in (
-                    source.partition_table(val).snapshot(cv).get(key) or {}
-                ).values()
-                for f in fl
+                for _side, _b, f in snapshot_files(
+                    source.partition_table(val).snapshot(cv)
+                )
             ]
             wm = _files_max_lsn(files)
             replica.merge(
@@ -131,16 +129,7 @@ def make_replica_sink(
                 )
             )
             return
-        else:
-            files = [
-                f
-                for coll in (
-                    snap["files"], snap.get("tombstones", {}),
-                    snap.get("deltas", {}),
-                )
-                for fl in coll.values()
-                for f in fl
-            ]
+        files = [f for _side, _b, f in snapshot_files(snap)]
         wm = _files_max_lsn(files)
         if wm is None:
             wm = (

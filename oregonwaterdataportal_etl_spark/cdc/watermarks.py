@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lake.table import CommitConflictError, ManifestChain
+from ..lake.table import POINTER, CommitConflictError, ManifestChain
 
 
 class WatermarkStore:
@@ -78,11 +78,20 @@ class WatermarkStore:
             # (review finding: int-parsing the legacy pointer crashed
             # every pre-upgrade store with no migration path).
             raw = self._chain.pointer_text()
+            if raw is None:  # a concurrent rename-free migration finished
+                return self._chain.current()
             if raw.startswith("v-") and os.path.isdir(os.path.join(self.path, raw)):
                 try:
                     self._commit({"version": 0, "base": raw, "deltas": []})
                 except CommitConflictError:
-                    pass  # a concurrent migrator won; fall through
+                    pass  # a concurrent (or crashed) migrator published it
+                if self.commit_mode == "rename-free":
+                    # a rename-free commit swings no pointer, so the
+                    # legacy one goes; the chain then derives version 0
+                    try:
+                        os.remove(os.path.join(self.path, POINTER))
+                    except FileNotFoundError:
+                        pass
                 return self._chain.current()
             raise
 

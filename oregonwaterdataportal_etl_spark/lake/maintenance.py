@@ -28,11 +28,12 @@ action itself, so the loop converges.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from .table import LakeTable
+from .table import LakeTable, snapshot_files
 
 
 @dataclass
@@ -81,6 +82,10 @@ def plan_maintenance(table: LakeTable, policy: MaintenancePolicy) -> dict:
     snap = table.snapshot()
     n_buckets = snap["num_buckets"]
     plan: dict[str, str] = {}
+    per_bucket = Counter((side, b) for side, b, _f in snapshot_files(snap))
+
+    def worst(side: str) -> int:
+        return max((n for (s, _b), n in per_bucket.items() if s == side), default=0)
 
     if policy.max_rows_per_bucket:
         rows = snap.get("row_counts", {})
@@ -98,25 +103,19 @@ def plan_maintenance(table: LakeTable, policy: MaintenancePolicy) -> dict:
 
     if "rebucket" not in plan:
         if policy.max_files_per_bucket is not None:
-            worst = max(
-                (len(fl) for fl in snap.get("files", {}).values()), default=0
-            )
-            if worst > policy.max_files_per_bucket:
+            if worst("b") > policy.max_files_per_bucket:
                 plan["compact"] = (
-                    f"worst bucket has {worst} base files > "
+                    f"worst bucket has {worst('b')} base files > "
                     f"{policy.max_files_per_bucket}"
                 )
         if "compact" not in plan and policy.max_delta_files_per_bucket is not None:
-            worst = max(
-                (len(fl) for fl in snap.get("deltas", {}).values()), default=0
-            )
-            if worst > policy.max_delta_files_per_bucket:
+            if worst("d") > policy.max_delta_files_per_bucket:
                 plan["compact"] = (
-                    f"worst bucket has {worst} delta files > "
+                    f"worst bucket has {worst('d')} delta files > "
                     f"{policy.max_delta_files_per_bucket}"
                 )
 
-    if policy.expire_tombstones_with_offsets is not None and snap.get("tombstones"):
+    if policy.expire_tombstones_with_offsets is not None and worst("t"):
         plan["expire_tombstones"] = (
             "tombstones present; expiring below the committed offset watermark"
         )

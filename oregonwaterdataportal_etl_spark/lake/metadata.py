@@ -16,8 +16,13 @@ not billions.
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .table import snapshot_files
+
+_KIND = {"b": "base", "d": "delta", "t": "tombstone"}
 
 
 def _stat(path: str) -> tuple[int | None, float | None]:
@@ -30,17 +35,10 @@ def _stat(path: str) -> tuple[int | None, float | None]:
 
 def build_metadata_df(spark: SparkSession, table, kind: str) -> DataFrame:
     if kind == "files":
-        snap = table.snapshot()
-        rows = []
-        for field, fkind in (
-            ("files", "base"),
-            ("deltas", "delta"),
-            ("tombstones", "tombstone"),
-        ):
-            for b, fl in (snap.get(field) or {}).items():
-                for p in fl:
-                    size, mtime = _stat(p)
-                    rows.append((int(b), fkind, p, size, mtime))
+        rows = [
+            (b, _KIND[side], p, *_stat(p))
+            for side, b, p in snapshot_files(table.snapshot())
+        ]
         return spark.createDataFrame(
             rows,
             "bucket int, kind string, path string, size_bytes long, "
@@ -50,6 +48,7 @@ def build_metadata_df(spark: SparkSession, table, kind: str) -> DataFrame:
         rows = []
         for snap in table.history():
             s = snap.get("summary") or {}
+            n = Counter(side for side, _b, _p in snapshot_files(snap))
             rows.append(
                 (
                     snap["version"],
@@ -60,12 +59,7 @@ def build_metadata_df(spark: SparkSession, table, kind: str) -> DataFrame:
                     s.get("rows_updated"),
                     s.get("rows_deleted"),
                     snap.get("num_buckets"),
-                    sum(len(fl) for fl in (snap.get("files") or {}).values()),
-                    sum(len(fl) for fl in (snap.get("deltas") or {}).values()),
-                    sum(
-                        len(fl)
-                        for fl in (snap.get("tombstones") or {}).values()
-                    ),
+                    n["b"], n["d"], n["t"],
                 )
             )
         return spark.createDataFrame(
@@ -78,18 +72,11 @@ def build_metadata_df(spark: SparkSession, table, kind: str) -> DataFrame:
     if kind == "partitions":
         snap = table.snapshot()
         rc = snap.get("row_counts") or {}
-        rows = []
-        for b in range(snap["num_buckets"]):
-            key = str(b)
-            rows.append(
-                (
-                    b,
-                    rc.get(key, 0),
-                    len((snap.get("files") or {}).get(key, [])),
-                    len((snap.get("deltas") or {}).get(key, [])),
-                    len((snap.get("tombstones") or {}).get(key, [])),
-                )
-            )
+        n = Counter((side, b) for side, b, _p in snapshot_files(snap))
+        rows = [
+            (b, rc.get(str(b), 0), n["b", b], n["d", b], n["t", b])
+            for b in range(snap["num_buckets"])
+        ]
         return spark.createDataFrame(
             rows,
             "bucket int, rows_base long, base_files int, delta_files int, "

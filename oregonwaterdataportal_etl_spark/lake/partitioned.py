@@ -51,6 +51,7 @@ import os
 import re
 import shutil
 from concurrent.futures import ThreadPoolExecutor
+from collections import Counter
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -58,7 +59,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .table import ChainedTable, LakeTable, _next_snapshot, retry_on_conflict
+from .table import (
+    ChainedTable, LakeTable, _next_snapshot, retry_on_conflict, snapshot_files,
+)
 
 def write_partitioned_wal(
     df: DataFrame, path: str, table: "PartitionedLakeTable"
@@ -246,9 +249,7 @@ class PartitionedLakeTable(ChainedTable):
             else:
                 # no drop record (pre-upgrade manifest): fall back to
                 # the populated-chain heuristic
-                need = bool(
-                    cs.get("files") or cs.get("deltas") or cs.get("tombstones")
-                )
+                need = any(snapshot_files(cs))
             if need:
                 new = _next_snapshot(
                     cs,
@@ -265,11 +266,7 @@ class PartitionedLakeTable(ChainedTable):
                     advanced = (
                         fresh["version"] > da
                         if da is not None
-                        else not (
-                            fresh.get("files")
-                            or fresh.get("deltas")
-                            or fresh.get("tombstones")
-                        )
+                        else not any(snapshot_files(fresh))
                     )
                     if not advanced:
                         raise
@@ -1022,12 +1019,10 @@ class PartitionedLakeTable(ChainedTable):
                 # view (review finding)
                 cs = self.partition_table(v).snapshot(vector[v])
                 rc = cs.get("row_counts") or {}
+                n = Counter(side for side, _b, _f in snapshot_files(cs))
                 rows.append((
                     v, vector[v], sum(rc.values()),
-                    sum(len(fl) for fl in (cs.get("files") or {}).values()),
-                    sum(len(fl) for fl in (cs.get("deltas") or {}).values()),
-                    sum(len(fl) for fl in (cs.get("tombstones") or {}).values()),
-                    cs["num_buckets"],
+                    n["b"], n["d"], n["t"], cs["num_buckets"],
                 ))
             return spark.createDataFrame(
                 rows,

@@ -48,6 +48,7 @@ import os
 import re
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -809,6 +810,52 @@ def _next_snapshot(parent: dict | None, summary: dict, **changed) -> dict:
     return snap
 
 
+# ---- the data-file layout -----------------------------------------
+# A snapshot lists its data files in one manifest map per side, each
+# {bucket: [paths]}: base rows ("b"), pending merge-on-read deltas ("d")
+# and tombstones ("t"). snapshot_files is the only reader of those maps,
+# _side_stored the only definition of the files' schema, and
+# _write_buckets / _list_buckets the only writer and lister of the
+# ``_b=<n>/`` directories they come from.
+_SIDE_KEYS = {"b": "files", "d": "deltas", "t": "tombstones"}
+
+
+def snapshot_files(snap: dict, buckets=None):
+    """THE walk of a snapshot's data files: ``(side, bucket, path)`` for
+    every base ('b'), delta ('d') and tombstone ('t') file, sides in that
+    order, limited to ``buckets`` when given. A side map that an older
+    manifest lacks holds no file."""
+    for side, key in _SIDE_KEYS.items():
+        for b, fl in (snap.get(key) or {}).items():
+            if buckets is None or int(b) in buckets:
+                for f in fl:
+                    yield side, int(b), f
+
+
+def _side_maps(snap: dict, buckets=None) -> dict[str, dict[str, list[str]]]:
+    """snapshot_files regrouped into the manifest form: one
+    {bucket: [paths]} map per side, a fresh copy the caller may edit."""
+    maps: dict[str, dict[str, list[str]]] = {side: {} for side in _SIDE_KEYS}
+    for side, b, f in snapshot_files(snap, buckets):
+        maps[side].setdefault(str(b), []).append(f)
+    return maps
+
+
+def _list_buckets(out_dir: str, sub: str = "") -> dict[str, list[str]]:
+    """{bucket: sorted parquet paths} of a bucketed write: the files in
+    each ``<out_dir>/_b=<n>/<sub>`` dir (``sub``: a nested partition dir,
+    such as the copy-on-write write's ``_del=false``)."""
+    files: dict[str, list[str]] = {}
+    for entry in os.listdir(out_dir):
+        bdir = os.path.join(out_dir, entry, sub)
+        if entry.startswith(f"{_BUCKET_COL}=") and os.path.isdir(bdir):
+            files[entry.split("=")[1]] = sorted(
+                os.path.join(bdir, f) for f in os.listdir(bdir)
+                if f.endswith(".parquet")
+            )
+    return files
+
+
 @dataclass
 class MergeResult:
     """Counts + lineage for one MERGE (north_rule: per-partition
@@ -854,24 +901,6 @@ class LakeTable(ChainedTable):
 
         return build_metadata_df(spark, self, kind)
 
-    # --------------------------------------------------------- schema
-    def _stored_schema(self) -> T.StructType:
-        s = self.schema()
-        return T.StructType(
-            list(s.fields)
-            + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                # tie-break limbs persist in BASE files too (not just MOR
-                # deltas): a cross-batch same-(key,lsn) tie must resolve
-                # identically whether the earlier event already reached
-                # the base (COW) or still sits in a delta (MOR) — limbs
-                # order the tie BEFORE the base/batch source bit, and
-                # identical payloads still fall through to base-wins
-                T.StructField(_TB1_COL, T.LongType(), True),
-                T.StructField(_TB2_COL, T.LongType(), True),
-            ]
-        )
-
     # ----------------------------------------------------------- read
     def _resolved_view(
         self,
@@ -897,14 +926,11 @@ class LakeTable(ChainedTable):
         choice, reused by later reads (_kept_registration)."""
         snap = self.snapshot(version)
         chosen = range(snap["num_buckets"]) if buckets is None else buckets
-        picked = {
-            k: {b: fl for b, fl in (snap.get(k) or {}).items() if int(b) in chosen}
-            for k in ("files", "tombstones", "deltas")
-        }
-        if not picked["deltas"]:
+        picked = _side_maps(snap, chosen)
+        if not picked["d"]:
             return self._read_internal(
-                spark, version, buckets=buckets, _snap=snap
-            ).drop(LSN_COL, _TB1_COL, _TB2_COL)
+                spark, snap, [f for fl in picked["b"].values() for f in fl]
+            )
         schema = T.StructType.fromJson(json.loads(snap["schema"]))
         key_cols = snap["key_cols"]
         reg_root, reg = self._kept_registration(
@@ -931,13 +957,13 @@ class LakeTable(ChainedTable):
             for f in schema.fields
         ])
 
-    def _kept_registration(self, label: str, snaps: list[dict], build) -> tuple[str, str]:
+    def _kept_registration(self, label: str, maps: list[dict], build) -> tuple[str, str]:
         """Registration dir and catalog-name prefix for a LAZY frame,
         whose registration must outlive the call that returns it (unlike
         _cow_commit's, dropped when its merge ends).
 
         The dir is ``_bucketed/<label>-<digest>``, where the digest
-        covers the file lists of ``snaps``: snapshots are immutable, so
+        covers the file lists ``maps`` (_side_maps): snapshots are immutable, so
         equal file lists mean equal content, and a WAP stage's version N
         (which shares the table dir and the version numbers) never
         reuses main's version N registration. ``build(tmp)`` links the
@@ -953,7 +979,7 @@ class LakeTable(ChainedTable):
         import shutil
 
         digest = hashlib.md5(json.dumps(
-            [[s.get(k) or {} for k in ("files", "tombstones", "deltas")] for s in snaps],
+            [[m["b"], m["t"], m["d"]] for m in maps],
             sort_keys=True,
         ).encode()).hexdigest()[:12]
         reg_root = os.path.join(self.path, "_bucketed", f"{label}-{digest}")
@@ -1050,8 +1076,7 @@ class LakeTable(ChainedTable):
         keys)."""
         from .bloom import bloom_hash_cols, load_sidecar
 
-        v = self.current_version()
-        snap = self.snapshot(v)
+        snap = self.snapshot()
         key_cols = snap["key_cols"]
         if set(key_values) != set(key_cols):
             raise ValueError(f"lookup requires exactly the key columns {key_cols}")
@@ -1065,33 +1090,19 @@ class LakeTable(ChainedTable):
         # Spark's, bit-for-bit, or probes would diverge from builds)
         h1c, h2c = bloom_hash_cols(key_cols)
         pr = probe.select(self._bucket_expr(snap).alias("b"), h1c, h2c).collect()[0]
-        b = pr["b"]
-        files_allow = None
-        if use_blooms and os.path.isdir(self.bloom_dir):
-            files_allow = set()
-            for coll in (snap["files"], snap.get("tombstones", {}),
-                         snap.get("deltas", {})):
-                for fl in (coll.get(str(b)) or coll.get(b) or []):
-                    side = load_sidecar(self.bloom_dir, fl)
-                    if side is None or side.might_contain(pr["__bh1"], pr["__bh2"]):
-                        files_allow.add(fl)
+        blooms = use_blooms and os.path.isdir(self.bloom_dir)
+        scans: dict[str, list[str]] = {"b": [], "t": [], "d": []}
+        for side, _b, f in snapshot_files(snap, [pr["b"]]):
+            bloom = load_sidecar(self.bloom_dir, f) if blooms else None
+            if bloom is None or bloom.might_contain(pr["__bh1"], pr["__bh2"]):
+                scans[side].append(f)
         # the predicate covers the KEY COLUMNS ONLY, so filtering below
         # the dedup window selects whole key groups and changes no winner
         pred = _and_all(
             F.col(c).eqNullSafe(F.lit(key_values[c])) for c in key_cols
         )
-        scans = {
-            side: [
-                f for k, fl in (coll or {}).items() if int(k) == b for f in fl
-                if files_allow is None or f in files_allow
-            ]
-            for side, coll in (("b", snap["files"]), ("t", snap.get("tombstones")),
-                               ("d", snap.get("deltas")))
-        }
         if not scans["d"]:
-            return self._read_internal(
-                spark, v, buckets=[b], _snap=snap, files_allow=files_allow
-            ).filter(pred).drop(LSN_COL, _TB1_COL, _TB2_COL)
+            return self._read_internal(spark, snap, scans["b"]).filter(pred)
         # no registration: the key's files are few, so one task runs the
         # shared dedup window, whose clustering the coalesce(1)'s
         # SinglePartition satisfies — no Exchange
@@ -1132,15 +1143,8 @@ class LakeTable(ChainedTable):
         v = self.current_version() if version is None else version
         snap = self.snapshot(v)
         key_cols = snap["key_cols"]
-        all_files = [
-            f
-            for coll in (snap["files"], snap.get("tombstones", {}),
-                         snap.get("deltas", {}))
-            for fl in coll.values()
-            for f in fl
-        ]
         missing = [
-            f for f in all_files
+            f for _side, _b, f in snapshot_files(snap)
             if not os.path.exists(os.path.join(self.bloom_dir, sidecar_name(f)))
         ]
         if not missing:
@@ -1268,7 +1272,6 @@ class LakeTable(ChainedTable):
             # from-zero changelog (a fresh follower's bootstrap full
             # sync) must still work
             snap1 = {
-                "files": {}, "tombstones": {}, "deltas": {},
                 "num_buckets": snap2["num_buckets"],
                 "schema": snap2["schema"],
             }
@@ -1297,14 +1300,7 @@ class LakeTable(ChainedTable):
         if v1 == v2:
             return empty
 
-        v1_files = [
-            f
-            for coll in (
-                snap1["files"], snap1.get("tombstones", {}), snap1.get("deltas", {}),
-            )
-            for fl in coll.values()
-            for f in fl
-        ]
+        v1_files = [f for _side, _b, f in snapshot_files(snap1)]
         wm1 = _files_max_lsn(v1_files)
         if wm1 is None and v1_files:
             # stats-less files (foreign writer): one column-pruned job
@@ -1324,13 +1320,9 @@ class LakeTable(ChainedTable):
         # Maintenance churn (compact/fold rewrites) marks buckets
         # touched too; the join then correctly yields no rows for them.
         def bucket_sig(snap):
-            sig: dict[int, list[str]] = {}
-            for coll in (
-                snap["files"], snap.get("tombstones", {}),
-                snap.get("deltas", {}),
-            ):
-                for b, fl in coll.items():
-                    sig.setdefault(int(b), []).extend(sorted(fl))
+            sig: dict[int, set] = {}
+            for side, b, f in snapshot_files(snap):
+                sig.setdefault(b, set()).add((side, f))
             return sig
 
         if snap1["num_buckets"] == snap2["num_buckets"]:
@@ -1355,7 +1347,7 @@ class LakeTable(ChainedTable):
             self._link_base_tomb(snap1, from_buckets, os.path.join(tmp, "from"))
 
         reg_root, reg = self._kept_registration(
-            f"chg-v{v1}-v{v2}", [snap1, snap2], build
+            f"chg-v{v1}-v{v2}", [_side_maps(snap1), _side_maps(snap2)], build
         )
         # each version's per-key winner (base, tombstones and pending
         # deltas) from its own bucketed scan: one candidate struct per key
@@ -1490,38 +1482,19 @@ class LakeTable(ChainedTable):
         ).drop("__kh")
 
     def _read_internal(
-        self,
-        spark: SparkSession,
-        version: int | None = None,
-        buckets: list[int] | None = None,
-        _snap: dict | None = None,
-        files_allow: set[str] | None = None,
+        self, spark: SparkSession, snap: dict, files: list[str]
     ) -> DataFrame:
-        # _snap: caller's already-parsed snapshot (the manifest JSON can
-        # carry thousands of file paths — don't re-parse it per helper
-        # on the point-lookup serving path)
-        snap = _snap if _snap is not None else self.snapshot(version)
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
-        stored = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                # limbs null-fill for pre-upgrade/overwrite files
-                T.StructField(_TB1_COL, T.LongType(), True),
-                T.StructField(_TB2_COL, T.LongType(), True),
-            ]
-        )
-        files: list[str] = []
-        for b, flist in snap["files"].items():
-            if buckets is None or int(b) in buckets:
-                files.extend(
-                    f for f in flist if files_allow is None or f in files_allow
-                )
-        if not files:
-            return spark.createDataFrame([], stored)
+        """The payload rows of the pinned ``snap``'s base ``files``: the
+        read of a version's (or a key's) buckets without pending deltas,
+        whose tombstones cannot change the view."""
+        stored = self._side_stored(snap, "b")
         # mergeSchema not needed: we pass the (superset) snapshot
         # schema explicitly; parquet fills absent columns with null.
-        return spark.read.schema(stored).parquet(*files)
+        rows = (
+            spark.read.schema(stored).parquet(*files) if files
+            else spark.createDataFrame([], stored)
+        )
+        return rows.drop(LSN_COL, _TB1_COL, _TB2_COL)
 
     # ---------------------------------------------------------- create
     @staticmethod
@@ -1663,13 +1636,16 @@ class LakeTable(ChainedTable):
     def _write_buckets(
         self,
         df: DataFrame,
+        snap: dict,
+        prefix: str = "w",
         pre_partitioned: bool = False,
         sort_within: bool = False,
-        _snap: dict | None = None,
         sort_expr=None,
         row_group_bytes: int | None = None,
     ) -> dict[str, list[str]]:
-        """Write df (stored schema + _b) into per-bucket parquet files.
+        """Write df (stored schema + _b) into per-bucket parquet files
+        under a fresh ``data/<prefix>-<hex>/`` dir, laid out for ``snap``
+        (its key columns and bucket count); returns {bucket: [paths]}.
 
         pre_partitioned=True: df is already hash-partitioned on the key
         columns into num_buckets partitions (each task = one bucket) —
@@ -1685,9 +1661,8 @@ class LakeTable(ChainedTable):
         (Iceberg's sort-order-on-rewrite analog). Used by compact():
         maintenance pays the local sort once so the serving reads skip
         forever after."""
-        snap = _snap if _snap is not None else self.snapshot()
         key_cols = snap["key_cols"]
-        out_dir = os.path.join(self.data_dir, f"w-{uuid.uuid4().hex}")
+        out_dir = os.path.join(self.data_dir, f"{prefix}-{uuid.uuid4().hex}")
         if not pre_partitioned:
             df = df.repartition(snap["num_buckets"], *[F.col(c) for c in key_cols])
         if sort_within:
@@ -1707,27 +1682,13 @@ class LakeTable(ChainedTable):
             # skip-scans (and the knob the clustering tests pin)
             writer = writer.option("parquet.block.size", str(row_group_bytes))
         writer.parquet(out_dir)
-        files: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if entry.startswith(f"{_BUCKET_COL}="):
-                b = entry.split("=")[1]
-                bdir = os.path.join(out_dir, entry)
-                files[b] = [
-                    os.path.join(bdir, f)
-                    for f in os.listdir(bdir)
-                    if f.endswith(".parquet")
-                ]
-        return files
+        return _list_buckets(out_dir)
 
     def max_lsn(self, spark: SparkSession) -> int:
         """Highest applied LSN across base, delta and tombstone files —
         parquet-footer statistics only (cached per immutable file), no
         Spark job. 0 for an empty table."""
-        snap = self.snapshot()
-        files: list[str] = []
-        for m in (snap.get("files"), snap.get("deltas"), snap.get("tombstones")):
-            for fl in (m or {}).values():
-                files.extend(fl)
+        files = [f for _side, _b, f in snapshot_files(self.snapshot())]
         if not files:
             return 0
         best = _files_max_lsn(files)
@@ -1801,10 +1762,11 @@ class LakeTable(ChainedTable):
             commit_mode=snap.get("commit_mode", "pointer"),
         )
         copy_dir = os.path.join(clone.data_dir, f"clone-{uuid.uuid4().hex}")
+        maps = _side_maps(snap)
 
         def copy_map(m: dict) -> dict:
             out: dict[str, list[str]] = {}
-            for b, fl in (m or {}).items():
+            for b, fl in m.items():
                 dd = os.path.join(copy_dir, f"b={b}")
                 os.makedirs(dd, exist_ok=True)
                 new = []
@@ -1823,9 +1785,9 @@ class LakeTable(ChainedTable):
                     "cloned_from": self.path,
                     "cloned_version": snap["version"],
                 },
-                files=copy_map(snap.get("files")),
-                deltas=copy_map(snap.get("deltas")),
-                tombstones=copy_map(snap.get("tombstones")),
+                files=copy_map(maps["b"]),
+                deltas=copy_map(maps["d"]),
+                tombstones=copy_map(maps["t"]),
                 row_counts=snap.get("row_counts", {}),
             )
         )
@@ -1847,7 +1809,7 @@ class LakeTable(ChainedTable):
         if LSN_COL not in df.columns:
             out = out.withColumn(LSN_COL, F.lit(lsn).cast("long"))
         out = out.withColumn(_BUCKET_COL, self._bucket_expr(snap))
-        files = self._write_buckets(out, _snap=snap)
+        files = self._write_buckets(out, snap)
         new = _next_snapshot(
             snap,
             {"operation": "overwrite"},
@@ -1882,7 +1844,8 @@ class LakeTable(ChainedTable):
                 return a if rank[a] >= rank[b] else b
         return None
 
-    def evolve_schema(self, incoming: T.StructType) -> T.StructType:
+    @classmethod
+    def evolve_schema(cls, snap: dict, incoming: T.StructType) -> T.StructType:
         """Schema evolution at merge time (Iceberg ALTER TABLE analog;
         reference: pydantic extra='allow', userCode/groundwater/
         wells.py:30,269 and the carried-through undeclared field test
@@ -1897,9 +1860,12 @@ class LakeTable(ChainedTable):
           to DIFFERENT values, so a key-type change would silently
           scatter existing keys across wrong buckets — error instead;
         - anything else (string->int, dropped columns, ...) is not
-          evolution — error."""
-        current = self.schema()
-        key_cols = set(self.snapshot()["key_cols"])
+          evolution — error.
+
+        Evolves against ``snap``, the caller's pinned snapshot, so a
+        merge reads its manifest once."""
+        current = T.StructType.fromJson(json.loads(snap["schema"]))
+        key_cols = set(snap["key_cols"])
         cur_names = {f.name: f for f in current.fields}
         out = list(current.fields)
         added = []
@@ -1911,7 +1877,7 @@ class LakeTable(ChainedTable):
                 cur_t = cur_names[f.name].dataType
                 if f.dataType == cur_t:
                     continue
-                wide = self._widened(cur_t, f.dataType)
+                wide = cls._widened(cur_t, f.dataType)
                 if wide is None:
                     raise ValueError(
                         f"incompatible type change for column {f.name}: "
@@ -1975,7 +1941,7 @@ class LakeTable(ChainedTable):
         payload_fields = T.StructType(
             [f for f in updates.schema.fields if f.name not in (op_col, lsn_col)]
         )
-        evolved = self.evolve_schema(payload_fields)
+        evolved = self.evolve_schema(snap, payload_fields)
 
         # -- partition pruning: which buckets does the batch touch? -
         # One cheap pass over the batch (bucket ids only). Skipped when
@@ -2008,7 +1974,7 @@ class LakeTable(ChainedTable):
         # The same pass notes whether any key value is null: the cow
         # join cannot match those (see _zx_winners).
         null_keys = False
-        if snap["files"] or snap.get("deltas") or snap.get("tombstones"):
+        if any(snapshot_files(snap)):
             keyed = _and_all([F.col(c).isNotNull() for c in key_cols])
             bstats = (
                 upd.groupBy(bexpr.alias("b")).agg(F.max(~keyed).alias("nk")).collect()
@@ -2173,25 +2139,8 @@ class LakeTable(ChainedTable):
         # function, and the join keeps that layout — no shuffle here
         out.write.partitionBy(_BUCKET_COL, _DEL_COL).mode("overwrite").parquet(out_dir)
 
-        new_files: dict[str, list[str]] = {}
-        new_tombs: dict[str, list[str]] = {}
-        all_files: list[str] = []
-        for entry in os.listdir(out_dir):
-            if not entry.startswith(f"{_BUCKET_COL}="):
-                continue
-            b = entry.split("=")[1]
-            for sub in os.listdir(os.path.join(out_dir, entry)):
-                subdir = os.path.join(out_dir, entry, sub)
-                flist = [
-                    os.path.join(subdir, f)
-                    for f in os.listdir(subdir)
-                    if f.endswith(".parquet")
-                ]
-                all_files.extend(flist)
-                if sub == f"{_DEL_COL}=false":
-                    new_files[b] = sorted(new_files.get(b, []) + flist)
-                else:
-                    new_tombs[b] = sorted(new_tombs.get(b, []) + flist)
+        new_files = _list_buckets(out_dir, f"{_DEL_COL}=false")
+        new_tombs = _list_buckets(out_dir, f"{_DEL_COL}=true")
         # -- non-deterministic-source guard --------------------------
         # `updates` is evaluated twice (touched-bucket scan, then
         # resolve/write). A non-deterministic source whose later
@@ -2212,31 +2161,23 @@ class LakeTable(ChainedTable):
             )
         part_counts = {int(b): len(fl) for b, fl in new_files.items()}
         counts = {}
-        if all_files:
+        if new_files or new_tombs:
             # the write job already ran (files exist), so the observed
-            # metrics are final; guard on all_files keeps the empty-
-            # write case identical to the old read-back behavior
+            # metrics are final; the guard keeps the empty-write case
+            # identical to the old read-back behavior
             counts = {k: v for k, v in ob.get.items() if v}
 
         # carry untouched buckets forward (copy-on-write pruning);
         # deltas and tombstones of touched buckets were folded in and
         # re-emitted, so replace them with the fresh files
-        files = dict(snap["files"])
-        deltas = dict(snap.get("deltas", {}))
-        tombstones = dict(snap.get("tombstones", {}))
+        kept = _side_maps(snap)
         row_counts = dict(snap.get("row_counts", {}))
         for b in touched:
-            files.pop(str(b), None)
-            deltas.pop(str(b), None)
-            tombstones.pop(str(b), None)
-            row_counts.pop(str(b), None)
-        for b, flist in new_files.items():
-            files[b] = flist
+            for m in (*kept.values(), row_counts):
+                m.pop(str(b), None)
         # per-bucket row lineage from parquet footers (no data scan,
         # threaded opens); read by stats, metadata frames and maintenance
         row_counts.update(_rows_per_bucket(new_files))
-        for b, flist in new_tombs.items():
-            tombstones[b] = flist
 
         new_version = snap["version"] + 1
         result = MergeResult(
@@ -2255,9 +2196,9 @@ class LakeTable(ChainedTable):
                 {"operation": _operation_label, **result.as_dict(),
                  **(_summary_extra or {})},
                 schema=json.dumps(evolved.jsonValue()),
-                files=files,
-                deltas=deltas,
-                tombstones=tombstones,
+                files={**kept["b"], **new_files},
+                deltas=kept["d"],
+                tombstones={**kept["t"], **new_tombs},
                 row_counts=row_counts,
             )
         )
@@ -2307,9 +2248,7 @@ class LakeTable(ChainedTable):
         from . import bucketed as B
 
         linked = False
-        for side, coll in (("b", snap["files"]), ("t", snap.get("tombstones", {})),
-                           ("d", snap.get("deltas", {}))):
-            sel = {b: fl for b, fl in coll.items() if int(b) in touched}
+        for side, sel in _side_maps(snap, touched).items():
             if sel:
                 B.link_files_bucketed(sel, os.path.join(bt_dir, f"side={side}"))
                 linked = True
@@ -2365,20 +2304,27 @@ class LakeTable(ChainedTable):
         return self._side_winners(bt, key_cols, nonkey)
 
     @staticmethod
-    def _side_stored(snap: dict) -> T.StructType:
-        """Stored schema of base, tombstone and delta files alike, from
-        the pinned snap. Delta files carry an op column; base and
-        tombstone files lack it and null-fill (parquet by-name
-        resolution), as do files written before the tie-break limbs
-        were persisted (null limbs sort last)."""
+    def _side_stored(snap: dict, side: str | None = None) -> T.StructType:
+        """THE stored schema of the data files, from the pinned snap:
+        the payload, the LSN guard and the tie-break limbs, plus the op
+        column that only delta files carry. ``side`` 'b' or 't' gives
+        the schema of base or tombstone files alone; by default the
+        files of all sides read as one, and base and tombstone files
+        null-fill the op column (parquet by-name resolution), as do
+        files written before the tie-break limbs were persisted (null
+        limbs sort last). The limbs persist in base files too: a
+        cross-batch same-(key, lsn) tie must resolve identically whether
+        the earlier event already reached the base (cow) or still sits
+        in a delta (mor)."""
         return T.StructType(
             list(T.StructType.fromJson(json.loads(snap["schema"])).fields)
             + [
                 T.StructField(LSN_COL, T.LongType(), True),
                 T.StructField(_TB1_COL, T.LongType(), True),
                 T.StructField(_TB2_COL, T.LongType(), True),
-                T.StructField(_OP_COL, T.StringType(), True),
             ]
+            + ([T.StructField(_OP_COL, T.StringType(), True)]
+               if side in (None, "d") else [])
         )
 
     @classmethod
@@ -2557,6 +2503,7 @@ class LakeTable(ChainedTable):
                     f"type — rewrite the WAL with the stored key types"
                 )
         evolved = self.evolve_schema(
+            snap,
             T.StructType(
                 [f for f in wal_schema.fields if f.name not in (op_col, lsn_col)]
             )
@@ -2635,7 +2582,9 @@ class LakeTable(ChainedTable):
                    _summary_extra: dict | None = None) -> MergeResult:
         """Append path: within-batch LWW dedup (_resolve_batch), then
         per-bucket delta files carrying (_lsn, _op). No base read, no
-        base rewrite. Dict columns ride the batch's exchange as codes."""
+        base rewrite. Dict columns ride the batch's exchange as codes.
+        The resolve's repartition already clustered the batch one bucket
+        per task, so the delta files write with no second exchange."""
         dicts = snap.get("dict_cols") or {}
         winners = self._resolve_batch(
             self._tag_batch(upd, snap, evolved, op_col, lsn_col, dicts),
@@ -2653,26 +2602,13 @@ class LakeTable(ChainedTable):
             F.col("__tb2").alias(_TB2_COL),
             bexpr.alias(_BUCKET_COL),
         )
-        out_dir = os.path.join(self.data_dir, f"d-{uuid.uuid4().hex}")
-        out.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir)
+        new_delta = self._write_buckets(out, snap, prefix="d", pre_partitioned=True)
+        # footer row counts, not a Spark count() job: the old full
+        # re-read of every just-written delta file was pure metrics
+        # overhead on the hot MOR apply path (round-3 bench finding)
+        total = sum(_rows_per_bucket(new_delta).values())
 
-        new_delta: dict[str, list[str]] = {}
-        total = 0
-        for entry in os.listdir(out_dir):
-            if not entry.startswith(f"{_BUCKET_COL}="):
-                continue
-            b = entry.split("=")[1]
-            bdir = os.path.join(out_dir, entry)
-            new_delta[b] = [
-                os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")
-            ]
-        if new_delta:
-            # footer row counts, not a Spark count() job: the old full
-            # re-read of every just-written delta file was pure metrics
-            # overhead on the hot MOR apply path (round-3 bench finding)
-            total = sum(_rows_per_bucket(new_delta).values())
-
-        deltas = dict(snap.get("deltas", {}))
+        deltas = _side_maps(snap)["d"]
         for b, fl in new_delta.items():
             deltas[b] = deltas.get(b, []) + fl
         new_version = snap["version"] + 1
@@ -2701,16 +2637,15 @@ class LakeTable(ChainedTable):
         snapshot's manifest-style bookkeeping."""
         snap = self.snapshot()
         rc = {int(b): n for b, n in (snap.get("row_counts") or {}).items()}
+        n_files = Counter(side for side, _b, _f in snapshot_files(snap))
         return {
             "version": snap["version"],
             "num_buckets": snap["num_buckets"],
             "rows_base": sum(rc.values()),
             "rows_per_bucket": rc,
-            "base_files": sum(len(fl) for fl in snap["files"].values()),
-            "delta_files": sum(len(fl) for fl in snap.get("deltas", {}).values()),
-            "tombstone_files": sum(
-                len(fl) for fl in snap.get("tombstones", {}).values()
-            ),
+            "base_files": n_files["b"],
+            "delta_files": n_files["d"],
+            "tombstone_files": n_files["t"],
             "dict_cols": snap.get("dict_cols", {}),
             "tiebreak_family": snap.get("tiebreak_family", "xxhash64"),
             "operation": snap.get("summary", {}).get("operation"),
@@ -2812,21 +2747,21 @@ class LakeTable(ChainedTable):
         granularity; also the knob the clustering tests pin)."""
         snap = self.snapshot()
         fold_buckets = [
-            int(b) for b, fl in snap.get("deltas", {}).items()
+            int(b) for b, fl in _side_maps(snap)["d"].items()
             if len(fl) >= min_delta_files
         ]
         if fold_buckets:
             self._fold_deltas_zx(spark, fold_buckets)
             snap = self.snapshot()
+        files = _side_maps(snap)["b"]
         to_rewrite = {
-            b: fl for b, fl in snap["files"].items()
+            b: fl for b, fl in files.items()
             if cluster_by is not None or len(fl) > target_files_per_bucket
         }
         if not to_rewrite:
             return snap["version"]
-        stored = self._stored_schema()
         all_small = [f for fl in to_rewrite.values() for f in fl]
-        df = spark.read.schema(stored).parquet(*all_small)
+        df = spark.read.schema(self._side_stored(snap, "b")).parquet(*all_small)
         out = df.withColumn(_BUCKET_COL, self._bucket_expr(snap))
         sort_expr = None
         if cluster_by is not None:
@@ -2852,10 +2787,9 @@ class LakeTable(ChainedTable):
         # shuffle; key-sorted (or z-ordered) rows give tight row-group
         # stats for skip-scans
         new_files = self._write_buckets(
-            out, sort_within=True, _snap=snap,
+            out, snap, sort_within=True,
             sort_expr=sort_expr, row_group_bytes=row_group_bytes,
         )
-        files = dict(snap["files"])
         for b in to_rewrite:
             files.pop(b, None)
         for b, fl in new_files.items():
@@ -2887,21 +2821,9 @@ class LakeTable(ChainedTable):
 
     @staticmethod
     def _snap_files(snap: dict) -> set[str]:
-        out: set[str] = set()
-        for fl in snap["files"].values():
-            out.update(fl)
-        for fl in snap.get("deltas", {}).values():
-            out.update(fl)
-        for fl in snap.get("tombstones", {}).values():
-            out.update(fl)
-        return out
+        return {f for _side, _b, f in snapshot_files(snap)}
 
-    def rebucket(
-        self,
-        spark: SparkSession,
-        new_num_buckets: int,
-        sort_within: bool = True,
-    ) -> int:
+    def rebucket(self, spark: SparkSession, new_num_buckets: int) -> int:
         """Bucket-count evolution (Iceberg partition-spec evolution
         analog for the hash layout): rewrite base, tombstone AND delta
         files into ``new_num_buckets`` and commit a snapshot whose
@@ -2914,8 +2836,9 @@ class LakeTable(ChainedTable):
         The resolved row set is bit-identical before and after: every
         stored artifact (payload, __lsn, tie-break limbs, delta __op)
         is carried verbatim — only file placement changes. Three
-        rewrite passes, each ONE key-hash shuffle at the new count;
-        sort_within keeps compact()'s tight row-group key clustering.
+        rewrite passes, each ONE key-hash shuffle at the new count,
+        sorted within buckets for compact()'s tight row-group key
+        clustering.
         Cost model is a full-table rewrite (compact-everything), which
         is why it is maintenance, not steady-state.
 
@@ -2932,23 +2855,17 @@ class LakeTable(ChainedTable):
             return snap["version"]
         nsnap = {**snap, "num_buckets": new_num_buckets}
         bexpr = self._bucket_expr(nsnap)
-        stored = self._stored_schema()
-        delta_schema = T.StructType(
-            list(stored.fields) + [T.StructField(_OP_COL, T.StringType(), True)]
-        )
 
-        def rewrite(files_map: dict, schema: T.StructType) -> dict[str, list[str]]:
-            flist = [f for fl in (files_map or {}).values() for f in fl]
+        def rewrite(side: str, files_map: dict) -> dict[str, list[str]]:
+            flist = [f for fl in files_map.values() for f in fl]
             if not flist:
                 return {}
-            df = spark.read.schema(schema).parquet(*flist).withColumn(
-                _BUCKET_COL, bexpr
-            )
-            return self._write_buckets(df, sort_within=sort_within, _snap=nsnap)
+            df = spark.read.schema(self._side_stored(snap, side)).parquet(
+                *flist
+            ).withColumn(_BUCKET_COL, bexpr)
+            return self._write_buckets(df, nsnap, sort_within=True)
 
-        new_files = rewrite(snap["files"], stored)
-        new_tombs = rewrite(snap.get("tombstones"), stored)
-        new_deltas = rewrite(snap.get("deltas"), delta_schema)
+        out = {side: rewrite(side, m) for side, m in _side_maps(snap).items()}
         new = _next_snapshot(
             snap,
             {
@@ -2957,10 +2874,10 @@ class LakeTable(ChainedTable):
                 "to_buckets": new_num_buckets,
             },
             num_buckets=new_num_buckets,
-            files=new_files,
-            deltas=new_deltas,
-            tombstones=new_tombs,
-            row_counts=_rows_per_bucket(new_files),
+            files=out["b"],
+            deltas=out["d"],
+            tombstones=out["t"],
+            row_counts=_rows_per_bucket(out["b"]),
         )
         self._commit(new)
         return new["version"]
@@ -3148,39 +3065,17 @@ class LakeTable(ChainedTable):
         if below_lsn is None:
             raise ValueError("expire_tombstones needs below_lsn or offsets")
         snap = self.snapshot()
-        tombs = snap.get("tombstones", {})
+        tombs = [f for side, _b, f in snapshot_files(snap) if side == "t"]
         if not tombs:
             return 0
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
-        stored = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                T.StructField(_TB1_COL, T.LongType(), True),
-                T.StructField(_TB2_COL, T.LongType(), True),
-            ]
-        )
-        all_files = [f for fl in tombs.values() for f in fl]
-        df = spark.read.schema(stored).parquet(*all_files)
+        df = spark.read.schema(self._side_stored(snap, "t")).parquet(*tombs)
         removed = df.filter(F.col(LSN_COL) < below_lsn).count()
         if removed == 0:
             return 0
         survivors = df.filter(F.col(LSN_COL) >= below_lsn).withColumn(
             _BUCKET_COL, self._bucket_expr(snap)
         )
-        out_dir = os.path.join(self.data_dir, f"t-{uuid.uuid4().hex}")
-        survivors.repartition(snap["num_buckets"], *[F.col(c) for c in snap["key_cols"]]) \
-            .write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir)
-        new_tombs: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if entry.startswith(f"{_BUCKET_COL}="):
-                b = entry.split("=")[1]
-                bdir = os.path.join(out_dir, entry)
-                new_tombs[b] = [
-                    os.path.join(bdir, f)
-                    for f in os.listdir(bdir)
-                    if f.endswith(".parquet")
-                ]
+        new_tombs = self._write_buckets(survivors, snap, prefix="t")
         self._commit(
             _next_snapshot(
                 snap,

@@ -4,10 +4,13 @@ Usage: python scripts/dump_plans.py   (writes PLANS.md at the repo root)
 
 The plan TESTS (tests/test_plans.py) are the enforcement; this file is
 the human-readable snapshot of what those tests pin — refreshed by
-running this script, never hand-edited.
+running this script, never hand-edited. Run-specific tokens are
+normalised (``normalized``), so ``git diff PLANS.md`` after a rerun
+shows only real plan changes.
 """
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -21,6 +24,7 @@ from oregonwaterdataportal_etl_spark.cdc.changegen import (  # noqa: E402
     generate_changes_pdf,
 )
 from oregonwaterdataportal_etl_spark.lake import LakeTable  # noqa: E402
+from oregonwaterdataportal_etl_spark.lake.table import snapshot_files  # noqa: E402
 from oregonwaterdataportal_etl_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
@@ -32,6 +36,27 @@ def formatted(df) -> str:
             "formatted"
         )
     )
+
+
+_UUID = r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+# write-dir, registration and catalog-table names: 12-32 hex digits
+_HEX = r"(?<![0-9a-f])(?=[0-9a-f]*[0-9])[0-9a-f]{12,32}(?![0-9a-f])"
+
+
+def normalized(plan: str, tmp: str) -> str:
+    """``plan`` with its run-specific tokens made stable: the temp dir
+    and the input dir become <tmp> and <sf>, Spark's plan ids
+    plan_id=N, and each distinct uuid, hex name and expression id a
+    token numbered by first appearance (<uuid1>, <hex1>, #1)."""
+    plan = plan.replace(tmp, "<tmp>").replace(SF, "<sf>")
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    for pattern, token in ((_UUID, "<uuid{}>"), (_HEX, "<hex{}>"),
+                           (r"(?<=#)\d+", "{}")):
+        ids: dict[str, int] = {}
+        plan = re.sub(pattern, lambda m: token.format(
+            ids.setdefault(m.group(0), len(ids) + 1)
+        ), plan)
+    return plan
 
 
 def parquet_batch(spark, tmp, name, pdf):
@@ -154,9 +179,9 @@ def zero_exchange_compact_fold_plan(spark, tmp) -> str:
     t.merge(b1)
     t.merge(b2, mode="mor")
     plans = []
-    t._fold_deltas_zx(
-        spark, [int(b) for b in t.snapshot()["deltas"]], _plan_out=plans
-    )
+    t._fold_deltas_zx(spark, sorted(
+        {b for side, b, _f in snapshot_files(t.snapshot()) if side == "d"}
+    ), _plan_out=plans)
     return plans[0]
 
 
@@ -297,7 +322,8 @@ def main() -> None:
     ]
     for title, note, df in sections:
         plan = formatted(df) if hasattr(df, "sparkSession") else df
-        out += [f"## {title}", "", note, "", "```", plan.strip(), "```", ""]
+        out += [f"## {title}", "", note, "", "```",
+                normalized(plan.strip(), tmp), "```", ""]
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")

@@ -858,10 +858,15 @@ def test_ann_index_not_stale_after_mor_delta_fold(spark, tmp_path):
     assert after == before
 
 
-def test_watermark_store_migrates_legacy_pointer(spark, tmp_path):
+@pytest.mark.parametrize("crashed", [False, True])
+@pytest.mark.parametrize("mode", ["pointer", "rename-free"])
+def test_watermark_store_migrates_legacy_pointer(spark, tmp_path, mode, crashed):
     """Review finding: round-2 stores pointed CURRENT at the data dir
     itself; the manifest-era reader must adopt it transparently instead
-    of crashing on int()."""
+    of crashing on int(), in either commit mode (a rename-free store
+    keeps no pointer, so the migration removes the legacy one).
+    ``crashed``: a migrator died after publishing version 0 but before
+    fixing the pointer; the next open finishes the migration."""
     import os as _os
 
     from oregonwaterdataportal_etl_spark.cdc import WatermarkStore
@@ -874,11 +879,16 @@ def test_watermark_store_migrates_legacy_pointer(spark, tmp_path):
         _os.path.join(path, legacy_dir))
     with open(_os.path.join(path, "CURRENT"), "w") as f:
         f.write(legacy_dir)
-    store = WatermarkStore(path, compact_every=100)
+    if crashed:
+        with open(_os.path.join(path, "v-00000000.json"), "w") as f:
+            f.write('{"version": 0, "base": "%s", "deltas": []}' % legacy_dir)
+    store = WatermarkStore(path, compact_every=100, commit_mode=mode)
     assert store.exists()
     assert _wm_rows(spark, store) == {"s1": 42.0}
     store.update(spark.createDataFrame([("s2", 7.0)], ["conv_id", "wm"]))
     assert _wm_rows(spark, store) == {"s1": 42.0, "s2": 7.0}
+    reopened = WatermarkStore(path, compact_every=100, commit_mode=mode)
+    assert _wm_rows(spark, reopened) == {"s1": 42.0, "s2": 7.0}
 
 
 def test_xlsx_date1904_system(spark, tmp_path):
