@@ -86,6 +86,11 @@ class CdcRunner:
         (duplicate-batch replay -> no-op, the reference's run-twice
         invariant, userCode/wrd/dag_test.py:113-216) or empty (the
         offset watermark still advances; no table snapshot is written).
+
+        The runner never scans the batch itself: the apply reports an
+        empty batch (``result.empty``) from the scans it runs anyway
+        (DESIGN.md §4, "What a window runs"). So a MOR window reads its
+        change files once and a cow window twice.
         """
         batch_id = batch_id_for_window(self.offsets.source_id, lsn_lo, lsn_hi)
         if self.manifests.is_committed(batch_id):
@@ -109,13 +114,6 @@ class CdcRunner:
         batch = src.filter(
             (F.col(self.lsn_col) >= lsn_lo) & (F.col(self.lsn_col) <= lsn_hi)
         )
-        if batch.isEmpty():
-            # sparse LSN space: advance the watermark without churning
-            # a table snapshot per empty window
-            self.manifests.begin(batch_id, lsn_lo, lsn_hi)
-            self.manifests.commit(batch_id, {"empty": True})
-            self.offsets.commit(lsn_hi, batch_id)
-            return None
         self.manifests.begin(batch_id, lsn_lo, lsn_hi)
         # retry through snapshot-version races with concurrent
         # maintenance commits: each attempt re-reads CURRENT inside
@@ -123,6 +121,12 @@ class CdcRunner:
         # vacuum-safe. Safe to repeat — the LSN guard makes a replayed
         # merge a no-op for rows the winner already applied.
         result = self._with_commit_retry(lambda: self._apply(batch, lsn_lo, lsn_hi))
+        if result.empty:
+            # sparse LSN space: advance the watermark without churning
+            # a table snapshot per empty window
+            self.manifests.commit(batch_id, {"empty": True})
+            self.offsets.commit(lsn_hi, batch_id)
+            return None
         self.manifests.commit(batch_id, result.as_dict())
         self.offsets.commit(lsn_hi, batch_id)
         if self.compact_every:
@@ -172,24 +176,26 @@ class CdcRunner:
         register into the same bucketed table — _zx_base_tomb_side), so
         a runner switching from mor to cow needs no compact() first;
         only mor-mode windows themselves fall back to the ordinary
-        append path."""
+        append path. A zero-exchange window with no file in range is
+        empty by its footers alone: no job runs."""
         use_zx = (
             getattr(self.source, "prebucketed", False)
             and self.mode == "cow"
         )
         if use_zx:
             reg = self.source.pruned_dir(lsn_lo, lsn_hi)
-            if reg is not None:
-                import shutil
+            if reg is None:
+                return MergeResult(version=self.table.current_version(), empty=True)
+            import shutil
 
-                try:
-                    return self.table.merge_prebucketed(
-                        self.source.spark, reg,
-                        op_col=self.op_col, lsn_col=self.lsn_col,
-                        lsn_range=(lsn_lo, lsn_hi),
-                    )
-                finally:
-                    shutil.rmtree(reg, ignore_errors=True)
+            try:
+                return self.table.merge_prebucketed(
+                    self.source.spark, reg,
+                    op_col=self.op_col, lsn_col=self.lsn_col,
+                    lsn_range=(lsn_lo, lsn_hi),
+                )
+            finally:
+                shutil.rmtree(reg, ignore_errors=True)
         return self.table.merge(
             batch, op_col=self.op_col, lsn_col=self.lsn_col, mode=self.mode,
         )

@@ -40,14 +40,13 @@ a queryable, incrementally-maintained table.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .table import LakeTable
+from .table import LakeTable, _next_snapshot
 
 _KINDS = ("sum", "count", "count_if")
 _NROWS = "__nrows"
@@ -190,14 +189,13 @@ class IncrementalAggView:
         if n_groups == 0:
             # maintenance-only churn (compact/rebucket): nothing to
             # apply, but the watermark must still advance — commit a
-            # zero-row merge if the view exists, else just wait.
+            # metadata-only snapshot if the view exists (an empty merge
+            # commits nothing), else just wait.
             if vt is not None:
-                empty = spark.createDataFrame([], self._batch_schema(delta))
-                vt.merge(
-                    empty,
-                    _operation_label="incr-refresh",
-                    _summary_extra={"synced_source_version": v2},
-                )
+                vt._commit(_next_snapshot(
+                    vt.snapshot(),
+                    {"operation": "incr-refresh", "synced_source_version": v2},
+                ))
             return {"from": v1, "to": v2, "groups_changed": 0}
 
         if vt is None:
@@ -271,21 +269,6 @@ class IncrementalAggView:
             _summary_extra={"synced_source_version": v2},
         )
         return {"from": v1, "to": v2, "groups_changed": n_groups}
-
-    def _batch_schema(self, delta: DataFrame) -> T.StructType:
-        g = [f for f in delta.schema.fields if f.name == self.group_col]
-        vt = self._view_table()
-        stored = T.StructType.fromJson(json.loads(vt.snapshot()["schema"]))
-        by_name = {f.name: f.dataType for f in stored.fields}
-        return T.StructType(
-            g
-            + [T.StructField(_NROWS, T.LongType())]
-            + [T.StructField(s.name, by_name[s.name]) for s in self.specs]
-            + [
-                T.StructField("op", T.StringType()),
-                T.StructField("lsn", T.LongType()),
-            ]
-        )
 
     # -------------------------------------------------- oracle helper
     def recompute(self, spark: SparkSession, source: LakeTable) -> DataFrame:

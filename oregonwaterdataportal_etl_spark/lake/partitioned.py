@@ -115,7 +115,8 @@ _ROW_COUNTERS = ("rows_inserted", "rows_updated", "rows_deleted",
 class PartitionedMergeResult:
     """Aggregate of one multi-partition MERGE: the new ROOT version,
     per-partition child results, and summed row counters (north_rule:
-    per-partition lineage and row-count metrics, here literally)."""
+    per-partition lineage and row-count metrics, here literally).
+    ``empty``: no child took a row, so no root snapshot was written."""
 
     version: int
     partitions: dict[str, dict] = field(default_factory=dict)
@@ -125,6 +126,7 @@ class PartitionedMergeResult:
     rows_noop: int = 0
     rows_dropped: int = 0
     rows_delta: int = 0
+    empty: bool = False
 
     def as_dict(self) -> dict:
         return {
@@ -375,7 +377,8 @@ class PartitionedLakeTable(ChainedTable):
 
         Returns the children's results folded for the caller's root
         commit: each child's committed version (the vector to pin), its
-        per-partition result, and the summed row counters."""
+        per-partition result, and the summed row counters. A child whose
+        merge was empty committed nothing and is left out."""
         env = os.environ.get("SPARK_GRAFT_TREE_PARALLELISM")
         par = max(1, min(int(env) if env else 4, len(values)))
         if par == 1:
@@ -388,6 +391,8 @@ class PartitionedLakeTable(ChainedTable):
         pinned: dict[str, int] = {}
         for v in values:
             res = results[v]
+            if res.empty:
+                continue
             pinned[v] = res.version
             out.partitions[v] = res.as_dict()
             for k in _ROW_COUNTERS:
@@ -425,7 +430,7 @@ class PartitionedLakeTable(ChainedTable):
         if not pstats:
             # empty batch: no child changed, so no root snapshot either
             # (repeated empty applies must not churn root history)
-            return PartitionedMergeResult(version=snap["version"])
+            return PartitionedMergeResult(version=snap["version"], empty=True)
         if any(r["__p"] is None for r in pstats):
             n = sum(r["count"] for r in pstats if r["__p"] is None)
             raise ValueError(
@@ -489,7 +494,10 @@ class PartitionedLakeTable(ChainedTable):
         This is the at-scale steady state composed: time routing
         bounds WHICH base files participate (O(active days)), the
         bucketed layout removes the resolve shuffle on top of that.
-        One root commit pins the final vector."""
+        One root commit pins the final vector. Days whose slice holds no
+        row inside ``lsn_range`` commit nothing and are not pinned; if
+        no day took a row, no root snapshot is written either
+        (``empty=True``)."""
         snap = self.snapshot()
         try:
             names = sorted(os.listdir(source_path))
@@ -534,15 +542,14 @@ class PartitionedLakeTable(ChainedTable):
             )
         out, pinned = self._apply_children(values, apply_one)
 
-        if pinned:
-            out.version = self._pin_commit(
-                pinned,
-                {"operation": "merge_prebucketed",
-                 "touched_partitions": values},
-                add_missing=True,
-            )["version"]
-        else:
-            out.version = snap["version"]
+        if not pinned:
+            return PartitionedMergeResult(version=snap["version"], empty=True)
+        out.version = self._pin_commit(
+            pinned,
+            {"operation": "merge_prebucketed",
+             "touched_partitions": sorted(pinned)},
+            add_missing=True,
+        )["version"]
         return out
 
     # ---------------------------------------------------------- read

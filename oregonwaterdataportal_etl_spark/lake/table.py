@@ -641,7 +641,8 @@ def _lww_order(lsn, tb1, tb2, src=None) -> list["F.Column"]:
 
 
 def _lww_top1(df: DataFrame, key_cols: list[str], lsn, tb1, tb2, src=None,
-              kh=None, full_frame: dict | None = None) -> DataFrame:
+              kh=None, full_frame: dict | None = None,
+              radix: bool = True) -> DataFrame:
     """THE per-key LWW window: each key's first row in the _lww_order
     total order. The incoming batch (LakeTable._resolve_batch), the
     stored versions (LakeTable._side_winners) and cdc.apply.lww_dedup
@@ -649,11 +650,15 @@ def _lww_top1(df: DataFrame, key_cols: list[str], lsn, tb1, tb2, src=None,
     keys is the same grouping, but the per-task sort leads with an
     8-byte numeric radix prefix instead of comparing key strings;
     ``kh`` is that prefix as an already-materialized column (default:
-    the expression). ``full_frame`` maps output names to
-    order-independent aggregates over the same spec's unbounded frame,
-    so they share the rank's one Window operator."""
+    the expression). ``radix=False`` groups by the keys alone: the sort
+    is then [keys, _lww_order], which also satisfies a sort-merge join
+    on the keys above the window, so that join sorts nothing again.
+    ``full_frame`` maps output names to order-independent aggregates
+    over the same spec's unbounded frame, so they share the rank's one
+    Window operator."""
     keys = [F.col(c) for c in key_cols]
-    w = Window.partitionBy(F.xxhash64(*keys) if kh is None else kh, *keys).orderBy(
+    prefix = [F.xxhash64(*keys) if kh is None else kh] if radix else []
+    w = Window.partitionBy(*prefix, *keys).orderBy(
         *_lww_order(lsn, tb1, tb2, src=src)
     )
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -859,7 +864,9 @@ def _list_buckets(out_dir: str, sub: str = "") -> dict[str, list[str]]:
 @dataclass
 class MergeResult:
     """Counts + lineage for one MERGE (north_rule: per-partition
-    lineage and row-count metrics)."""
+    lineage and row-count metrics). ``empty``: the batch held no row,
+    so the merge committed nothing and ``version`` is the unchanged
+    current one."""
 
     version: int
     rows_inserted: int = 0
@@ -870,6 +877,7 @@ class MergeResult:
     rows_delta: int = 0  # merge-on-read: deduped events appended
     touched_buckets: list[int] = field(default_factory=list)
     partition_counts: dict[int, int] = field(default_factory=dict)
+    empty: bool = False
 
     def as_dict(self) -> dict:
         return {
@@ -1081,13 +1089,16 @@ class LakeTable(ChainedTable):
         if set(key_values) != set(key_cols):
             raise ValueError(f"lookup requires exactly the key columns {key_cols}")
         schema = T.StructType.fromJson(json.loads(snap["schema"]))
-        key_fields = [f for f in schema.fields if f.name in key_cols]
-        row = tuple(key_values[f.name] for f in key_fields)
-        probe = spark.createDataFrame([row], T.StructType(key_fields))
-        # one 1-row job: the bucket function is Spark's hash — computing
-        # it anywhere else would risk divergence from the layout; the
-        # bloom limbs ride the same job (same reason: xxhash64 must be
-        # Spark's, bit-for-bit, or probes would diverge from builds)
+        # the bucket function is Spark's hash — computing it anywhere
+        # else would risk divergence from the layout; the bloom limbs
+        # ride the same select (same reason: xxhash64 must be Spark's,
+        # bit-for-bit, or probes would diverge from builds). Over a
+        # one-row VALUES relation, literals cast to the stored key types
+        # fold in Spark's optimizer into a local relation: no job
+        probe = spark.sql("VALUES (1)").select(*[
+            F.lit(key_values[f.name]).cast(f.dataType).alias(f.name)
+            for f in schema.fields if f.name in key_cols
+        ])
         h1c, h2c = bloom_hash_cols(key_cols)
         pr = probe.select(self._bucket_expr(snap).alias("b"), h1c, h2c).collect()[0]
         blooms = use_blooms and os.path.isdir(self.bloom_dir)
@@ -1350,13 +1361,17 @@ class LakeTable(ChainedTable):
             f"chg-v{v1}-v{v2}", [_side_maps(snap1), _side_maps(snap2)], build
         )
         # each version's per-key winner (base, tombstones and pending
-        # deltas) from its own bucketed scan: one candidate struct per key
+        # deltas) from its own bucketed scan: one candidate struct per key.
+        # The dedup window sorts by the keys first (radix=False), so the
+        # sort-merge join below finds each side already in key order and
+        # a side with pending deltas sorts once, not twice
         sides = {}
         for side, snap in (("to", snap2), ("from", snap1)):
             bt_dir = os.path.join(reg_root, side)
             if os.path.isdir(bt_dir):
                 sides[side] = self._zx_base_tomb_side(
-                    spark, snap, bt_dir, f"{reg}_{side}", key_cols, nonkey
+                    spark, snap, bt_dir, f"{reg}_{side}", key_cols, nonkey,
+                    radix=False,
                 ).select(*key_cols, F.col("__cand_b").alias(f"__{side}"))
         if "from" in sides:
             sides["from"] = sides["from"].filter(
@@ -1660,7 +1675,11 @@ class LakeTable(ChainedTable):
         predicate then skips whole row groups inside the bucket file
         (Iceberg's sort-order-on-rewrite analog). Used by compact():
         maintenance pays the local sort once so the serving reads skip
-        forever after."""
+        forever after.
+
+        A write of no row leaves no dir behind and returns {}."""
+        import shutil
+
         key_cols = snap["key_cols"]
         out_dir = os.path.join(self.data_dir, f"{prefix}-{uuid.uuid4().hex}")
         if not pre_partitioned:
@@ -1682,7 +1701,10 @@ class LakeTable(ChainedTable):
             # skip-scans (and the knob the clustering tests pin)
             writer = writer.option("parquet.block.size", str(row_group_bytes))
         writer.parquet(out_dir)
-        return _list_buckets(out_dir)
+        files = _list_buckets(out_dir)
+        if not files:
+            shutil.rmtree(out_dir, ignore_errors=True)  # nothing to reference
+        return files
 
     def max_lsn(self, spark: SparkSession) -> int:
         """Highest applied LSN across base, delta and tombstone files —
@@ -1932,6 +1954,13 @@ class LakeTable(ChainedTable):
         per-bucket delta files (delete tombstones included); reads and
         compact() resolve. Write-optimized: apply cost is independent
         of table size (the Hudi-MOR / Iceberg-v2-deletes pattern).
+
+        An empty batch commits nothing and returns ``empty=True`` with
+        the current version, and no write dir is left behind. The merge
+        finds it out from the scans it runs anyway: cow's touched-bucket
+        pass finds no bucket (on a first load, which skips that pass,
+        the write produces no file), and mor's resolve+write job writes
+        no delta file. So mor scans the batch once and cow twice.
         """
         spark = updates.sparkSession
         snap = self.snapshot()
@@ -1943,12 +1972,6 @@ class LakeTable(ChainedTable):
         )
         evolved = self.evolve_schema(snap, payload_fields)
 
-        # -- partition pruning: which buckets does the batch touch? -
-        # One cheap pass over the batch (bucket ids only). Skipped when
-        # the table is completely empty (no base files AND no deltas) —
-        # nothing to prune, save the scan. With deltas present the real
-        # touched set matters: only touched buckets' deltas get folded
-        # and cleared (selective compaction depends on this).
         # pass the already-parsed snapshot everywhere below: the manifest
         # JSON can carry thousands of file paths, and merge is the hot
         # apply path — don't re-parse it per helper (round-2 advice)
@@ -1971,28 +1994,39 @@ class LakeTable(ChainedTable):
         for c in key_cols:
             if c in upd_types and upd_types[c] != stored_keys[c]:
                 upd = upd.withColumn(c, F.col(c).cast(stored_keys[c]))
-        # The same pass notes whether any key value is null: the cow
-        # join cannot match those (see _zx_winners).
+
+        # -- merge-on-read fast path --------------------------------
+        # Apply cost independent of table size: dedup the batch alone
+        # (one shuffle of the BATCH, no base read), append per-bucket
+        # delta files with op tombstones; reads/compaction resolve. It
+        # needs no touched set, so it skips the pass below.
+        if mode == "mor":
+            return self._merge_mor(
+                spark, snap, upd, evolved, op_col, lsn_col, bexpr,
+                _summary_extra=_summary_extra,
+            )
+
+        # -- partition pruning: which buckets does the batch touch? -
+        # One cheap pass over the batch (bucket ids only), which also
+        # answers emptiness. Skipped when the table is completely empty
+        # (no base files AND no deltas) — nothing to prune, save the
+        # scan. With deltas present the real
+        # touched set matters: only touched buckets' deltas get folded
+        # and cleared (selective compaction depends on this). The same
+        # pass notes whether any key value is null: the cow join cannot
+        # match those (see _zx_winners).
         null_keys = False
         if any(snapshot_files(snap)):
             keyed = _and_all([F.col(c).isNotNull() for c in key_cols])
             bstats = (
                 upd.groupBy(bexpr.alias("b")).agg(F.max(~keyed).alias("nk")).collect()
             )
+            if not bstats:
+                return MergeResult(version=snap["version"], empty=True)
             touched = sorted(r["b"] for r in bstats)
             null_keys = any(r["nk"] for r in bstats)
         else:
             touched = list(range(n_buckets))
-
-        # -- merge-on-read fast path --------------------------------
-        # Apply cost independent of table size: dedup the batch alone
-        # (one shuffle of the BATCH, no base read), append per-bucket
-        # delta files with op tombstones; reads/compaction resolve.
-        if mode == "mor":
-            return self._merge_mor(
-                spark, snap, upd, evolved, op_col, lsn_col, bexpr,
-                _summary_extra=_summary_extra,
-            )
 
         # -- THE one shuffle: the batch alone -------------------------
         # _resolve_batch's repartition(num_buckets, keys), on keys
@@ -2037,8 +2071,9 @@ class LakeTable(ChainedTable):
         __cand_u side; it may register its own bucketed tables under
         ``reg_root`` and append their names to ``tables``. None is the
         delta fold: no batch, the base side's winners pass through.
-        ``null_keys`` says the batch may hold a null key value
-        (_zx_winners)."""
+        A batch side that contributes no key is an empty merge, which
+        commits nothing (_finalize_cow). ``null_keys`` says the batch
+        may hold a null key value (_zx_winners)."""
         import shutil
 
         key_cols: list[str] = snap["key_cols"]
@@ -2065,6 +2100,7 @@ class LakeTable(ChainedTable):
                 spark, snap, evolved, winners, touched,
                 _operation_label=_operation_label,
                 _summary_extra=_summary_extra,
+                batch=upd is not None,
             )
         finally:
             for name in tables:
@@ -2083,12 +2119,19 @@ class LakeTable(ChainedTable):
         touched: list[int],
         _operation_label: str = "merge",
         _summary_extra: dict | None = None,
+        batch: bool = True,
     ) -> MergeResult:
         """Shared copy-on-write tail: winners (columns = decoded payload
-        + __lsn/__tb1/__tb2/__op/__src/__all_chg, one storage bucket per
-        task) -> action classification -> single-pass bucketed write
-        with observed metrics -> snapshot commit. Called only by
-        _cow_commit."""
+        + __lsn/__tb1/__tb2/__op/__src/__all_chg/__in_u, one storage
+        bucket per task) -> action classification -> single-pass
+        bucketed write with observed metrics -> snapshot commit. Called
+        only by _cow_commit.
+
+        With ``batch`` (a merge, not the delta fold) the write job also
+        counts the keys the batch contributed (__in_u); none means an
+        empty batch — a first load's write of no file, or a
+        merge_prebucketed window whose WAL files hold no row inside its
+        LSN range — and the write dir is removed, nothing committed."""
         # -- single-pass write + metrics ----------------------------
         # ONE Spark job writes everything: surviving rows land in
         # _del=false; winning deletes AND carried tombstones land in
@@ -2121,7 +2164,10 @@ class LakeTable(ChainedTable):
             action.alias(_ACTION_COL),
             self._bucket_expr(snap).alias(_BUCKET_COL),
             F.col("__op").isin(_OP_DELETE, _OP_TOMBSTONE).alias(_DEL_COL),
+            F.col("__in_u"),
         )
+        import shutil
+
         from pyspark.sql import Observation
 
         _ACTS = ("insert", "update", "delete", "noop", "dropped")
@@ -2132,7 +2178,8 @@ class LakeTable(ChainedTable):
                 F.count(F.when(F.col(_ACTION_COL) == a, 1)).alias(a)
                 for a in _ACTS
             ],
-        )
+            F.count(F.when(F.col("__in_u"), 1)).alias("batch"),
+        ).drop("__in_u")
         out_dir = os.path.join(self.data_dir, f"w-{uuid.uuid4().hex}")
         # rows are already clustered one-bucket-per-task: the batch's
         # repartition and the bucketed base scan share the bucket
@@ -2141,6 +2188,15 @@ class LakeTable(ChainedTable):
 
         new_files = _list_buckets(out_dir, f"{_DEL_COL}=false")
         new_tombs = _list_buckets(out_dir, f"{_DEL_COL}=true")
+        counts = {}
+        if new_files or new_tombs:
+            # the write job already ran (files exist), so the observed
+            # metrics are final; a write of no file wrote no row, so
+            # every count, the batch's included, is 0
+            counts = {k: v for k, v in ob.get.items() if v}
+        if batch and not counts.get("batch"):
+            shutil.rmtree(out_dir, ignore_errors=True)
+            return MergeResult(version=snap["version"], empty=True)
         # -- non-deterministic-source guard --------------------------
         # `updates` is evaluated twice (touched-bucket scan, then
         # resolve/write). A non-deterministic source whose later
@@ -2160,12 +2216,6 @@ class LakeTable(ChainedTable):
                 f"localCheckpoint() it before merge()"
             )
         part_counts = {int(b): len(fl) for b, fl in new_files.items()}
-        counts = {}
-        if new_files or new_tombs:
-            # the write job already ran (files exist), so the observed
-            # metrics are final; the guard keeps the empty-write case
-            # identical to the old read-back behavior
-            counts = {k: v for k, v in ob.get.items() if v}
 
         # carry untouched buckets forward (copy-on-write pruning);
         # deltas and tombstones of touched buckets were folded in and
@@ -2256,7 +2306,7 @@ class LakeTable(ChainedTable):
 
     def _zx_base_tomb_side(
         self, spark, snap: dict, bt_dir: str, name: str,
-        key_cols: list[str], nonkey: list,
+        key_cols: list[str], nonkey: list, radix: bool = True,
     ) -> DataFrame:
         """Base rows, tombstones AND pending MOR delta files (linked
         under ``bt_dir`` by _link_base_tomb) registered as ONE bucketed
@@ -2282,7 +2332,8 @@ class LakeTable(ChainedTable):
         __had_bt carries the __all_chg semantics (is there a base or
         tombstone row for the key?): a delta-only key still counts as
         all-changed, so insert-vs-update / delete-vs-dropped metrics
-        do not depend on whether the earlier events were compacted."""
+        do not depend on whether the earlier events were compacted.
+        ``radix`` goes to that window (_lww_top1)."""
         from . import bucketed as B
 
         part_schema = T.StructType(
@@ -2301,7 +2352,7 @@ class LakeTable(ChainedTable):
                 F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
                 extra=(F.lit(True).alias("__had_bt"),),
             ).withColumnRenamed("__cand", "__cand_b")
-        return self._side_winners(bt, key_cols, nonkey)
+        return self._side_winners(bt, key_cols, nonkey, radix=radix)
 
     @staticmethod
     def _side_stored(snap: dict, side: str | None = None) -> T.StructType:
@@ -2329,7 +2380,7 @@ class LakeTable(ChainedTable):
 
     @classmethod
     def _side_winners(cls, df: DataFrame, key_cols: list[str],
-                      nonkey: list) -> DataFrame:
+                      nonkey: list, radix: bool = True) -> DataFrame:
         """THE per-key LWW resolve of base, tombstone and delta rows: one
         winner per key, as the __cand_b candidate struct plus __had_bt.
         ``df`` holds _side_stored columns plus ``side`` ('b' base, 't'
@@ -2340,11 +2391,14 @@ class LakeTable(ChainedTable):
         HashPartitioning or a coalesce(1)'s SinglePartition satisfies
         the window — so the resolve adds no Exchange. The __had_bt max
         shares the rank's window spec (_lww_top1's ``full_frame``), so
-        the plan holds one Window operator."""
+        the plan holds one Window operator. ``radix=False`` (the
+        changelog) sorts by the keys first, for the sort-merge join
+        above."""
         src = F.when(F.col("side") == "d", F.lit(1)).otherwise(F.lit(0))
         bt1 = _lww_top1(
             df, key_cols, LSN_COL, _TB1_COL, _TB2_COL, src=src,
             full_frame={"__had_bt": F.max(F.col("side") != "d")},
+            radix=radix,
         )
         return cls._zx_cand(
             bt1, src, F.col(LSN_COL), _side_op(),
@@ -2365,7 +2419,8 @@ class LakeTable(ChainedTable):
         same bucket count (merge()) reports the same partitioning, so
         the join adds no exchange there either. Output columns are
         _finalize_cow's contract: payload +
-        __lsn/__tb1/__tb2/__op/__src/__all_chg.
+        __lsn/__tb1/__tb2/__op/__src/__all_chg, and __in_u (the batch
+        side holds the key, whether or not it won).
 
         upd_side=None is the delta-FOLD degenerate case (zero-exchange
         compaction): no update batch at all, the base/tomb/delta side's
@@ -2383,6 +2438,7 @@ class LakeTable(ChainedTable):
             raise ValueError(
                 "_zx_winners needs an update side, a base side, or both"
             )
+        in_u = F.col("__cand_u").isNotNull() if upd_side is not None else F.lit(False)
         if base_side is None:
             joined, winner = upd_side, F.col("__cand_u")
             base_side_present = F.lit(False)
@@ -2410,6 +2466,7 @@ class LakeTable(ChainedTable):
             winner["op"].alias("__op"),
             F.when(winner["ns"] == 0, 0).otherwise(1).alias("__src"),
             F.when(base_side_present, 0).otherwise(1).alias("__all_chg"),
+            in_u.alias("__in_u"),
         )
 
     # ------------------------------------------- zero-exchange merge
@@ -2470,7 +2527,10 @@ class LakeTable(ChainedTable):
 
         lsn_range=(lo, hi) applies the runner's window predicate inside
         the bucketed scan (filters do not disturb the reported
-        partitioning)."""
+        partitioning). WAL files can straddle the window and still hold
+        no row inside it: the write job then counts no batch key, and
+        the merge commits nothing (``empty=True``), like an empty
+        merge()."""
         from . import bucketed as B
 
         snap = self.snapshot()
@@ -2479,7 +2539,7 @@ class LakeTable(ChainedTable):
         wal_files = B.collect_wal_files(source_path)
         touched = sorted(int(b) for b in wal_files)
         if not touched:
-            return MergeResult(version=snap["version"])
+            return MergeResult(version=snap["version"], empty=True)
         if touched[-1] >= n_buckets:
             raise ValueError(
                 f"WAL bucket id {touched[-1]} >= table num_buckets "
@@ -2584,7 +2644,8 @@ class LakeTable(ChainedTable):
         per-bucket delta files carrying (_lsn, _op). No base read, no
         base rewrite. Dict columns ride the batch's exchange as codes.
         The resolve's repartition already clustered the batch one bucket
-        per task, so the delta files write with no second exchange."""
+        per task, so the delta files write with no second exchange. A
+        write of no delta file is an empty batch: nothing commits."""
         dicts = snap.get("dict_cols") or {}
         winners = self._resolve_batch(
             self._tag_batch(upd, snap, evolved, op_col, lsn_col, dicts),
@@ -2603,6 +2664,8 @@ class LakeTable(ChainedTable):
             bexpr.alias(_BUCKET_COL),
         )
         new_delta = self._write_buckets(out, snap, prefix="d", pre_partitioned=True)
+        if not new_delta:
+            return MergeResult(version=snap["version"], empty=True)
         # footer row counts, not a Spark count() job: the old full
         # re-read of every just-written delta file was pure metrics
         # overhead on the hot MOR apply path (round-3 bench finding)

@@ -47,11 +47,11 @@ def start_cdc_stream(
     src = spark.readStream.schema(schema).parquet(stream_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         bounds = batch_df.agg(
             F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
         ).collect()[0]
+        if bounds["lo"] is None:
+            return  # empty micro-batch: the bounds job already says so
         bid = batch_id_for_window("stream", bounds["lo"], bounds["hi"])
         if manifests.is_committed(bid):
             return
@@ -163,11 +163,11 @@ def start_cdc_stream_zx(
     src = reader.parquet(stream_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         bounds = batch_df.agg(
             F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
         ).collect()[0]
+        if bounds["lo"] is None:
+            return  # empty micro-batch: the bounds job already says so
         bid = batch_id_for_window("stream-zx", bounds["lo"], bounds["hi"])
         if manifests.is_committed(bid):
             return
@@ -285,10 +285,10 @@ def start_envelope_stream(
         state_dir = os.path.join(pending_dir, f"state-{batch_id}")
         still.write.mode("overwrite").parquet(state_dir)
         # manifest-gated merge last
-        if not ready.isEmpty():
-            bounds = ready.agg(
-                F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-            ).collect()[0]
+        bounds = ready.agg(
+            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
+        ).collect()[0]
+        if bounds["lo"] is not None:
             bid = batch_id_for_window("stream-env", bounds["lo"], bounds["hi"])
             if not manifests.is_committed(bid):
                 manifests.begin(bid, bounds["lo"], bounds["hi"])
@@ -402,11 +402,11 @@ def replay_dlq(
         "txn_id", "txn_total_order", "txn_event_count", "value", "_dlq_reason"
     )
     recovered = 0
-    if not ready.isEmpty():
-        bounds = ready.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-        ).collect()[0]
-        recovered = ready.count()
+    bounds = ready.agg(
+        F.min("lsn").alias("lo"), F.max("lsn").alias("hi"), F.count("*").alias("n")
+    ).collect()[0]
+    if bounds["n"]:
+        recovered = bounds["n"]
         bid = batch_id_for_window("dlq-replay", bounds["lo"], bounds["hi"])
         if manifests is None:
             table.merge(ready, mode=mode)

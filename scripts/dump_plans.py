@@ -189,7 +189,9 @@ def changelog_plan(spark, tmp):
     """read_changes between two versions: each version's touched
     buckets register as one bucketed table (base, tombstones, pending
     deltas), and the two per-key winner sides join full-outer in place:
-    a sort-merge join on plain key equality with no Exchange."""
+    a sort-merge join on plain key equality with no Exchange. The
+    to-version carries MOR deltas, so its side shows the dedup window,
+    whose key-first sort the join reuses."""
     t = LakeTable.create(
         os.path.join(tmp, "chg"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
         num_buckets=4,
@@ -198,7 +200,8 @@ def changelog_plan(spark, tmp):
     v1 = t.current_version()
     t.merge(
         spark.createDataFrame(generate_changes_pdf(300, 100, seed=11))
-        .withColumn("lsn", F.col("lsn") + 2000)
+        .withColumn("lsn", F.col("lsn") + 2000),
+        mode="mor",
     )
     return t.read_changes(spark, v1)
 
@@ -213,11 +216,9 @@ def lww_dedup_plan(spark):
     )
 
 
-def main() -> None:
-    import tempfile
-
-    spark = get_spark(app_name="plans", master="local[4]", shuffle_partitions=4)
-    tmp = tempfile.mkdtemp(prefix="plansdump_")
+def write_plans(spark, tmp: str) -> None:
+    """Build every flagship plan over tables under ``tmp`` and write
+    PLANS.md."""
     mor_read, mor_lookup = mor_read_plan(spark, tmp)
     sections = [
         (
@@ -249,6 +250,8 @@ def main() -> None:
             "read_changes: the touched buckets of both snapshots as bucketed "
             "scans -> per-key winners -> full-outer sort-merge join on the "
             "keys, which both scans' partitioning satisfies: NO Exchange. "
+            "One Sort per side: the to-side's dedup window sorts by the keys "
+            "first, and the join reuses that order. "
             "Pinned by test_changelog_joins_both_versions_in_place; scan "
             "pruning by test_changelog_scans_only_touched_buckets",
             changelog_plan(spark, tmp),
@@ -327,7 +330,20 @@ def main() -> None:
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
-    spark.stop()
+
+
+def main() -> None:
+    import shutil
+    import tempfile
+
+    spark = get_spark(app_name="plans", master="local[4]", shuffle_partitions=4)
+    tmp = tempfile.mkdtemp(prefix="plansdump_")
+    try:
+        write_plans(spark, tmp)
+    finally:
+        # the tables, WALs and registrations are only plan inputs
+        spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

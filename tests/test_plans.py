@@ -256,7 +256,9 @@ def test_changelog_joins_both_versions_in_place(spark, tmp_path):
     """read_changes joins the two versions' bucketed scans where they
     lie: no Exchange between two compacted versions, none when the
     to-version carries MOR deltas and tombstones, and with a null-keyed
-    row only the rows passing the pushed null-key filter cross one."""
+    row only the rows passing the pushed null-key filter cross one.
+    Each side sorts once: a side with pending deltas is sorted by its
+    dedup window in key order, which the sort-merge join reuses."""
     from oregonwaterdataportal_etl_spark.cdc.changegen import (
         CHANGE_SCHEMA,
         TRANSCRIPT_SCHEMA,
@@ -291,6 +293,15 @@ def test_changelog_joins_both_versions_in_place(spark, tmp_path):
     assert snap["deltas"] and snap["tombstones"]
     ch = t.read_changes(spark, v2)
     assert "Exchange" not in plan_of(ch), plan_of(ch)
+    assert len(re.findall(r"\bSort \[", plan_of(ch))) == 2, plan_of(ch)
+    assert ch.count() > 0
+    # (b') both versions carry pending deltas: still one Sort per side
+    v2d = t.current_version()
+    t.merge(batch(300, 5, 3500), mode="mor")
+    ch = t.read_changes(spark, v2d)
+    plan = plan_of(ch)
+    assert "Exchange" not in plan and plan.count("Window [") == 2, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 2, plan
     assert ch.count() > 0
 
     # (c) a null-keyed row in both versions, one of them in a MOR delta
