@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake.table import CommitConflictError, LakeTable, MergeResult
@@ -101,26 +101,8 @@ class CdcRunner:
             if lsn_hi > self.offsets.last_lsn():
                 self.offsets.commit(lsn_hi, batch_id)
             return None
-        # range-capable sources (cdc.source.LsnRangedParquetSource) hand
-        # back only the FILES whose footer lsn stats intersect the
-        # window — O(files-in-window) per window instead of K scans of
-        # the whole log. The row filter below still applies either way
-        # (footer pruning is an optimization, not a correctness
-        # dependency).
-        if getattr(self.source, "supports_range", False):
-            src = self.source(lsn_lo, lsn_hi)
-        else:
-            src = self.source()
-        batch = src.filter(
-            (F.col(self.lsn_col) >= lsn_lo) & (F.col(self.lsn_col) <= lsn_hi)
-        )
         self.manifests.begin(batch_id, lsn_lo, lsn_hi)
-        # retry through snapshot-version races with concurrent
-        # maintenance commits: each attempt re-reads CURRENT inside
-        # merge(), and the loser's orphaned write dir is age-gated
-        # vacuum-safe. Safe to repeat — the LSN guard makes a replayed
-        # merge a no-op for rows the winner already applied.
-        result = self._with_commit_retry(lambda: self._apply(batch, lsn_lo, lsn_hi))
+        result = self._apply(lsn_lo, lsn_hi)
         if result.empty:
             # sparse LSN space: advance the watermark without churning
             # a table snapshot per empty window
@@ -132,7 +114,7 @@ class CdcRunner:
         if self.compact_every:
             self._windows_since_compact += 1
             if self._windows_since_compact >= self.compact_every:
-                spark = batch.sparkSession
+                spark = SparkSession.active()
 
                 def maintain():
                     # idempotent against the current snapshot: a
@@ -165,7 +147,7 @@ class CdcRunner:
                 self._windows_since_compact = 0
         return result
 
-    def _apply(self, batch: DataFrame, lsn_lo: int, lsn_hi: int) -> MergeResult:
+    def _apply(self, lsn_lo: int, lsn_hi: int) -> MergeResult:
         """One window's merge. A ``prebucketed`` source (cdc.source.
         BucketedWalSource — a change log written in the table's own
         bucketed layout) routes cow windows through the ZERO-EXCHANGE
@@ -177,28 +159,53 @@ class CdcRunner:
         a runner switching from mor to cow needs no compact() first;
         only mor-mode windows themselves fall back to the ordinary
         append path. A zero-exchange window with no file in range is
-        empty by its footers alone: no job runs."""
+        empty by its footers alone: no job runs, and the window's files
+        are listed once (``pruned_dir``); only the ``merge()`` path
+        builds the batch frame."""
         use_zx = (
             getattr(self.source, "prebucketed", False)
             and self.mode == "cow"
         )
         if use_zx:
-            reg = self.source.pruned_dir(lsn_lo, lsn_hi)
-            if reg is None:
-                return MergeResult(version=self.table.current_version(), empty=True)
-            import shutil
+            def apply():
+                reg = self.source.pruned_dir(lsn_lo, lsn_hi)
+                if reg is None:
+                    return MergeResult(version=self.table.current_version(), empty=True)
+                import shutil
 
-            try:
-                return self.table.merge_prebucketed(
-                    self.source.spark, reg,
-                    op_col=self.op_col, lsn_col=self.lsn_col,
-                    lsn_range=(lsn_lo, lsn_hi),
+                try:
+                    return self.table.merge_prebucketed(
+                        self.source.spark, reg,
+                        op_col=self.op_col, lsn_col=self.lsn_col,
+                        lsn_range=(lsn_lo, lsn_hi),
+                    )
+                finally:
+                    shutil.rmtree(reg, ignore_errors=True)
+        else:
+            # range-capable sources (cdc.source.LsnRangedParquetSource)
+            # hand back only the FILES whose footer lsn stats intersect
+            # the window — O(files-in-window) per window instead of K
+            # scans of the whole log. The row filter below still applies
+            # either way (footer pruning is an optimization, not a
+            # correctness dependency).
+            if getattr(self.source, "supports_range", False):
+                src = self.source(lsn_lo, lsn_hi)
+            else:
+                src = self.source()
+            batch = src.filter(
+                (F.col(self.lsn_col) >= lsn_lo) & (F.col(self.lsn_col) <= lsn_hi)
+            )
+
+            def apply():
+                return self.table.merge(
+                    batch, op_col=self.op_col, lsn_col=self.lsn_col, mode=self.mode,
                 )
-            finally:
-                shutil.rmtree(reg, ignore_errors=True)
-        return self.table.merge(
-            batch, op_col=self.op_col, lsn_col=self.lsn_col, mode=self.mode,
-        )
+        # retry through snapshot-version races with concurrent
+        # maintenance commits: each attempt re-reads CURRENT inside the
+        # merge, and the loser's orphaned write dir is age-gated
+        # vacuum-safe. Safe to repeat — the LSN guard makes a replayed
+        # merge a no-op for rows the winner already applied.
+        return self._with_commit_retry(apply)
 
     def _with_commit_retry(self, fn):
         """The shared lake.table.retry_on_conflict policy, bounded by

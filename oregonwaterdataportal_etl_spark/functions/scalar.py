@@ -40,13 +40,6 @@ def deterministic_hash(col: Column | str, k: int = 10) -> Column:
     return F.when(out == 0, F.lit(1)).otherwise(out)
 
 
-def fast_hash(col: Column | str, buckets: int | None = None) -> Column:
-    """Engine-internal deterministic hash (xxhash64); optionally
-    bucketed. The scale path where md5-compat is not required."""
-    h = F.xxhash64(F.col(col) if isinstance(col, str) else col)
-    return F.pmod(h, F.lit(buckets)) if buckets else h
-
-
 def parse_pacific_to_utc(col: Column | str, formats: tuple[str, ...] = ("MM-dd-yyyy HH:mm", "MM-dd-yyyy")) -> Column:
     """F2 — multi-format local-time parse + Pacific->UTC conversion
     (reference: userCode/wrd/lib.py:131-149, userCode/util.py:66-82).
@@ -59,12 +52,6 @@ def parse_pacific_to_utc(col: Column | str, formats: tuple[str, ...] = ("MM-dd-y
     return F.to_utc_timestamp(parsed, PACIFIC)
 
 
-def epoch_millis_to_ts(col: Column | str) -> Column:
-    """F3 — unix epoch-millis int -> timestamp
-    (reference: userCode/wrd/lib.py:105-111)."""
-    return F.timestamp_millis((F.col(col) if isinstance(col, str) else col).cast("long"))
-
-
 def interval_build(start: Column | str, end: Column | str) -> Column:
     """F4 — phenomenonTime-style "start/end" ISO interval string
     (reference: userCode/wrd/lib.py:120-128)."""
@@ -72,17 +59,6 @@ def interval_build(start: Column | str, end: Column | str) -> Column:
     e = F.col(end) if isinstance(end, str) else end
     iso = lambda c: F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss'Z'")  # noqa: E731
     return F.concat_ws("/", iso(s), iso(e))
-
-
-def interval_split(col: Column | str) -> tuple[Column, Column]:
-    """F4 inverse — split "start/end" into two timestamps
-    (reference: userCode/helper_classes.py:151-156)."""
-    c = F.col(col) if isinstance(col, str) else col
-    parts = F.split(c, "/")
-    return (
-        F.to_timestamp(F.element_at(parts, 1)),
-        F.to_timestamp(F.element_at(parts, 2)),
-    )
 
 
 def synth_numeric_id(*cols: Column | str, width: int = 18) -> Column:
@@ -151,26 +127,6 @@ def json_int_field(col: Column | str, key: str) -> Column:
     quoted = "\\Q" + key.replace("\\E", "\\E\\\\E\\Q") + "\\E"
     pattern = '[{,]\\s*"' + quoted + '"\\s*:\\s*(-?\\d+)(?![.\\deE])'
     return F.regexp_extract(c, pattern, 1).try_cast("int")
-
-
-def coalesce_default(col: Column | str, default) -> Column:
-    """F11 — null-safe default (reference:
-    userCode/groundwater/wells.py:162,214 `x or 0.0`)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(default))
-
-
-def coords(lon: Column | str, lat: Column | str, elevation: Column | str | None = None) -> Column:
-    """F12 — conditional 2D/3D coordinate array (reference:
-    userCode/wrd/sta_generation.py:90-91)."""
-    x = F.col(lon) if isinstance(lon, str) else lon
-    y = F.col(lat) if isinstance(lat, str) else lat
-    if elevation is None:
-        return F.array(x, y)
-    z = F.col(elevation) if isinstance(elevation, str) else elevation
-    return F.when(z.isNotNull(), F.array(x, y, z.cast("double"))).otherwise(
-        F.array(x, y)
-    )
 
 
 def hash_split(col: Column | str, fractions: dict[str, float],

@@ -112,14 +112,6 @@ def quality_score(col: Column | str) -> Column:
     return F.round(len_band * 0.25 + alpha_ratio * 0.25 + punct_pen * 0.25 + stop * 0.25, 4)
 
 
-def fingerprint64(col: Column | str) -> Column:
-    """64-bit document fingerprint (xxhash64 of NFC-trimmed text) —
-    the exact-dedup key. For oracle-comparable fingerprints use
-    md5_prefix_fingerprint (DuckDB lacks xxhash64)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(F.trim(c))
-
-
 def md5_prefix_fingerprint(col: Column | str, hex_digits: int = 15) -> Column:
     """Cross-engine-stable fingerprint: first `hex_digits` hex chars of
     md5 as a bigint (15 hex digits < 2^60, safe in a long)."""

@@ -1056,57 +1056,35 @@ class LakeTable(ChainedTable):
         out = self._resolved_view(spark, v)
         return out.select(*columns) if columns is not None else out
 
-    @property
-    def bloom_dir(self) -> str:
-        return os.path.join(self.path, "_blooms")
-
-    def lookup(
-        self, spark: SparkSession, use_blooms: bool = True, **key_values
-    ) -> DataFrame:
+    def lookup(self, spark: SparkSession, **key_values) -> DataFrame:
         """Point read by FULL primary key with bucket pruning: the key's
         bucket is computed with the table's own hash, and only that
         bucket's base/delta/tombstone files are scanned — O(1/num_buckets)
         of the table per lookup (the serving-layer read; Iceberg analog:
         bucket-transform partition pruning on an equality predicate).
 
-        On top of the bucket, per-file key blooms (lake/bloom.py, built
-        by build_blooms) drop candidate files that provably cannot hold
-        the key — at CDC steady state a bucket holds many delta files
-        and the key lives in few, so the lookup goes from O(files in
-        bucket) to O(files containing the key) + the bloom's ~1% false
-        positives. Files without a sidecar are read conservatively;
-        use_blooms=False restores the pure bucket path.
-
         All key columns are required — the bucket hash covers the full
         key, so a partial key cannot prune (use read().filter() there).
         Null key values are matched null-safely (the layout hashes
         nulls consistently, and merge treats null-keyed rows as ordinary
         keys)."""
-        from .bloom import bloom_hash_cols, load_sidecar
-
         snap = self.snapshot()
         key_cols = snap["key_cols"]
         if set(key_values) != set(key_cols):
             raise ValueError(f"lookup requires exactly the key columns {key_cols}")
         schema = T.StructType.fromJson(json.loads(snap["schema"]))
         # the bucket function is Spark's hash — computing it anywhere
-        # else would risk divergence from the layout; the bloom limbs
-        # ride the same select (same reason: xxhash64 must be Spark's,
-        # bit-for-bit, or probes would diverge from builds). Over a
-        # one-row VALUES relation, literals cast to the stored key types
-        # fold in Spark's optimizer into a local relation: no job
+        # else would risk divergence from the layout. Over a one-row
+        # VALUES relation, literals cast to the stored key types fold in
+        # Spark's optimizer into a local relation: no job
         probe = spark.sql("VALUES (1)").select(*[
             F.lit(key_values[f.name]).cast(f.dataType).alias(f.name)
             for f in schema.fields if f.name in key_cols
         ])
-        h1c, h2c = bloom_hash_cols(key_cols)
-        pr = probe.select(self._bucket_expr(snap).alias("b"), h1c, h2c).collect()[0]
-        blooms = use_blooms and os.path.isdir(self.bloom_dir)
+        b = probe.select(self._bucket_expr(snap).alias("b")).collect()[0]["b"]
         scans: dict[str, list[str]] = {"b": [], "t": [], "d": []}
-        for side, _b, f in snapshot_files(snap, [pr["b"]]):
-            bloom = load_sidecar(self.bloom_dir, f) if blooms else None
-            if bloom is None or bloom.might_contain(pr["__bh1"], pr["__bh2"]):
-                scans[side].append(f)
+        for side, _b, f in snapshot_files(snap, [b]):
+            scans[side].append(f)
         # the predicate covers the KEY COLUMNS ONLY, so filtering below
         # the dedup window selects whole key groups and changes no winner
         pred = _and_all(
@@ -1129,75 +1107,6 @@ class LakeTable(ChainedTable):
             ),
             key_cols, schema,
         )
-
-    def build_blooms(
-        self,
-        spark: SparkSession,
-        version: int | None = None,
-        bits_per_key: int = 10,
-        k: int = 7,
-    ) -> int:
-        """Build missing per-file key bloom sidecars for a snapshot's
-        base/tombstone/delta files (maintenance op, typically after
-        merge/compact cadences). Returns the number of sidecars built.
-
-        One column-pruned scan of ONLY the files lacking a sidecar
-        (key columns + the two JVM-side xxhash64 limbs), one groupBy
-        input_file_name whose pandas stage just sets bits (vectorized),
-        and a driver collect bounded at one small row per file. Files
-        are immutable, so sidecars are deterministic and idempotent —
-        no commit protocol, concurrent builders are harmless."""
-        from .bloom import (
-            FileBloom, bloom_hash_cols, sidecar_name, write_sidecar,
-        )
-
-        v = self.current_version() if version is None else version
-        snap = self.snapshot(v)
-        key_cols = snap["key_cols"]
-        missing = [
-            f for _side, _b, f in snapshot_files(snap)
-            if not os.path.exists(os.path.join(self.bloom_dir, sidecar_name(f)))
-        ]
-        if not missing:
-            return 0
-        schema = T.StructType.fromJson(json.loads(snap["schema"]))
-        key_schema = T.StructType(
-            [f for f in schema.fields if f.name in key_cols]
-        )
-        hashed = (
-            spark.read.schema(key_schema).parquet(*missing)
-            .select(
-                F.input_file_name().alias("__file"), *bloom_hash_cols(key_cols)
-            )
-        )
-        out_schema = T.StructType(
-            [
-                T.StructField("file", T.StringType(), False),
-                T.StructField("n_keys", T.LongType(), False),
-                T.StructField("bloom", T.BinaryType(), False),
-            ]
-        )
-
-        def build(pdf):
-            import pandas as pd
-
-            blob = FileBloom.build(
-                pdf["__bh1"].to_numpy(), pdf["__bh2"].to_numpy(),
-                bits_per_key=bits_per_key, k=k,
-            ).to_bytes()
-            return pd.DataFrame(
-                {"file": [pdf["__file"].iloc[0]], "n_keys": [len(pdf)],
-                 "bloom": [blob]}
-            )
-
-        rows = hashed.groupBy("__file").applyInPandas(build, out_schema).collect()
-        # input_file_name yields URIs (file:///...); sidecar naming uses
-        # the path tail so both spellings land on the same sidecar
-        built = 0
-        for r in rows:
-            write_sidecar(self.bloom_dir, r["file"], bytes(r["bloom"]))
-            built += 1
-        return built
 
     def read_changes(
         self,
@@ -3059,25 +2968,6 @@ class LakeTable(ChainedTable):
                 except OSError:
                     pass
             self._drop_registrations(swept)
-        # sweep bloom sidecars whose data file is gone: sidecars are
-        # only ever built for COMMITTED snapshot files (the data file
-        # always exists first), so a sidecar with no on-disk parquet
-        # behind it is provably dead — no grace needed.
-        if os.path.isdir(self.bloom_dir):
-            from .bloom import sidecar_name as _scn
-
-            live_sidecars = {
-                _scn(os.path.join(root, f))
-                for root, _d, fl in os.walk(self.data_dir)
-                for f in fl
-                if f.endswith(".parquet")
-            }
-            for entry in os.listdir(self.bloom_dir):
-                if entry.endswith(".bloom") and entry not in live_sidecars:
-                    try:
-                        os.remove(os.path.join(self.bloom_dir, entry))
-                    except OSError:
-                        pass
         # expire old snapshot manifests too (never the orphans past
         # CURRENT — they roll forward at the next commit)
         self._chain.expire(s["version"] for s in expired)

@@ -564,24 +564,6 @@ def connected_components(
     return labels
 
 
-def dedup_keep_canonical(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Keep ONE document per near-dup cluster (the minimum id — the
-    deterministic canonical) and every document that appears in no
-    pair. The end-to-end near-dup dedup: pairs -> components -> filter.
-    """
-    comp = connected_components(pairs, id_a=id_a, id_b=id_b)
-    drop = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return docs.join(drop, on=id_col, how="left_anti")
-
-
 def dup_span_stats(
     df: DataFrame,
     id_col: str = "doc_id",

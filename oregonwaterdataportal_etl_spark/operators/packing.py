@@ -19,18 +19,15 @@ Scale notes (100 TB): the only shuffle is the per-shard window sort —
 shards are hash-uniform, and n_shards is chosen so one shard's token
 count fits a task (each shard is an independent stream; training
 dataloaders consume shards in parallel anyway). No driver-side state,
-no iteration; an entire corpus packs in one stage. The greedy
-never-split bin-packing variant (first-fit) is deliberately NOT the
-default: it needs sequential state per bin and underfills; cut-packing
-is what large-scale LM pipelines actually do.
+no iteration; an entire corpus packs in one stage. There is no
+never-split (first-fit) variant: it needs sequential state per bin and
+underfills; cut-packing is what large-scale LM pipelines actually do.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .dedup import MD5_PRIME, md5_base_hash
@@ -82,134 +79,3 @@ def pack_documents(
     )
     return out
 
-
-def greedy_schema(id_type: "T.DataType") -> T.StructType:
-    """Output schema for the never-split packer; the id keeps the
-    INPUT column's type (string ids are first-class, as in the cut
-    variant)."""
-    return T.StructType(
-        [
-            T.StructField("doc_id", id_type),
-            T.StructField("size", T.LongType()),
-            T.StructField("shard", T.IntegerType()),
-            T.StructField("bin_id", T.LongType()),
-            T.StructField("bin_fill", T.LongType()),
-        ]
-    )
-
-
-class _ResidualIndex:
-    """Fenwick-tree index over bin residuals in [0, capacity]:
-    find-smallest-residual >= size and update in O(log^2 capacity) —
-    the classic Best-Fit-Decreasing data structure, so packing stays
-    O(n log^2 capacity) per shard instead of the O(n x bins) a naive
-    first-fit scan costs (quadratic at corpus scale)."""
-
-    def __init__(self, capacity: int):
-        self.capacity = capacity
-        self.tree = [0] * (capacity + 2)  # Fenwick over residual counts
-        self.stacks: dict[int, list[int]] = {}  # residual -> bin ordinals
-
-    def _add(self, r: int, delta: int) -> None:
-        i = r + 1
-        while i < len(self.tree):
-            self.tree[i] += delta
-            i += i & (-i)
-
-    def _count_le(self, r: int) -> int:
-        i = r + 1
-        out = 0
-        while i > 0:
-            out += self.tree[i]
-            i -= i & (-i)
-        return out
-
-    def push(self, residual: int, ordinal: int) -> None:
-        self.stacks.setdefault(residual, []).append(ordinal)
-        self._add(residual, 1)
-
-    def pop_best_fit(self, size: int) -> int | None:
-        """Smallest residual >= size (ties: most recent ordinal —
-        deterministic given the deterministic doc order); None if no
-        open bin fits."""
-        total = self._count_le(self.capacity)
-        below = self._count_le(size - 1) if size > 0 else 0
-        if total - below <= 0:
-            return None
-        lo, hi = size, self.capacity  # binary search smallest r with count
-        while lo < hi:
-            mid = (lo + hi) // 2
-            if self._count_le(mid) - below > 0:
-                hi = mid
-            else:
-                lo = mid + 1
-        ordinal = self.stacks[lo].pop()
-        self._add(lo, -1)
-        return ordinal
-
-
-def pack_documents_greedy(
-    df: DataFrame,
-    size_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    capacity: int = 4096,
-    n_shards: int = 16,
-) -> DataFrame:
-    """NEVER-SPLIT packing variant: best-fit-decreasing within each
-    shard (documents are whole; each document lands in the open bin
-    with the least leftover room that still fits it, or opens a new
-    one). For SFT-style training where examples must not straddle
-    bins — the complement of pack_documents' cut-packing.
-
-    The per-shard packing is inherently sequential state, so it runs
-    as applyInPandas over the SAME deterministic md5 shards (one Arrow
-    batch per shard; a Fenwick-indexed residual table keeps the scan
-    O(n log^2 capacity) — size the shards so one holds ~10^5-10^6 docs
-    and the whole corpus packs in one wave of parallel shard tasks).
-    Documents larger than capacity get a bin of their own (bin_fill >
-    capacity flags them for truncation downstream); null sizes fail
-    fast with the offending ids. Deterministic: shard assignment and
-    the BFD order (size desc, id asc) are pure functions of the data.
-    Bin ids are globally unique as shard * 10^10 + local ordinal."""
-    if capacity <= 0:
-        raise ValueError("capacity must be positive")
-    if n_shards <= 0:
-        raise ValueError("n_shards must be positive")
-    shard = (md5_base_hash(F.col(id_col).cast("string")) % MD5_PRIME) % n_shards
-    sized = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(size_col).cast("long").alias("size"),
-        shard.cast("int").alias("shard"),
-    )
-    out_schema = greedy_schema(df.schema[id_col].dataType)
-
-    def pack_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["size"].isna().any():
-            bad = pdf.loc[pdf["size"].isna(), "doc_id"].head(5).tolist()
-            raise ValueError(f"null {size_col} for ids {bad}")
-        pdf = pdf.sort_values(["size", "doc_id"], ascending=[False, True])
-        shard_id = int(pdf["shard"].iloc[0])
-        fills: list[int] = []  # bin ordinal -> tokens used
-        index = _ResidualIndex(capacity)
-        assign: list[int] = []
-        for sz in (int(s) for s in pdf["size"].to_numpy()):
-            placed = index.pop_best_fit(sz) if sz <= capacity else None
-            if placed is None:
-                fills.append(0)
-                placed = len(fills) - 1
-            fills[placed] += sz
-            resid = capacity - fills[placed]
-            if resid > 0:
-                index.push(resid, placed)
-            assign.append(placed)
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "size": pdf["size"].to_numpy(),
-                "shard": shard_id,
-                "bin_id": [shard_id * 10_000_000_000 + b for b in assign],
-                "bin_fill": [fills[b] for b in assign],
-            }
-        )
-
-    return sized.groupBy("shard").applyInPandas(pack_shard, schema=out_schema)

@@ -144,12 +144,3 @@ def assert_ts_in_range(df: DataFrame, ts_col: str, start, end) -> DataFrame:
         raise ValueError(f"{bad} rows outside [{start}, {end}] in {ts_col}")
     return df
 
-
-def assert_unique(df: DataFrame, keys: list[str]) -> DataFrame:
-    """A6 — duplicate-key check (reference: date-uniqueness assert in
-    parse_oregon_tsv, userCode/wrd/lib.py:94-100; asset checks
-    userCode/wrd/dag.py:323-366)."""
-    dup = df.groupBy(*keys).count().filter(F.col("count") > 1).count()
-    if dup:
-        raise ValueError(f"{dup} duplicate keys on {keys}")
-    return df

@@ -36,20 +36,6 @@ def _assembled(order_col: str, text_col: str, sep: str) -> Column:
     )
 
 
-def conversation_text(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
-    """(conv, full_text): each conversation's turns concatenated in
-    turn order — the unit LLM training samples are cut from."""
-    return df.groupBy(conv_col).agg(
-        _assembled(order_col, text_col, sep).alias("full_text")
-    )
-
-
 def conversation_fingerprint(
     df: DataFrame,
     conv_col: str = "conv_id",

@@ -1,19 +1,15 @@
-from .stateful import conversation_progress
 from .stream import (
     read_dlq,
     replay_dlq,
     start_cdc_stream,
     start_cdc_stream_zx,
     start_envelope_stream,
-    windowed_event_counts,
 )
 
 __all__ = [
-    "conversation_progress",
     "start_cdc_stream",
     "start_cdc_stream_zx",
     "start_envelope_stream",
     "read_dlq",
     "replay_dlq",
-    "windowed_event_counts",
 ]

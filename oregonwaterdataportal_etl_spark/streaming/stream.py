@@ -447,24 +447,3 @@ def replay_dlq(
         "held": held,
     }
 
-
-def windowed_event_counts(
-    changes: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Event-time windowed aggregation with late-data watermarking —
-    works on both batch and streaming DataFrames (same plan). The
-    reference has no event-time windows (T7); this is the engine's
-    extension for stream analytics over the change feed."""
-    return (
-        changes.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("op"))
-        .agg(F.count("*").alias("events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "op",
-            "events",
-        )
-    )

@@ -49,9 +49,6 @@ def test_interval_roundtrip(spark):
     ).select(F.to_timestamp("a").alias("a"), F.to_timestamp("b").alias("b"))
     iv = df.select(scalar.interval_build("a", "b").alias("iv"))
     assert iv.collect()[0]["iv"] == "2024-01-01T00:00:00Z/2024-06-01T12:00:00Z"
-    s, e = scalar.interval_split("iv")
-    back = iv.select(s.alias("s"), e.alias("e")).collect()[0]
-    assert back["s"].strftime("%H:%M") == "00:00" and back["e"].strftime("%H:%M") == "12:00"
 
 
 def test_synth_numeric_id(spark):
@@ -76,13 +73,6 @@ def test_strip_suffix_and_unit(spark):
     )
     assert strcol(spark, "instantaneous_flow_cfs", scalar.unit_from_header) == "cfs"
     assert strcol(spark, "305m", scalar.numeric_prefix) == 305
-
-
-def test_coords_conditional(spark):
-    df = spark.createDataFrame([(1.0, 2.0, 30), (3.0, 4.0, None)], ["lon", "lat", "el"])
-    out = df.select(scalar.coords("lon", "lat", "el").alias("c")).collect()
-    assert out[0]["c"] == [1.0, 2.0, 30.0]
-    assert out[1]["c"] == [3.0, 4.0]
 
 
 def test_token_counts(spark):
@@ -118,39 +108,6 @@ def test_shingles_and_ngrams(spark):
     assert sh == ["abc", "bcd", "cde", "def"]
     ng = strcol(spark, "a b c d", lambda c: text.word_ngrams(c, 2))
     assert ng == ["a b", "b c", "c d"]
-
-
-def test_circle_polygon(spark):
-    """F9 — geodesic circle polygon pandas UDF (reference:
-    userCode/groundwater/lib.py:4-35). Verify ring shape, closure,
-    and that every vertex is ~radius meters from the center."""
-    import math
-
-    from oregonwaterdataportal_etl_spark.functions.geo import (
-        EARTH_RADIUS_M,
-        FT_TO_M,
-        circle_polygon,
-    )
-
-    df = spark.createDataFrame(
-        [(-120.0, 44.0, 1000.0), (0.0, 0.0, 328.084)], ["lon", "lat", "radius_ft"]
-    )
-    rows = df.select(
-        "lon", "lat", "radius_ft", circle_polygon("lon", "lat", "radius_ft").alias("ring")
-    ).collect()
-    for r in rows:
-        ring = r["ring"]
-        assert len(ring) == 13 and ring[0] == ring[-1]  # closed 12-gon
-        radius_m = r["radius_ft"] * FT_TO_M
-        for lon2, lat2 in ring[:-1]:
-            # haversine distance back to the center
-            p1, p2 = math.radians(r["lat"]), math.radians(lat2)
-            dlam = math.radians(lon2 - r["lon"])
-            d = math.acos(
-                min(1.0, math.sin(p1) * math.sin(p2)
-                    + math.cos(p1) * math.cos(p2) * math.cos(dlam))
-            ) * EARTH_RADIUS_M
-            assert abs(d - radius_m) < 1.0, (d, radius_m)
 
 
 # ------------------------------------------------------ json_int_field

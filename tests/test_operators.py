@@ -92,9 +92,6 @@ def test_time_range_union_asserts(spark):
         spark.createDataFrame([(1,), (2,)], ["x"]), spark.createDataFrame([(2,), (3,)], ["x"])
     )
     assert sorted(r["x"] for r in u.collect()) == [1, 2, 3]
-    relational.assert_unique(df, ["k", "t"])
-    with pytest.raises(ValueError, match="duplicate"):
-        relational.assert_unique(df, ["k"])
 
 
 # ------------------------------------------------------------------- dedup

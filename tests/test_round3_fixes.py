@@ -490,13 +490,11 @@ def test_runner_with_ranged_source_matches_plain(spark, tmp_path):
 
 # ----------------------------------- clustering + packing operators
 def test_connected_components_and_canonical_dedup(spark):
-    """Chain 1-2-3, separate pair (7,9), and a disconnected doc: the
-    chain collapses to component 1 transitively (1 and 3 never share a
-    pair), and canonical dedup keeps exactly min-per-cluster plus
-    unpaired docs."""
+    """Chain 1-2-3 and a separate pair (7,9): the chain collapses to
+    component 1 transitively (1 and 3 never share a pair), and each
+    component is labelled by its minimum id."""
     from oregonwaterdataportal_etl_spark.operators.dedup import (
         connected_components,
-        dedup_keep_canonical,
     )
 
     pairs = spark.createDataFrame(
@@ -504,11 +502,6 @@ def test_connected_components_and_canonical_dedup(spark):
     )
     comp = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
-    docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in (1, 2, 3, 5, 7, 9)], ["doc_id", "text"]
-    )
-    kept = sorted(r["doc_id"] for r in dedup_keep_canonical(docs, pairs).collect())
-    assert kept == [1, 5, 7]  # cluster minima + the unpaired doc
 
 
 def test_connected_components_long_chain_converges(spark):
@@ -559,56 +552,6 @@ def test_pack_documents_offsets_and_bins(spark):
     with_null = spark.createDataFrame([(1, 5), (2, None)], "doc_id long, n_tokens int")
     with pytest.raises(Exception, match="null n_tokens"):
         pack_documents(with_null, capacity=8, n_shards=1).collect()
-
-
-def test_pack_documents_greedy_never_splits(spark):
-    """Never-split variant: every bin respects capacity (except
-    single-oversized-doc bins), no document straddles, assignment is
-    deterministic, and all docs survive."""
-    from oregonwaterdataportal_etl_spark.operators.packing import (
-        pack_documents_greedy,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, s) for i, s in enumerate([6, 3, 5, 2, 9, 1, 4, 12])],
-        ["doc_id", "n_tokens"],
-    )
-    rows = pack_documents_greedy(docs, capacity=8, n_shards=1).collect()
-    assert sorted(r["doc_id"] for r in rows) == list(range(8))
-    by_bin: dict = {}
-    for r in rows:
-        by_bin.setdefault(r["bin_id"], []).append(r["size"])
-    for b, sizes in by_bin.items():
-        if len(sizes) == 1 and sizes[0] > 8:
-            continue  # oversized doc gets its own flagged bin
-        assert sum(sizes) <= 8, f"bin {b} overflows: {sizes}"
-    # the 9- and 12-token docs are alone in their bins, fill flags them
-    solo = {r["size"]: r["bin_fill"] for r in rows if r["size"] > 8}
-    assert solo == {9: 9, 12: 12}
-    again = sorted(map(tuple, pack_documents_greedy(docs, capacity=8, n_shards=1).collect()))
-    assert again == sorted(map(tuple, rows))
-
-
-def test_pack_documents_greedy_string_ids_and_nulls(spark):
-    """The never-split packer keeps the INPUT id type (string ids are
-    first-class, as in the cut variant) and fails fast on null sizes
-    naming the offending ids."""
-    from oregonwaterdataportal_etl_spark.operators.packing import (
-        pack_documents_greedy,
-    )
-
-    docs = spark.createDataFrame(
-        [(f"doc-{i:04d}", s) for i, s in enumerate([5, 3, 7, 2])],
-        ["doc_id", "n_tokens"],
-    )
-    rows = pack_documents_greedy(docs, capacity=8, n_shards=2).collect()
-    assert sorted(r["doc_id"] for r in rows) == [f"doc-{i:04d}" for i in range(4)]
-    assert all(isinstance(r["doc_id"], str) for r in rows)
-    bad = spark.createDataFrame(
-        [("a", 5), ("b", None)], "doc_id string, n_tokens int"
-    )
-    with pytest.raises(Exception, match="null n_tokens"):
-        pack_documents_greedy(bad, capacity=8, n_shards=1).collect()
 
 
 def test_type_widening_through_mor_deltas(spark, tmp_path):

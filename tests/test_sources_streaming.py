@@ -14,7 +14,6 @@ from oregonwaterdataportal_etl_spark.sources.readers import read_xlsx
 from oregonwaterdataportal_etl_spark.streaming import (
     start_cdc_stream,
     start_cdc_stream_zx,
-    windowed_event_counts,
 )
 
 TSV = (
@@ -238,71 +237,6 @@ def test_streaming_zx_tail(spark, tmp_path):
     a = t_zx.read(spark).orderBy("conv_id", "turn_idx").collect()
     b = t_batch.read(spark).orderBy("conv_id", "turn_idx").collect()
     assert a == b
-
-
-def test_windowed_event_counts(spark):
-    changes = generate_changes(spark, n_events=2000, n_convs=100, seed=3)
-    out = windowed_event_counts(changes, window="10 minutes", watermark="1 hour")
-    rows = out.collect()
-    assert sum(r["events"] for r in rows) == 2000
-    assert all(r["window_end"] > r["window_start"] for r in rows)
-
-
-def test_stateful_conversation_progress(spark, tmp_path):
-    """Custom stateful operator: state persists across separate
-    streaming runs through the checkpoint (restart survival)."""
-    from oregonwaterdataportal_etl_spark.cdc.changegen import CHANGE_SCHEMA
-    from oregonwaterdataportal_etl_spark.streaming.stateful import (
-        conversation_progress,
-    )
-
-    stream_dir = tmp_path / "sstream"
-    stream_dir.mkdir()
-    ckpt = str(tmp_path / "sckpt")
-
-    def run_once(tag):
-        src = spark.readStream.schema(CHANGE_SCHEMA).parquet(str(stream_dir))
-        collected = []
-
-        def sink(batch_df, batch_id):
-            collected.extend(batch_df.collect())
-
-        q = (
-            conversation_progress(src)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {r["conv_id"]: r for r in collected}
-
-    batch1 = [
-        ("insert", 1, "c1", 0, "user", "a", None, None),
-        ("insert", 2, "c1", 1, "user", "b", None, None),
-        ("insert", 3, "c2", 0, "user", "c", None, None),
-    ]
-    spark.createDataFrame(batch1, schema=CHANGE_SCHEMA).write.mode("append").parquet(
-        str(stream_dir)
-    )
-    out1 = run_once("a")
-    assert out1["c1"]["events_seen"] == 2 and out1["c1"]["turns_seen"] == 2
-    assert out1["c2"]["events_seen"] == 1
-
-    # second run: new file, fresh query, SAME checkpoint -> state resumes
-    batch2 = [
-        ("update", 10, "c1", 1, "user", "b2", None, None),
-        ("insert", 11, "c1", 2, "user", "d", None, None),
-    ]
-    spark.createDataFrame(batch2, schema=CHANGE_SCHEMA).write.mode("append").parquet(
-        str(stream_dir)
-    )
-    out2 = run_once("b")
-    assert out2["c1"]["events_seen"] == 4  # 2 + 2, state survived restart
-    assert out2["c1"]["turns_seen"] == 3
-    assert out2["c1"]["max_lsn"] == 11
-    assert "c2" not in out2  # update mode: untouched groups not re-emitted
 
 
 def test_streaming_zx_folds_pending_mor_deltas(spark, tmp_path):

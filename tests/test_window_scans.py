@@ -1,8 +1,9 @@
 """What one apply scans: an empty batch commits nothing on every merge
 path and every runner route, the runner never probes its batch itself
-(the apply reports emptiness from the scans it runs anyway), a MOR
-window reads its change files once and a cow window twice, and a lookup
-builds its frame without a Spark job."""
+(the apply reports emptiness from the scans it runs anyway), a
+zero-exchange window lists its files once and builds no batch frame, a
+MOR window reads its change files once and a cow window twice, and a
+lookup builds its frame without a Spark job."""
 
 import os
 import uuid
@@ -186,6 +187,60 @@ def test_empty_window_over_partition_tree(spark, tmp_path, no_batch_probe):
     assert r.empty and t.current_version() == v and t.partitions() == child_v
 
 
+def _counting(source_cls):
+    """A source subclass that records its ``__call__`` and ``files_for``
+    calls."""
+
+    class Counting(source_cls):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            self.calls, self.listings = [], []
+
+        def __call__(self, lo=None, hi=None):
+            self.calls.append((lo, hi))
+            return super().__call__(lo, hi)
+
+        def files_for(self, lo, hi):
+            self.listings.append((lo, hi))
+            return super().files_for(lo, hi)
+
+    return Counting
+
+
+def test_zero_exchange_window_lists_its_files_once(spark, tmp_path):
+    """A zero-exchange window never builds the batch frame: it asks the
+    source for the window's files once (pruned_dir) and merges them."""
+    wal = str(tmp_path / "wal")
+    write_bucketed_wal(
+        _events(spark, [(i, 100 + i, "insert", f"v{i}") for i in range(20)]),
+        wal, NB, ["id"],
+    )
+    t = LakeTable.create(str(tmp_path / "t"), SCHEMA, ["id"], num_buckets=NB)
+    src = _counting(BucketedWalSource)(spark, wal)
+    runner = CdcRunner(
+        t, OffsetLog(str(tmp_path / "off"), "s"), ManifestLog(str(tmp_path / "man")), src,
+    )
+    r = runner.run_window(100, 119)
+    assert r is not None and r.rows_inserted == 20
+    assert src.calls == []
+    assert src.listings == [(100, 119)]
+
+
+def test_ranged_window_builds_its_batch_once(spark, tmp_path):
+    """The merge() route asks an LsnRangedParquetSource for the window's
+    frame exactly once."""
+    log = str(tmp_path / "log")
+    _inserts(spark, range(10), 100).coalesce(1).write.parquet(log)
+    t = LakeTable.create(str(tmp_path / "t"), SCHEMA, ["id"], num_buckets=NB)
+    src = _counting(LsnRangedParquetSource)(spark, log)
+    runner = CdcRunner(
+        t, OffsetLog(str(tmp_path / "off"), "s"), ManifestLog(str(tmp_path / "man")), src,
+    )
+    r = runner.run_window(100, 109)
+    assert r is not None and r.rows_inserted == 10
+    assert src.calls == [(100, 109)]
+
+
 def _input_records(spark, group: str) -> int:
     """Rows the stages of a job group read from files."""
     sc = spark.sparkContext
@@ -233,20 +288,22 @@ def test_window_scans_its_change_files(spark, tmp_path, mode, scans):
 def test_lookup_builds_its_frame_without_a_job(spark, tmp_path):
     """The lookup's bucket probe is a literal select that Spark folds on
     the driver: building the frame runs no job, and it still finds the
-    key in its bucket, a null key included."""
+    key in its bucket, a null key included; a key deleted by a pending
+    MOR delta stays deleted."""
     t = LakeTable.create(str(tmp_path / "t"), SCHEMA, ["id"], num_buckets=NB)
     t.merge(_events(
         spark, [(i, i, "insert", f"v{i}") for i in range(1, 30)] + [(None, 40, "insert", "n")]
     ))
     t.merge(_events(spark, [(3, 50, "update", "w")]), mode="mor")
+    t.merge(_events(spark, [(5, 51, "delete", None)]), mode="mor")
     sc = spark.sparkContext
     group = f"lookup-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "lookup build")
     try:
-        frames = {k: t.lookup(spark, id=k) for k in (3, 17, None, 99)}
+        frames = {k: t.lookup(spark, id=k) for k in (3, 5, 17, None, 99)}
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert not sc.statusTracker().getJobIdsForGroup(group)
     got = {k: [r["v"] for r in f.collect()] for k, f in frames.items()}
-    assert got == {3: ["w"], 17: ["v17"], None: ["n"], 99: []}
+    assert got == {3: ["w"], 5: [], 17: ["v17"], None: ["n"], 99: []}
