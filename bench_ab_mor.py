@@ -79,11 +79,9 @@ def worker(variant: str, stream_dir: str, incr_dir: str, workdir: str) -> None:
 
         lt._rows_per_bucket = spark_count
     elif variant == "nolimb":
-        lt.LakeTable._update_tiebreak = staticmethod(
-            lambda df_cols, evolved, op_col, family="xxhash64": (
-                F.lit(None).cast("long"),
-                F.lit(None).cast("long"),
-            )
+        lt.tiebreak_cols = lambda cols, family="xxhash64": (
+            F.lit(None).cast("long"),
+            F.lit(None).cast("long"),
         )
 
     table = fresh("table")

@@ -474,13 +474,15 @@ class ChainedTable:
 
 LSN_COL = "_lsn"  # per-row last-applied LSN, the MERGE guard column
 _BUCKET_COL = "_b"
-_ACTION_COL = "_action"  # per-row merge outcome, written for metrics
+_ACTION_COL = "_action"  # per-row merge outcome, counted, never written
 _DEL_COL = "_del"  # partition dir holding tombstones (winning deletes)
 _OP_COL = "_op"  # op column persisted in merge-on-read delta files
-# equal-LSN tie-break limbs persisted in MOR delta files: computed ONCE
-# at delta-write time so the read-path resolve can order same-(key,lsn)
-# events from different batches without touching payload columns
-# (payload hashing at read time would defeat column pruning)
+# equal-LSN tie-break limbs persisted in base, tombstone and MOR delta
+# files: computed ONCE per batch row, after the merge's exchange
+# (LakeTable._resolve_batch), so every later resolve orders
+# same-(key,lsn) events from different batches without touching
+# payload columns (payload hashing at read time would defeat column
+# pruning)
 _TB1_COL = "_tb1"
 _TB2_COL = "_tb2"
 
@@ -566,8 +568,9 @@ TIEBREAK_FAMILIES = ("xxhash64", "md5")
 
 
 def tiebreak_cols(cols: list, family: str = "xxhash64") -> tuple["F.Column", "F.Column"]:
-    """(limb1, limb2) tie-break limbs over ``cols``. Evaluated map-side
-    on update rows only (16 B/row through the exchange)."""
+    """(limb1, limb2) tie-break limbs over ``cols``. The merges evaluate
+    them on batch rows only, after the batch's exchange (the limbs are
+    functions of the payload that rides it), and persist them."""
     if family == "md5":
         canon = F.concat_ws(
             _TIEBREAK_SEP,
@@ -641,23 +644,22 @@ def _lww_order(lsn, tb1, tb2, src=None) -> list["F.Column"]:
 
 
 def _lww_top1(df: DataFrame, key_cols: list[str], lsn, tb1, tb2, src=None,
-              kh=None, full_frame: dict | None = None,
+              full_frame: dict | None = None,
               radix: bool = True) -> DataFrame:
     """THE per-key LWW window: each key's first row in the _lww_order
     total order. The incoming batch (LakeTable._resolve_batch), the
     stored versions (LakeTable._side_winners) and cdc.apply.lww_dedup
     all rank here. Grouping by an xxhash64 PREFIX of the keys plus the
     keys is the same grouping, but the per-task sort leads with an
-    8-byte numeric radix prefix instead of comparing key strings;
-    ``kh`` is that prefix as an already-materialized column (default:
-    the expression). ``radix=False`` groups by the keys alone: the sort
+    8-byte numeric radix prefix instead of comparing key strings.
+    ``radix=False`` groups by the keys alone: the sort
     is then [keys, _lww_order], which also satisfies a sort-merge join
     on the keys above the window, so that join sorts nothing again.
     ``full_frame`` maps output names to order-independent aggregates
     over the same spec's unbounded frame, so they share the rank's one
     Window operator."""
     keys = [F.col(c) for c in key_cols]
-    prefix = [F.xxhash64(*keys) if kh is None else kh] if radix else []
+    prefix = [F.xxhash64(*keys)] if radix else []
     w = Window.partitionBy(*prefix, *keys).orderBy(
         *_lww_order(lsn, tb1, tb2, src=src)
     )
@@ -1358,14 +1360,15 @@ class LakeTable(ChainedTable):
         df_cols: list[str], evolved: T.StructType, op_col: str,
         family: str = "xxhash64",
     ):
-        """Equal-LSN total-order tie-break for an incoming update batch:
-        two limbs over (evolved payload values in schema order,
-        normalized op string) — the md5 family follows the exact
-        convention of cdc.apply.oracle_fold/tiebreak_py. Computed ONCE
-        map-side on the update rows only (16 B/row through the exchange
-        beats re-hashing the much larger base side post-shuffle, and
-        the MOR path persists the limbs so reads never hash payload at
-        all)."""
+        """Equal-LSN total-order tie-break limbs of a raw change batch's
+        rows: two limbs over (evolved payload values in schema order, a
+        column the batch lacks as a typed null; then the normalized op
+        string) — the md5 family follows the exact convention of
+        cdc.apply.oracle_fold/tiebreak_py. These are the limbs every
+        merge persists for a batch row; the batch kernel (_resolve_batch)
+        evaluates the same values after its exchange, over the decoded
+        payload and op code that rode it (tests/test_batch_kernel.py
+        holds the two equal)."""
         cols = [
             F.col(f.name).cast(f.dataType)
             if f.name in df_cols
@@ -1375,35 +1378,58 @@ class LakeTable(ChainedTable):
         cols.append(_op_decode(_op_code(F.col(op_col))))
         return tiebreak_cols(cols, family=family)
 
-    @staticmethod
     def _resolve_batch(
-        tagged: DataFrame, key_cols: list[str], n_buckets: int | None = None
+        self, upd: DataFrame, snap: dict, evolved: T.StructType,
+        op_col: str, lsn_col: str, n_buckets: int | None = None,
     ) -> DataFrame:
-        """THE batch resolve: per-key LWW dedup of a tagged batch
-        (_tag_batch) in the _lww_order total order, with no base side.
-        The MOR append and both copy-on-write merges (_batch_cand) dedup
-        their batch here. With ``n_buckets`` the batch first
-        repartitions on the keys into that many buckets (merge(): the
-        apply's one exchange); without, it must already be clustered by
-        key (merge_prebucketed's bucketed WAL scan reports
-        HashPartitioning(keys, n)), and the window adds no exchange.
-        A rank filter only: an over-partition metrics column would block
-        Spark's WindowGroupLimit rank pushdown, and with a pure rank
-        filter the optimizer can insert a PARTIAL top-1-per-key below
-        the exchange, so intra-batch duplicates collapse map-side before
-        riding the wire. The cow merges classify insert-vs-update in
-        their join against the bucketed base (_zx_winners)."""
-        keys = [F.col(c) for c in key_cols]
-        # the radix-prefix hash is materialized BELOW the repartition:
-        # if the window partitioned by an expression computed above the
-        # exchange, the optimizer could not push the Partial group
-        # limit under it (the partition key would not exist there)
-        ranked = tagged.withColumn("__kh", F.xxhash64(*keys))
+        """THE batch resolve: per-key LWW dedup of a change batch in the
+        _lww_order total order, with no base side. The MOR append and
+        both copy-on-write merges (_batch_cand) dedup their batch here.
+        Returns the evolved payload (dict columns decoded) plus __lsn,
+        the op code __op and the tie-break limbs __tb1/__tb2, one row
+        per key.
+
+        The batch is tagged first: the _tag_select payload, __lsn and
+        the 1-byte op code. With ``n_buckets`` the tagged batch
+        repartitions on the keys into that many buckets (merge() and the
+        MOR append: the apply's one exchange), and the table's declared
+        dict columns ride it as codes, so strings never do; without, it
+        must already be clustered by key (merge_prebucketed's bucketed
+        WAL scan reports HashPartitioning(keys, n)), and the window adds
+        no exchange.
+
+        Everything else the rank needs is a function of the tagged
+        columns, so it is computed above the exchange: the decoded dict
+        columns, the limbs (the values of _update_tiebreak, over the
+        decoded payload and op) and the window's radix prefix. Random
+        64-bit hashes do not compress: shipping the three would add half
+        again to the exchange's bytes. A rank filter only: an
+        over-partition metrics column would block Spark's
+        WindowGroupLimit rank pushdown. Spark puts a Partial limit below
+        an exchange only when the window's own distribution requirement
+        adds that exchange (cdc.apply.lww_dedup); above this explicit
+        repartition it plans the Final limit alone, wherever the hashes
+        are computed (tests/test_plans.py pins it). The cow merges
+        classify insert-vs-update in their join against the bucketed
+        base (_zx_winners)."""
+        key_cols = snap["key_cols"]
+        dicts = (snap.get("dict_cols") or {}) if n_buckets is not None else {}
+        tagged = upd.select(
+            *self._tag_select(upd.columns, evolved, dicts),
+            F.col(lsn_col).cast("long").alias("__lsn"),
+            _op_code(F.col(op_col)).alias("__op"),
+        )
         if n_buckets is not None:
-            ranked = ranked.repartition(n_buckets, *keys)
+            tagged = tagged.repartition(n_buckets, *key_cols)
+        batch = tagged.select(*self._payload_out(evolved, dicts), "__lsn", "__op")
+        t1, t2 = tiebreak_cols(
+            [F.col(f.name) for f in evolved.fields] + [_op_decode(F.col("__op"))],
+            family=snap.get("tiebreak_family", "xxhash64"),
+        )
         return _lww_top1(
-            ranked, key_cols, "__lsn", "__tb1", "__tb2", kh=F.col("__kh")
-        ).drop("__kh")
+            batch.withColumns({"__tb1": t1, "__tb2": t2}),
+            key_cols, "__lsn", "__tb1", "__tb2",
+        )
 
     def _read_internal(
         self, spark: SparkSession, snap: dict, files: list[str]
@@ -1490,37 +1516,15 @@ class LakeTable(ChainedTable):
                 out.append(src.alias(f.name))
         return out
 
-    def _tag_batch(self, upd: DataFrame, snap: dict, evolved: T.StructType,
-                   op_col: str, lsn_col: str, dicts: dict) -> DataFrame:
-        """The tagged batch _resolve_batch ranks: the _tag_select payload
-        plus __lsn, the op code __op and the tie-break limbs
-        __tb1/__tb2."""
-        t1, t2 = self._update_tiebreak(
-            upd.columns, evolved, op_col, snap.get("tiebreak_family", "xxhash64")
-        )
-        return upd.select(
-            *self._tag_select(upd.columns, evolved, dicts),
-            F.col(lsn_col).cast("long").alias("__lsn"),
-            _op_code(F.col(op_col)).alias("__op"),
-            t1.alias("__tb1"),
-            t2.alias("__tb2"),
-        )
-
     def _batch_cand(self, upd: DataFrame, snap: dict, evolved: T.StructType,
                     op_col: str, lsn_col: str, nonkey: list,
                     n_buckets: int | None = None) -> DataFrame:
         """The copy-on-write merges' batch side, as the __cand_u
-        candidate struct: tag, resolve (_resolve_batch), decode, and
-        _zx_cand. merge() passes ``n_buckets``, the batch's one
-        exchange; merge_prebucketed() passes none, since its bucketed
-        WAL scan is already clustered by key. Declared dict columns ride
-        as codes only when an exchange follows, so strings never ride
-        it."""
-        dicts = (snap.get("dict_cols") or {}) if n_buckets else {}
-        batch = self._resolve_batch(
-            self._tag_batch(upd, snap, evolved, op_col, lsn_col, dicts),
-            snap["key_cols"], n_buckets,
-        ).select(*self._payload_out(evolved, dicts), "__lsn", "__op", "__tb1", "__tb2")
+        candidate struct: resolve (_resolve_batch), then _zx_cand.
+        merge() passes ``n_buckets``, the batch's one exchange;
+        merge_prebucketed() passes none, since its bucketed WAL scan is
+        already clustered by key."""
+        batch = self._resolve_batch(upd, snap, evolved, op_col, lsn_col, n_buckets)
         return self._zx_cand(
             batch, 1, F.col("__lsn"), F.col("__op"),
             F.col("__tb1"), F.col("__tb2"), snap["key_cols"], nonkey,
@@ -2051,7 +2055,9 @@ class LakeTable(ChainedTable):
         # second column-pruned scan of the written files — the re-read
         # job cost a measured 0.56s per apply at the 751k-row bench
         # table, pure overhead on every COW merge. (Iceberg analog:
-        # MERGE commit metrics + equality-delete files.)
+        # MERGE commit metrics + equality-delete files.) No reader asks
+        # for _action, so like __in_u it is dropped after the observe()
+        # and never written.
         action = (
             F.when(F.col("__op") == _OP_TOMBSTONE, F.lit("noop"))  # carried
             .when(F.col("__src") == 0, F.lit("noop"))  # base won
@@ -2088,7 +2094,7 @@ class LakeTable(ChainedTable):
                 for a in _ACTS
             ],
             F.count(F.when(F.col("__in_u"), 1)).alias("batch"),
-        ).drop("__in_u")
+        ).drop("__in_u", _ACTION_COL)
         out_dir = os.path.join(self.data_dir, f"w-{uuid.uuid4().hex}")
         # rows are already clustered one-bucket-per-task: the batch's
         # repartition and the bucketed base scan share the bucket
@@ -2555,13 +2561,11 @@ class LakeTable(ChainedTable):
         The resolve's repartition already clustered the batch one bucket
         per task, so the delta files write with no second exchange. A
         write of no delta file is an empty batch: nothing commits."""
-        dicts = snap.get("dict_cols") or {}
         winners = self._resolve_batch(
-            self._tag_batch(upd, snap, evolved, op_col, lsn_col, dicts),
-            snap["key_cols"], snap["num_buckets"],
+            upd, snap, evolved, op_col, lsn_col, snap["num_buckets"]
         )
         out = winners.select(
-            *self._payload_out(evolved, dicts),
+            *[F.col(f.name) for f in evolved.fields],
             F.col("__lsn").alias(LSN_COL),
             # delta files keep the public string op (normalized)
             _op_decode(F.col("__op")).alias(_OP_COL),

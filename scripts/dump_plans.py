@@ -20,6 +20,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as em  # noqa: E402
 from oregonwaterdataportal_etl_spark.cdc.changegen import (  # noqa: E402
+    TRANSCRIPT_DICT_COLS,
     TRANSCRIPT_SCHEMA,
     generate_changes_pdf,
 )
@@ -87,9 +88,19 @@ def mor_read_plan(spark, tmp):
     )
 
 
+def last_write_plan(spark) -> str:
+    """The plan the last write executed, from the SQL status store
+    (adaptive final plan + initial plan)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        desc = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc:
+            return desc
+    raise RuntimeError("no merge write in the SQL status store")
+
+
 def cow_merge_plan(spark, tmp) -> str:
-    """The plan an ordinary copy-on-write merge() executed, from the SQL
-    status store (adaptive final plan + initial plan)."""
+    """The plan an ordinary copy-on-write merge() executed."""
     t = LakeTable.create(
         os.path.join(tmp, "cow"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
         num_buckets=4,
@@ -101,12 +112,24 @@ def cow_merge_plan(spark, tmp) -> str:
         spark, tmp, "cow_b2",
         generate_changes_pdf(500, 100, seed=2, lsn_start=2000),
     ))
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    for i in reversed(range(execs.size())):
-        desc = execs.apply(i).physicalPlanDescription()
-        if "InsertIntoHadoopFsRelationCommand" in desc:
-            return desc
-    raise RuntimeError("no merge write in the SQL status store")
+    return last_write_plan(spark)
+
+
+def mor_append_plan(spark, tmp) -> str:
+    """The plan a merge(mode="mor") executed, into a table with declared
+    dict columns."""
+    t = LakeTable.create(
+        os.path.join(tmp, "mor_append"), TRANSCRIPT_SCHEMA,
+        ["conv_id", "turn_idx"], num_buckets=4, dict_cols=TRANSCRIPT_DICT_COLS,
+    )
+    t.merge(parquet_batch(
+        spark, tmp, "mora_b1", generate_changes_pdf(2000, 100, seed=1)
+    ))
+    t.merge(parquet_batch(
+        spark, tmp, "mora_b2",
+        generate_changes_pdf(500, 100, seed=2, lsn_start=2000),
+    ), mode="mor")
+    return last_write_plan(spark)
 
 
 def zero_exchange_plan(spark, tmp) -> str:
@@ -258,12 +281,22 @@ def write_plans(spark, tmp: str) -> None:
         ),
         (
             "Copy-on-write merge (one exchange: the batch)",
-            "batch -> ONE repartition on the keys -> LWW dedup window -> "
-            "full-outer SHUFFLE_HASH join (build = the batch) against the "
+            "batch -> ONE repartition on the keys, carrying the payload, "
+            "the LSN and the op code -> tie-break limbs -> LWW dedup window "
+            "-> full-outer SHUFFLE_HASH join (build = the batch) against the "
             "bucketed scan of the touched buckets' base+tombstones+deltas, "
             "which needs no exchange -> bucket-aligned write. Pinned by "
             "test_cow_merge_write_plan_shuffles_only_the_batch",
             cow_merge_plan(spark, tmp),
+        ),
+        (
+            "MOR append (one exchange: the batch)",
+            "merge(mode=\"mor\"): batch -> ONE repartition on the keys, "
+            "carrying the payload (declared dict columns as codes), the LSN "
+            "and the op code -> dict decode + tie-break limbs -> LWW dedup "
+            "window -> per-bucket delta files, no second exchange. Pinned by "
+            "test_mor_merge_write_plan_ships_only_the_payload",
+            mor_append_plan(spark, tmp),
         ),
         (
             "MOR read (zero exchange)",

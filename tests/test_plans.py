@@ -177,13 +177,43 @@ def _subtree(tree: str, node: str) -> list[str]:
     return below
 
 
+def _batch_exchange(tree: str, details: str) -> tuple[str, list[str]]:
+    """(columns of the plan's one Exchange, detail blocks of the nodes
+    below it) of a formatted plan (tree, details)."""
+    blocks = {}
+    for block in details.split("\n\n"):
+        m = re.match(r"\((\d+)\) ", block.strip())
+        if m:
+            blocks[m.group(1)] = block
+    (n,) = set(re.findall(r"\bExchange \((\d+)\)", tree))
+    below = [
+        blocks[i]
+        for ln in _subtree(tree, f"Exchange ({n})")
+        for i in re.findall(r"\((\d+)\)", ln)
+    ]
+    return re.search(r"Input \[\d+\]: \[(.*)\]", blocks[n]).group(1), below
+
+
+def _assert_exchange_ships_the_payload(tree: str, details: str) -> None:
+    """The batch's exchange carries the tagged payload, __lsn and the op
+    code, and nothing derived from them: the tie-break limbs and the
+    window's radix prefix are hashed above it."""
+    shipped, below = _batch_exchange(tree, details)
+    assert "__lsn" in shipped and "__op" in shipped, shipped
+    for derived in ("__tb1", "__tb2", "__kh"):
+        assert derived not in shipped, shipped
+    for block in below:
+        assert "xxhash64(" not in block and "md5(" not in block, block
+
+
 def test_cow_merge_write_plan_shuffles_only_the_batch(spark, tmp_path):
     """A copy-on-write merge into a non-empty table (base files,
     tombstones and pending MOR deltas in the touched buckets) runs ONE
     exchange, and only the batch is under it: the batch's LWW dedup
     rides a repartition on the keys, and a no-shuffle full-outer
     ShuffledHashJoin resolves it against the bucketed scan of the
-    base, which reports the same HashPartitioning."""
+    base, which reports the same HashPartitioning. The exchange ships
+    the batch's payload, not hashes of it."""
     from oregonwaterdataportal_etl_spark.cdc.changegen import (
         TRANSCRIPT_SCHEMA,
         generate_changes_pdf,
@@ -219,6 +249,75 @@ def test_cow_merge_write_plan_shuffles_only_the_batch(spark, tmp_path):
         details,
     )
     assert base_scan, details
+    _assert_exchange_ships_the_payload(tree, details)
+
+
+def test_mor_merge_write_plan_ships_only_the_payload(spark, tmp_path):
+    """The MOR append's one exchange (the batch's repartition before its
+    LWW dedup) carries the tagged payload — declared dict columns as
+    codes — __lsn and the op code; the limbs, the radix prefix and the
+    dict decode are computed above it."""
+    from oregonwaterdataportal_etl_spark.cdc.changegen import (
+        TRANSCRIPT_DICT_COLS,
+        TRANSCRIPT_SCHEMA,
+        generate_changes_pdf,
+    )
+    from oregonwaterdataportal_etl_spark.lake import LakeTable
+
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
+        num_buckets=4, dict_cols=TRANSCRIPT_DICT_COLS,
+    )
+    t.merge(spark.createDataFrame(generate_changes_pdf(2000, 100, seed=1)))
+    batch_path = str(tmp_path / "batch.parquet")
+    spark.createDataFrame(
+        generate_changes_pdf(500, 100, seed=2, lsn_start=3000)
+    ).write.parquet(batch_path)
+    r = t.merge(spark.read.parquet(batch_path), mode="mor")
+    assert r.rows_delta
+
+    tree, details = _last_write_plan(spark)
+    shipped, _ = _batch_exchange(tree, details)
+    assert "__c_role" in shipped and "__f_role" in shipped, shipped
+    assert re.search(r"(?<![_\w])role#", shipped) is None, shipped
+    _assert_exchange_ships_the_payload(tree, details)
+
+
+def test_batch_resolve_plans_no_partial_group_limit_below_exchange(spark, tmp_path):
+    """With Spark's WindowGroupLimit rule on (threshold 1000; the
+    session default turns it off), the batch resolve's rank filter gets
+    a Final WindowGroupLimit above the exchange and no Partial one below
+    it, so hashing above the exchange forgoes no map-side top-1."""
+    from oregonwaterdataportal_etl_spark.cdc.changegen import (
+        TRANSCRIPT_SCHEMA,
+        generate_changes_pdf,
+    )
+    from oregonwaterdataportal_etl_spark.lake import LakeTable
+
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        t = LakeTable.create(
+            str(tmp_path / "t"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
+            num_buckets=4,
+        )
+        t.merge(spark.createDataFrame(generate_changes_pdf(2000, 100, seed=1)))
+        batch_path = str(tmp_path / "batch.parquet")
+        spark.createDataFrame(
+            generate_changes_pdf(500, 100, seed=2, lsn_start=3000)
+        ).write.parquet(batch_path)
+        t.merge(spark.read.parquet(batch_path))
+        tree, details = _last_write_plan(spark)
+    finally:
+        spark.conf.set(key, prior)
+    assert "WindowGroupLimit" in tree, tree
+    assert not any(
+        "WindowGroupLimit" in ln for ln in _subtree(tree, "Exchange (")
+    ), tree
+    assert "Partial" not in "".join(
+        b for b in details.split("\n\n") if "WindowGroupLimit" in b
+    ), details
 
 
 def test_cow_merge_null_keys_never_shuffle_the_base(spark, tmp_path):
