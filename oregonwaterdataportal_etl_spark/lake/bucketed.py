@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .table import DATA_FILE_CODEC
+
 # Spark's BucketingUtils file-name convention: ..._<bucketid>[.suffixes]
 _BUCKET_RE = re.compile(r".*_(\d+)(?:\..*)?$")
 
@@ -71,6 +73,7 @@ def write_bucketed_wal(
     (
         df.repartition(num_buckets, *[F.col(c) for c in key_cols])
         .write.bucketBy(num_buckets, *key_cols)
+        .option("compression", DATA_FILE_CODEC)
         .option("path", batch_dir)
         .saveAsTable(name)
     )

@@ -60,7 +60,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .table import (
-    ChainedTable, LakeTable, _next_snapshot, retry_on_conflict, snapshot_files,
+    DATA_FILE_CODEC, ChainedTable, LakeTable, _next_snapshot, retry_on_conflict,
+    snapshot_files,
 )
 
 def write_partitioned_wal(
@@ -97,6 +98,7 @@ def write_partitioned_wal(
         .repartition(nb, *[F.col(c) for c in keys])
         .write.partitionBy("p")
         .bucketBy(nb, *keys)
+        .option("compression", DATA_FILE_CODEC)
         .option("path", batch_dir)
         .saveAsTable(name)
     )

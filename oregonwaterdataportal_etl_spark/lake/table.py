@@ -485,6 +485,12 @@ _OP_COL = "_op"  # op column persisted in merge-on-read delta files
 # pruning)
 _TB1_COL = "_tb1"
 _TB2_COL = "_tb2"
+# codec of every data file the lake writes (base, tombstone, MOR delta,
+# bucketed WAL), set per write so it overrides the session's
+# spark.sql.parquet.compression.codec: the format does not depend on
+# the entry point that wrote it. Parquet records the codec per column
+# chunk, so files of another codec (older snappy ones) read beside these.
+DATA_FILE_CODEC = "zstd"
 
 # ---- shuffle-byte discipline -------------------------------------
 # Every byte that rides the resolve exchange costs DRAM bandwidth at
@@ -1608,7 +1614,10 @@ class LakeTable(ChainedTable):
                 else [F.col(c) for c in key_cols]
             )
             df = df.sortWithinPartitions(F.col(_BUCKET_COL), *order)
-        writer = df.write.partitionBy(_BUCKET_COL).mode("overwrite")
+        writer = (
+            df.write.partitionBy(_BUCKET_COL).mode("overwrite")
+            .option("compression", DATA_FILE_CODEC)
+        )
         if row_group_bytes is not None:
             # smaller parquet row groups = finer stats granularity for
             # skip-scans (and the knob the clustering tests pin)
@@ -2099,7 +2108,9 @@ class LakeTable(ChainedTable):
         # rows are already clustered one-bucket-per-task: the batch's
         # repartition and the bucketed base scan share the bucket
         # function, and the join keeps that layout — no shuffle here
-        out.write.partitionBy(_BUCKET_COL, _DEL_COL).mode("overwrite").parquet(out_dir)
+        out.write.partitionBy(_BUCKET_COL, _DEL_COL).mode("overwrite").option(
+            "compression", DATA_FILE_CODEC
+        ).parquet(out_dir)
 
         new_files = _list_buckets(out_dir, f"{_DEL_COL}=false")
         new_tombs = _list_buckets(out_dir, f"{_DEL_COL}=true")

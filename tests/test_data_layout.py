@@ -4,7 +4,8 @@ one merge.
 Layout: after each writing operation every file the snapshot lists
 exists, is listed once, carries the op column exactly when it is a
 delta file, holds only rows whose bucket (the table's own bucket
-expression) is the bucket it is listed under, and no bucket lists a key
+expression) is the bucket it is listed under, is zstd in every column
+chunk although the session asks for snappy, and no bucket lists a key
 both as a base row and as a tombstone."""
 
 import os
@@ -18,12 +19,51 @@ from oregonwaterdataportal_etl_spark.cdc.changegen import (
     TRANSCRIPT_SCHEMA,
     generate_changes_pdf,
 )
-from oregonwaterdataportal_etl_spark.lake import LakeTable
+from oregonwaterdataportal_etl_spark.lake import (
+    LakeTable,
+    PartitionedLakeTable,
+    write_partitioned_wal,
+)
 from oregonwaterdataportal_etl_spark.lake.bucketed import write_bucketed_wal
 from oregonwaterdataportal_etl_spark.lake.table import ManifestChain
 
 KEYS = ["conv_id", "turn_idx"]
 SIDES = {"b": "files", "t": "tombstones", "d": "deltas"}
+
+
+@pytest.fixture
+def snappy_session(spark):
+    """A session whose parquet codec is snappy, which every lake writer
+    overrides with its own."""
+    key = "spark.sql.parquet.compression.codec"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    yield spark
+    spark.conf.set(key, old)
+
+
+def _assert_zstd(path: str, step: str) -> None:
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    codecs = {
+        md.row_group(g).column(c).compression
+        for g in range(md.num_row_groups)
+        for c in range(md.num_columns)
+    }
+    assert codecs == {"ZSTD"}, f"{step}: {path} is {codecs}"
+
+
+def _assert_wal_zstd(wal: str, step: str) -> None:
+    files = [
+        os.path.join(d, f)
+        for d, _dirs, names in os.walk(wal)
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    assert files, f"{step}: no file under {wal}"
+    for f in files:
+        _assert_zstd(f, step)
 
 
 def _check_layout(spark, t: LakeTable, step: str) -> None:
@@ -42,6 +82,7 @@ def _check_layout(spark, t: LakeTable, step: str) -> None:
                 assert has_op == (side == "d"), (
                     f"{step}: {side} file {f} has_op={has_op}"
                 )
+                _assert_zstd(f, step)
     if not listed:
         return
     key_schema = T.StructType(
@@ -75,7 +116,8 @@ def _batch(spark, tmp_path, name, pdf):
     return spark.read.parquet(path)
 
 
-def test_every_writer_keeps_the_layout(spark, tmp_path):
+def test_every_writer_keeps_the_layout(snappy_session, tmp_path):
+    spark = snappy_session
     t = LakeTable.create(
         str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=4
     )
@@ -102,6 +144,7 @@ def test_every_writer_keeps_the_layout(spark, tmp_path):
     write_bucketed_wal(spark.createDataFrame(generate_changes_pdf(
         300, 60, seed=24, delete_rate=0.2, lsn_start=3000,
     )), wal, 4, KEYS)
+    _assert_wal_zstd(wal, "write_bucketed_wal")
     t.merge_prebucketed(spark, wal)
     _check_layout(spark, t, "merge_prebucketed")
 
@@ -135,6 +178,21 @@ def test_every_writer_keeps_the_layout(spark, tmp_path):
     assert t.snapshot()["deltas"]
     _check_layout(spark, t, "rebucket")
     assert sorted(map(tuple, t.read(spark).collect())) == before
+
+
+def test_partitioned_wal_writes_zstd(snappy_session, tmp_path):
+    """The partition tree's WAL writer, the fourth lake writer, is zstd
+    under a snappy session too."""
+    spark = snappy_session
+    t = PartitionedLakeTable.create(
+        str(tmp_path / "pt"), TRANSCRIPT_SCHEMA, KEYS,
+        partition_col="ts", num_buckets=4,
+    )
+    wal = write_partitioned_wal(
+        spark.createDataFrame(generate_changes_pdf(300, 30, seed=27)),
+        str(tmp_path / "pwal"), t,
+    )
+    _assert_wal_zstd(wal, "write_partitioned_wal")
 
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])
