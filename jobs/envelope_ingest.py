@@ -6,7 +6,7 @@ Usage (north_rule packaging surface):
     spark-submit --master <cluster> --py-files dist/owdp_etl_spark.zip \
         jobs/envelope_ingest.py <wire_glob> <table_dir> <state_dir> \
         [schema_json] [--continuous[=TRIGGER]] [--replay-dlq] \
-        [--op-alias=wire:engine ...] [--zx]
+        [--op-alias=wire:engine ...]
 
 <wire_glob>: parquet files holding one envelope JSON string per row
 in a ``value`` column (Kafka-value shape / binlog-connector dump).
@@ -17,10 +17,8 @@ the transcript schema. The table is created on first run.
 
 Default trigger is AvailableNow (one catch-up pass, exit — the cron
 shape); --continuous keeps the stream live with an optional
-processing-time trigger (default "10 seconds").
-
---zx applies each micro-batch through the zero-exchange bucketed-WAL
-path (gate window = the only shuffle in the pipeline).
+processing-time trigger (default "10 seconds"). Any other --flag
+exits with the usage line before a SparkSession starts.
 
 --replay-dlq runs the quarantine back through the current parser
 FIRST (see streaming.replay_dlq) — pass --op-alias for contract
@@ -47,11 +45,16 @@ from oregonwaterdataportal_etl_spark.streaming import (
     start_envelope_stream,
 )
 
+USAGE = (
+    "usage: envelope_ingest.py <wire_glob> <table_dir> <state_dir> "
+    "[schema_json] [--continuous[=TRIGGER]] [--replay-dlq] "
+    "[--op-alias=wire:engine ...]"
+)
+
 
 def main() -> None:
     continuous = None
     do_replay = False
-    zx = False
     aliases: dict[str, str] = {}
     args = []
     for a in sys.argv[1:]:
@@ -61,11 +64,11 @@ def main() -> None:
             continuous = a.split("=", 1)[1]
         elif a == "--replay-dlq":
             do_replay = True
-        elif a == "--zx":
-            zx = True
         elif a.startswith("--op-alias="):
             wire, engine = a.split("=", 1)[1].split(":", 1)
             aliases[wire] = engine
+        elif a.startswith("--"):
+            raise SystemExit(f"unknown flag {a}\n{USAGE}")
         else:
             args.append(a)
     wire_glob, table_dir, state_dir = args[0:3]
@@ -111,8 +114,6 @@ def main() -> None:
         available_now=continuous is None,
         processing_time=continuous or "10 seconds",
         json_options=None,
-        zero_exchange=zx,
-        wal_dir=os.path.join(state_dir, "wal") if zx else None,
     )
     if continuous is None:
         q.awaitTermination()

@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lake.table import POINTER, CommitConflictError, ManifestChain
+from ..lake.table import DATA_FILE_CODEC, POINTER, CommitConflictError, ManifestChain
 
 
 class WatermarkStore:
@@ -136,6 +136,7 @@ class WatermarkStore:
             .groupBy(self.key_col)
             .agg(F.max(self.wm_col).alias(self.wm_col))
             .write.mode("overwrite")
+            .option("compression", DATA_FILE_CODEC)
             .parquet(os.path.join(self.path, ddir))
         )
         for _attempt in range(max_retries):
@@ -149,9 +150,9 @@ class WatermarkStore:
                 # protects us — if another updater wins, we recompact
                 # against the NEW parent on retry
                 bdir = f"b-{uuid.uuid4().hex}"
-                self._resolved(spark, manifest).write.mode("overwrite").parquet(
-                    os.path.join(self.path, bdir)
-                )
+                self._resolved(spark, manifest).write.mode("overwrite").option(
+                    "compression", DATA_FILE_CODEC
+                ).parquet(os.path.join(self.path, bdir))
                 manifest = {"version": new_v, "base": bdir, "deltas": []}
             try:
                 self._commit(manifest)

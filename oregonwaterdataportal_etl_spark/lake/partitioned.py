@@ -486,7 +486,6 @@ class PartitionedLakeTable(ChainedTable):
         op_col: str = "op",
         lsn_col: str = "lsn",
         lsn_range: tuple[int, int] | None = None,
-        _plan_out: list | None = None,
     ) -> PartitionedMergeResult:
         """Zero-exchange apply into the partition tree: ``source_path``
         is a PARTITIONED bucketed WAL (``write_partitioned_wal`` —
@@ -540,7 +539,6 @@ class PartitionedLakeTable(ChainedTable):
             return child.merge_prebucketed(
                 spark, os.path.join(source_path, f"p={v}"),
                 op_col=op_col, lsn_col=lsn_col, lsn_range=lsn_range,
-                _plan_out=_plan_out,
             )
         out, pinned = self._apply_children(values, apply_one)
 

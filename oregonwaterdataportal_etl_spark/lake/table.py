@@ -1978,7 +1978,6 @@ class LakeTable(ChainedTable):
         upd_side,
         _operation_label: str,
         _summary_extra: dict | None = None,
-        _plan_out: list | None = None,
         null_keys: bool = False,
     ) -> MergeResult:
         """THE copy-on-write resolve, shared by merge(),
@@ -2014,10 +2013,6 @@ class LakeTable(ChainedTable):
             if upd is None and base_side is None:
                 return MergeResult(version=snap["version"])
             winners = self._zx_winners(upd, base_side, key_cols, nonkey, null_keys)
-            if _plan_out is not None:
-                _plan_out.append(
-                    winners._jdf.queryExecution().executedPlan().toString()
-                )
             return self._finalize_cow(
                 spark, snap, evolved, winners, touched,
                 _operation_label=_operation_label,
@@ -2404,7 +2399,6 @@ class LakeTable(ChainedTable):
         lsn_col: str = "lsn",
         lsn_range: tuple[int, int] | None = None,
         validate_layout: bool = False,
-        _plan_out: list | None = None,
     ) -> MergeResult:
         """Copy-on-write merge of a PRE-BUCKETED change log with ZERO
         exchanges (DESIGN.md §9's top structural lever; reference
@@ -2532,16 +2526,13 @@ class LakeTable(ChainedTable):
 
         return self._cow_commit(
             spark, snap, evolved, touched, wal_side,
-            _operation_label="merge-prebucketed", _plan_out=_plan_out,
+            _operation_label="merge-prebucketed",
             null_keys=_parquet_may_hold_nulls(
                 [f for fl in wal_files.values() for f in fl], key_cols
             ),
         )
 
-    def _fold_deltas_zx(
-        self, spark: SparkSession, touched: list[int],
-        _plan_out: list | None = None,
-    ) -> MergeResult:
+    def _fold_deltas_zx(self, spark: SparkSession, touched: list[int]) -> MergeResult:
         """Zero-exchange delta fold — compaction's MOR-fold step without
         the merge shuffle. The touched buckets' base, tombstone and
         delta files register as ONE catalog bucketed table
@@ -2561,7 +2552,7 @@ class LakeTable(ChainedTable):
         snap = self.snapshot()
         return self._cow_commit(
             spark, snap, T.StructType.fromJson(json.loads(snap["schema"])),
-            touched, None, _operation_label="compact-fold", _plan_out=_plan_out,
+            touched, None, _operation_label="compact-fold",
         )
 
     def _merge_mor(self, spark, snap, upd, evolved, op_col, lsn_col, bexpr,

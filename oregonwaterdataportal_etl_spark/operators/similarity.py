@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..lake.table import DATA_FILE_CODEC
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -238,7 +240,7 @@ def write_lsh_partitioned(
     tests/test_storage_pruning.py via the scan's numFiles metric."""
     add_hyperplane_bucket(df, vec_col, bits=bits, seed=seed).write.partitionBy(
         "__bucket"
-    ).mode("overwrite").parquet(path)
+    ).mode("overwrite").option("compression", DATA_FILE_CODEC).parquet(path)
 
 
 def lsh_topk_partitioned(
@@ -276,7 +278,9 @@ def write_ivf_partitioned(
     with_cell, centroids = ivf_assign(
         df, vec_col, n_centroids, seed, sample_size, cell_col="__cell"
     )
-    with_cell.write.partitionBy("__cell").mode("overwrite").parquet(path)
+    with_cell.write.partitionBy("__cell").mode("overwrite").option(
+        "compression", DATA_FILE_CODEC
+    ).parquet(path)
     with open(os.path.join(path, "_centroids.json"), "w") as f:
         json.dump(centroids.tolist(), f)
 

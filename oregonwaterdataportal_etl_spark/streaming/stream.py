@@ -9,7 +9,9 @@ needs foreachBatch because MERGE is a batch op in every engine).
 Exactly-once: Spark's checkpoint gives at-least-once foreachBatch
 invocations; idempotence comes from our ManifestLog (batch-id no-op
 replay) + the LakeTable per-row LSN guard — the same two layers the
-batch runner uses, so crash/replay semantics are identical.
+batch runner uses, so crash/replay semantics are identical. Every
+stream applies a micro-batch the same way: ``table.merge`` behind that
+manifest gate (``_gated_merge``).
 """
 
 from __future__ import annotations
@@ -20,8 +22,60 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cdc.manifests import ManifestLog
-from ..lake.table import LakeTable
+from ..cdc.manifests import ManifestLog, batch_id_for_window
+from ..lake.table import DATA_FILE_CODEC, LakeTable
+
+
+def _gated_merge(
+    table: LakeTable,
+    df: DataFrame,
+    manifests: ManifestLog | None,
+    tag: str,
+    mode: str = "cow",
+) -> int:
+    """The manifest-gated apply every stream and the DLQ replay run:
+    one bounds job over ``df`` (LSN window and row count), the window's
+    batch id under ``tag``, a no-op if the manifest log holds that id
+    committed, else begin -> ``table.merge`` -> commit. Without
+    ``manifests`` the merge runs ungated and the per-row LSN guard is
+    the only replay layer. Returns the row count (0: nothing to apply).
+
+    ``tag`` is part of the batch id, so it must never change for a
+    stream: existing manifest logs match replayed windows by it."""
+    bounds = df.agg(
+        F.min("lsn").alias("lo"), F.max("lsn").alias("hi"), F.count("*").alias("n")
+    ).collect()[0]
+    if bounds["lo"] is None:
+        return 0  # empty: the bounds job already says so
+    if manifests is None:
+        table.merge(df, mode=mode)
+        return bounds["n"]
+    bid = batch_id_for_window(tag, bounds["lo"], bounds["hi"])
+    if not manifests.is_committed(bid):
+        manifests.begin(bid, bounds["lo"], bounds["hi"])
+        manifests.commit(bid, table.merge(df, mode=mode).as_dict())
+    return bounds["n"]
+
+
+def _overwrite(df: DataFrame, path: str) -> None:
+    """Write a side store (DLQ batch, pending-transaction state) over
+    ``path`` in the engine's data-file codec."""
+    df.write.mode("overwrite").option("compression", DATA_FILE_CODEC).parquet(path)
+
+
+def _start(src: DataFrame, apply_batch, checkpoint_dir: str,
+           available_now: bool, processing_time: str):
+    """Run ``apply_batch`` per micro-batch of ``src`` under
+    ``checkpoint_dir``: one AvailableNow catch-up pass, or a live
+    processing-time trigger. Returns the StreamingQuery."""
+    writer = src.writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
 
 
 def start_cdc_stream(
@@ -34,155 +88,27 @@ def start_cdc_stream(
     available_now: bool = True,
     processing_time: str = "10 seconds",
 ):
-    """Tail a parquet change-stream directory into the lake table.
+    """Tail a parquet change-stream directory into the lake table
+    (a LakeTable or a PartitionedLakeTable).
 
     Each micro-batch: LSN-window id -> manifest no-op check -> MERGE ->
     manifest commit. Returns the StreamingQuery.
-    """
-    from ..cdc.manifests import batch_id_for_window
 
+    Migration from the removed bucketed-WAL stream route: its manifest
+    ids carry the ``stream-zx`` tag. A window its checkpoint replays here finds no ``stream`` id
+    committed and merges once more; the per-row LSN guard makes that
+    merge a no-op on table state. Leftover ``wal/batch-*`` dirs of such
+    runs are plain disk and can be removed.
+    """
     if schema is None:
         schema = spark.read.parquet(stream_dir).schema
 
     src = spark.readStream.schema(schema).parquet(stream_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bounds = batch_df.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
-            return  # empty micro-batch: the bounds job already says so
-        bid = batch_id_for_window("stream", bounds["lo"], bounds["hi"])
-        if manifests.is_committed(bid):
-            return
-        manifests.begin(bid, bounds["lo"], bounds["hi"])
-        result = table.merge(batch_df)
-        manifests.commit(bid, result.as_dict())
+        _gated_merge(table, batch_df, manifests, "stream")
 
-    writer = src.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def _sweep_wal_orphans(wal_dir: str) -> None:
-    """Start-of-stream sweep of the WAL route: no batch is in flight
-    yet, so every surviving batch-* subdir is a crash orphan (its
-    window either committed — data already in the table — or will be
-    rewritten fresh by checkpoint replay)."""
-    if os.path.isdir(wal_dir):
-        for entry in os.listdir(wal_dir):
-            if entry.startswith("batch-"):
-                shutil.rmtree(os.path.join(wal_dir, entry), ignore_errors=True)
-
-
-def _merge_via_wal(table, batch_df: DataFrame, wal_dir: str, plan_log: list | None):
-    """The WAL route for one micro-batch: write it under ``wal_dir`` as
-    a bucketed WAL in the table's layout (day-partitioned for a
-    PartitionedLakeTable), apply it with merge_prebucketed, and delete
-    the batch's subdir. Once the merge has committed the subdir is only
-    disk: a replay writes a fresh one, and a crash before the delete
-    leaves an orphan for _sweep_wal_orphans."""
-    from ..lake.bucketed import write_bucketed_wal
-    from ..lake.partitioned import write_partitioned_wal
-
-    if hasattr(table, "partition_table"):
-        batch_dir = write_partitioned_wal(batch_df, wal_dir, table)
-    else:
-        snap = table.snapshot()
-        batch_dir = write_bucketed_wal(
-            batch_df, wal_dir, snap["num_buckets"], snap["key_cols"]
-        )
-    result = table.merge_prebucketed(
-        batch_df.sparkSession, batch_dir, _plan_out=plan_log
-    )
-    shutil.rmtree(batch_dir, ignore_errors=True)
-    return result
-
-
-def start_cdc_stream_zx(
-    spark: SparkSession,
-    stream_dir: str,
-    table: LakeTable,
-    checkpoint_dir: str,
-    manifests: ManifestLog,
-    wal_dir: str,
-    schema=None,
-    available_now: bool = True,
-    processing_time: str = "10 seconds",
-    plan_log: list | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming apply through a bucketed WAL and the zero-exchange
-    resolve — the production steady-state loop.
-
-    Per micro-batch: the batch is written as a Spark-native bucketed
-    WAL under ``wal_dir`` (lake.bucketed.write_bucketed_wal, which
-    repartitions the batch into the table's own layout: the route's
-    one shuffle) and then applied with ``LakeTable.merge_prebucketed``,
-    whose resolve plan has ZERO Exchange: the batch LWW dedup window
-    and the full-outer join against base + tombstones all read their
-    required distribution straight from storage. ``start_cdc_stream``
-    (ordinary merge) also shuffles the batch once and joins the base in
-    place; the WAL route moves that one shuffle into the WAL write, it
-    does not remove it.
-
-    Exactly-once is the same two-layer story as the batch runner:
-    Spark's checkpoint replays foreachBatch at-least-once; the
-    ManifestLog turns an already-committed LSN window into a no-op, and
-    a crash BETWEEN merge-commit and manifest-commit replays a merge
-    that the per-row LSN guard resolves to zero row changes. Each
-    batch's WAL subdir is deleted after its merge commits; leftovers
-    from a crash are swept on the next stream start (never mid-stream —
-    a replayed batch rewrites its own fresh subdir, so stale dirs are
-    only disk, not state).
-
-    plan_log: optional list; each applied batch appends its executed
-    resolve plan string (test hook for the zero-Exchange pin).
-
-    ``table`` may also be a PartitionedLakeTable: each micro-batch is
-    then written as a DAY-PARTITIONED bucketed WAL
-    (lake.partitioned.write_partitioned_wal) and applied through the
-    tree's merge_prebucketed — per-day plans stay Exchange-free and
-    the same manifest/LSN-guard exactly-once story holds.
-    """
-    from ..cdc.manifests import batch_id_for_window
-
-    _sweep_wal_orphans(wal_dir)
-
-    if schema is None:
-        schema = spark.read.parquet(stream_dir).schema
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(stream_dir)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bounds = batch_df.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
-            return  # empty micro-batch: the bounds job already says so
-        bid = batch_id_for_window("stream-zx", bounds["lo"], bounds["hi"])
-        if manifests.is_committed(bid):
-            return
-        manifests.begin(bid, bounds["lo"], bounds["hi"])
-        result = _merge_via_wal(table, batch_df, wal_dir, plan_log)
-        manifests.commit(bid, result.as_dict())
-
-    writer = src.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(src, apply_batch, checkpoint_dir, available_now, processing_time)
 
 
 def start_envelope_stream(
@@ -199,21 +125,11 @@ def start_envelope_stream(
     json_options: dict | None = None,
     max_files_per_trigger: int | None = None,
     mode: str = "cow",
-    zero_exchange: bool = False,
-    wal_dir: str | None = None,
-    plan_log: list | None = None,
 ):
     """Tail a directory of raw change ENVELOPES (parquet files with a
     ``value`` string column — the shape a Kafka value column or a
     binlog-connector file dump lands in) through the full front-end:
     parse -> dead-letter quarantine -> transaction gate -> LWW merge.
-
-    ``zero_exchange=True`` routes each micro-batch's ready rows
-    through the bucketed-WAL + ``merge_prebucketed`` path (see
-    ``start_cdc_stream_zx``): the gate's window shuffle and the WAL
-    write's repartition into the table's layout are then the only
-    exchanges, and the resolve itself runs with zero Exchange. Requires ``wal_dir``; ``plan_log`` captures each
-    batch's executed resolve plan (test hook).
 
     Crash/replay discipline (Spark's file-source checkpoint replays a
     micro-batch with the SAME input files, so every derived frame is
@@ -241,14 +157,6 @@ def start_envelope_stream(
     write O(bad + in-flight) rows, not O(batch).
     """
     from ..cdc.envelope import gate_transactions, parse_envelopes, split_dlq
-    from ..cdc.manifests import batch_id_for_window
-
-    if zero_exchange:
-        if wal_dir is None:
-            raise ValueError("zero_exchange=True needs wal_dir")
-        if mode != "cow":
-            raise ValueError("zero_exchange applies to mode='cow'")
-        _sweep_wal_orphans(wal_dir)
 
     src_reader = spark.readStream.schema("value string")
     if max_files_per_trigger is not None:
@@ -279,24 +187,10 @@ def start_envelope_stream(
         ready, still = gate_transactions(clean, pending)
         ready = ready.drop("txn_id", "txn_total_order", "txn_event_count")
         # side stores first, overwrite-idempotent under replay
-        dlq.write.mode("overwrite").parquet(
-            os.path.join(dlq_dir, f"batch-{batch_id}")
-        )
-        state_dir = os.path.join(pending_dir, f"state-{batch_id}")
-        still.write.mode("overwrite").parquet(state_dir)
+        _overwrite(dlq, os.path.join(dlq_dir, f"batch-{batch_id}"))
+        _overwrite(still, os.path.join(pending_dir, f"state-{batch_id}"))
         # manifest-gated merge last
-        bounds = ready.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is not None:
-            bid = batch_id_for_window("stream-env", bounds["lo"], bounds["hi"])
-            if not manifests.is_committed(bid):
-                manifests.begin(bid, bounds["lo"], bounds["hi"])
-                if zero_exchange:
-                    result = _merge_via_wal(table, ready, wal_dir, plan_log)
-                else:
-                    result = table.merge(ready, mode=mode)
-                manifests.commit(bid, result.as_dict())
+        _gated_merge(table, ready, manifests, "stream-env", mode)
         # sweep states older than the predecessor (kept for replay)
         try:
             for e in os.listdir(pending_dir):
@@ -309,14 +203,7 @@ def start_envelope_stream(
         except FileNotFoundError:
             pass
 
-    writer = src.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(src, apply_batch, checkpoint_dir, available_now, processing_time)
 
 
 def read_dlq(spark: SparkSession, dlq_dir: str) -> DataFrame:
@@ -363,7 +250,6 @@ def replay_dlq(
     import uuid
 
     from ..cdc.envelope import gate_transactions, parse_envelopes
-    from ..cdc.manifests import batch_id_for_window
 
     try:
         old_dirs = [
@@ -401,19 +287,7 @@ def replay_dlq(
     ready = ready.drop(
         "txn_id", "txn_total_order", "txn_event_count", "value", "_dlq_reason"
     )
-    recovered = 0
-    bounds = ready.agg(
-        F.min("lsn").alias("lo"), F.max("lsn").alias("hi"), F.count("*").alias("n")
-    ).collect()[0]
-    if bounds["n"]:
-        recovered = bounds["n"]
-        bid = batch_id_for_window("dlq-replay", bounds["lo"], bounds["hi"])
-        if manifests is None:
-            table.merge(ready, mode=mode)
-        elif not manifests.is_committed(bid):
-            manifests.begin(bid, bounds["lo"], bounds["hi"])
-            result = table.merge(ready, mode=mode)
-            manifests.commit(bid, result.as_dict())
+    recovered = _gated_merge(table, ready, manifests, "dlq-replay", mode)
     held = 0
     if state_ids:
         # amend the latest state IN PLACE: the pending rows from the
@@ -422,7 +296,7 @@ def replay_dlq(
         new_still = still.drop("value", "_dlq_reason")
         last_dir = os.path.join(pending_dir, f"state-{state_ids[-1]}")
         tmp_dir = last_dir + f".replay-{uuid.uuid4().hex}"
-        new_still.write.mode("overwrite").parquet(tmp_dir)
+        _overwrite(new_still, tmp_dir)
         held = spark.read.parquet(tmp_dir).count()
         shutil.rmtree(last_dir, ignore_errors=True)
         os.rename(tmp_dir, last_dir)
@@ -435,7 +309,7 @@ def replay_dlq(
     # consolidate the quarantine BEFORE deleting sources (the write is
     # an action; after it the old dirs are no longer inputs)
     new_dir = os.path.join(dlq_dir, f"batch-replay-{uuid.uuid4().hex}")
-    dead.write.mode("overwrite").parquet(new_dir)
+    _overwrite(dead, new_dir)
     still_dead = spark.read.parquet(new_dir).count()
     for e in old_dirs:
         if os.path.join(dlq_dir, e) != new_dir:

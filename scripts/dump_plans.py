@@ -91,6 +91,7 @@ def mor_read_plan(spark, tmp):
 def last_write_plan(spark) -> str:
     """The plan the last write executed, from the SQL status store
     (adaptive final plan + initial plan)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     for i in reversed(range(execs.size())):
         desc = execs.apply(i).physicalPlanDescription()
@@ -152,9 +153,8 @@ def zero_exchange_plan(spark, tmp) -> str:
     write_bucketed_wal(b1, w1, 4, ["conv_id", "turn_idx"])
     write_bucketed_wal(b2, w2, 4, ["conv_id", "turn_idx"])
     t.merge_prebucketed(spark, w1)
-    plans = []
-    t.merge_prebucketed(spark, w2, _plan_out=plans)
-    return plans[0]
+    t.merge_prebucketed(spark, w2)
+    return last_write_plan(spark)
 
 
 def zero_exchange_fold_plan(spark, tmp) -> str:
@@ -180,9 +180,8 @@ def zero_exchange_fold_plan(spark, tmp) -> str:
     t.merge(b2, mode="mor")
     w3 = os.path.join(tmp, "w3")
     write_bucketed_wal(b3, w3, 4, ["conv_id", "turn_idx"])
-    plans = []
-    t.merge_prebucketed(spark, w3, _plan_out=plans)
-    return plans[0]
+    t.merge_prebucketed(spark, w3)
+    return last_write_plan(spark)
 
 
 def zero_exchange_compact_fold_plan(spark, tmp) -> str:
@@ -201,11 +200,10 @@ def zero_exchange_compact_fold_plan(spark, tmp) -> str:
     ).withColumn("lsn", F.col("lsn") + 2000).localCheckpoint()
     t.merge(b1)
     t.merge(b2, mode="mor")
-    plans = []
     t._fold_deltas_zx(spark, sorted(
         {b for side, b, _f in snapshot_files(t.snapshot()) if side == "d"}
-    ), _plan_out=plans)
-    return plans[0]
+    ))
+    return last_write_plan(spark)
 
 
 def changelog_plan(spark, tmp):

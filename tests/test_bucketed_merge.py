@@ -14,6 +14,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import recorded_writes
+
 from oregonwaterdataportal_etl_spark.cdc.changegen import (
     TRANSCRIPT_SCHEMA,
     generate_changes_pdf,
@@ -98,12 +100,12 @@ def test_prebucketed_plan_has_zero_exchanges(spark, tmp_path):
     write_bucketed_wal(b1, wal1, NB, KEYS)
     write_bucketed_wal(b2, wal2, NB, KEYS)
     zx.merge_prebucketed(spark, wal1)
-    plans = []
-    zx.merge_prebucketed(spark, wal2, _plan_out=plans)
-    plan = plans[0]
-    assert "Exchange" not in plan, plan
-    assert "Bucketed: true" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    with recorded_writes(spark) as writes:
+        zx.merge_prebucketed(spark, wal2)
+    ((tree, details),) = writes
+    assert "Exchange" not in tree, tree
+    assert "Bucketed: true" in details
+    assert "BatchEvalPython" not in tree and "ArrowEvalPython" not in tree
 
 
 def test_prebucketed_schema_evolution(spark, tmp_path):
@@ -317,16 +319,17 @@ def test_prebucketed_merge_folds_pending_mor_deltas(spark, tmp_path):
     write_bucketed_wal(b3, wal3, NB, KEYS)
 
     rw = twin.merge(b3)       # window path folds touched deltas
-    plans = []
-    rz = zx.merge_prebucketed(spark, wal3, _plan_out=plans)
+    with recorded_writes(spark) as writes:
+        rz = zx.merge_prebucketed(spark, wal3)
     assert _state(spark, twin) == _state(spark, zx)
     for f in ("rows_inserted", "rows_updated", "rows_deleted", "rows_noop",
               "rows_dropped"):
         assert getattr(rw, f) == getattr(rz, f), f
     # touched buckets' deltas were absorbed (this WAL touches all)
     assert zx.stats()["delta_files"] == 0
-    assert "Exchange" not in plans[0], plans[0]
-    assert "Bucketed: true" in plans[0]
+    ((tree, details),) = writes
+    assert "Exchange" not in tree, tree
+    assert "Bucketed: true" in details
 
 
 def test_prebucketed_delta_fold_keeps_untouched_buckets(spark, tmp_path):
@@ -388,18 +391,18 @@ def test_zx_delta_fold_equals_oracle_fold(spark, tmp_path):
         ).values()
     )
 
-    plans = []
     fold_buckets = [int(b) for b in zx.snapshot()["deltas"]]
-    zx._fold_deltas_zx(spark, fold_buckets, _plan_out=plans)
+    with recorded_writes(spark) as writes:
+        zx._fold_deltas_zx(spark, fold_buckets)
     zx.compact(spark)  # bin-pack only: deltas already folded
 
     assert not zx.snapshot().get("deltas")
     assert _state(spark, zx) == expected
     # tombstones survive the fold
     assert zx.stats()["tombstone_files"] > 0
-    plan = plans[0]
-    assert "Exchange" not in plan, plan
-    assert "Bucketed: true" in plan
+    ((tree, details),) = writes
+    assert "Exchange" not in tree, tree
+    assert "Bucketed: true" in details
 
     # replay: folding again with no deltas is a metadata no-op
     v = zx.snapshot()["version"]

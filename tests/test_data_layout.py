@@ -54,14 +54,14 @@ def _assert_zstd(path: str, step: str) -> None:
     assert codecs == {"ZSTD"}, f"{step}: {path} is {codecs}"
 
 
-def _assert_wal_zstd(wal: str, step: str) -> None:
+def _assert_files_zstd(root: str, step: str) -> None:
     files = [
         os.path.join(d, f)
-        for d, _dirs, names in os.walk(wal)
+        for d, _dirs, names in os.walk(root)
         for f in names
         if f.endswith(".parquet")
     ]
-    assert files, f"{step}: no file under {wal}"
+    assert files, f"{step}: no file under {root}"
     for f in files:
         _assert_zstd(f, step)
 
@@ -144,7 +144,7 @@ def test_every_writer_keeps_the_layout(snappy_session, tmp_path):
     write_bucketed_wal(spark.createDataFrame(generate_changes_pdf(
         300, 60, seed=24, delete_rate=0.2, lsn_start=3000,
     )), wal, 4, KEYS)
-    _assert_wal_zstd(wal, "write_bucketed_wal")
+    _assert_files_zstd(wal, "write_bucketed_wal")
     t.merge_prebucketed(spark, wal)
     _check_layout(spark, t, "merge_prebucketed")
 
@@ -192,7 +192,68 @@ def test_partitioned_wal_writes_zstd(snappy_session, tmp_path):
         spark.createDataFrame(generate_changes_pdf(300, 30, seed=27)),
         str(tmp_path / "pwal"), t,
     )
-    _assert_wal_zstd(wal, "write_partitioned_wal")
+    _assert_files_zstd(wal, "write_partitioned_wal")
+
+
+def test_side_store_writers_write_zstd(snappy_session, tmp_path):
+    """The writers beside the lake tables are zstd under a snappy
+    session too: the envelope stream's DLQ batch and pending state,
+    replay_dlq's amended state and consolidated quarantine,
+    WatermarkStore's delta and base dirs, and the LSH and IVF
+    partitioned corpora."""
+    import numpy as np
+
+    from oregonwaterdataportal_etl_spark.cdc import ManifestLog, WatermarkStore
+    from oregonwaterdataportal_etl_spark.cdc.envelope import wrap_envelopes
+    from oregonwaterdataportal_etl_spark.operators import similarity
+    from oregonwaterdataportal_etl_spark.streaming import (
+        replay_dlq,
+        start_envelope_stream,
+    )
+
+    spark = snappy_session
+    # one transaction that never completes (held pending) and one
+    # unparseable row (quarantined)
+    changes = spark.createDataFrame(generate_changes_pdf(200, 10, seed=41))
+    raw = wrap_envelopes(
+        changes.withColumn(
+            "txn_id", F.when(F.col("lsn") == 5, F.lit("open")).cast("string")
+        ).withColumn(
+            "txn_event_count", F.when(F.col("lsn") == 5, F.lit(2)).cast("long")
+        ),
+        txn_id_col="txn_id", txn_event_count_col="txn_event_count",
+    ).unionByName(spark.createDataFrame([("{not json",)], "value string"))
+    wire = str(tmp_path / "wire")
+    raw.coalesce(1).write.parquet(wire)
+    t = LakeTable.create(str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=2)
+    dlq, pend = str(tmp_path / "dlq"), str(tmp_path / "pend")
+    mf = ManifestLog(str(tmp_path / "mf"))
+    start_envelope_stream(
+        spark, wire, t, str(tmp_path / "ckpt"), mf, TRANSCRIPT_SCHEMA,
+        dlq_dir=dlq, pending_dir=pend,
+    ).awaitTermination(120)
+    _assert_files_zstd(os.path.join(dlq, "batch-0"), "DLQ batch")
+    _assert_files_zstd(os.path.join(pend, "state-0"), "pending state")
+    stats = replay_dlq(spark, t, dlq, TRANSCRIPT_SCHEMA, pending_dir=pend, manifests=mf)
+    assert stats["held"] and stats["still_dead"]
+    _assert_files_zstd(os.path.join(pend, "state-0"), "replay_dlq amended state")
+    _assert_files_zstd(dlq, "replay_dlq quarantine")
+
+    ws = WatermarkStore(str(tmp_path / "wm"), compact_every=2)
+    for hi in (5, 9):  # the second update folds the deltas into a base
+        ws.update(spark.createDataFrame([("c1", hi)], "conv_id string, wm int"))
+        _assert_files_zstd(ws.path, f"WatermarkStore.update #{hi}")
+    assert any(d.startswith("b-") for d in os.listdir(ws.path))
+
+    rng = np.random.default_rng(3)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(64)],
+        ["vec_id", "embedding"],
+    )
+    similarity.write_lsh_partitioned(corpus, str(tmp_path / "lsh"), bits=2)
+    _assert_files_zstd(str(tmp_path / "lsh"), "write_lsh_partitioned")
+    similarity.write_ivf_partitioned(corpus, str(tmp_path / "ivf"), n_centroids=2)
+    _assert_files_zstd(str(tmp_path / "ivf"), "write_ivf_partitioned")
 
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])

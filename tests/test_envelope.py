@@ -463,50 +463,10 @@ def test_envelope_plan_shape(spark):
         assert plan.count("Exchange") == 1
 
 
-def test_envelope_stream_zero_exchange(spark, tmp_path):
-    """zero_exchange=True: the wire batch rides the bucketed-WAL path —
-    final state equals the ordinary envelope stream, and every
-    per-batch resolve plan has ZERO Exchange."""
-    from oregonwaterdataportal_etl_spark.cdc import ManifestLog
-    from oregonwaterdataportal_etl_spark.lake import LakeTable
-    from oregonwaterdataportal_etl_spark.streaming import start_envelope_stream
-
-    wire_dir, raw = _wire_files(spark, tmp_path, n=1600, convs=30)
-
-    def run(name, **kw):
-        t = LakeTable.create(
-            str(tmp_path / name), TRANSCRIPT_SCHEMA,
-            key_cols=["conv_id", "turn_idx"], num_buckets=4,
-        )
-        q = start_envelope_stream(
-            spark, os.path.join(wire_dir, "*"), t,
-            str(tmp_path / f"ckpt_{name}"),
-            ManifestLog(str(tmp_path / f"mf_{name}")),
-            TRANSCRIPT_SCHEMA,
-            dlq_dir=str(tmp_path / f"dlq_{name}"),
-            pending_dir=str(tmp_path / f"pend_{name}"),
-            max_files_per_trigger=1,
-            **kw,
-        )
-        q.awaitTermination(180)
-        return t
-
-    plans = []
-    t_zx = run("zx", zero_exchange=True,
-               wal_dir=str(tmp_path / "wal"), plan_log=plans)
-    t_plain = run("plain")
-    a = sorted(map(tuple, t_zx.read(spark).collect()))
-    b = sorted(map(tuple, t_plain.read(spark).collect()))
-    assert a == b and a
-    assert plans, "expected captured per-batch resolve plans"
-    for p in plans:
-        assert "Exchange" not in p
-
-
-def test_envelope_stream_zero_exchange_partitioned(spark, tmp_path):
-    """The whole wire->lake pipeline onto a TIME-PARTITIONED table with
-    zero_exchange=True: ready rows ride a day-routed WAL into per-day
-    exchange-free resolves; state equals the batch path on a twin tree."""
+def test_envelope_stream_partitioned_tree(spark, tmp_path):
+    """The whole wire->lake pipeline onto a TIME-PARTITIONED table:
+    ready rows route through the tree's merge into several days; state
+    equals the batch path on a twin tree."""
     from oregonwaterdataportal_etl_spark.cdc import ManifestLog
     from oregonwaterdataportal_etl_spark.lake import PartitionedLakeTable
     from oregonwaterdataportal_etl_spark.streaming import start_envelope_stream
@@ -522,7 +482,6 @@ def test_envelope_stream_zero_exchange_partitioned(spark, tmp_path):
         str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
         key_cols=["conv_id", "turn_idx"], partition_col="ts", num_buckets=4,
     )
-    plans: list[str] = []
     q = start_envelope_stream(
         spark,
         os.path.join(wire_dir, "*"),
@@ -532,13 +491,9 @@ def test_envelope_stream_zero_exchange_partitioned(spark, tmp_path):
         TRANSCRIPT_SCHEMA,
         dlq_dir=str(tmp_path / "dlq"),
         pending_dir=str(tmp_path / "pend"),
-        zero_exchange=True,
-        wal_dir=str(tmp_path / "wal"),
-        plan_log=plans,
     )
     q.awaitTermination(180)
     assert len(tree.partitions()) >= 2
-    assert plans and all("Exchange" not in p for p in plans)
 
     twin = PartitionedLakeTable.create(
         str(tmp_path / "twin"), TRANSCRIPT_SCHEMA,

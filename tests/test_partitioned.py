@@ -10,6 +10,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from conftest import recorded_writes
+
 from oregonwaterdataportal_etl_spark.lake import (
     LakeTable,
     PartitionedLakeTable,
@@ -473,10 +475,13 @@ def test_partitioned_wal_zero_exchange_merge(spark, tmp_path):
     t = _create(tmp_path)
     t.merge(_events(spark, rows1))
     wal = write_partitioned_wal(_events(spark, rows2), str(tmp_path / "wal"), t)
-    plans: list = []
-    res = t.merge_prebucketed(spark, wal, _plan_out=plans)
+    with recorded_writes(spark) as writes:
+        res = t.merge_prebucketed(spark, wal)
     assert sorted(res.partitions) == ["2024-01-01", "2024-01-02", "2024-01-04"]
-    assert plans and all("Exchange" not in p for p in plans), plans[:1]
+    assert len(writes) == 3, writes  # one per day, child applies on pool threads
+    for tree, details in writes:
+        assert "Exchange" not in tree, tree
+        assert "Bucketed: true" in details
     # oracle: ordinary merge path on a twin table
     t2 = PartitionedLakeTable.create(
         str(tmp_path / "twin"), SCHEMA, key_cols=["id"],

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 import __spark_entry__ as entrymod
+from conftest import recorded_writes
 
 SF = "/root/testdata/sf0.001"
 
@@ -147,19 +148,6 @@ def test_lww_dedup_plan_one_exchange_one_window(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def _last_write_plan(spark) -> tuple[str, str]:
-    """(tree, details) of the physical plan of the last executed write,
-    read from the SQL status store (the plan the write really ran, after
-    adaptive re-planning: the tree is the final plan)."""
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    for i in reversed(range(execs.size())):
-        desc = execs.apply(i).physicalPlanDescription()
-        if "InsertIntoHadoopFsRelationCommand" in desc:
-            tree, _, details = desc.partition("\n\n")
-            return tree.split("== Initial Plan ==")[0], details
-    raise AssertionError("no write in the SQL status store")
-
-
 def _subtree(tree: str, node: str) -> list[str]:
     """Lines of ``tree`` below the first line containing ``node``
     (its descendants: the lines indented deeper than it)."""
@@ -234,10 +222,11 @@ def test_cow_merge_write_plan_shuffles_only_the_batch(spark, tmp_path):
     spark.createDataFrame(
         generate_changes_pdf(500, 100, seed=2, lsn_start=3000)
     ).write.parquet(batch_path)
-    r = t.merge(spark.read.parquet(batch_path))
+    with recorded_writes(spark) as writes:
+        r = t.merge(spark.read.parquet(batch_path))
     assert r.version == snap["version"] + 1
 
-    tree, details = _last_write_plan(spark)
+    tree, details = writes[-1]
     assert len(set(re.findall(r"\bExchange \((\d+)\)", tree))) == 1, tree
     below = _subtree(tree, "Exchange (")
     assert any("Scan parquet" in ln for ln in below), tree
@@ -273,10 +262,11 @@ def test_mor_merge_write_plan_ships_only_the_payload(spark, tmp_path):
     spark.createDataFrame(
         generate_changes_pdf(500, 100, seed=2, lsn_start=3000)
     ).write.parquet(batch_path)
-    r = t.merge(spark.read.parquet(batch_path), mode="mor")
+    with recorded_writes(spark) as writes:
+        r = t.merge(spark.read.parquet(batch_path), mode="mor")
     assert r.rows_delta
 
-    tree, details = _last_write_plan(spark)
+    tree, details = writes[-1]
     shipped, _ = _batch_exchange(tree, details)
     assert "__c_role" in shipped and "__f_role" in shipped, shipped
     assert re.search(r"(?<![_\w])role#", shipped) is None, shipped
@@ -307,8 +297,9 @@ def test_batch_resolve_plans_no_partial_group_limit_below_exchange(spark, tmp_pa
         spark.createDataFrame(
             generate_changes_pdf(500, 100, seed=2, lsn_start=3000)
         ).write.parquet(batch_path)
-        t.merge(spark.read.parquet(batch_path))
-        tree, details = _last_write_plan(spark)
+        with recorded_writes(spark) as writes:
+            t.merge(spark.read.parquet(batch_path))
+        tree, details = writes[-1]
     finally:
         spark.conf.set(key, prior)
     assert "WindowGroupLimit" in tree, tree
@@ -339,9 +330,10 @@ def test_cow_merge_null_keys_never_shuffle_the_base(spark, tmp_path):
     pdf.loc[0, "conv_id"] = None
     batch_path = str(tmp_path / "batch.parquet")
     spark.createDataFrame(pdf, schema=CHANGE_SCHEMA).write.parquet(batch_path)
-    t.merge(spark.read.parquet(batch_path))
+    with recorded_writes(spark) as writes:
+        t.merge(spark.read.parquet(batch_path))
 
-    tree, _ = _last_write_plan(spark)
+    tree, _ = writes[-1]
     assert "ShuffledHashJoin FullOuter" in tree, tree
     exchanges = set(re.findall(r"\bExchange \((\d+)\)", tree))
     assert exchanges, tree

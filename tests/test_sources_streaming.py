@@ -11,10 +11,7 @@ from oregonwaterdataportal_etl_spark.cdc.changegen import TRANSCRIPT_SCHEMA
 from oregonwaterdataportal_etl_spark.lake import LakeTable
 from oregonwaterdataportal_etl_spark.sources import readers
 from oregonwaterdataportal_etl_spark.sources.readers import read_xlsx
-from oregonwaterdataportal_etl_spark.streaming import (
-    start_cdc_stream,
-    start_cdc_stream_zx,
-)
+from oregonwaterdataportal_etl_spark.streaming import start_cdc_stream
 
 TSV = (
     "station_nbr\trecord_date\tinstantaneous_flow_cfs\n"
@@ -139,110 +136,69 @@ def test_read_xlsx_native(spark, tmp_path):
     assert set(only) == {"data"}
 
 
-def test_streaming_cdc_tail(spark, tmp_path):
-    """readStream file tail -> foreachBatch MERGE; final state equals a
-    direct batch apply of the same stream."""
-    changes = generate_changes(spark, n_events=3000, n_convs=200, seed=11)
-    stream_dir = str(tmp_path / "stream")
-    changes.write.mode("overwrite").parquet(stream_dir)
+def _run_stream(spark, stream_dir, table, ckpt, manifests):
+    """One AvailableNow pass of start_cdc_stream: the files appended
+    since the last pass become the new micro-batch(es)."""
+    q = start_cdc_stream(spark, stream_dir, table, ckpt, manifests, available_now=True)
+    q.awaitTermination(180)
+    return q
 
+
+def _rows(spark, t, *order):
+    return t.read(spark).orderBy(*order).collect()
+
+
+def test_streaming_cdc_tail(spark, tmp_path):
+    """readStream file tail -> foreachBatch MERGE across restarts. Each
+    AvailableNow pass applies the file appended since the last one, so
+    the second micro-batch merges against a non-empty base and
+    tombstones. A micro-batch that the checkpoint replays after its
+    manifest committed (a crash between the two commits) is a manifest
+    no-op, the new file lands, and the final state equals a direct
+    batch apply of the same stream."""
+    c1 = generate_changes(spark, n_events=2500, n_convs=150, seed=21)
+    c2 = generate_changes(spark, n_events=1500, n_convs=150, seed=22, lsn_start=2500)
+    c3 = generate_changes(spark, n_events=1000, n_convs=150, seed=23, lsn_start=4000)
+    stream_dir = str(tmp_path / "stream")
+    ckpt = str(tmp_path / "ckpt")
     t_stream = LakeTable.create(
         str(tmp_path / "t_stream"), TRANSCRIPT_SCHEMA, key_cols=["conv_id", "turn_idx"], num_buckets=8
     )
     manifests = ManifestLog(str(tmp_path / "manifests"))
-    q = start_cdc_stream(
-        spark, stream_dir, t_stream, str(tmp_path / "ckpt"), manifests, available_now=True
-    )
-    q.awaitTermination(120)
+
+    c1.coalesce(1).write.mode("append").parquet(stream_dir)
+    _run_stream(spark, stream_dir, t_stream, ckpt, manifests)
+    assert t_stream.stats()["tombstone_files"] > 0
+    c2.coalesce(1).write.mode("append").parquet(stream_dir)
+    _run_stream(spark, stream_dir, t_stream, ckpt, manifests)
+    assert len(manifests.all()) == 2
+
+    # crash after batch 1's manifest commit, before its checkpoint commit
+    for name in ("1", ".1.crc"):
+        path = os.path.join(ckpt, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    v = t_stream.current_version()
+    c3.coalesce(1).write.mode("append").parquet(stream_dir)
+    q = _run_stream(spark, stream_dir, t_stream, ckpt, manifests)
+    assert 1 in [p.batchId for p in q.recentProgress]  # batch 1 replayed
+    assert t_stream.current_version() == v + 1  # ... and only c3 merged
+    assert len(manifests.all()) == 3
+    assert all(m["status"] == "committed" for m in manifests.all())
 
     t_batch = LakeTable.create(
         str(tmp_path / "t_batch"), TRANSCRIPT_SCHEMA, key_cols=["conv_id", "turn_idx"], num_buckets=8
     )
     t_batch.merge(spark.read.parquet(stream_dir))
-
-    a = t_stream.read(spark).orderBy("conv_id", "turn_idx").collect()
-    b = t_batch.read(spark).orderBy("conv_id", "turn_idx").collect()
-    assert a == b and len(a) > 0
-    assert manifests.all() and all(m["status"] == "committed" for m in manifests.all())
+    a = _rows(spark, t_stream, "conv_id", "turn_idx")
+    assert a == _rows(spark, t_batch, "conv_id", "turn_idx") and len(a) > 0
 
 
-def test_streaming_zx_tail(spark, tmp_path):
-    """Zero-exchange streaming loop: readStream tail -> per-batch
-    bucketed WAL -> merge_prebucketed. Final state equals the batch
-    path, per-batch WAL dirs are cleaned up, and EVERY micro-batch's
-    resolve plan has zero Exchange (the production steady-state pin).
-
-    maxFilesPerTrigger=1 over two stream files forces multiple
-    micro-batches, so the second batch exercises the resolve against a
-    non-empty base + tombstones — the steady state, not just the
-    first-load special case."""
-    c1 = generate_changes(spark, n_events=2500, n_convs=150, seed=21)
-    c2 = generate_changes(
-        spark, n_events=1500, n_convs=150, seed=22, lsn_start=2500
-    )
-    stream_dir = tmp_path / "zstream"
-    c1.coalesce(1).write.mode("append").parquet(str(stream_dir))
-    c2.coalesce(1).write.mode("append").parquet(str(stream_dir))
-
-    t_zx = LakeTable.create(
-        str(tmp_path / "t_zx"),
-        TRANSCRIPT_SCHEMA,
-        key_cols=["conv_id", "turn_idx"],
-        num_buckets=8,
-    )
-    manifests = ManifestLog(str(tmp_path / "zmanifests"))
-    wal_dir = str(tmp_path / "zwal")
-    plans: list[str] = []
-    q = start_cdc_stream_zx(
-        spark, str(stream_dir), t_zx, str(tmp_path / "zckpt"), manifests,
-        wal_dir, available_now=True, plan_log=plans,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(180)
-    assert len(plans) >= 2, "expected one resolve plan per micro-batch"
-
-    t_batch = LakeTable.create(
-        str(tmp_path / "t_zbatch"),
-        TRANSCRIPT_SCHEMA,
-        key_cols=["conv_id", "turn_idx"],
-        num_buckets=8,
-    )
-    t_batch.merge(spark.read.parquet(str(stream_dir)))
-
-    a = t_zx.read(spark).orderBy("conv_id", "turn_idx").collect()
-    b = t_batch.read(spark).orderBy("conv_id", "turn_idx").collect()
-    assert a == b and len(a) > 0
-    assert plans, "no batch plans captured"
-    for plan in plans:
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan
-    # applied batches clean their WAL subdirs
-    assert not [e for e in os.listdir(wal_dir) if e.startswith("batch-")]
-    assert manifests.all() and all(
-        m["status"] == "committed" for m in manifests.all()
-    )
-
-    # restart with more stream data: checkpoint resumes, already-applied
-    # batches replay as manifest no-ops, new data lands
-    c3 = generate_changes(
-        spark, n_events=1000, n_convs=150, seed=23, lsn_start=4000
-    )
-    c3.coalesce(1).write.mode("append").parquet(str(stream_dir))
-    q2 = start_cdc_stream_zx(
-        spark, str(stream_dir), t_zx, str(tmp_path / "zckpt"), manifests,
-        wal_dir, available_now=True, plan_log=plans,
-    )
-    q2.awaitTermination(180)
-    t_batch.merge(c3)
-    a = t_zx.read(spark).orderBy("conv_id", "turn_idx").collect()
-    b = t_batch.read(spark).orderBy("conv_id", "turn_idx").collect()
-    assert a == b
-
-
-def test_streaming_zx_folds_pending_mor_deltas(spark, tmp_path):
-    """A table carrying pending merge-on-read deltas when the zx stream
-    starts: the first micro-batch's merge_prebucketed folds them (no
-    compact needed), and the final state equals the batch path."""
+def test_streaming_cdc_folds_pending_mor_deltas(spark, tmp_path):
+    """A table carrying pending merge-on-read deltas when the stream
+    starts: the first micro-batch's copy-on-write merge folds the
+    deltas of every bucket it touches (no compact needed), and the
+    final state equals the batch path."""
     pre = generate_changes(spark, n_events=2000, n_convs=120, seed=31)
     tail = generate_changes(
         spark, n_events=1200, n_convs=120, seed=32, lsn_start=2000
@@ -250,20 +206,19 @@ def test_streaming_zx_folds_pending_mor_deltas(spark, tmp_path):
     stream_dir = str(tmp_path / "mstream")
     tail.coalesce(1).write.parquet(stream_dir)
 
-    t_zx = LakeTable.create(
-        str(tmp_path / "mt_zx"), TRANSCRIPT_SCHEMA,
+    t = LakeTable.create(
+        str(tmp_path / "mt"), TRANSCRIPT_SCHEMA,
         key_cols=["conv_id", "turn_idx"], num_buckets=8,
     )
-    t_zx.merge(pre, mode="mor")
-    assert t_zx.snapshot().get("deltas")
+    t.merge(pre, mode="mor")
+    assert t.snapshot().get("deltas")
 
-    q = start_cdc_stream_zx(
-        spark, stream_dir, t_zx, str(tmp_path / "mckpt"),
-        ManifestLog(str(tmp_path / "mman")), str(tmp_path / "mwal"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    assert not t_zx.snapshot().get("deltas"), "stream merge should fold deltas"
+    manifests = ManifestLog(str(tmp_path / "mman"))
+    _run_stream(spark, stream_dir, t, str(tmp_path / "mckpt"), manifests)
+    (m,) = manifests.all()
+    touched = {str(b) for b in m["metrics"]["touched_buckets"]}
+    assert touched
+    assert not touched & set(t.snapshot().get("deltas") or {})
 
     t_batch = LakeTable.create(
         str(tmp_path / "mt_b"), TRANSCRIPT_SCHEMA,
@@ -271,18 +226,15 @@ def test_streaming_zx_folds_pending_mor_deltas(spark, tmp_path):
     )
     t_batch.merge(pre)
     t_batch.merge(tail)
-    a = t_zx.read(spark).orderBy("conv_id", "turn_idx").collect()
-    b = t_batch.read(spark).orderBy("conv_id", "turn_idx").collect()
-    assert a == b and len(a) > 0
+    a = _rows(spark, t, "conv_id", "turn_idx")
+    assert a == _rows(spark, t_batch, "conv_id", "turn_idx") and len(a) > 0
 
 
-def test_streaming_zx_partitioned_tree(spark, tmp_path):
-    """start_cdc_stream_zx pointed at a PartitionedLakeTable: each
-    micro-batch rides a day-partitioned WAL through the tree's
-    merge_prebucketed — per-day plans Exchange-free, final state equal
-    to the ordinary tree batch path, checkpoint restart resumes."""
-    from pyspark.sql import functions as F
-
+def test_streaming_cdc_partitioned_tree(spark, tmp_path):
+    """start_cdc_stream pointed at a PartitionedLakeTable: each
+    micro-batch routes through the tree's merge; the state equals a
+    twin tree fed by batch merges, also after a restart that picks up
+    a newly appended file."""
     from oregonwaterdataportal_etl_spark.lake import PartitionedLakeTable
 
     def spread_days(df):
@@ -291,49 +243,24 @@ def test_streaming_zx_partitioned_tree(spark, tmp_path):
             "ts", F.expr("timestampadd(DAY, int(crc32(conv_id) % 3), ts)")
         )
 
-    c1 = spread_days(generate_changes(spark, n_events=2000, n_convs=120, seed=31))
-    c2 = spread_days(generate_changes(
-        spark, n_events=1200, n_convs=120, seed=32, lsn_start=2000))
-    stream_dir = tmp_path / "pzstream"
-    c1.coalesce(1).write.mode("append").parquet(str(stream_dir))
-    c2.coalesce(1).write.mode("append").parquet(str(stream_dir))
+    def create(name):
+        return PartitionedLakeTable.create(
+            str(tmp_path / name), TRANSCRIPT_SCHEMA,
+            key_cols=["conv_id", "turn_idx"], partition_col="ts", num_buckets=4,
+        )
 
-    tree = PartitionedLakeTable.create(
-        str(tmp_path / "t_ptzx"), TRANSCRIPT_SCHEMA,
-        key_cols=["conv_id", "turn_idx"], partition_col="ts", num_buckets=4,
-    )
-    manifests = ManifestLog(str(tmp_path / "pzman"))
-    wal_dir = str(tmp_path / "pzwal")
-    plans: list[str] = []
-    q = start_cdc_stream_zx(
-        spark, str(stream_dir), tree, str(tmp_path / "pzckpt"), manifests,
-        wal_dir, available_now=True, plan_log=plans, max_files_per_trigger=1,
-    )
-    q.awaitTermination(180)
+    stream_dir = str(tmp_path / "pstream")
+    ckpt, manifests = str(tmp_path / "pckpt"), ManifestLog(str(tmp_path / "pman"))
+    tree, twin = create("t_pt"), create("t_pttwin")
+    order = ("conv_id", "turn_idx", "ts")
+    for i, (n, lsn_start) in enumerate(((2000, 0), (1200, 2000))):
+        c = spread_days(generate_changes(
+            spark, n_events=n, n_convs=120, seed=31 + i, lsn_start=lsn_start
+        )).localCheckpoint()
+        c.coalesce(1).write.mode("append").parquet(stream_dir)
+        _run_stream(spark, stream_dir, tree, ckpt, manifests)
+        twin.merge(c)
+        a = _rows(spark, tree, *order)
+        assert a == _rows(spark, twin, *order) and len(a) > 0
     assert len(tree.partitions()) >= 2  # the stream really spread days
-    assert plans and all("Exchange" not in p for p in plans)
-    assert not [e for e in os.listdir(wal_dir) if e.startswith("batch-")]
-
-    twin = PartitionedLakeTable.create(
-        str(tmp_path / "t_pttwin"), TRANSCRIPT_SCHEMA,
-        key_cols=["conv_id", "turn_idx"], partition_col="ts", num_buckets=4,
-    )
-    twin.merge(spark.read.parquet(str(stream_dir)))
-    a = tree.read(spark).orderBy("conv_id", "turn_idx", "ts").collect()
-    b = twin.read(spark).orderBy("conv_id", "turn_idx", "ts").collect()
-    assert a == b and len(a) > 0
-
-    # restart: committed batches no-op, new file lands
-    c3 = spread_days(generate_changes(
-        spark, n_events=800, n_convs=120, seed=33, lsn_start=3200))
-    c3.localCheckpoint(eager=True).coalesce(1).write.mode("append").parquet(
-        str(stream_dir))
-    q2 = start_cdc_stream_zx(
-        spark, str(stream_dir), tree, str(tmp_path / "pzckpt"), manifests,
-        wal_dir, available_now=True,
-    )
-    q2.awaitTermination(180)
-    twin.merge(spark.read.parquet(str(stream_dir)).filter(F.col("lsn") >= 3200))
-    a = tree.read(spark).orderBy("conv_id", "turn_idx", "ts").collect()
-    b = twin.read(spark).orderBy("conv_id", "turn_idx", "ts").collect()
-    assert a == b
+    assert len(manifests.all()) == 2

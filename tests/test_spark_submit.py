@@ -242,3 +242,24 @@ def test_spark_submit_envelope_ingest_and_replay(spark, tmp_path):
     assert m2["replay"]["still_dead"] == m2["dlq_rows"] < m1["dlq_rows"]
     assert m2["rows"] >= m1["rows"]
     assert LakeTable(str(tmp_path / "table")).read(spark).count() == m2["rows"]
+
+
+def test_envelope_ingest_rejects_unknown_flags(monkeypatch):
+    """jobs/envelope_ingest.py exits naming a --flag it does not know
+    (a stale --zx, a typo) and printing the usage line, before any
+    SparkSession starts: no flag falls through into the positional
+    args, where it would be parsed as the payload schema JSON."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "envelope_ingest", os.path.join(REPO, "jobs", "envelope_ingest.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr(job, "SparkSession", None)  # building one raises
+    for flag in ("--zx", "--replay"):
+        monkeypatch.setattr(
+            sys, "argv", ["envelope_ingest.py", "wire/*", "t", "state", flag]
+        )
+        with pytest.raises(SystemExit, match=rf"unknown flag {flag}\nusage: "):
+            job.main()
