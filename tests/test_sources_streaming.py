@@ -149,7 +149,35 @@ def _rows(spark, t, *order):
 
 
 def test_streaming_cdc_tail(spark, tmp_path):
-    """readStream file tail -> foreachBatch MERGE across restarts. Each
+    """readStream file tail -> foreachBatch MERGE; final state equals a
+    direct batch apply of the same stream."""
+    changes = generate_changes(spark, n_events=3000, n_convs=200, seed=11)
+    stream_dir = str(tmp_path / "stream")
+    changes.write.mode("overwrite").parquet(stream_dir)
+
+    t_stream = LakeTable.create(
+        str(tmp_path / "t_stream"), TRANSCRIPT_SCHEMA, key_cols=["conv_id", "turn_idx"], num_buckets=8
+    )
+    manifests = ManifestLog(str(tmp_path / "manifests"))
+    q = start_cdc_stream(
+        spark, stream_dir, t_stream, str(tmp_path / "ckpt"), manifests, available_now=True
+    )
+    q.awaitTermination(120)
+
+    t_batch = LakeTable.create(
+        str(tmp_path / "t_batch"), TRANSCRIPT_SCHEMA, key_cols=["conv_id", "turn_idx"], num_buckets=8
+    )
+    t_batch.merge(spark.read.parquet(stream_dir))
+
+    a = t_stream.read(spark).orderBy("conv_id", "turn_idx").collect()
+    b = t_batch.read(spark).orderBy("conv_id", "turn_idx").collect()
+    assert a == b and len(a) > 0
+    assert manifests.all() and all(m["status"] == "committed" for m in manifests.all())
+
+
+def test_streaming_zx_tail(spark, tmp_path):
+    """Multi-batch tail of start_cdc_stream across restarts (the checks
+    of the removed zero-exchange stream tail, kept under its name). Each
     AvailableNow pass applies the file appended since the last one, so
     the second micro-batch merges against a non-empty base and
     tombstones. A micro-batch that the checkpoint replays after its
