@@ -249,23 +249,20 @@ def q_cdc_mixed_mode(spark, sf):
 def q_cdc_partitioned(spark, sf):
     """The TIME-PARTITIONED engine under the driver's value gate: the
     events stream becomes a change log (key (user_id, k), lsn =
-    event_id, 'error' = delete) applied to a PartitionedLakeTable —
-    days(ts) x bucket(key), each day an independent child table, root
-    version-vector commits — in two halves (COW, then merge-on-read +
-    fan-out compact), followed by a METADATA-ONLY retention drop of
-    the first ten days. Routing uses Hudi's non-global-index contract
+    event_id, 'error' = delete) applied to a LakeTable partitioned by
+    days(ts) x bucket(key) — each (day, bucket) a group of one manifest
+    — in two halves (COW, then merge-on-read + compact), followed by a
+    METADATA-ONLY retention drop of the first five days. Routing uses Hudi's non-global-index contract
     (same key on different days = different rows), so the oracle is a
     pure LWW SQL fold per (day, user_id, k) filtered to surviving
-    days: any divergence in day routing, per-partition merge, the
-    vector read, MOR fold or the drop breaks the value hash."""
+    days: any divergence in day routing, per-group merge, the pruned
+    read, MOR fold or the drop breaks the value hash."""
     import shutil
     import tempfile
 
-    from oregonwaterdataportal_etl_spark.lake import PartitionedLakeTable
+    from oregonwaterdataportal_etl_spark.lake import LakeTable
 
-    # first ten days only: the per-day child tables make partition
-    # count the dominant small-scale cost, and ten is enough to gate
-    # routing + drop semantics without a 30-partition fan-out
+    # first ten days only: enough to gate routing + drop semantics
     ev = (
         _t(spark, sf, "events")
         .filter(F.col("ts") < F.lit("2024-01-11").cast("timestamp"))
@@ -287,7 +284,7 @@ def q_cdc_partitioned(spark, sf):
     mid = ev.agg(F.percentile_approx("lsn", 0.5)).collect()[0][0]
     tmp = tempfile.mkdtemp(prefix="cdc_part_")
     try:
-        table = PartitionedLakeTable.create(
+        table = LakeTable.create(
             os.path.join(tmp, "t"),
             T.StructType(
                 [

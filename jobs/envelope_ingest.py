@@ -17,8 +17,9 @@ the transcript schema. The table is created on first run.
 
 Default trigger is AvailableNow (one catch-up pass, exit — the cron
 shape); --continuous keeps the stream live with an optional
-processing-time trigger (default "10 seconds"). Any other --flag
-exits with the usage line before a SparkSession starts.
+processing-time trigger (default "10 seconds"). Any other --flag,
+fewer than three positional arguments or an --op-alias value without
+a colon exits with the usage line before a SparkSession starts.
 
 --replay-dlq runs the quarantine back through the current parser
 FIRST (see streaming.replay_dlq) — pass --op-alias for contract
@@ -65,12 +66,16 @@ def main() -> None:
         elif a == "--replay-dlq":
             do_replay = True
         elif a.startswith("--op-alias="):
-            wire, engine = a.split("=", 1)[1].split(":", 1)
+            wire, colon, engine = a.split("=", 1)[1].partition(":")
+            if not colon:
+                raise SystemExit(f"--op-alias needs wire:engine, got {a}\n{USAGE}")
             aliases[wire] = engine
         elif a.startswith("--"):
             raise SystemExit(f"unknown flag {a}\n{USAGE}")
         else:
             args.append(a)
+    if len(args) < 3:
+        raise SystemExit(USAGE)
     wire_glob, table_dir, state_dir = args[0:3]
     schema = (
         T.StructType.fromJson(json.loads(args[3]))

@@ -31,10 +31,9 @@ nothing; thresholds tune via --max-files=N --max-deltas=N
 output JSON under "policy_actions". Loop the job until that report
 comes back empty — each action clears its own trigger.
 
-A TIME-PARTITIONED root (lake/partitioned.py) is auto-detected from
-its manifest and maintained tree-wide; --keep-partitions=N adds
-data-relative retention (newest N partition values stay, the rest
-drop metadata-only) to the --auto policy.
+On a time-partitioned table --keep-partitions=N adds data-relative
+retention (newest N partition values stay, the rest drop
+metadata-only) to the --auto policy.
 
 Prints one JSON line of before/after metrics to stdout.
 """
@@ -48,33 +47,9 @@ from oregonwaterdataportal_etl_spark.cdc import OffsetLog
 from oregonwaterdataportal_etl_spark.lake import (
     LakeTable,
     MaintenancePolicy,
-    PartitionedLakeTable,
     maintain,
 )
 from oregonwaterdataportal_etl_spark.lake.table import retry_on_conflict as _retry
-
-
-def _open_table(table_dir: str):
-    """LakeTable or PartitionedLakeTable, decided by the manifest."""
-    t = PartitionedLakeTable(table_dir)
-    if t.exists() and "partition_col" in t.snapshot():
-        return t
-    return LakeTable(table_dir)
-
-
-def _flat_stats(table) -> dict:
-    """One stats shape for both table kinds (children summed)."""
-    s = table.stats()
-    if "num_partitions" not in s:
-        return s
-    per = list(s["partitions"].values())
-    return {
-        "base_files": sum(p["base_files"] for p in per),
-        "delta_files": sum(p["delta_files"] for p in per),
-        "rows_base": sum(p["rows_base"] for p in per),
-        "num_buckets": table.snapshot()["num_buckets"],
-        "num_partitions": s["num_partitions"],
-    }
 
 
 def main() -> None:
@@ -101,9 +76,9 @@ def main() -> None:
     offsets_dir = args[1] if len(args) > 1 else None
     keep_last = int(args[2]) if len(args) > 2 else 3
     spark = SparkSession.builder.appName("owdp-maintain").getOrCreate()
-    table = _open_table(table_dir)
+    table = LakeTable(table_dir)
     if auto:
-        before = _flat_stats(table)
+        before = table.stats()
         policy = MaintenancePolicy(
             expire_tombstones_with_offsets=(
                 OffsetLog(offsets_dir) if offsets_dir else None
@@ -112,7 +87,7 @@ def main() -> None:
             **knobs,
         )
         report = _retry(lambda: maintain(spark, table, policy))
-        after = _flat_stats(table)
+        after = table.stats()
         print(
             json.dumps(
                 {
@@ -123,17 +98,12 @@ def main() -> None:
                     "delta_files_after": after["delta_files"],
                     "rows_base": after["rows_base"],
                     "num_buckets": after["num_buckets"],
-                    **(
-                        {"num_partitions": after["num_partitions"]}
-                        if "num_partitions" in after
-                        else {}
-                    ),
                 }
             )
         )
         spark.stop()
         return
-    before = _flat_stats(table)
+    before = table.stats()
     if rebucket_to is not None:
         _retry(lambda: table.rebucket(spark, rebucket_to))
     version = _retry(lambda: table.compact(spark))
@@ -143,7 +113,7 @@ def main() -> None:
             lambda: table.expire_tombstones(spark, offsets=OffsetLog(offsets_dir))
         )
     removed = table.vacuum(keep_last=keep_last)
-    after = _flat_stats(table)
+    after = table.stats()
     print(
         json.dumps(
             {

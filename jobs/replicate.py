@@ -15,8 +15,8 @@ run it on a schedule behind the ingest job, exactly like the
 reference's dependent cron assets. Crash-safe: a death between the
 replica merge and the offset commit redelivers the range next run,
 and the replica's per-row LSN guard absorbs the replay. The replica
-is created on first run with the source's schema (its own bucket
-count — replication is logical).
+is created on first run with the source's schema, keys and partition
+spec (its own bucket count — replication is logical).
 
 Prints one JSON line of hop metrics to stdout.
 """
@@ -37,11 +37,16 @@ def main() -> None:
     source = LakeTable(source_dir)
     replica = LakeTable(replica_dir)
     if not replica.exists():
+        # the replica keeps the source's row identity: its keys and, for
+        # a time-partitioned source, its partition spec
+        snap = source.snapshot()
         replica = LakeTable.create(
             replica_dir,
             source.schema(),
-            source.snapshot()["key_cols"],
+            snap["key_cols"],
             num_buckets=num_buckets,
+            partition_col=snap.get("partition_col"),
+            transform=snap.get("transform") or "days",
         )
     hops = replicate_available(
         spark, source, replica, OffsetLog(offsets_dir, "follower")

@@ -3,11 +3,7 @@ from .offsets import OffsetLog
 from .manifests import ManifestLog
 from .apply import lww_dedup, oracle_fold
 from .runner import CdcRunner
-from .source import (
-    BucketedWalSource,
-    LsnRangedParquetSource,
-    PartitionedWalSource,
-)
+from .source import BucketedWalSource, LsnRangedParquetSource
 from .follower import ChangelogFollower, changelog_to_events, replicate_available
 from .watermarks import WatermarkStore
 from .envelope import (
@@ -31,7 +27,6 @@ __all__ = [
     "CdcRunner",
     "LsnRangedParquetSource",
     "BucketedWalSource",
-    "PartitionedWalSource",
     "ChangelogFollower",
     "changelog_to_events",
     "replicate_available",

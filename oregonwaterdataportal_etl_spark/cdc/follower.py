@@ -102,34 +102,24 @@ def make_replica_sink(
         from ..lake.table import _files_max_lsn, snapshot_files
 
         snap = source.snapshot(to)
-        if hasattr(source, "partition_table"):
-            # PartitionedLakeTable source: dropped-partition deletes
-            # arrive with null _commit_lsn and must inherit an LSN
-            # STRICTLY ABOVE everything the replica has applied — the
-            # dropped rows themselves may hold the table's highest
-            # LSNs, so the watermark must span the FROM vector too
-            # (the to-vector no longer references them), and +1 so the
+        if snap.get("partition_col"):
+            # partitioned source: dropped-partition deletes arrive with
+            # null _commit_lsn and must inherit an LSN STRICTLY ABOVE
+            # everything the replica has applied — the dropped rows
+            # themselves may hold the table's highest LSNs, so the
+            # watermark must span the FROM version's files too (the
+            # to-version no longer references them), and +1 so the
             # delete wins outright instead of tying into the op-aware
             # tie-break.
-            vecs = [snap.get("partitions") or {}]
-            if frm > 0:
-                vecs.append(source.snapshot(frm).get("partitions") or {})
-            files = [
-                f
-                for vec in vecs
-                for val, cv in vec.items()
-                for _side, _b, f in snapshot_files(
-                    source.partition_table(val).snapshot(cv)
-                )
-            ]
-            wm = _files_max_lsn(files)
+            snaps = [snap] + ([source.snapshot(frm)] if frm > 0 else [])
+            wm = _files_max_lsn([f for s in snaps for *_g, f in snapshot_files(s)])
             replica.merge(
                 changelog_to_events(
                     changes, fallback_lsn=(wm if wm is not None else 0) + 1
                 )
             )
             return
-        files = [f for _side, _b, f in snapshot_files(snap)]
+        files = [f for *_g, f in snapshot_files(snap)]
         wm = _files_max_lsn(files)
         if wm is None:
             wm = (

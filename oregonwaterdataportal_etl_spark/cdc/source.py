@@ -115,16 +115,8 @@ class LsnRangedParquetSource:
             out = hi if out is None else max(out, hi)
         return out
 
-    # Partitioned WALs set this False: their batch-<hex>/p=<value>/
-    # nesting mixes a non-partition level with a partition level, which
-    # Spark's directory-structure inference rejects outright
-    # (CONFLICTING_DIRECTORY_STRUCTURES) — and their p= column is
-    # routing metadata that must stay out of the batch anyway.
-    _use_base_path = True
-
     def _reader(self):
-        r = self.spark.read
-        return r.option("basePath", self.path) if self._use_base_path else r
+        return self.spark.read.option("basePath", self.path)
 
     def _read_all(self) -> DataFrame:
         """Directory-level read via the recursive file list + basePath:
@@ -170,7 +162,8 @@ class BucketedWalSource(LsnRangedParquetSource):
     LsnRangedParquetSource does (footer LSN pruning, metadata-only
     max_lsn) PLUS the ``prebucketed`` capability flag that routes
     CdcRunner windows through ``LakeTable.merge_prebucketed`` — the
-    zero-exchange steady-state apply.
+    zero-exchange steady-state apply. A time-partitioned table takes the
+    same log (bucketed by the keys, rows carrying the partition column).
 
     ``pruned_dir(lo, hi)`` materializes the window's file subset as a
     hardlink directory that preserves the Spark bucket-suffix names, so
@@ -195,49 +188,4 @@ class BucketedWalSource(LsnRangedParquetSource):
         d = tempfile.mkdtemp(prefix=".walwin-", dir=self.path)
         for f in keep:
             os.link(f, os.path.join(d, os.path.basename(f)))
-        return d
-
-
-class PartitionedWalSource(BucketedWalSource):
-    """A DAY-PARTITIONED bucketed change log
-    (``lake.partitioned.write_partitioned_wal``: ``p=<value>/`` hive
-    subdirs, each in the tree's bucket layout). Everything
-    BucketedWalSource does — footer LSN pruning, metadata-only
-    max_lsn, the ``prebucketed`` routing flag — except ``pruned_dir``
-    PRESERVES the ``p=`` structure, so a CdcRunner bound to a
-    PartitionedLakeTable applies each window through the tree's
-    ``merge_prebucketed``: time-routed AND exchange-free."""
-
-    # skip basePath directory inference (see LsnRangedParquetSource):
-    # reads return payload columns only, never the p= routing column
-    _use_base_path = False
-
-    def pruned_dir(self, lo: int, hi: int) -> str | None:
-        import shutil
-        import tempfile
-
-        keep, _total = self.files_for(lo, hi)
-        if not keep:
-            return None
-        d = tempfile.mkdtemp(prefix=".pwalwin-", dir=self.path)
-        try:
-            for f in keep:
-                rel = os.path.relpath(f, self.path)
-                pseg = next(
-                    (s for s in rel.split(os.sep) if s.startswith("p=")), None
-                )
-                if pseg is None:
-                    raise ValueError(
-                        f"{f} carries no p=<value> path segment — not a "
-                        "partitioned WAL (use BucketedWalSource for flat "
-                        "logs)"
-                    )
-                sub = os.path.join(d, pseg)
-                os.makedirs(sub, exist_ok=True)
-                os.link(f, os.path.join(sub, os.path.basename(f)))
-        except BaseException:
-            # never leak the window dir (or its hardlinks, which would
-            # pin deleted WAL files' space) on a failed build
-            shutil.rmtree(d, ignore_errors=True)
-            raise
         return d

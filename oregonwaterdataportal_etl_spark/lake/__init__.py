@@ -1,11 +1,7 @@
 from .bucketed import register_bucketed_table, write_bucketed_wal
+from .convert import convert_partition_tree
 from .incremental import AggSpec, IncrementalAggView
 from .maintenance import MaintenancePolicy, maintain, plan_maintenance
-from .partitioned import (
-    PartitionedLakeTable,
-    PartitionedMergeResult,
-    write_partitioned_wal,
-)
 from .table import LakeTable, MergeResult
 from .wap import (
     Audit,
@@ -13,7 +9,6 @@ from .wap import (
     DeltaBounds,
     ExprHolds,
     NotNull,
-    PartitionedWapStage,
     RowBounds,
     UniqueKeys,
     WapAuditError,
@@ -28,9 +23,7 @@ __all__ = [
     "IncrementalAggView",
     "LakeTable",
     "MergeResult",
-    "PartitionedLakeTable",
-    "PartitionedMergeResult",
-    "write_partitioned_wal",
+    "convert_partition_tree",
     "MaintenancePolicy",
     "maintain",
     "plan_maintenance",
@@ -44,7 +37,6 @@ __all__ = [
     "RowBounds",
     "ExprHolds",
     "run_audits",
-    "PartitionedWapStage",
     "WapStage",
     "WapAuditError",
     "WapConflictError",

@@ -228,15 +228,13 @@ class IncrementalAggView:
             # column, so only buckets holding changed groups are opened
             snap = vt.snapshot()
             probe = delta.select(F.col(self.group_col))
-            buckets = sorted(
-                r["b"]
+            groups = {
+                str(r["b"])
                 for r in probe.select(
                     vt._bucket_expr(snap).alias("b")
                 ).distinct().collect()
-            )
-            old = vt._resolved_view(
-                spark, snap["version"], buckets=buckets
-            )
+            }
+            old = vt._resolved_view(spark, snap["version"], groups)
 
         gcol = self.group_col
         joined = delta.join(

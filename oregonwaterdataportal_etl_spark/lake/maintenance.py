@@ -33,7 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from .table import LakeTable, snapshot_files
+from .table import LakeTable, _snap_partitions, snapshot_files
 
 
 @dataclass
@@ -66,7 +66,7 @@ class MaintenancePolicy:
     orphan_grace_seconds: float = 86400.0
     cluster_by: list[str] | None = None
     compact_kwargs: dict = field(default_factory=dict)
-    # PartitionedLakeTable only (ignored for flat tables): retention =
+    # partitioned tables only (ignored for flat tables): retention =
     # keep the newest K partition values, drop the rest METADATA-ONLY
     # (lexicographic order == chronological for days/months transforms);
     # data-relative rather than wall-clock-relative so a paused pipeline
@@ -78,22 +78,33 @@ def plan_maintenance(table: LakeTable, policy: MaintenancePolicy) -> dict:
     """The decision half of ``maintain`` — metadata only, no Spark.
 
     Returns {concern: reason} for every action the policy would take
-    now (empty dict = healthy table)."""
+    now (empty dict = healthy table). Counts are per group: a bucket,
+    or a (partition, bucket) pair of a partitioned table. Retention
+    (``keep_partitions``) comes first: the plan lists the partition
+    values to drop, and nothing is compacted that is about to go."""
     snap = table.snapshot()
     n_buckets = snap["num_buckets"]
     plan: dict[str, str] = {}
-    per_bucket = Counter((side, b) for side, b, _f in snapshot_files(snap))
+    live = _snap_partitions(snap)
+    if policy.keep_partitions is not None and len(live) > policy.keep_partitions:
+        # slice, not live[-K] (K=0 would index live[0] and silently
+        # invert "retain zero" into "retain all")
+        plan["drop_partitions"] = live[: len(live) - policy.keep_partitions]
+        return plan
+    per_group = Counter((side, p, b) for side, p, b, _f in snapshot_files(snap))
 
     def worst(side: str) -> int:
-        return max((n for (s, _b), n in per_bucket.items() if s == side), default=0)
+        return max((n for (s, *_g), n in per_group.items() if s == side), default=0)
 
     if policy.max_rows_per_bucket:
         rows = snap.get("row_counts", {})
         total = sum(rows.values())
-        mean = total / n_buckets if n_buckets else 0
+        # a partitioned table spreads each partition over the buckets
+        parts = max(len(live), 1)
+        mean = total / (n_buckets * parts) if n_buckets else 0
         if mean > policy.max_rows_per_bucket:
             target = n_buckets
-            while total / target > policy.max_rows_per_bucket:
+            while total / (target * parts) > policy.max_rows_per_bucket:
                 target *= 2
             plan["rebucket"] = (
                 f"mean rows/bucket {mean:.0f} > {policy.max_rows_per_bucket}; "
@@ -136,14 +147,12 @@ def maintain(
 
     Returns {concern: reason} for the actions actually taken (the
     ``plan_maintenance`` plan, executed). Idempotent: a second call
-    on the resulting table plans nothing for the same concerns.
-
-    A PartitionedLakeTable routes to its own ``maintain`` (retention
-    drop, per-child upkeep, root-level history GC) — so a CdcRunner
-    with a maintenance_policy drives either table kind unchanged."""
-    if hasattr(table, "partition_table"):
-        return table.maintain(spark, policy)
+    on the resulting table plans nothing for the same concerns. A
+    retention drop runs first and the rest is planned after it."""
     plan = plan_maintenance(table, policy)
+    if "drop_partitions" in plan:
+        table.drop_partitions(values=plan["drop_partitions"])
+        plan.update(plan_maintenance(table, policy))
     if "rebucket" in plan:
         table.rebucket(spark, plan.pop("_rebucket_target"))
         # rebucket rewrites every file into the NEW layout — one base

@@ -20,7 +20,7 @@ from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .table import snapshot_files
+from .table import _group_key, snapshot_files
 
 _KIND = {"b": "base", "d": "delta", "t": "tombstone"}
 
@@ -34,21 +34,30 @@ def _stat(path: str) -> tuple[int | None, float | None]:
 
 
 def build_metadata_df(spark: SparkSession, table, kind: str) -> DataFrame:
+    """A partitioned table's "files" and "partitions" frames lead with
+    a ``partition`` column; "partitions" then has one row per live
+    (partition, bucket) group instead of one per bucket."""
+    snap = table.snapshot()
+    part = ["partition string"] if snap.get("partition_col") else []
+
+    def lead(p):
+        return (p,) if part else ()
+
     if kind == "files":
         rows = [
-            (b, _KIND[side], p, *_stat(p))
-            for side, b, p in snapshot_files(table.snapshot())
+            (*lead(p), b, _KIND[side], f, *_stat(f))
+            for side, p, b, f in snapshot_files(snap)
         ]
         return spark.createDataFrame(
             rows,
-            "bucket int, kind string, path string, size_bytes long, "
-            "modified_at double",
+            ", ".join(part + ["bucket int, kind string, path string, "
+                              "size_bytes long, modified_at double"]),
         )
     if kind == "history":
         rows = []
         for snap in table.history():
             s = snap.get("summary") or {}
-            n = Counter(side for side, _b, _p in snapshot_files(snap))
+            n = Counter(side for side, *_f in snapshot_files(snap))
             rows.append(
                 (
                     snap["version"],
@@ -70,17 +79,21 @@ def build_metadata_df(spark: SparkSession, table, kind: str) -> DataFrame:
             "tombstone_files int",
         )
     if kind == "partitions":
-        snap = table.snapshot()
         rc = snap.get("row_counts") or {}
-        n = Counter((side, b) for side, b, _p in snapshot_files(snap))
+        n = Counter((side, p, b) for side, p, b, _f in snapshot_files(snap))
+        groups = (
+            sorted({(p, b) for _s, p, b in n}) if part
+            else [(None, b) for b in range(snap["num_buckets"])]
+        )
         rows = [
-            (b, rc.get(str(b), 0), n["b", b], n["d", b], n["t", b])
-            for b in range(snap["num_buckets"])
+            (*lead(p), b, rc.get(_group_key(p, b), 0),
+             n["b", p, b], n["d", p, b], n["t", p, b])
+            for p, b in groups
         ]
         return spark.createDataFrame(
             rows,
-            "bucket int, rows_base long, base_files int, delta_files int, "
-            "tombstone_files int",
+            ", ".join(part + ["bucket int, rows_base long, base_files int, "
+                              "delta_files int, tombstone_files int"]),
         )
     raise ValueError(
         f"unknown metadata kind {kind!r}: expected files/history/partitions"

@@ -261,6 +261,46 @@ def _files_max_lsn(files: list[str]) -> int | None:
     return out
 
 
+def _partition_value_py(v, transform: str) -> str:
+    """Python twin of LakeTable._partition_expr for one footer value
+    (a UTC datetime, a date, epoch seconds or a string)."""
+    import datetime as dt
+
+    if transform == "identity":
+        return str(v)
+    if isinstance(v, dt.datetime):
+        d = (v.astimezone(dt.timezone.utc) if v.tzinfo else v).date()
+    elif isinstance(v, dt.date):
+        d = v
+    else:
+        d = dt.date(1970, 1, 1) + dt.timedelta(days=v // 86_400)
+    return d.isoformat() if transform == "days" else d.isoformat()[:7]
+
+
+def _footer_partition_range(files: list[str], snap: dict) -> tuple[str, str] | None:
+    """(lowest, highest) partition value of the rows in ``files``, from
+    the footers' min/max of the partition column — metadata only. The
+    transforms are monotone, so every row's partition lies in it. None
+    when a footer has no statistics for the column."""
+    import pyarrow.parquet as pq
+
+    lo = hi = None
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}.get(
+            snap["partition_col"]
+        )
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics if idx is not None else None
+            if st is None or not st.has_min_max:
+                return None
+            a = _partition_value_py(st.min, snap["transform"])
+            z = _partition_value_py(st.max, snap["transform"])
+            lo = a if lo is None else min(lo, a)
+            hi = z if hi is None else max(hi, z)
+    return None if lo is None else (lo, hi)
+
+
 def _manifest_versions(meta_dir: str, prefix: str, suffix: str) -> list[int]:
     """Versions of the complete ``<prefix><digits><suffix>`` names in a
     directory. Tmp files carry a ``.tmp-<hex>`` suffix and never match."""
@@ -286,8 +326,8 @@ def latest_manifest_version(
 class ManifestChain:
     """THE version-chain format: versions ``<prefix>NNNNNNNN.json`` in
     ``meta_dir``, published by ``versioned_commit``. Every versioned
-    store reads and commits its versions here (LakeTable and
-    PartitionedLakeTable ``snap-``, a WAP stage ``wap-<id>-``,
+    store reads and commits its versions here (LakeTable ``snap-``, a
+    WAP stage ``wap-<id>-``,
     WatermarkStore ``v-``, AnnIndex ``ix-``), so the naming, the
     current-version rule and the history listing exist once.
 
@@ -424,52 +464,6 @@ def wap_chain(meta_dir: str, wap_id: str) -> ManifestChain:
     """The staged chain of WAP stage ``wap_id``: ``wap-<id>-`` manifests
     beside the main chain, never a pointer."""
     return ManifestChain(meta_dir, f"wap-{wap_id}-", pointer=False)
-
-
-class ChainedTable:
-    """The versioned-table surface of LakeTable and PartitionedLakeTable:
-    one ``snap-`` ManifestChain in ``<path>/_meta``. Each manifest
-    records its table's commit mode, and a ``rename-free`` one is
-    published without a pointer."""
-
-    def __init__(self, path: str):
-        self.path = path
-        self.meta_dir = os.path.join(path, "_meta")
-        self._chain = ManifestChain(self.meta_dir, "snap-")
-
-    def exists(self) -> bool:
-        return self._chain.exists()
-
-    def current_version(self) -> int:
-        """Pointer read, or (rename-free tables / object stores without
-        atomic rename) the highest published snapshot manifest — valid
-        because versioned_commit publishes manifests complete."""
-        v = self._chain.current()
-        if v is None:
-            raise FileNotFoundError(f"no table at {self.path}")
-        return v
-
-    def snapshot(self, version: int | None = None) -> dict:
-        return self._chain.read(
-            self.current_version() if version is None else version
-        )
-
-    def history(self) -> list[dict]:
-        return self._chain.history()
-
-    def version_at(self, timestamp: float) -> int:
-        return self._chain.version_at(timestamp)
-
-    def schema(self) -> T.StructType:
-        """User-visible schema (excludes the hidden LSN guard column)."""
-        return T.StructType.fromJson(json.loads(self.snapshot()["schema"]))
-
-    def _commit(self, snap: dict) -> None:
-        """Atomic snapshot commit with optimistic concurrency: the
-        chain's ``versioned_commit`` publish of snap-N.json."""
-        self._chain.commit(
-            snap, rename_free=snap.get("commit_mode") == "rename-free"
-        )
 
 
 LSN_COL = "_lsn"  # per-row last-applied LSN, the MERGE guard column
@@ -728,13 +722,34 @@ def _outer_join_on_keys(left: DataFrame, right: DataFrame, key_cols: list[str],
     as one value; with one row per key and side, the per-column max
     picks the present side's value, as the join would. The groupBy reads
     only rows that pass the pushed null-key filter. Shared by the cow
-    merge (_zx_winners) and the changelog (read_changes)."""
-    joined = (left.hint(hint) if hint else left).join(
-        right, on=key_cols, how="full_outer"
-    )
+    merge (_zx_winners) and the changelog (read_changes).
+
+    A partitioned table's ``key_cols`` end with the partition value
+    (_PART_COL). The scans are bucketed on the keys alone, and Spark
+    co-partitions a join only on all of its scans' clustering keys, so
+    the partition value joins as a residual: ``<=`` and ``>=``, which
+    the planner does not extract as an equi-join key."""
+    keys = [c for c in key_cols if c != _PART_COL]
+    if len(keys) == len(key_cols):
+        joined = (left.hint(hint) if hint else left).join(
+            right, on=keys, how="full_outer"
+        )
+    else:
+        lt, rt = left.alias("__l"), right.alias("__r")
+        lp, rp = F.col(f"__l.{_PART_COL}"), F.col(f"__r.{_PART_COL}")
+        cond = _and_all(
+            [F.col(f"__l.{c}") == F.col(f"__r.{c}") for c in keys]
+            + [lp <= rp, lp >= rp]
+        )
+        joined = (lt.hint(hint) if hint else lt).join(rt, cond, "full_outer").select(
+            *[F.coalesce(F.col(f"__l.{c}"), F.col(f"__r.{c}")).alias(c)
+              for c in key_cols],
+            *[F.col(f"__l.{c}") for c in left.columns if c not in key_cols],
+            *[F.col(f"__r.{c}") for c in right.columns if c not in key_cols],
+        )
     if not null_keys:
         return joined
-    keyed = _and_all([F.col(c).isNotNull() for c in key_cols])
+    keyed = _and_all([F.col(c).isNotNull() for c in keys])
     return joined.filter(keyed).unionByName(
         left.filter(~keyed)
         .unionByName(right.filter(~keyed), allowMissingColumns=True)
@@ -799,6 +814,9 @@ _SNAP_CARRIED = {
     "deltas": {},
     "tombstones": {},
     "row_counts": {},
+    # the partition spec: only a partitioned table's manifests carry it
+    "partition_col": None,
+    "transform": None,
 }
 
 
@@ -806,8 +824,10 @@ def _next_snapshot(parent: dict | None, summary: dict, **changed) -> dict:
     """THE snapshot envelope: the child of ``parent`` (version + 1)
     with every carried field that ``changed`` does not override copied
     forward, so no commit can silently drop one (an omitted "deltas"
-    once lost pending MOR deltas). parent=None is the create commit:
-    version 0, only the given fields."""
+    once lost pending MOR deltas). A field whose implied value is None
+    and that the parent lacks stays absent (a flat table's partition
+    spec). parent=None is the create commit: version 0, only the given
+    fields."""
     unknown = set(changed) - set(_SNAP_CARRIED)
     if unknown:
         raise TypeError(f"not a carried snapshot field: {sorted(unknown)}")
@@ -817,6 +837,8 @@ def _next_snapshot(parent: dict | None, summary: dict, **changed) -> dict:
     else:
         snap = {"version": parent["version"] + 1, "parent": parent["version"]}
         for k, default in _SNAP_CARRIED.items():
+            if k not in changed and k not in parent and default is None:
+                continue
             v = changed[k] if k in changed else parent.get(k, default)
             snap[k] = dict(v) if isinstance(v, dict) else v
     snap["summary"] = summary
@@ -825,47 +847,104 @@ def _next_snapshot(parent: dict | None, summary: dict, **changed) -> dict:
 
 # ---- the data-file layout -----------------------------------------
 # A snapshot lists its data files in one manifest map per side, each
-# {bucket: [paths]}: base rows ("b"), pending merge-on-read deltas ("d")
-# and tombstones ("t"). snapshot_files is the only reader of those maps,
-# _side_stored the only definition of the files' schema, and
-# _write_buckets / _list_buckets the only writer and lister of the
-# ``_b=<n>/`` directories they come from.
+# {group: [paths]}: base rows ("b"), pending merge-on-read deltas ("d")
+# and tombstones ("t"). A group is a bucket of a flat table ("3") or a
+# (partition, bucket) pair of a partitioned one ("2024-01-01/3").
+# snapshot_files is the only reader of those maps, _side_stored the only
+# definition of the files' schema, and _write_buckets / _list_buckets
+# the only writer and lister of the ``_b=<bucket>/`` (flat) and
+# ``_p=<partition>/_b=<bucket>/`` (partitioned) directories they come
+# from.
 _SIDE_KEYS = {"b": "files", "d": "deltas", "t": "tombstones"}
+_TRANSFORMS = ("days", "months", "identity")
+# partition values name groups (and write directories): keep them safe
+_SAFE_VALUE = re.compile(r"^[A-Za-z0-9._\-]{1,128}$")
+# a row's partition value as a column: part of the row's identity in
+# every per-key window and join of a partitioned table, and its write
+# dir; derived from the payload's partition column, never stored in a
+# file
+_PART_COL = "_p"
+_DEFAULT_PART = "__HIVE_DEFAULT_PARTITION__"  # Spark's dir for a null value
 
 
-def snapshot_files(snap: dict, buckets=None):
-    """THE walk of a snapshot's data files: ``(side, bucket, path)`` for
-    every base ('b'), delta ('d') and tombstone ('t') file, sides in that
-    order, limited to ``buckets`` when given. A side map that an older
-    manifest lacks holds no file."""
+def _group_key(part: str | None, bucket: int) -> str:
+    return str(bucket) if part is None else f"{part}/{bucket}"
+
+
+def _split_group(key: str) -> tuple[str | None, int]:
+    """(partition, bucket) of a manifest group key; partition None for
+    a flat table's bucket key."""
+    part, _, b = key.rpartition("/")
+    return (part or None), int(b)
+
+
+def _group_label(key: str):
+    """A group as results and stats report it: the bucket number for a
+    flat table (as before partitions existed), the key otherwise."""
+    return int(key) if key.isdigit() else key
+
+
+def snapshot_files(snap: dict, groups=None):
+    """THE walk of a snapshot's data files: ``(side, partition, bucket,
+    path)`` for every base ('b'), delta ('d') and tombstone ('t') file,
+    sides in that order, limited to the group keys ``groups`` when
+    given. The partition is None in a flat table. A side map that an
+    older manifest lacks holds no file."""
     for side, key in _SIDE_KEYS.items():
-        for b, fl in (snap.get(key) or {}).items():
-            if buckets is None or int(b) in buckets:
+        for g, fl in (snap.get(key) or {}).items():
+            if groups is None or g in groups:
+                part, b = _split_group(g)
                 for f in fl:
-                    yield side, int(b), f
+                    yield side, part, b, f
 
 
-def _side_maps(snap: dict, buckets=None) -> dict[str, dict[str, list[str]]]:
+def _snap_partitions(snap: dict) -> list[str]:
+    """The partition values a snapshot holds files of, sorted."""
+    return sorted({p for _s, p, _b, _f in snapshot_files(snap)} - {None})
+
+
+def _side_maps(snap: dict, groups=None) -> dict[str, dict[str, list[str]]]:
     """snapshot_files regrouped into the manifest form: one
-    {bucket: [paths]} map per side, a fresh copy the caller may edit."""
+    {group: [paths]} map per side, a fresh copy the caller may edit."""
     maps: dict[str, dict[str, list[str]]] = {side: {} for side in _SIDE_KEYS}
-    for side, b, f in snapshot_files(snap, buckets):
-        maps[side].setdefault(str(b), []).append(f)
+    for side, part, b, f in snapshot_files(snap, groups):
+        maps[side].setdefault(_group_key(part, b), []).append(f)
     return maps
 
 
 def _list_buckets(out_dir: str, sub: str = "") -> dict[str, list[str]]:
-    """{bucket: sorted parquet paths} of a bucketed write: the files in
-    each ``<out_dir>/_b=<n>/<sub>`` dir (``sub``: a nested partition dir,
-    such as the copy-on-write write's ``_del=false``)."""
+    """{group: sorted parquet paths} of a bucketed write: the files in
+    each ``<out_dir>/[_p=<partition>/]_b=<bucket>/<sub>`` dir (``sub``: a
+    nested partition dir, such as the copy-on-write write's
+    ``_del=false``).
+
+    A row whose partition value is null lands in Spark's default
+    partition dir, and an identity value outside the safe charset
+    (Spark escapes it) would split routing between spellings. Either
+    removes the whole write and raises ValueError: change events must
+    carry a routable partition value."""
+    import shutil
+
     files: dict[str, list[str]] = {}
+    parts = [(None, out_dir)]
     for entry in os.listdir(out_dir):
-        bdir = os.path.join(out_dir, entry, sub)
-        if entry.startswith(f"{_BUCKET_COL}=") and os.path.isdir(bdir):
-            files[entry.split("=")[1]] = sorted(
-                os.path.join(bdir, f) for f in os.listdir(bdir)
-                if f.endswith(".parquet")
-            )
+        if entry.startswith(f"{_PART_COL}="):
+            value = entry.split("=", 1)[1]
+            if value == _DEFAULT_PART or not _SAFE_VALUE.match(value):
+                shutil.rmtree(out_dir, ignore_errors=True)
+                raise ValueError(
+                    f"unsafe or null/invalid partition value {value!r}; "
+                    "change events must carry a routable partition value"
+                )
+            parts.append((value, os.path.join(out_dir, entry)))
+    for part, pdir in parts:
+        for entry in os.listdir(pdir):
+            bdir = os.path.join(pdir, entry, sub)
+            if entry.startswith(f"{_BUCKET_COL}=") and os.path.isdir(bdir):
+                files[_group_key(part, int(entry.split("=", 1)[1]))] = sorted(
+                    os.path.join(bdir, f) for f in os.listdir(bdir)
+                    if f.endswith(".parquet")
+                )
     return files
 
 
@@ -901,12 +980,51 @@ class MergeResult:
         }
 
 
-class LakeTable(ChainedTable):
-    """A bucketed, snapshot-versioned parquet table supporting MERGE."""
+class LakeTable:
+    """A bucketed, snapshot-versioned parquet table supporting MERGE:
+    one ``snap-`` ManifestChain in ``<path>/_meta``, data files under
+    ``<path>/data``. Each manifest records its table's commit mode, and
+    a ``rename-free`` one is published without a pointer."""
 
     def __init__(self, path: str):
-        super().__init__(path)
+        self.path = path
+        self.meta_dir = os.path.join(path, "_meta")
+        self._chain = ManifestChain(self.meta_dir, "snap-")
         self.data_dir = os.path.join(path, "data")
+
+    def exists(self) -> bool:
+        return self._chain.exists()
+
+    def current_version(self) -> int:
+        """Pointer read, or (rename-free tables / object stores without
+        atomic rename) the highest published snapshot manifest — valid
+        because versioned_commit publishes manifests complete."""
+        v = self._chain.current()
+        if v is None:
+            raise FileNotFoundError(f"no table at {self.path}")
+        return v
+
+    def snapshot(self, version: int | None = None) -> dict:
+        return self._chain.read(
+            self.current_version() if version is None else version
+        )
+
+    def history(self) -> list[dict]:
+        return self._chain.history()
+
+    def version_at(self, timestamp: float) -> int:
+        return self._chain.version_at(timestamp)
+
+    def schema(self) -> T.StructType:
+        """User-visible schema (excludes the hidden LSN guard column)."""
+        return T.StructType.fromJson(json.loads(self.snapshot()["schema"]))
+
+    def _commit(self, snap: dict) -> None:
+        """Atomic snapshot commit with optimistic concurrency: the
+        chain's ``versioned_commit`` publish of snap-N.json."""
+        self._chain.commit(
+            snap, rename_free=snap.get("commit_mode") == "rename-free"
+        )
 
     def metadata_df(self, spark: SparkSession, kind: str) -> DataFrame:
         """Queryable metadata frames (Iceberg's ``t.files`` /
@@ -922,10 +1040,10 @@ class LakeTable(ChainedTable):
         self,
         spark: SparkSession,
         version: int,
-        buckets: list[int] | None = None,
+        groups=None,
     ) -> DataFrame:
         """Shared MOR read path for one PINNED snapshot version (all
-        buckets, or the ``buckets`` given): base and tombstones resolved
+        groups, or the group keys ``groups``): base and tombstones resolved
         LWW against the pending delta files. Pinning the version ONCE
         keeps base/delta/tombstone file lists mutually consistent under
         concurrent commits (mixing CURRENT re-reads could resurrect a
@@ -941,8 +1059,7 @@ class LakeTable(ChainedTable):
         ``_bucketed/read-v<version>-<digest>`` dir per version and bucket
         choice, reused by later reads (_kept_registration)."""
         snap = self.snapshot(version)
-        chosen = range(snap["num_buckets"]) if buckets is None else buckets
-        picked = _side_maps(snap, chosen)
+        picked = _side_maps(snap, groups)
         if not picked["d"]:
             return self._read_internal(
                 spark, snap, [f for fl in picked["b"].values() for f in fl]
@@ -951,10 +1068,10 @@ class LakeTable(ChainedTable):
         key_cols = snap["key_cols"]
         reg_root, reg = self._kept_registration(
             f"read-v{snap['version']:08d}", [picked],
-            lambda tmp: self._link_base_tomb(snap, chosen, tmp),
+            lambda tmp: self._link_base_tomb(picked, tmp),
         )
         side = self._zx_base_tomb_side(
-            spark, snap, reg_root, f"{reg}_bt", key_cols,
+            spark, snap, reg_root, f"{reg}_bt",
             [f for f in schema.fields if f.name not in key_cols],
         )
         return self._live_rows(side, key_cols, schema)
@@ -1028,6 +1145,8 @@ class LakeTable(ChainedTable):
         version: int | None = None,
         columns: list[str] | None = None,
         as_of: float | None = None,
+        between: tuple[str, str] | None = None,
+        values: list[str] | None = None,
     ) -> DataFrame:
         """Read the table at a snapshot (time travel). Missing columns
         in old files are filled with nulls (additive schema evolution —
@@ -1050,18 +1169,34 @@ class LakeTable(ChainedTable):
         manual plumbing.
 
         as_of: epoch-seconds timestamp time travel (mutually exclusive
-        with version) — resolves via version_at()."""
+        with version) — resolves via version_at().
+
+        between=(lo, hi) / values=[...] (partitioned tables): read only
+        those partition values, pruned from the MANIFEST — a string
+        compare on the group keys, no file listing and no data I/O for
+        the partitions left out; a bound may be None."""
         if as_of is not None:
             if version is not None:
                 raise ValueError("pass either version or as_of, not both")
             version = self.version_at(as_of)
         v = self.current_version() if version is None else version
+        snap = self.snapshot(v)
         if columns is not None:
-            schema = T.StructType.fromJson(json.loads(self.snapshot(v)["schema"]))
+            schema = T.StructType.fromJson(json.loads(snap["schema"]))
             unknown = set(columns) - {f.name for f in schema.fields}
             if unknown:
                 raise ValueError(f"unknown columns: {sorted(unknown)}")
-        out = self._resolved_view(spark, v)
+        groups = None
+        if between is not None or values is not None:
+            if not snap.get("partition_col"):
+                raise ValueError("between/values select partitions of a partitioned table")
+            lo, hi = between or (None, None)
+            groups = {
+                _group_key(p, b) for _s, p, b, _f in snapshot_files(snap)
+                if (values is None or p in values)
+                and (lo is None or p >= lo) and (hi is None or p <= hi)
+            }
+        out = self._resolved_view(spark, v, groups)
         return out.select(*columns) if columns is not None else out
 
     def lookup(self, spark: SparkSession, **key_values) -> DataFrame:
@@ -1075,7 +1210,9 @@ class LakeTable(ChainedTable):
         key, so a partial key cannot prune (use read().filter() there).
         Null key values are matched null-safely (the layout hashes
         nulls consistently, and merge treats null-keyed rows as ordinary
-        keys)."""
+        keys). In a partitioned table the bucket does not depend on the
+        partition, so the key's bucket in every partition is scanned and
+        each partition's live row comes back."""
         snap = self.snapshot()
         key_cols = snap["key_cols"]
         if set(key_values) != set(key_cols):
@@ -1091,8 +1228,9 @@ class LakeTable(ChainedTable):
         ])
         b = probe.select(self._bucket_expr(snap).alias("b")).collect()[0]["b"]
         scans: dict[str, list[str]] = {"b": [], "t": [], "d": []}
-        for side, _b, f in snapshot_files(snap, [b]):
-            scans[side].append(f)
+        for side, _p, fb, f in snapshot_files(snap):
+            if fb == b:
+                scans[side].append(f)
         # the predicate covers the KEY COLUMNS ONLY, so filtering below
         # the dedup window selects whole key groups and changes no winner
         pred = _and_all(
@@ -1103,15 +1241,15 @@ class LakeTable(ChainedTable):
         # no registration: the key's files are few, so one task runs the
         # shared dedup window, whose clustering the coalesce(1)'s
         # SinglePartition satisfies — no Exchange
-        stored = self._side_stored(snap)
         union = reduce(DataFrame.unionByName, [
-            spark.read.schema(stored).parquet(*fl).filter(pred)
-            .withColumn("side", F.lit(side))
+            self._with_partition(spark.read.schema(self._side_stored(snap)).parquet(*fl), snap)
+            .filter(pred).withColumn("side", F.lit(side))
             for side, fl in scans.items() if fl
         ]).coalesce(1)
         return self._live_rows(
             self._side_winners(
-                union, key_cols, [f for f in schema.fields if f.name not in key_cols]
+                union, self._ident(snap),
+                [f for f in schema.fields if f.name not in key_cols],
             ),
             key_cols, schema,
         )
@@ -1200,8 +1338,10 @@ class LakeTable(ChainedTable):
             # from-zero changelog (a fresh follower's bootstrap full
             # sync) must still work
             snap1 = {
-                "num_buckets": snap2["num_buckets"],
-                "schema": snap2["schema"],
+                k: snap2[k]
+                for k in ("num_buckets", "schema", "key_cols",
+                          "partition_col", "transform")
+                if k in snap2
             }
         else:
             try:
@@ -1228,7 +1368,7 @@ class LakeTable(ChainedTable):
         if v1 == v2:
             return empty
 
-        v1_files = [f for _side, _b, f in snapshot_files(snap1)]
+        v1_files = [f for *_g, f in snapshot_files(snap1)]
         wm1 = _files_max_lsn(v1_files)
         if wm1 is None and v1_files:
             # stats-less files (foreign writer): one column-pruned job
@@ -1239,43 +1379,40 @@ class LakeTable(ChainedTable):
         if wm1 is None:
             wm1 = -1  # empty from-version: everything in v2 is new
 
-        # touched buckets by FILE-LIST diff, not LSN footers: snapshots
-        # carry unchanged buckets' file refs forward verbatim, so an
-        # identical per-bucket file list proves the bucket cannot differ
-        # between the versions — while a bucket whose rows VANISHED
-        # (tombstone expiry) leaves no fresh-LSN trace for footer-based
-        # pruning to see, but always has a different file list.
-        # Maintenance churn (compact/fold rewrites) marks buckets
-        # touched too; the join then correctly yields no rows for them.
-        def bucket_sig(snap):
-            sig: dict[int, set] = {}
-            for side, b, f in snapshot_files(snap):
-                sig.setdefault(b, set()).add((side, f))
-            return sig
-
+        # touched groups by FILE-LIST diff, not LSN footers: snapshots
+        # carry unchanged groups' file refs forward verbatim, so an
+        # identical per-group file list proves the group cannot differ
+        # between the versions — while a group whose rows VANISHED
+        # (tombstone expiry, a dropped partition) leaves no fresh-LSN
+        # trace for footer-based pruning to see, but always has a
+        # different file list. Maintenance churn (compact/fold rewrites)
+        # marks groups touched too; the join then correctly yields no
+        # rows for them.
+        m1, m2 = _side_maps(snap1), _side_maps(snap2)
         if snap1["num_buckets"] == snap2["num_buckets"]:
-            s1, s2 = bucket_sig(snap1), bucket_sig(snap2)
-            touched = {b for b in set(s1) | set(s2) if s1.get(b) != s2.get(b)}
+            touched = {
+                g for m in (m1, m2) for side in m.values() for g in side
+                if any(m1[s].get(g) != m2[s].get(g) for s in _SIDE_KEYS)
+            }
+            # the from-side reads the same groups
+            from_groups = touched
         else:
-            touched = set(bucket_sig(snap2))  # rebucketed: incomparable
-        if not touched:
+            # rebucketed: bucket ids are not comparable across layouts,
+            # so each side reads all of its own groups
+            touched = from_groups = None
+        if touched is not None and not touched:
             return empty
-        tb = sorted(touched)
         key_cols: list[str] = snap2["key_cols"]
         nonkey = [f for f in schema2.fields if f.name not in key_cols]
-        # the from-side reads the same buckets, or all of its own when the
-        # hop rebucketed (bucket ids are not comparable across layouts)
-        from_buckets = (
-            tb if snap1["num_buckets"] == snap2["num_buckets"]
-            else range(snap1["num_buckets"])
-        )
 
         def build(tmp: str) -> None:
-            self._link_base_tomb(snap2, tb, os.path.join(tmp, "to"))
-            self._link_base_tomb(snap1, from_buckets, os.path.join(tmp, "from"))
+            self._link_base_tomb(_side_maps(snap2, touched), os.path.join(tmp, "to"))
+            self._link_base_tomb(
+                _side_maps(snap1, from_groups), os.path.join(tmp, "from")
+            )
 
         reg_root, reg = self._kept_registration(
-            f"chg-v{v1}-v{v2}", [_side_maps(snap1), _side_maps(snap2)], build
+            f"chg-v{v1}-v{v2}", [m1, m2], build
         )
         # each version's per-key winner (base, tombstones and pending
         # deltas) from its own bucketed scan: one candidate struct per key.
@@ -1287,9 +1424,8 @@ class LakeTable(ChainedTable):
             bt_dir = os.path.join(reg_root, side)
             if os.path.isdir(bt_dir):
                 sides[side] = self._zx_base_tomb_side(
-                    spark, snap, bt_dir, f"{reg}_{side}", key_cols, nonkey,
-                    radix=False,
-                ).select(*key_cols, F.col("__cand_b").alias(f"__{side}"))
+                    spark, snap, bt_dir, f"{reg}_{side}", nonkey, radix=False,
+                ).select(*self._ident(snap), F.col("__cand_b").alias(f"__{side}"))
         if "from" in sides:
             sides["from"] = sides["from"].filter(
                 ~F.col("__from.op").isin(_OP_DELETE, _OP_TOMBSTONE)
@@ -1304,7 +1440,7 @@ class LakeTable(ChainedTable):
         else:
             linked = B.collect_wal_files(reg_root).values()
             j = _outer_join_on_keys(
-                sides["to"], sides["from"], key_cols,
+                sides["to"], sides["from"], self._ident(snap2),
                 _parquet_may_hold_nulls([f for fl in linked for f in fl], key_cols),
             )
 
@@ -1407,9 +1543,10 @@ class LakeTable(ChainedTable):
         Everything else the rank needs is a function of the tagged
         columns, so it is computed above the exchange: the decoded dict
         columns, the limbs (the values of _update_tiebreak, over the
-        decoded payload and op) and the window's radix prefix. Random
-        64-bit hashes do not compress: shipping the three would add half
-        again to the exchange's bytes. A rank filter only: an
+        decoded payload and op), a partitioned table's partition value
+        (_p, part of the row's identity: _ident) and the window's radix
+        prefix. Random 64-bit hashes do not compress: shipping the three
+        would add half again to the exchange's bytes. A rank filter only: an
         over-partition metrics column would block Spark's
         WindowGroupLimit rank pushdown. Spark puts a Partial limit below
         an exchange only when the window's own distribution requirement
@@ -1427,15 +1564,24 @@ class LakeTable(ChainedTable):
         )
         if n_buckets is not None:
             tagged = tagged.repartition(n_buckets, *key_cols)
-        batch = tagged.select(*self._payload_out(evolved, dicts), "__lsn", "__op")
+        batch = self._with_partition(
+            tagged.select(*self._payload_out(evolved, dicts), "__lsn", "__op"), snap
+        )
         t1, t2 = tiebreak_cols(
             [F.col(f.name) for f in evolved.fields] + [_op_decode(F.col("__op"))],
             family=snap.get("tiebreak_family", "xxhash64"),
         )
         return _lww_top1(
             batch.withColumns({"__tb1": t1, "__tb2": t2}),
-            key_cols, "__lsn", "__tb1", "__tb2",
+            self._ident(snap), "__lsn", "__tb1", "__tb2",
         )
+
+    def _with_partition(self, df: DataFrame, snap: dict) -> DataFrame:
+        """``df`` (payload columns) plus a partitioned table's partition
+        value _p, the last column of _ident."""
+        if not snap.get("partition_col"):
+            return df
+        return df.withColumn(_PART_COL, self._partition_expr(snap))
 
     def _read_internal(
         self, spark: SparkSession, snap: dict, files: list[str]
@@ -1462,6 +1608,8 @@ class LakeTable(ChainedTable):
         dict_cols: dict[str, list[str]] | None = None,
         tiebreak_family: str = "xxhash64",
         commit_mode: str = "pointer",
+        partition_col: str | None = None,
+        transform: str = "days",
     ) -> "LakeTable":
         """dict_cols: {string_column: [expected values...]} — declared
         low-cardinality columns ride the merge shuffles as 2-byte
@@ -1473,13 +1621,42 @@ class LakeTable(ChainedTable):
         pointer) or "rename-free" (object-store-safe: commits are
         manifest publishes only — fail-if-exists link, no rename
         anywhere; CURRENT is derived as the highest published
-        manifest). Recorded in every snapshot and carried forward."""
+        manifest). Recorded in every snapshot and carried forward.
+
+        partition_col: time-partition the table by ``transform``
+        (``days`` or ``months`` of a timestamp, date or epoch-seconds
+        long column, or the ``identity`` of a string column): the
+        Iceberg ``PARTITIONED BY (days(ts), bucket(N, key))`` shape.
+        Each (partition, bucket) pair is a group of the manifest, so a
+        merge rewrites only the groups its batch touches (cost follows
+        the active time range, not table age), reads prune partitions
+        from the manifest, and ``drop_partitions`` is a metadata-only
+        retention commit (DESIGN.md §17). The partition value is part of
+        the row's identity (_ident)."""
         if commit_mode not in ("pointer", "rename-free"):
             raise ValueError(f"unknown commit_mode {commit_mode!r}")
         t = LakeTable(path)
         if t.exists():
             raise ValueError(f"table already exists at {path}")
         by_name = {f.name: f for f in schema.fields}
+        spec = {}
+        if partition_col is not None:
+            if transform not in _TRANSFORMS:
+                raise ValueError(f"unknown transform {transform!r}; one of {_TRANSFORMS}")
+            if partition_col not in by_name:
+                raise ValueError(f"partition_col {partition_col!r} not in schema")
+            ptype = by_name[partition_col].dataType
+            if transform != "identity" and not isinstance(
+                ptype, (T.TimestampType, T.DateType, T.LongType)
+            ):
+                raise ValueError(
+                    f"{transform} transform needs a timestamp/date column, got {ptype}"
+                )
+            if transform == "identity" and not isinstance(ptype, T.StringType):
+                raise ValueError("identity transform needs a string column")
+            if _PART_COL in by_name:
+                raise ValueError(f"column {_PART_COL!r} is reserved in a partitioned table")
+            spec = {"partition_col": partition_col, "transform": transform}
         for c, vals in (dict_cols or {}).items():
             if c in key_cols:
                 raise ValueError(f"dict_cols cannot include key column {c}")
@@ -1499,6 +1676,7 @@ class LakeTable(ChainedTable):
                 tiebreak_family=tiebreak_family,
                 commit_mode=commit_mode,
                 files={},
+                **spec,
             )
         )
         return t
@@ -1533,7 +1711,7 @@ class LakeTable(ChainedTable):
         batch = self._resolve_batch(upd, snap, evolved, op_col, lsn_col, n_buckets)
         return self._zx_cand(
             batch, 1, F.col("__lsn"), F.col("__op"),
-            F.col("__tb1"), F.col("__tb2"), snap["key_cols"], nonkey,
+            F.col("__tb1"), F.col("__tb2"), self._ident(snap), nonkey,
         ).withColumnRenamed("__cand", "__cand_u")
 
     @staticmethod
@@ -1567,6 +1745,100 @@ class LakeTable(ChainedTable):
         keys = [F.col(c) for c in snap["key_cols"]]
         return F.pmod(F.hash(*keys), F.lit(snap["num_buckets"])).cast("int")
 
+    # ------------------------------------------------------ partitions
+    @staticmethod
+    def _ident(snap: dict) -> list[str]:
+        """The columns that identify a row: the key columns, plus the
+        partition value in a partitioned table (Hudi's NON-GLOBAL index:
+        the same key in two partitions is two rows, and delete events
+        must carry the partition column). Every per-key window and join
+        groups by these."""
+        return snap["key_cols"] + ([_PART_COL] if snap.get("partition_col") else [])
+
+    @staticmethod
+    def _partition_expr(snap: dict):
+        """A row's partition value, from its partition column: the UTC
+        day ``yyyy-MM-dd`` (``days``) or month ``yyyy-MM`` (``months``)
+        of a timestamp, a date or epoch seconds (a long), or the string
+        itself (``identity``). All values sort lexicographically in time
+        order, so range pruning is a string comparison on the manifest's
+        group keys.
+
+        Routing is UTC by definition and computed in integer arithmetic
+        (unix_micros floor-divided into days), so it does not depend on
+        the session time zone: one event lands in one partition whatever
+        zone the writing session runs in. Tables written before this
+        rule under a non-UTC session zone keep those rows where they
+        were routed; convert_partition_tree refuses a tree whose files
+        hold rows outside their partition's UTC range."""
+        c, tr = snap["partition_col"], snap["transform"]
+        typ = next(
+            f.dataType
+            for f in T.StructType.fromJson(json.loads(snap["schema"])).fields
+            if f.name == c
+        )
+        col = F.col(c).cast(typ)
+        if tr == "identity":
+            return col.cast("string")
+        if isinstance(typ, T.TimestampType):
+            days = F.floor(F.unix_micros(col) / 86_400_000_000)
+        elif isinstance(typ, T.DateType):
+            days = F.unix_date(col)
+        else:  # epoch seconds
+            days = F.floor(col / 86_400)
+        day = F.date_from_unix_date(days.cast("int")).cast("string")
+        return day if tr == "days" else F.substring(day, 1, 7)
+
+    def _group_cols(self, snap: dict) -> dict:
+        """A row's manifest group as write-dir columns: {_b: bucket},
+        led by _p: partition value in a partitioned table."""
+        cols = {_BUCKET_COL: self._bucket_expr(snap)}
+        if snap.get("partition_col"):
+            cols = {_PART_COL: self._partition_expr(snap), **cols}
+        return cols
+
+    def partitions(self, version: int | None = None) -> list[str]:
+        """The live partition values of a snapshot, from its manifest."""
+        return _snap_partitions(self.snapshot(version))
+
+    def drop_partitions(
+        self, before: str | None = None, values: list[str] | None = None
+    ) -> list[str]:
+        """Metadata-only retention: one commit that removes every group
+        of the chosen partition values from the manifest (``before`` =
+        all values strictly below, lexicographic = chronological for
+        days/months). No data rewrite and no per-row tombstone: time
+        travel to earlier versions still reads the rows, read_changes
+        across the drop emits them as deletes, and vacuum() reaps the
+        files once no kept snapshot references them (the Iceberg
+        ``DROP PARTITION`` + ``expire_snapshots`` split). A merge into a
+        dropped value starts it afresh. Returns the dropped values; no
+        match commits nothing. A commit race re-reads and retries."""
+        if (before is None) == (values is None):
+            raise ValueError("pass exactly one of before= / values=")
+
+        def attempt() -> list[str]:
+            snap = self.snapshot()
+            dropped = [
+                p for p in _snap_partitions(snap)
+                if (p < before if before is not None else p in values)
+            ]
+            if dropped:
+                gone = set(dropped)
+                maps = {side: {g: fl for g, fl in m.items()
+                               if _split_group(g)[0] not in gone}
+                        for side, m in _side_maps(snap).items()}
+                self._commit(_next_snapshot(
+                    snap,
+                    {"operation": "drop_partitions", "dropped": dropped},
+                    files=maps["b"], deltas=maps["d"], tombstones=maps["t"],
+                    row_counts={g: n for g, n in (snap.get("row_counts") or {}).items()
+                                if _split_group(g)[0] not in gone},
+                ))
+            return dropped
+
+        return retry_on_conflict(attempt)
+
     def _write_buckets(
         self,
         df: DataFrame,
@@ -1577,9 +1849,10 @@ class LakeTable(ChainedTable):
         sort_expr=None,
         row_group_bytes: int | None = None,
     ) -> dict[str, list[str]]:
-        """Write df (stored schema + _b) into per-bucket parquet files
-        under a fresh ``data/<prefix>-<hex>/`` dir, laid out for ``snap``
-        (its key columns and bucket count); returns {bucket: [paths]}.
+        """Write df (stored schema + the _group_cols) into per-group
+        parquet files under a fresh ``data/<prefix>-<hex>/`` dir, laid
+        out for ``snap`` (its key columns and bucket count); returns
+        {group: [paths]}.
 
         pre_partitioned=True: df is already hash-partitioned on the key
         columns into num_buckets partitions (each task = one bucket) —
@@ -1604,7 +1877,7 @@ class LakeTable(ChainedTable):
         if not pre_partitioned:
             df = df.repartition(snap["num_buckets"], *[F.col(c) for c in key_cols])
         if sort_within:
-            # _BUCKET_COL leads the sort: the dynamic-partition writer
+            # the group columns lead the sort: the dynamic-partition writer
             # requires ordering by the partition column and would insert
             # its OWN (unstable) sort otherwise, scrambling the key
             # clustering this exists to produce. sort_expr (e.g. a
@@ -1613,9 +1886,9 @@ class LakeTable(ChainedTable):
                 [sort_expr] if sort_expr is not None
                 else [F.col(c) for c in key_cols]
             )
-            df = df.sortWithinPartitions(F.col(_BUCKET_COL), *order)
+            df = df.sortWithinPartitions(*self._group_cols(snap), *order)
         writer = (
-            df.write.partitionBy(_BUCKET_COL).mode("overwrite")
+            df.write.partitionBy(*self._group_cols(snap)).mode("overwrite")
             .option("compression", DATA_FILE_CODEC)
         )
         if row_group_bytes is not None:
@@ -1632,7 +1905,7 @@ class LakeTable(ChainedTable):
         """Highest applied LSN across base, delta and tombstone files —
         parquet-footer statistics only (cached per immutable file), no
         Spark job. 0 for an empty table."""
-        files = [f for _side, _b, f in snapshot_files(self.snapshot())]
+        files = self._snap_files(self.snapshot())
         if not files:
             return 0
         best = _files_max_lsn(files)
@@ -1658,10 +1931,12 @@ class LakeTable(ChainedTable):
         snap = self.snapshot()
         if lsn is None:
             lsn = self.max_lsn(spark) + 1
+        # a partitioned table's delete events carry the partition column
         keys = (
             self.read(spark)
             .filter(condition)
-            .select(*[F.col(c) for c in snap["key_cols"]])
+            .select(*snap["key_cols"], *([snap["partition_col"]]
+                                        if snap.get("partition_col") else []))
         )
         changes = keys.select(
             "*",
@@ -1704,6 +1979,8 @@ class LakeTable(ChainedTable):
             dict_cols=snap.get("dict_cols") or None,
             tiebreak_family=snap.get("tiebreak_family", "xxhash64"),
             commit_mode=snap.get("commit_mode", "pointer"),
+            partition_col=snap.get("partition_col"),
+            transform=snap.get("transform") or "days",
         )
         copy_dir = os.path.join(clone.data_dir, f"clone-{uuid.uuid4().hex}")
         maps = _side_maps(snap)
@@ -1752,8 +2029,7 @@ class LakeTable(ChainedTable):
         out = df
         if LSN_COL not in df.columns:
             out = out.withColumn(LSN_COL, F.lit(lsn).cast("long"))
-        out = out.withColumn(_BUCKET_COL, self._bucket_expr(snap))
-        files = self._write_buckets(out, snap)
+        files = self._write_buckets(out.withColumns(self._group_cols(snap)), snap)
         new = _next_snapshot(
             snap,
             {"operation": "overwrite"},
@@ -1887,6 +2163,8 @@ class LakeTable(ChainedTable):
         spark = updates.sparkSession
         snap = self.snapshot()
         key_cols: list[str] = snap["key_cols"]
+        if snap.get("partition_col") and _PART_COL in updates.columns:
+            raise ValueError(f"column {_PART_COL!r} is reserved in a partitioned table")
 
         # -- schema evolution (additive) ---------------------------
         payload_fields = T.StructType(
@@ -1898,7 +2176,6 @@ class LakeTable(ChainedTable):
         # JSON can carry thousands of file paths, and merge is the hot
         # apply path — don't re-parse it per helper (round-2 advice)
         n_buckets = snap["num_buckets"]
-        bexpr = self._bucket_expr(snap)
         upd = updates
         # KEY columns must hash with the STORED key types before any
         # bucket arithmetic: Spark's Murmur3 hashes int and long to
@@ -1924,31 +2201,41 @@ class LakeTable(ChainedTable):
         # needs no touched set, so it skips the pass below.
         if mode == "mor":
             return self._merge_mor(
-                spark, snap, upd, evolved, op_col, lsn_col, bexpr,
+                spark, snap, upd, evolved, op_col, lsn_col,
                 _summary_extra=_summary_extra,
             )
 
-        # -- partition pruning: which buckets does the batch touch? -
-        # One cheap pass over the batch (bucket ids only), which also
-        # answers emptiness. Skipped when the table is completely empty
-        # (no base files AND no deltas) — nothing to prune, save the
-        # scan. With deltas present the real
-        # touched set matters: only touched buckets' deltas get folded
+        # -- partition pruning: which groups does the batch touch? --
+        # One cheap pass over the batch (group keys only: buckets, or
+        # (partition, bucket) pairs), which also answers emptiness.
+        # Skipped when the table is completely empty (no base files AND
+        # no deltas) — nothing to prune, save the scan; the write's
+        # groups are then the touched ones. With deltas present the real
+        # touched set matters: only touched groups' deltas get folded
         # and cleared (selective compaction depends on this). The same
         # pass notes whether any key value is null: the cow join cannot
         # match those (see _zx_winners).
         null_keys = False
+        touched = None
         if any(snapshot_files(snap)):
             keyed = _and_all([F.col(c).isNotNull() for c in key_cols])
+            gcols = self._group_cols(snap)
             bstats = (
-                upd.groupBy(bexpr.alias("b")).agg(F.max(~keyed).alias("nk")).collect()
+                upd.groupBy(*[e.alias(c) for c, e in gcols.items()])
+                .agg(F.max(~keyed).alias("nk")).collect()
             )
             if not bstats:
                 return MergeResult(version=snap["version"], empty=True)
-            touched = sorted(r["b"] for r in bstats)
+            if _PART_COL in gcols and any(r[_PART_COL] is None for r in bstats):
+                raise ValueError(
+                    f"update rows have a null/invalid {snap['partition_col']!r}; "
+                    "change events must carry a routable partition value"
+                )
+            touched = {
+                _group_key(r[_PART_COL] if _PART_COL in gcols else None, r[_BUCKET_COL])
+                for r in bstats
+            }
             null_keys = any(r["nk"] for r in bstats)
-        else:
-            touched = list(range(n_buckets))
 
         # -- THE one shuffle: the batch alone -------------------------
         # _resolve_batch's repartition(num_buckets, keys), on keys
@@ -1974,15 +2261,16 @@ class LakeTable(ChainedTable):
         spark: SparkSession,
         snap: dict,
         evolved: T.StructType,
-        touched: list[int],
+        touched: set[str] | None,
         upd_side,
         _operation_label: str,
         _summary_extra: dict | None = None,
         null_keys: bool = False,
+        strict: bool = True,
     ) -> MergeResult:
         """THE copy-on-write resolve, shared by merge(),
         merge_prebucketed() and the delta fold: register the touched
-        buckets' base, tombstone and pending-delta files as one bucketed
+        groups' base, tombstone and pending-delta files as one bucketed
         table (_zx_base_tomb_side), full-outer join it with the batch's
         candidate side (_zx_winners), hand the winners to _finalize_cow,
         and always drop the session tables and the hardlink dir, also
@@ -1994,7 +2282,8 @@ class LakeTable(ChainedTable):
         delta fold: no batch, the base side's winners pass through.
         A batch side that contributes no key is an empty merge, which
         commits nothing (_finalize_cow). ``null_keys`` says the batch
-        may hold a null key value (_zx_winners)."""
+        may hold a null key value (_zx_winners). ``touched`` None (a
+        first load) links no base file; ``strict`` is _finalize_cow's."""
         import shutil
 
         key_cols: list[str] = snap["key_cols"]
@@ -2005,19 +2294,22 @@ class LakeTable(ChainedTable):
             upd = upd_side(reg_root, tables, nonkey) if upd_side else None
             bt_dir = os.path.join(reg_root, "basetomb")
             base_side = None
-            if self._link_base_tomb(snap, touched, bt_dir):
+            if touched and self._link_base_tomb(_side_maps(snap, touched), bt_dir):
                 tables.append(f"zx_{uuid.uuid4().hex[:12]}")
                 base_side = self._zx_base_tomb_side(
-                    spark, snap, bt_dir, tables[-1], key_cols, nonkey
+                    spark, snap, bt_dir, tables[-1], nonkey
                 )
             if upd is None and base_side is None:
                 return MergeResult(version=snap["version"])
-            winners = self._zx_winners(upd, base_side, key_cols, nonkey, null_keys)
+            winners = self._zx_winners(
+                upd, base_side, self._ident(snap), nonkey, null_keys
+            )
             return self._finalize_cow(
                 spark, snap, evolved, winners, touched,
                 _operation_label=_operation_label,
                 _summary_extra=_summary_extra,
                 batch=upd is not None,
+                strict=strict,
             )
         finally:
             for name in tables:
@@ -2033,10 +2325,11 @@ class LakeTable(ChainedTable):
         snap: dict,
         evolved: T.StructType,
         winners: DataFrame,
-        touched: list[int],
+        touched: set[str] | None,
         _operation_label: str = "merge",
         _summary_extra: dict | None = None,
         batch: bool = True,
+        strict: bool = True,
     ) -> MergeResult:
         """Shared copy-on-write tail: winners (columns = decoded payload
         + __lsn/__tb1/__tb2/__op/__src/__all_chg/__in_u, one storage
@@ -2048,7 +2341,13 @@ class LakeTable(ChainedTable):
         counts the keys the batch contributed (__in_u); none means an
         empty batch — a first load's write of no file, or a
         merge_prebucketed window whose WAL files hold no row inside its
-        LSN range — and the write dir is removed, nothing committed."""
+        LSN range — and the write dir is removed, nothing committed.
+
+        The written groups replace the touched ones. ``strict`` (merge(),
+        whose batch may evaluate twice) refuses any written group outside
+        ``touched``; otherwise (files on disk: merge_prebucketed, the
+        fold) only a written group that holds files the resolve did not
+        read is refused, and new groups are added."""
         # -- single-pass write + metrics ----------------------------
         # ONE Spark job writes everything: surviving rows land in
         # _del=false; winning deletes AND carried tombstones land in
@@ -2081,7 +2380,7 @@ class LakeTable(ChainedTable):
             F.col("__tb1").alias(_TB1_COL),
             F.col("__tb2").alias(_TB2_COL),
             action.alias(_ACTION_COL),
-            self._bucket_expr(snap).alias(_BUCKET_COL),
+            *[e.alias(c) for c, e in self._group_cols(snap).items()],
             F.col("__op").isin(_OP_DELETE, _OP_TOMBSTONE).alias(_DEL_COL),
             F.col("__in_u"),
         )
@@ -2103,7 +2402,7 @@ class LakeTable(ChainedTable):
         # rows are already clustered one-bucket-per-task: the batch's
         # repartition and the bucketed base scan share the bucket
         # function, and the join keeps that layout — no shuffle here
-        out.write.partitionBy(_BUCKET_COL, _DEL_COL).mode("overwrite").option(
+        out.write.partitionBy(*self._group_cols(snap), _DEL_COL).mode("overwrite").option(
             "compression", DATA_FILE_CODEC
         ).parquet(out_dir)
 
@@ -2119,33 +2418,35 @@ class LakeTable(ChainedTable):
             shutil.rmtree(out_dir, ignore_errors=True)
             return MergeResult(version=snap["version"], empty=True)
         # -- non-deterministic-source guard --------------------------
-        # `updates` is evaluated twice (touched-bucket scan, then
+        # `updates` is evaluated twice (touched-group scan, then
         # resolve/write). A non-deterministic source whose later
-        # evaluation buckets outside `touched` would replace those
-        # buckets with ONLY the new rows, silently dropping their
+        # evaluation lands outside `touched` would replace those
+        # groups with ONLY the new rows, silently dropping their
         # unread base rows. Abort BEFORE commit instead:
         # no snapshot is written, the orphan write dir is vacuum-safe
         # (age-gated), and the caller is told to checkpoint the batch.
-        stray = {
-            int(b) for b in (set(new_files) | set(new_tombs))
-        } - set(touched)
+        written = set(new_files) | set(new_tombs)
+        kept = _side_maps(snap)
+        stray = written - (touched or written)
+        if not strict:
+            stray &= {g for m in kept.values() for g in m}
         if stray:
             raise RuntimeError(
-                f"merge batch wrote buckets {sorted(stray)} outside the "
+                f"merge batch wrote groups {sorted(stray)} outside the "
                 f"touched set collected from its first evaluation — the "
                 f"updates DataFrame is non-deterministic; persist() or "
                 f"localCheckpoint() it before merge()"
             )
-        part_counts = {int(b): len(fl) for b, fl in new_files.items()}
+        groups = sorted((touched or set()) | written, key=_split_group)
+        part_counts = {_group_label(g): len(fl) for g, fl in new_files.items()}
 
-        # carry untouched buckets forward (copy-on-write pruning);
-        # deltas and tombstones of touched buckets were folded in and
+        # carry untouched groups forward (copy-on-write pruning);
+        # deltas and tombstones of touched groups were folded in and
         # re-emitted, so replace them with the fresh files
-        kept = _side_maps(snap)
         row_counts = dict(snap.get("row_counts", {}))
-        for b in touched:
+        for g in groups:
             for m in (*kept.values(), row_counts):
-                m.pop(str(b), None)
+                m.pop(g, None)
         # per-bucket row lineage from parquet footers (no data scan,
         # threaded opens); read by stats, metadata frames and maintenance
         row_counts.update(_rows_per_bucket(new_files))
@@ -2158,7 +2459,7 @@ class LakeTable(ChainedTable):
             rows_deleted=counts.get("delete", 0),
             rows_noop=counts.get("noop", 0),
             rows_dropped=counts.get("dropped", 0),
-            touched_buckets=touched,
+            touched_buckets=[_group_label(g) for g in groups],
             partition_counts=part_counts,
         )
         self._commit(
@@ -2211,23 +2512,27 @@ class LakeTable(ChainedTable):
         )
 
     @staticmethod
-    def _link_base_tomb(snap: dict, touched, bt_dir: str) -> bool:
-        """Hardlink the touched buckets' base, tombstone and pending
-        delta files under ``bt_dir``'s side=b / side=t / side=d dirs
-        (the layout _zx_base_tomb_side registers). False if the touched
-        buckets hold no file at all."""
+    def _link_base_tomb(maps: dict, bt_dir: str) -> bool:
+        """Hardlink the base, tombstone and pending delta files of the
+        side maps ``maps`` (_side_maps) under ``bt_dir``'s side=b /
+        side=t / side=d dirs (the layout _zx_base_tomb_side registers),
+        named by bucket: the groups of one bucket in all partitions
+        share it. False if the maps hold no file at all."""
         from . import bucketed as B
 
         linked = False
-        for side, sel in _side_maps(snap, touched).items():
-            if sel:
-                B.link_files_bucketed(sel, os.path.join(bt_dir, f"side={side}"))
+        for side, sel in maps.items():
+            by_bucket: dict[str, list[str]] = {}
+            for g, fl in sel.items():
+                by_bucket.setdefault(str(_split_group(g)[1]), []).extend(fl)
+            if by_bucket:
+                B.link_files_bucketed(by_bucket, os.path.join(bt_dir, f"side={side}"))
                 linked = True
         return linked
 
     def _zx_base_tomb_side(
         self, spark, snap: dict, bt_dir: str, name: str,
-        key_cols: list[str], nonkey: list, radix: bool = True,
+        nonkey: list, radix: bool = True,
     ) -> DataFrame:
         """Base rows, tombstones AND pending MOR delta files (linked
         under ``bt_dir`` by _link_base_tomb) registered as ONE bucketed
@@ -2254,7 +2559,8 @@ class LakeTable(ChainedTable):
         tombstone row for the key?): a delta-only key still counts as
         all-changed, so insert-vs-update / delete-vs-dropped metrics
         do not depend on whether the earlier events were compacted.
-        ``radix`` goes to that window (_lww_top1)."""
+        ``radix`` goes to that window (_lww_top1). The rows are keyed by
+        _ident: a partitioned table's partition value joins the keys."""
         from . import bucketed as B
 
         part_schema = T.StructType(
@@ -2262,11 +2568,12 @@ class LakeTable(ChainedTable):
             + [T.StructField("side", T.StringType())]
         )
         B.register_bucketed_table(
-            spark, part_schema, bt_dir, key_cols, snap["num_buckets"],
+            spark, part_schema, bt_dir, snap["key_cols"], snap["num_buckets"],
             name=name, partition_col="side", if_not_exists=True,
         )
         spark.sql(f"ALTER TABLE `{name}` RECOVER PARTITIONS")
-        bt = spark.table(name)
+        bt = self._with_partition(spark.table(name), snap)
+        key_cols = self._ident(snap)
         if not os.path.isdir(os.path.join(bt_dir, "side=d")):
             return self._zx_cand(
                 bt, 0, F.col(LSN_COL), _side_op(),
@@ -2433,6 +2740,14 @@ class LakeTable(ChainedTable):
         the stored key types (the bucket layout hashed them; a cast
         cannot fix file placement).
 
+        A partitioned table takes the same WAL (bucketed by the keys;
+        the rows carry their partition column). The touched groups are
+        the table's groups in the WAL's buckets whose partition lies in
+        the range the WAL files' footer min/max of the partition column
+        span — metadata only, like the LSN prune (all partitions of the
+        bucket when a footer has no statistics). Rows of a partition the
+        table does not hold yet form new groups.
+
         Pending MOR deltas fold in with the same contract as merge():
         touched buckets' deltas are absorbed (they were written
         one-bucket-per-file, so they register into the same bucketed
@@ -2457,13 +2772,13 @@ class LakeTable(ChainedTable):
         key_cols: list[str] = snap["key_cols"]
         n_buckets = snap["num_buckets"]
         wal_files = B.collect_wal_files(source_path)
-        touched = sorted(int(b) for b in wal_files)
-        if not touched:
+        if not wal_files:
             return MergeResult(version=snap["version"], empty=True)
-        if touched[-1] >= n_buckets:
+        if max(int(b) for b in wal_files) >= n_buckets:
             raise ValueError(
-                f"WAL bucket id {touched[-1]} >= table num_buckets "
-                f"{n_buckets}: the log was bucketed with a different spec"
+                f"WAL bucket id {max(int(b) for b in wal_files)} >= table "
+                f"num_buckets {n_buckets}: the log was bucketed with a "
+                f"different spec"
             )
         wal_schema = spark.read.parquet(
             *[f for fl in wal_files.values() for f in fl]
@@ -2473,6 +2788,10 @@ class LakeTable(ChainedTable):
             for f in T.StructType.fromJson(json.loads(snap["schema"])).fields
         }
         wal_fields = {f.name: f.dataType for f in wal_schema.fields}
+        part_col = snap.get("partition_col")
+        if part_col and part_col not in wal_fields:
+            raise ValueError(f"WAL is missing partition column {part_col}")
+        touched = self._wal_groups(snap, wal_files)
         for c in key_cols:
             if c not in wal_fields:
                 raise ValueError(f"WAL is missing key column {c}")
@@ -2530,9 +2849,27 @@ class LakeTable(ChainedTable):
             null_keys=_parquet_may_hold_nulls(
                 [f for fl in wal_files.values() for f in fl], key_cols
             ),
+            strict=False,
         )
 
-    def _fold_deltas_zx(self, spark: SparkSession, touched: list[int]) -> MergeResult:
+    def _wal_groups(self, snap: dict, wal_files: dict[str, list[str]]) -> set[str]:
+        """The groups a bucketed WAL touches: its buckets, or in a
+        partitioned table the existing (partition, bucket) groups whose
+        partition lies within the bucket files' footer range of the
+        partition column."""
+        if not snap.get("partition_col"):
+            return set(wal_files)
+        have = {(p, b) for _s, p, b, _f in snapshot_files(snap)}
+        out = set()
+        for b, files in wal_files.items():
+            rng = _footer_partition_range(files, snap)
+            out |= {
+                _group_key(p, hb) for p, hb in have
+                if hb == int(b) and (rng is None or rng[0] <= p <= rng[1])
+            }
+        return out
+
+    def _fold_deltas_zx(self, spark: SparkSession, touched: set[str]) -> MergeResult:
         """Zero-exchange delta fold — compaction's MOR-fold step without
         the merge shuffle. The touched buckets' base, tombstone and
         delta files register as ONE catalog bucketed table
@@ -2555,7 +2892,7 @@ class LakeTable(ChainedTable):
             touched, None, _operation_label="compact-fold",
         )
 
-    def _merge_mor(self, spark, snap, upd, evolved, op_col, lsn_col, bexpr,
+    def _merge_mor(self, spark, snap, upd, evolved, op_col, lsn_col,
                    _summary_extra: dict | None = None) -> MergeResult:
         """Append path: within-batch LWW dedup (_resolve_batch), then
         per-bucket delta files carrying (_lsn, _op). No base read, no
@@ -2576,7 +2913,7 @@ class LakeTable(ChainedTable):
             # payload (which would defeat read-side column pruning)
             F.col("__tb1").alias(_TB1_COL),
             F.col("__tb2").alias(_TB2_COL),
-            bexpr.alias(_BUCKET_COL),
+            *[e.alias(c) for c, e in self._group_cols(snap).items()],
         )
         new_delta = self._write_buckets(out, snap, prefix="d", pre_partitioned=True)
         if not new_delta:
@@ -2593,8 +2930,8 @@ class LakeTable(ChainedTable):
         result = MergeResult(
             version=new_version,
             rows_delta=total,
-            touched_buckets=sorted(int(b) for b in new_delta),
-            partition_counts={int(b): len(fl) for b, fl in new_delta.items()},
+            touched_buckets=[_group_label(g) for g in sorted(new_delta, key=_split_group)],
+            partition_counts={_group_label(g): len(fl) for g, fl in new_delta.items()},
         )
         # base files, tombstones and base row lineage carry as-is:
         # deltas are not base rows
@@ -2614,8 +2951,8 @@ class LakeTable(ChainedTable):
         lineage + row counts) — no Spark job: everything comes from the
         snapshot's manifest-style bookkeeping."""
         snap = self.snapshot()
-        rc = {int(b): n for b, n in (snap.get("row_counts") or {}).items()}
-        n_files = Counter(side for side, _b, _f in snapshot_files(snap))
+        rc = {_group_label(g): n for g, n in (snap.get("row_counts") or {}).items()}
+        n_files = Counter(side for side, *_gf in snapshot_files(snap))
         return {
             "version": snap["version"],
             "num_buckets": snap["num_buckets"],
@@ -2666,7 +3003,7 @@ class LakeTable(ChainedTable):
                 **{
                     k: target.get(k, default)
                     for k, default in _SNAP_CARRIED.items()
-                    if k != "commit_mode"
+                    if k != "commit_mode" and (k in target or default is not None)
                 },
             )
         )
@@ -2724,12 +3061,11 @@ class LakeTable(ChainedTable):
         row_group_bytes caps parquet row-group size (finer stats
         granularity; also the knob the clustering tests pin)."""
         snap = self.snapshot()
-        fold_buckets = [
-            int(b) for b, fl in _side_maps(snap)["d"].items()
-            if len(fl) >= min_delta_files
-        ]
-        if fold_buckets:
-            self._fold_deltas_zx(spark, fold_buckets)
+        fold_groups = {
+            g for g, fl in _side_maps(snap)["d"].items() if len(fl) >= min_delta_files
+        }
+        if fold_groups:
+            self._fold_deltas_zx(spark, fold_groups)
             snap = self.snapshot()
         files = _side_maps(snap)["b"]
         to_rewrite = {
@@ -2740,7 +3076,7 @@ class LakeTable(ChainedTable):
             return snap["version"]
         all_small = [f for fl in to_rewrite.values() for f in fl]
         df = spark.read.schema(self._side_stored(snap, "b")).parquet(*all_small)
-        out = df.withColumn(_BUCKET_COL, self._bucket_expr(snap))
+        out = df.withColumns(self._group_cols(snap))
         sort_expr = None
         if cluster_by is not None:
             from ..functions.scalar import zorder_key
@@ -2782,7 +3118,9 @@ class LakeTable(ChainedTable):
             snap,
             {
                 "operation": "compact",
-                "rewritten_buckets": sorted(int(b) for b in to_rewrite),
+                "rewritten_buckets": [
+                    _group_label(g) for g in sorted(to_rewrite, key=_split_group)
+                ],
                 "files_before": len(all_small),
                 "files_after": sum(len(fl) for fl in new_files.values()),
                 **(
@@ -2799,7 +3137,7 @@ class LakeTable(ChainedTable):
 
     @staticmethod
     def _snap_files(snap: dict) -> set[str]:
-        return {f for _side, _b, f in snapshot_files(snap)}
+        return {f for *_g, f in snapshot_files(snap)}
 
     def rebucket(self, spark: SparkSession, new_num_buckets: int) -> int:
         """Bucket-count evolution (Iceberg partition-spec evolution
@@ -2832,7 +3170,7 @@ class LakeTable(ChainedTable):
         if new_num_buckets == snap["num_buckets"]:
             return snap["version"]
         nsnap = {**snap, "num_buckets": new_num_buckets}
-        bexpr = self._bucket_expr(nsnap)
+        gcols = self._group_cols(nsnap)
 
         def rewrite(side: str, files_map: dict) -> dict[str, list[str]]:
             flist = [f for fl in files_map.values() for f in fl]
@@ -2840,7 +3178,7 @@ class LakeTable(ChainedTable):
                 return {}
             df = spark.read.schema(self._side_stored(snap, side)).parquet(
                 *flist
-            ).withColumn(_BUCKET_COL, bexpr)
+            ).withColumns(gcols)
             return self._write_buckets(df, nsnap, sort_within=True)
 
         out = {side: rewrite(side, m) for side, m in _side_maps(snap).items()}
@@ -3024,15 +3362,15 @@ class LakeTable(ChainedTable):
         if below_lsn is None:
             raise ValueError("expire_tombstones needs below_lsn or offsets")
         snap = self.snapshot()
-        tombs = [f for side, _b, f in snapshot_files(snap) if side == "t"]
+        tombs = [f for side, *_g, f in snapshot_files(snap) if side == "t"]
         if not tombs:
             return 0
         df = spark.read.schema(self._side_stored(snap, "t")).parquet(*tombs)
         removed = df.filter(F.col(LSN_COL) < below_lsn).count()
         if removed == 0:
             return 0
-        survivors = df.filter(F.col(LSN_COL) >= below_lsn).withColumn(
-            _BUCKET_COL, self._bucket_expr(snap)
+        survivors = df.filter(F.col(LSN_COL) >= below_lsn).withColumns(
+            self._group_cols(snap)
         )
         new_tombs = self._write_buckets(survivors, snap, prefix="t")
         self._commit(

@@ -47,18 +47,14 @@ O(metadata).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .partitioned import PartitionedLakeTable
 from .table import (
-    ChainedTable,
     CommitConflictError,
     LakeTable,
-    durable_replace,
     staged_manifests,
     wap_chain,
 )
@@ -254,14 +250,19 @@ def run_audits(df: DataFrame, audits: list[Audit]) -> dict[str, str]:
 
 
 # ------------------------------------------------------------ stage
-class _StagedChain:
-    """Shared staged-manifest mechanics for WAP stages (flat table and
-    partition tree): the stage's ``wap-<id>-`` chain (``self._staged``)
-    overlaying the main chain (``self._chain``, the fallback for every
-    version the stage has not committed). Subclasses call ``_attach``
-    from their constructor."""
+class WapStage(LakeTable):
+    """A LakeTable view whose commits land on a private staged chain:
+    the stage's ``wap-<id>-`` chain (``self._staged``) overlaying the
+    main chain (``self._chain``, the fallback for every version the
+    stage has not committed). A stage over a partitioned table is the
+    same stage: partitions are groups of the one chain.
 
-    def _attach(self, wap_id: str) -> None:
+    Create with :func:`begin_wap` (or re-attach to an existing stage
+    by constructing with the same ``wap_id`` after a crash — staged
+    manifests are durable)."""
+
+    def __init__(self, path: str, wap_id: str):
+        super().__init__(path)
         if not wap_id or any(ch in wap_id for ch in "/\\ \t\n"):
             raise ValueError(f"invalid wap_id {wap_id!r}")
         self.wap_id = wap_id
@@ -270,7 +271,7 @@ class _StagedChain:
         if tip is not None:
             self._base_version = self._staged.read(tip)["wap"]["base_version"]
         else:
-            self._base_version = ChainedTable.current_version(self)
+            self._base_version = LakeTable.current_version(self)
 
     def _staged_tip(self) -> int | None:
         return self._staged.latest()
@@ -280,7 +281,7 @@ class _StagedChain:
 
     def current_version(self) -> int:
         tip = self._staged_tip()
-        return tip if tip is not None else ChainedTable.current_version(self)
+        return tip if tip is not None else LakeTable.current_version(self)
 
     def snapshot(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
@@ -300,18 +301,6 @@ class _StagedChain:
 
     def _drop_staged_manifests(self) -> None:
         self._staged.expire(self.staged_versions())
-
-
-class WapStage(_StagedChain, LakeTable):
-    """A LakeTable view whose commits land on a private staged chain.
-
-    Create with :func:`begin_wap` (or re-attach to an existing stage
-    by constructing with the same ``wap_id`` after a crash — staged
-    manifests are durable)."""
-
-    def __init__(self, path: str, wap_id: str):
-        super().__init__(path)
-        self._attach(wap_id)
 
     # -- lifecycle -------------------------------------------------
     def publish(
@@ -422,317 +411,6 @@ class WapStage(_StagedChain, LakeTable):
         return removed
 
 
-class PartitionedWapStage(_StagedChain, PartitionedLakeTable):
-    """Write-audit-publish over the PARTITION TREE: the ROOT chain is
-    staged (``wap-<id>-N`` root manifests — invisible to every normal
-    reader, who only follows ``snap-`` roots), and each touched child
-    is a per-child :class:`WapStage`, so child data commits are staged
-    too. Staged state is fully readable/auditable through the ordinary
-    tree API (read / read_changes / metadata), because every child
-    lookup routes through the stage's ``partition_table``.
-
-    Publish = child stages publish first (metadata-only renumbers),
-    then ONE root commit pins the published vector atomically; if the
-    root commit loses a race, the already-published children are
-    ROLLED BACK (LakeTable.rollback — history moves forward, pointers
-    move back) so no staged row can leak into a later main merge, and
-    WapConflictError is raised with the stage kept.
-
-    New partitions created inside a stage get a real (empty) child v0
-    plus staged data commits; on abort the staged commits vanish with
-    the child wap chain, and a stage-created child whose dir lingers
-    is neutralized by the reincarnation truncate guard on the next
-    main merge."""
-
-    def __init__(self, path: str, wap_id: str):
-        super().__init__(path)
-        self._attach(wap_id)
-
-    def partition_table(self, value: str):
-        path = self.partition_dir(value)
-        if os.path.isdir(os.path.join(path, "_meta")):
-            return WapStage(path, self.wap_id)
-        # not created yet: hand back a plain table so exists()/create
-        # work; the NEXT lookup (post-create) returns the staged view
-        return LakeTable(path)
-
-    def _commit(self, snap: dict) -> None:
-        snap = dict(snap)
-        snap.pop("committed_at", None)
-        super()._commit(snap)
-
-    def _child_staged(self, value: str) -> bool:
-        """Whether partition ``value`` holds a chain of this stage."""
-        md = os.path.join(self.partition_dir(value), "_meta")
-        return wap_chain(md, self.wap_id).latest() is not None
-
-    def _staged_children(self, vector: dict) -> list[str]:
-        return [v for v in sorted(vector) if self._child_staged(v)]
-
-    # -- publish-intent marker -------------------------------------
-    # Durable record of each child's PUBLISHED main version, written
-    # before the root commit: a crash between the child-publish loop
-    # and the root commit leaves children published (their wap chains
-    # already dropped) while the staged root vector still pins STAGED
-    # chain numbers — which exist on the main chain only by
-    # coincidence (single staged commit) or not at all. A re-attached
-    # publish resolves those children from this marker instead.
-    def _intent_path(self) -> str:
-        return self._staged.aux_path("publish-intent.json")
-
-    def _read_intent(self) -> dict:
-        try:
-            with open(self._intent_path()) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {}
-
-    def _write_intent(self, intent: dict) -> None:
-        durable_replace(self._intent_path(), json.dumps(intent))
-
-    def _clear_intent(self) -> None:
-        try:
-            os.remove(self._intent_path())
-        except FileNotFoundError:
-            pass
-
-    def snapshot(self, version: int | None = None) -> dict:
-        snap = super().snapshot(version)
-        if "wap" in snap:
-            # a staged ROOT manifest: overlay publish-intent children
-            # with their published main versions, so re-attached reads
-            # (audits, read_changes, publish itself) resolve them on
-            # the child MAIN chain — the staged numbers no longer
-            # exist. Only children whose staged chain is GONE overlay:
-            # the marker is written before the child publish, so an
-            # entry with a still-live chain means that child's publish
-            # never completed and the staged numbers remain the truth.
-            intent = self._read_intent()
-            if intent:
-                parts = dict(snap.get("partitions") or {})
-                changed = False
-                for v, rec in intent.items():
-                    if v in parts and not self._child_staged(v):
-                        parts[v] = rec["pub"]
-                        changed = True
-                if changed:
-                    snap = dict(snap)
-                    snap["partitions"] = parts
-        return snap
-
-    def publish(
-        self,
-        spark: SparkSession | None = None,
-        audits: list[Audit] | None = None,
-    ) -> int:
-        tip = self._staged_tip()
-        if tip is None:
-            raise ValueError(f"wap stage {self.wap_id!r}: nothing staged")
-        if audits:
-            if spark is None:
-                raise ValueError("publish(audits=...) needs a SparkSession")
-            state_audits = [
-                a for a in audits if not getattr(a, "wants_changes", False)
-            ]
-            change_audits = [
-                a for a in audits if getattr(a, "wants_changes", False)
-            ]
-            report = run_audits(self.read(spark), state_audits)
-            if change_audits:
-                base_vec = (
-                    PartitionedLakeTable.snapshot(self, self._base_version)
-                    .get("partitions") or {}
-                )
-                base_rows = 0
-                for value, cv in base_vec.items():
-                    cs = LakeTable(self.partition_dir(value)).snapshot(cv)
-                    base_rows += sum((cs.get("row_counts") or {}).values())
-                for a in change_audits:
-                    a._base_rows = base_rows
-                report.update(
-                    run_audits(
-                        self.read_changes(spark, self._base_version, tip),
-                        change_audits,
-                    )
-                )
-            if report:
-                raise WapAuditError(report)
-        main = PartitionedLakeTable(self.path)
-        current = main.current_version()
-        if current != self._base_version:
-            cs = PartitionedLakeTable.snapshot(self, current)
-            s = cs.get("summary") or {}
-            if (
-                s.get("operation") == "wap-publish"
-                and s.get("wap_id") == self.wap_id
-                and cs.get("parent") == self._base_version
-            ):
-                # OUR root commit already landed (crash between it and
-                # the cleanup): finish the cleanup idempotently
-                self._publish_cleanup(dict(cs.get("partitions") or {}))
-                return current
-            raise WapConflictError(
-                f"main moved {self._base_version} -> {current} while wap "
-                f"stage {self.wap_id!r} was open; abort and restage"
-            )
-        snap = dict(self.snapshot(tip))
-        # snapshot() has already overlaid publish-intent children (a
-        # re-attached publish after a crash mid-protocol), so `vector`
-        # holds published MAIN versions for them and staged numbers
-        # only for children still awaiting their publish
-        vector = dict(snap.get("partitions") or {})
-        intent = self._read_intent()
-        undo: list[tuple[str, int, int]] = []
-        try:
-            for value in self._staged_children(vector):
-                child_main = LakeTable(self.partition_dir(value))
-                pre = child_main.current_version()
-                # record the intent BEFORE the child publish (flat
-                # publish always commits pre+1, so the published
-                # version is known in advance): every crash point
-                # after this line is recoverable from the marker —
-                # this is what makes the loop-to-root-commit window
-                # safe for a re-attached publish
-                intent[value] = {"pre": pre, "pub": pre + 1}
-                self._write_intent(intent)
-                pub = WapStage(self.partition_dir(value), self.wap_id).publish()
-                if pub != pre + 1:
-                    # the marker above already recorded pre + 1: a
-                    # mismatch would misclassify this child on rollback
-                    raise RuntimeError(
-                        f"wap stage {self.wap_id!r}: child {value!r} "
-                        f"published version {pub}, expected {pre + 1}"
-                    )
-                vector[value] = pub
-                undo.append((value, pre, pub))
-            snap["partitions"] = vector
-            snap["version"] = current + 1
-            snap["parent"] = current
-            snap.pop("wap", None)
-            summary = dict(snap.get("summary") or {})
-            snap["summary"] = {
-                **summary,
-                "operation": "wap-publish",
-                "wap_id": self.wap_id,
-                "staged_commits": len(self.staged_versions()),
-                "staged_operation": summary.get("operation"),
-            }
-            main._commit(snap)
-        except (CommitConflictError, WapConflictError) as e:
-            # un-publish the children so no staged row leaks into a
-            # later main merge through an advanced child CURRENT —
-            # including children published by a CRASHED earlier attempt
-            # (their pre/pub ride the intent marker). A child whose
-            # CURRENT moved past our published version carries a
-            # FOREIGN writer's commit built on the unaudited staged
-            # data: rolling it back would silently drop that writer's
-            # rows, so fail loudly for operator repair instead.
-            to_undo = {v: (rec["pre"], rec["pub"]) for v, rec in intent.items()}
-            for value, pre, pub in undo:
-                to_undo[value] = (pre, pub)
-            foreign = []
-            for value, (pre, pub) in sorted(to_undo.items()):
-                child = LakeTable(self.partition_dir(value))
-                cur = child.current_version()
-                if cur == pre:
-                    # intent recorded but the child publish never
-                    # committed — nothing to undo
-                    intent.pop(value, None)
-                    continue
-                if cur != pub:
-                    foreign.append(value)
-                    continue
-                child.rollback(pre)
-                intent.pop(value, None)
-            if intent:
-                self._write_intent(intent)
-            else:
-                self._clear_intent()
-            if foreign:
-                raise WapConflictError(
-                    f"publish of wap stage {self.wap_id!r} lost a race AND "
-                    f"concurrent main commits landed on published children "
-                    f"{foreign} before the rollback; those children keep "
-                    "the staged+foreign data and need operator repair "
-                    "(the other children were rolled back)"
-                ) from e
-            raise WapConflictError(
-                f"publish of wap stage {self.wap_id!r} lost a race; child "
-                "publishes rolled back — abort and restage"
-            ) from e
-        self._publish_cleanup(vector)
-        return snap["version"]
-
-    def _publish_cleanup(self, vector: dict) -> None:
-        """Post-root-commit cleanup: drop the staged root chain + the
-        intent marker, then sweep child wap chains NOT covered by the
-        published vector — a child merged and then drop_partitions'd
-        inside the stage is absent from the staged vector, so the
-        publish loop never touches it and its wap-<id>-* manifests
-        would linger forever, pinning staged data files against child
-        vacuum and silently re-attaching to a future stage that reuses
-        this wap_id."""
-        self._drop_staged_manifests()
-        self._clear_intent()
-        try:
-            names = sorted(os.listdir(self.path))
-        except FileNotFoundError:
-            names = []
-        for name in names:
-            if (
-                name.startswith("p=")
-                and name[2:] not in vector
-                and self._child_staged(name[2:])
-            ):
-                WapStage(self.partition_dir(name[2:]), self.wap_id).abort(
-                    drop_data=True
-                )
-
-    def abort(self, drop_data: bool = True) -> int:
-        removed = 0
-        # children published by a CRASHED publish attempt (recorded in
-        # the intent marker) are un-published first, so abort leaves
-        # main exactly at the stage's base; a child whose CURRENT moved
-        # past our published version carries a foreign commit — leave
-        # it and fail loudly after cleaning everything else up
-        intent = self._read_intent()
-        foreign = []
-        for value, rec in sorted(intent.items()):
-            child = LakeTable(self.partition_dir(value))
-            cur = child.current_version()
-            if cur == rec["pre"]:
-                continue  # intent recorded, publish never committed
-            if cur != rec["pub"]:
-                foreign.append(value)
-                continue
-            child.rollback(rec["pre"])
-        try:
-            names = sorted(os.listdir(self.path))
-        except FileNotFoundError:
-            names = []
-        for name in names:
-            if name.startswith("p=") and self._child_staged(name[2:]):
-                removed += WapStage(
-                    self.partition_dir(name[2:]), self.wap_id
-                ).abort(drop_data=drop_data)
-        self._drop_staged_manifests()
-        if foreign:
-            # keep only the foreign entries so the condition stays
-            # visible to a later re-attach instead of silently vanishing
-            self._write_intent({v: intent[v] for v in foreign})
-            raise WapConflictError(
-                f"abort of wap stage {self.wap_id!r}: children {foreign} "
-                "were published by a crashed publish AND carry later "
-                "foreign commits — cannot roll back without dropping "
-                "another writer's rows; operator repair required"
-            )
-        self._clear_intent()
-        return removed
-
-
-def begin_wap(table, wap_id: str):
-    """Open (or re-attach to) a write-audit-publish stage on a table —
-    flat LakeTable or PartitionedLakeTable, decided by the table kind."""
-    if hasattr(table, "partition_table"):
-        return PartitionedWapStage(table.path, wap_id)
+def begin_wap(table, wap_id: str) -> WapStage:
+    """Open (or re-attach to) a write-audit-publish stage on a table."""
     return WapStage(table.path, wap_id)

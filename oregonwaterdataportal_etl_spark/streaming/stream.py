@@ -89,7 +89,7 @@ def start_cdc_stream(
     processing_time: str = "10 seconds",
 ):
     """Tail a parquet change-stream directory into the lake table
-    (a LakeTable or a PartitionedLakeTable).
+    (a LakeTable, flat or partitioned).
 
     Each micro-batch: LSN-window id -> manifest no-op check -> MERGE ->
     manifest commit. Returns the StreamingQuery.

@@ -25,7 +25,6 @@ from oregonwaterdataportal_etl_spark.cdc.changegen import (  # noqa: E402
     generate_changes_pdf,
 )
 from oregonwaterdataportal_etl_spark.lake import LakeTable  # noqa: E402
-from oregonwaterdataportal_etl_spark.lake.table import snapshot_files  # noqa: E402
 from oregonwaterdataportal_etl_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
@@ -116,6 +115,27 @@ def cow_merge_plan(spark, tmp) -> str:
     return last_write_plan(spark)
 
 
+def partitioned_cow_merge_plan(spark, tmp) -> str:
+    """The plan a copy-on-write merge() into a days(ts) x bucket table
+    executed, its batch spanning three days."""
+    t = LakeTable.create(
+        os.path.join(tmp, "pcow"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"],
+        num_buckets=4, partition_col="ts",
+    )
+
+    def days(df):
+        return df.withColumn("ts", F.expr("timestampadd(DAY, int(lsn % 3), ts)"))
+
+    t.merge(days(parquet_batch(
+        spark, tmp, "pcow_b1", generate_changes_pdf(2000, 100, seed=1)
+    )))
+    t.merge(days(parquet_batch(
+        spark, tmp, "pcow_b2",
+        generate_changes_pdf(500, 100, seed=2, lsn_start=2000),
+    )))
+    return last_write_plan(spark)
+
+
 def mor_append_plan(spark, tmp) -> str:
     """The plan a merge(mode="mor") executed, into a table with declared
     dict columns."""
@@ -200,9 +220,7 @@ def zero_exchange_compact_fold_plan(spark, tmp) -> str:
     ).withColumn("lsn", F.col("lsn") + 2000).localCheckpoint()
     t.merge(b1)
     t.merge(b2, mode="mor")
-    t._fold_deltas_zx(spark, sorted(
-        {b for side, b, _f in snapshot_files(t.snapshot()) if side == "d"}
-    ))
+    t._fold_deltas_zx(spark, set(t.snapshot()["deltas"]))
     return last_write_plan(spark)
 
 
@@ -286,6 +304,18 @@ def write_plans(spark, tmp: str) -> None:
             "which needs no exchange -> bucket-aligned write. Pinned by "
             "test_cow_merge_write_plan_shuffles_only_the_batch",
             cow_merge_plan(spark, tmp),
+        ),
+        (
+            "Copy-on-write merge into a time-partitioned table",
+            "days(ts) x bucket(4): the same one exchange (the batch's "
+            "repartition on the keys); the partition value _p is computed "
+            "above it from ts and joins the keys in the dedup window and, "
+            "as a <=/>= residual, in the full-outer SHUFFLE_HASH join, "
+            "whose equi-keys stay the bucketing keys, so the bucketed scan "
+            "of the touched (day, bucket) groups needs no exchange -> one "
+            "write into _p=<day>/_b=<bucket>/ dirs. Pinned by "
+            "test_partitioned_merge_plans_never_shuffle_the_base",
+            partitioned_cow_merge_plan(spark, tmp),
         ),
         (
             "MOR append (one exchange: the batch)",

@@ -73,9 +73,9 @@ def test_persisted_limbs_equal_the_raw_batch_limbs(spark, tmp_path, family, mode
     snap = t.snapshot()
     evolved = t.schema()
     assert evolved.fieldNames() == TRANSCRIPT_SCHEMA.fieldNames() + ["lang"]
-    sides = {side for side, _, _ in snapshot_files(snap)}
+    sides = {side for side, *_ in snapshot_files(snap)}
     assert sides == ({"d"} if mode == "mor" else {"b", "t"})
-    persisted = _persisted_limbs(spark, [f for _, _, f in snapshot_files(snap)])
+    persisted = _persisted_limbs(spark, [f for *_, f in snapshot_files(snap)])
 
     t1, t2 = LakeTable._update_tiebreak(batch.columns, evolved, "op", family)
     expected = {
@@ -131,7 +131,7 @@ def test_cow_merge_counts_actions_without_writing_them(spark, tmp_path):
             r.rows_noop, r.rows_dropped) == (2, 3, 1, 6, 1)
 
     snap = t.snapshot()
-    files = [f for _, _, f in snapshot_files(snap)]
+    files = [f for *_, f in snapshot_files(snap)]
     assert snap["tombstones"] and snap["files"]
     for f in files:
         names = pq.read_schema(f).names

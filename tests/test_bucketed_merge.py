@@ -391,7 +391,7 @@ def test_zx_delta_fold_equals_oracle_fold(spark, tmp_path):
         ).values()
     )
 
-    fold_buckets = [int(b) for b in zx.snapshot()["deltas"]]
+    fold_buckets = set(zx.snapshot()["deltas"])
     with recorded_writes(spark) as writes:
         zx._fold_deltas_zx(spark, fold_buckets)
     zx.compact(spark)  # bin-pack only: deltas already folded

@@ -16,7 +16,6 @@ from oregonwaterdataportal_etl_spark.cdc.changegen import (
 from oregonwaterdataportal_etl_spark.lake import (
     LakeTable,
     bucketed,
-    partitioned,
     table,
     write_bucketed_wal,
 )
@@ -55,7 +54,7 @@ def _assert_all(files, codec: str, step: str) -> None:
 
 
 def _table_files(t) -> list[str]:
-    return [f for _side, _b, f in snapshot_files(t.snapshot())]
+    return [f for *_g, f in snapshot_files(t.snapshot())]
 
 
 def _state(rows) -> list[tuple]:
@@ -79,7 +78,7 @@ def test_snappy_table_keeps_merging_and_reading_after_the_switch(
     forward, and the mor append, the bucketed read over mixed-codec
     files, lookup, time travel, the changelog across the switch,
     compaction and the zero-exchange merge all equal the oracle fold."""
-    for mod in (table, bucketed, partitioned):
+    for mod in (table, bucketed):
         monkeypatch.setattr(mod, "DATA_FILE_CODEC", "snappy")
     t = LakeTable.create(
         str(tmp_path / "t"), TRANSCRIPT_SCHEMA, KEYS, num_buckets=NB
@@ -106,7 +105,7 @@ def test_snappy_table_keeps_merging_and_reading_after_the_switch(
         for b in ("2", "3"):
             assert snap[side].get(b) == pre_snap[side].get(b), (side, b)
             _assert_all(snap[side].get(b, []), "SNAPPY", f"carried {side}")
-    touched = [f for s, b, f in snapshot_files(snap) if b in (0, 1)]
+    touched = [f for s, _p, b, f in snapshot_files(snap) if b in (0, 1)]
     _assert_all(touched, "ZSTD", "rewritten buckets")
 
     b4 = _batch(spark, 500, seed=54, lsn_start=30_000)

@@ -19,11 +19,7 @@ from oregonwaterdataportal_etl_spark.cdc.changegen import (
     TRANSCRIPT_SCHEMA,
     generate_changes_pdf,
 )
-from oregonwaterdataportal_etl_spark.lake import (
-    LakeTable,
-    PartitionedLakeTable,
-    write_partitioned_wal,
-)
+from oregonwaterdataportal_etl_spark.lake import LakeTable
 from oregonwaterdataportal_etl_spark.lake.bucketed import write_bucketed_wal
 from oregonwaterdataportal_etl_spark.lake.table import ManifestChain
 
@@ -181,18 +177,21 @@ def test_every_writer_keeps_the_layout(snappy_session, tmp_path):
 
 
 def test_partitioned_wal_writes_zstd(snappy_session, tmp_path):
-    """The partition tree's WAL writer, the fourth lake writer, is zstd
-    under a snappy session too."""
+    """A time-partitioned table's bucketed WAL (the ordinary
+    write_bucketed_wal) and the (partition, bucket) files its
+    zero-exchange merge writes are zstd under a snappy session too."""
     spark = snappy_session
-    t = PartitionedLakeTable.create(
+    t = LakeTable.create(
         str(tmp_path / "pt"), TRANSCRIPT_SCHEMA, KEYS,
         partition_col="ts", num_buckets=4,
     )
-    wal = write_partitioned_wal(
+    wal = write_bucketed_wal(
         spark.createDataFrame(generate_changes_pdf(300, 30, seed=27)),
-        str(tmp_path / "pwal"), t,
+        str(tmp_path / "pwal"), 4, KEYS,
     )
-    _assert_files_zstd(wal, "write_partitioned_wal")
+    _assert_files_zstd(wal, "write_bucketed_wal")
+    t.merge_prebucketed(spark, wal)
+    _assert_files_zstd(t.data_dir, "merge_prebucketed")
 
 
 def test_side_store_writers_write_zstd(snappy_session, tmp_path):

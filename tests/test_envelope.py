@@ -465,10 +465,10 @@ def test_envelope_plan_shape(spark):
 
 def test_envelope_stream_partitioned_tree(spark, tmp_path):
     """The whole wire->lake pipeline onto a TIME-PARTITIONED table:
-    ready rows route through the tree's merge into several days; state
-    equals the batch path on a twin tree."""
+    ready rows route through the table's merge into several days; state
+    equals the batch path on a twin table."""
     from oregonwaterdataportal_etl_spark.cdc import ManifestLog
-    from oregonwaterdataportal_etl_spark.lake import PartitionedLakeTable
+    from oregonwaterdataportal_etl_spark.lake import LakeTable
     from oregonwaterdataportal_etl_spark.streaming import start_envelope_stream
 
     changes = generate_changes(spark, 600, 60, seed=41).withColumn(
@@ -478,7 +478,7 @@ def test_envelope_stream_partitioned_tree(spark, tmp_path):
     wire_dir = str(tmp_path / "wire")
     raw.coalesce(1).write.parquet(os.path.join(wire_dir, "f1"))
 
-    tree = PartitionedLakeTable.create(
+    tree = LakeTable.create(
         str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
         key_cols=["conv_id", "turn_idx"], partition_col="ts", num_buckets=4,
     )
@@ -495,7 +495,7 @@ def test_envelope_stream_partitioned_tree(spark, tmp_path):
     q.awaitTermination(180)
     assert len(tree.partitions()) >= 2
 
-    twin = PartitionedLakeTable.create(
+    twin = LakeTable.create(
         str(tmp_path / "twin"), TRANSCRIPT_SCHEMA,
         key_cols=["conv_id", "turn_idx"], partition_col="ts", num_buckets=4,
     )
@@ -506,3 +506,28 @@ def test_envelope_stream_partitioned_tree(spark, tmp_path):
     a = tree.read(spark).orderBy("conv_id", "turn_idx", "ts").collect()
     b = twin.read(spark).orderBy("conv_id", "turn_idx", "ts").collect()
     assert a == b and len(a) > 0
+
+
+def test_envelope_ingest_job_rejects_malformed_arguments(monkeypatch):
+    """jobs/envelope_ingest.py exits with the usage line, before any
+    SparkSession starts, when it gets fewer than three positional
+    arguments or an --op-alias value without a colon (neither may die
+    in an unpacking ValueError)."""
+    import importlib.util
+    import sys
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "jobs", "envelope_ingest.py",
+    )
+    spec = importlib.util.spec_from_file_location("envelope_ingest", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr(job, "SparkSession", None)  # building one raises
+    for argv in (
+        ["envelope_ingest.py", "w"],
+        ["envelope_ingest.py", "w", "t", "s", "--op-alias=insert"],
+    ):
+        monkeypatch.setattr(sys, "argv", argv)
+        with pytest.raises(SystemExit, match="usage: envelope_ingest.py"):
+            job.main()

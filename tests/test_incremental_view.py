@@ -182,7 +182,7 @@ def test_view_old_values_read_is_bucket_pruned(spark, tmp_path):
         .select(vt._bucket_expr(snap).alias("b"))
         .collect()
     ]
-    pruned = vt._resolved_view(spark, snap["version"], buckets=buckets)
+    pruned = vt._resolved_view(spark, snap["version"], {str(b) for b in buckets})
     full = vt._resolved_view(spark, snap["version"])
     assert len(pruned.inputFiles()) < len(full.inputFiles())
 

@@ -1,7 +1,6 @@
 """The manifest chain shared by every versioned store: debris left by a
-crashed commit is never read as a version, the tree-WAP publish-intent
-marker is durable before the first child publish, and the on-disk
-format (manifest names, pointer, top-level keys) stays fixed."""
+crashed commit is never read as a version, and the on-disk format
+(manifest names, pointer, top-level keys) stays fixed."""
 
 import datetime
 import json
@@ -14,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from oregonwaterdataportal_etl_spark.cdc import WatermarkStore
-from oregonwaterdataportal_etl_spark.lake import LakeTable, PartitionedLakeTable
+from oregonwaterdataportal_etl_spark.lake import LakeTable
 from oregonwaterdataportal_etl_spark.operators.ann_index import AnnIndex
 
 SCHEMA = T.StructType(
@@ -43,7 +42,7 @@ def _create(kind, path, mode):
         return LakeTable.create(
             path, SCHEMA, ["id"], num_buckets=2, commit_mode=mode
         )
-    return PartitionedLakeTable.create(
+    return LakeTable.create(
         path, SCHEMA, ["id"], partition_col="ts", num_buckets=2,
         commit_mode=mode,
     )
@@ -75,52 +74,6 @@ def test_tmp_debris_is_not_a_version(spark, tmp_path, kind, mode):
     assert [s["version"] for s in t.history()] == [1, 2]
 
 
-def test_tree_publish_intent_is_durable_before_child_publish(
-    spark, tmp_path, monkeypatch
-):
-    """The publish-intent marker is the record a re-attached publish
-    recovers from, so it and its directory must be fsynced before the
-    first child manifest is linked: a power loss may otherwise keep the
-    (fsynced) child publish and lose the marker."""
-    if not os.path.isdir("/proc/self/fd"):
-        pytest.skip("needs /proc/self/fd to name fsync targets")
-    t = _create("tree", str(tmp_path / "pt"), "pointer")
-    t.merge(_events(spark, [(1, 1, 1, "a")]))
-    stage = t.begin_wap("dur")
-    stage.merge(_events(spark, [(1, 1, 2, "b"), (2, 2, 3, "c")]))
-
-    events = []
-    real_fsync, real_link = os.fsync, os.link
-
-    def fsync(fd):
-        events.append(("fsync", os.path.realpath(f"/proc/self/fd/{fd}")))
-        return real_fsync(fd)
-
-    def link(src, dst, *a, **k):
-        events.append(("link", os.path.realpath(dst)))
-        return real_link(src, dst, *a, **k)
-
-    monkeypatch.setattr(os, "fsync", fsync)
-    monkeypatch.setattr(os, "link", link)
-    stage.publish(spark)
-    monkeypatch.undo()
-
-    meta = os.path.realpath(t.meta_dir)
-    intent = os.path.join(meta, "wap-dur-publish-intent.json")
-    first_child_link = next(
-        i for i, (kind, p) in enumerate(events)
-        if kind == "link" and "/p=" in p and os.path.basename(p).startswith("snap-")
-    )
-    marker = [
-        i for i, (kind, p) in enumerate(events)
-        if kind == "fsync" and p.startswith(intent + ".tmp-")
-    ]
-    assert marker and marker[0] < first_child_link, events
-    assert any(
-        events[i] == ("fsync", meta) for i in range(marker[0], first_child_link)
-    ), events
-
-
 def _listing(d, keep=lambda n: True):
     return sorted(n for n in os.listdir(d) if keep(n))
 
@@ -144,11 +97,6 @@ _CREATE_KEYS = [
     "num_buckets", "parent", "schema", "summary", "tiebreak_family",
     "version",
 ]
-_ROOT_KEYS = [
-    "commit_mode", "committed_at", "dict_cols", "key_cols", "num_buckets",
-    "parent", "partition_col", "partitions", "schema", "summary",
-    "tiebreak_family", "transform", "version",
-]
 
 
 def _with_pointer(mode, names):
@@ -157,8 +105,10 @@ def _with_pointer(mode, names):
 
 @pytest.mark.parametrize("mode", MODES)
 def test_on_disk_format_of_tables_and_stages(spark, tmp_path, mode):
-    """Manifest names, pointer and top-level keys of the table, tree
-    and WAP-stage chains after a fixed commit sequence."""
+    """Manifest names, pointer and top-level keys of the flat table,
+    the time-partitioned table and WAP-stage chains after a fixed
+    commit sequence: a partitioned table's manifests are a flat one's
+    plus the partition spec."""
     flat = _create("flat", str(tmp_path / "flat"), mode)
     flat.merge(_events(spark, [(1, 1, 1, "a")]))
     stage = flat.begin_wap("w1")
@@ -184,14 +134,13 @@ def test_on_disk_format_of_tables_and_stages(spark, tmp_path, mode):
     tree.merge(_events(spark, [(1, 1, 1, "a")]))
     names = _listing(tree.meta_dir)
     assert names == _with_pointer(mode, ["snap-00000000.json", "snap-00000001.json"])
+    spec = ["partition_col", "transform"]
     assert _keys(tree.meta_dir, names) == {
-        "snap-00000000.json": _ROOT_KEYS,
-        "snap-00000001.json": sorted(_ROOT_KEYS + ["dropped_at"]),
+        "snap-00000000.json": sorted(_CREATE_KEYS + spec),
+        "snap-00000001.json": sorted(_TABLE_KEYS + spec),
     }
-    child = os.path.join(tree.path, "p=2024-01-01", "_meta")
-    assert _listing(child) == _with_pointer(
-        mode, ["snap-00000000.json", "snap-00000001.json"]
-    )
+    # group keys are <partition>/<bucket>
+    assert [g.split("/")[0] for g in tree.snapshot()["files"]] == ["2024-01-01"]
 
 
 @pytest.mark.parametrize("mode", MODES)

@@ -1,6 +1,6 @@
-"""PartitionedLakeTable: days(ts) x bucket(key) — routing, pruning,
-snapshot-consistent vector reads, retention drops, changelog, runner
-integration."""
+"""Time-partitioned LakeTable: days(ts) x bucket(key) — routing,
+pruning, time travel, retention drops, changelog, runner integration,
+and the converter for partition trees already on disk."""
 
 import datetime
 import os
@@ -12,10 +12,8 @@ from pyspark.sql import types as T
 
 from conftest import recorded_writes
 
-from oregonwaterdataportal_etl_spark.lake import (
-    LakeTable,
-    PartitionedLakeTable,
-)
+from oregonwaterdataportal_etl_spark.lake import LakeTable, write_bucketed_wal
+from oregonwaterdataportal_etl_spark.lake.table import retry_on_conflict
 
 SCHEMA = T.StructType(
     [
@@ -45,10 +43,26 @@ def _events(spark, rows):
     )
 
 
-def _create(tmp_path, **kw):
-    return PartitionedLakeTable.create(
-        str(tmp_path / "pt"), SCHEMA, key_cols=["id"],
-        partition_col="ts", num_buckets=4, **kw,
+def _create(tmp_path, name="pt", **kw):
+    kw.setdefault("num_buckets", 4)
+    return LakeTable.create(
+        str(tmp_path / name), SCHEMA, key_cols=["id"], partition_col="ts", **kw,
+    )
+
+
+def _touched_parts(res) -> list[str]:
+    """The partitions of a merge result's touched (partition, bucket)
+    groups."""
+    return sorted({str(g).split("/")[0] for g in res.touched_buckets})
+
+
+def _files_of(t, value: str, version=None) -> list[str]:
+    """The data files of one partition value in a snapshot."""
+    snap = t.snapshot(version)
+    return sorted(
+        f for side in ("files", "deltas", "tombstones")
+        for g, fl in (snap.get(side) or {}).items()
+        if g.split("/")[0] == value for f in fl
     )
 
 
@@ -68,7 +82,7 @@ def test_merge_routes_and_reads_back(spark, tmp_path):
         (3, 3, 13, "insert", "d"),
     ]))
     assert res.rows_inserted == 4
-    assert sorted(res.partitions) == ["2024-01-01", "2024-01-02", "2024-01-03"]
+    assert _touched_parts(res) == ["2024-01-01", "2024-01-02", "2024-01-03"]
     assert _state(t, spark) == {
         (1, 1): "a", (2, 1): "b", (1, 2): "c", (3, 3): "d",
     }
@@ -84,10 +98,11 @@ def test_merge_routes_and_reads_back(spark, tmp_path):
 def test_untouched_partitions_not_rewritten(spark, tmp_path):
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 1, 1, "insert", "a"), (2, 2, 2, "insert", "b")]))
-    v_day2 = t.partitions()["2024-01-02"]
-    t.merge(_events(spark, [(1, 1, 3, "update", "a2")]))
-    # day-2 child untouched: pinned version unchanged
-    assert t.partitions()["2024-01-02"] == v_day2
+    day2 = _files_of(t, "2024-01-02")
+    res = t.merge(_events(spark, [(1, 1, 3, "update", "a2")]))
+    # day-2 groups untouched: their file lists carry forward verbatim
+    assert _touched_parts(res) == ["2024-01-01"]
+    assert _files_of(t, "2024-01-02") == day2
 
 
 def test_read_partition_pruning_is_metadata_only(spark, tmp_path):
@@ -99,7 +114,8 @@ def test_read_partition_pruning_is_metadata_only(spark, tmp_path):
     pruned = t.read(spark, between=("2024-01-02", "2024-01-03"))
     files = pruned.inputFiles()
     assert files, "expected a parquet-backed plan"
-    assert all(("p=2024-01-02" in f) or ("p=2024-01-03" in f) for f in files)
+    kept = set(_files_of(t, "2024-01-02") + _files_of(t, "2024-01-03"))
+    assert {f.removeprefix("file://") for f in files} <= kept
     assert {r["id"] for r in pruned.collect()} == {2, 3}
     # values= list form
     only4 = t.read(spark, values=["2024-01-04"])
@@ -157,19 +173,19 @@ def test_drop_partitions_metadata_only_then_vacuum(spark, tmp_path):
     dropped = t.drop_partitions(before="2024-01-03")
     assert dropped == ["2024-01-01", "2024-01-02"]
     assert _state(t, spark) == {(3, 3): "c"}
-    # metadata-only: the child dirs still exist (time travel works)
-    assert os.path.isdir(t.partition_dir("2024-01-01"))
+    # metadata-only: the dropped files still exist (time travel works)
+    gone = _files_of(t, "2024-01-01", v_pre) + _files_of(t, "2024-01-02", v_pre)
+    assert gone and all(os.path.exists(f) for f in gone)
     assert _state(t, spark, version=v_pre) == {
         (1, 1): "a", (2, 2): "b", (3, 3): "c",
     }
-    # vacuum with keep_last=1 reaps the dropped children
+    # vacuum with keep_last=1 reaps the dropped partitions' files
     removed = t.vacuum(keep_last=1, orphan_grace_seconds=0.0)
-    assert removed > 0
-    assert not os.path.isdir(t.partition_dir("2024-01-01"))
-    assert not os.path.isdir(t.partition_dir("2024-01-02"))
-    assert os.path.isdir(t.partition_dir("2024-01-03"))
+    assert removed >= len(gone)
+    assert not any(os.path.exists(f) for f in gone)
+    assert all(os.path.exists(f) for f in _files_of(t, "2024-01-03"))
     assert _state(t, spark) == {(3, 3): "c"}
-    # the reaped children's catalog entries went with their dirs
+    # the registrations' catalog entries went with their dirs
     assert tables() - before == set()
 
 
@@ -223,9 +239,7 @@ def test_mor_mode_and_compact_fanout(spark, tmp_path):
     assert _state(t, spark) == {(1, 1): "a2"}  # MOR read-path resolve
     t.compact(spark)
     assert _state(t, spark) == {(1, 1): "a2"}
-    # deltas folded everywhere
-    for v in t.partitions():
-        assert not t.partition_table(v).snapshot().get("deltas")
+    assert not t.snapshot().get("deltas")  # folded everywhere
 
 
 def test_rebucket_fanout_updates_root_config(spark, tmp_path):
@@ -235,9 +249,11 @@ def test_rebucket_fanout_updates_root_config(spark, tmp_path):
     t.rebucket(spark, 8)
     assert t.snapshot()["num_buckets"] == 8
     assert _state(t, spark) == before
-    # new partitions created after the rebucket use the new count
+    # partitions created after the rebucket use the new count
     t.merge(_events(spark, [(100, 9, 100, "insert", "x")]))
-    assert t.partition_table("2024-01-09").snapshot()["num_buckets"] == 8
+    groups = [g for g in t.snapshot()["files"] if g.startswith("2024-01-09/")]
+    assert groups and all(int(g.split("/")[1]) < 8 for g in groups)
+    assert _state(t, spark)[(100, 9)] == "x"
 
 
 def test_identity_transform_and_validation(spark, tmp_path):
@@ -248,7 +264,7 @@ def test_identity_transform_and_validation(spark, tmp_path):
             T.StructField("v", T.StringType()),
         ]
     )
-    t = PartitionedLakeTable.create(
+    t = LakeTable.create(
         str(tmp_path / "ident"), schema, key_cols=["id"],
         partition_col="tenant", transform="identity", num_buckets=2,
     )
@@ -257,7 +273,7 @@ def test_identity_transform_and_validation(spark, tmp_path):
          Row(id=1, tenant="globex", lsn=2, op="insert", v="b")],
     )
     t.merge(df)
-    assert sorted(t.partitions()) == ["acme", "globex"]
+    assert t.partitions() == ["acme", "globex"]
     bad = spark.createDataFrame([Row(id=2, tenant="../evil", lsn=3,
                                      op="insert", v="x")])
     with pytest.raises(ValueError, match="unsafe"):
@@ -266,15 +282,19 @@ def test_identity_transform_and_validation(spark, tmp_path):
 
 def test_create_validation(tmp_path):
     with pytest.raises(ValueError, match="not in schema"):
-        PartitionedLakeTable.create(
+        LakeTable.create(
             str(tmp_path / "x"), SCHEMA, ["id"], partition_col="nope")
     with pytest.raises(ValueError, match="timestamp"):
-        PartitionedLakeTable.create(
+        LakeTable.create(
             str(tmp_path / "y"), SCHEMA, ["id"], partition_col="v")
+    with pytest.raises(ValueError, match="unknown transform"):
+        LakeTable.create(
+            str(tmp_path / "z"), SCHEMA, ["id"], partition_col="ts",
+            transform="hours")
 
 
 def test_cdc_runner_drop_in(spark, tmp_path):
-    """The runner drives a PartitionedLakeTable unchanged: windows,
+    """The runner drives a partitioned table unchanged: windows,
     duplicate-batch no-op replay, compact cadence."""
     from oregonwaterdataportal_etl_spark.cdc import CdcRunner, ManifestLog, OffsetLog
 
@@ -298,8 +318,7 @@ def test_cdc_runner_drop_in(spark, tmp_path):
     runner.run_window(3, 5)
     assert runner.run_window(3, 5) is None  # replay -> committed no-op
     assert _state(t, spark) == {(1, 1): "a2", (3, 3): "c"}
-    for v in t.partitions():
-        assert not t.partition_table(v).snapshot().get("deltas")
+    assert not t.snapshot().get("deltas")
 
 
 def test_schema_evolution_reaches_every_partition(spark, tmp_path):
@@ -317,8 +336,8 @@ def test_schema_evolution_reaches_every_partition(spark, tmp_path):
 
 
 def test_policy_maintenance_partitioned(spark, tmp_path):
-    """Retention + per-child upkeep + root history GC through ONE
-    policy call — and via the shared lake.maintenance.maintain router."""
+    """Retention + delta-debt compaction + history GC through ONE
+    policy call (lake.maintenance.maintain)."""
     from oregonwaterdataportal_etl_spark.lake import MaintenancePolicy, maintain
 
     t = _create(tmp_path)
@@ -335,22 +354,23 @@ def test_policy_maintenance_partitioned(spark, tmp_path):
         keep_snapshots=2,
         orphan_grace_seconds=0.0,
     )
-    report = maintain(spark, t, pol)  # routes to t.maintain
+    day1 = _files_of(t, "2024-01-01")
+    report = maintain(spark, t, pol)
     assert report["drop_partitions"] == ["2024-01-01"]
-    assert "p=2024-01-04" in report  # the delta-debt child compacted
-    assert not t.partition_table("2024-01-04").snapshot().get("deltas")
+    assert "compact" in report  # the delta-debt group folded
+    assert not t.snapshot().get("deltas")
     assert "vacuum" in report
     # state after: days 2-4, LWW winner on (1, day4)
     assert _state(t, spark)[(1, 4)] == "u2"
-    assert sorted(t.partitions()) == ["2024-01-02", "2024-01-03", "2024-01-04"]
-    # dropped child reaped by the root vacuum (grace 0)
-    assert not os.path.isdir(t.partition_dir("2024-01-01"))
+    assert t.partitions() == ["2024-01-02", "2024-01-03", "2024-01-04"]
+    # the dropped partition's files reaped by the vacuum (grace 0)
+    assert day1 and not any(os.path.exists(f) for f in day1)
     # converged: a second call is a full no-op
     assert maintain(spark, t, pol) == {}
 
 
 def test_runner_policy_cadence_partitioned(spark, tmp_path):
-    """CdcRunner(maintenance_policy=...) drives the partitioned tree:
+    """CdcRunner(maintenance_policy=...) drives a partitioned table:
     retention happens ON the ingest cadence, no integration code."""
     from oregonwaterdataportal_etl_spark.cdc import CdcRunner, ManifestLog, OffsetLog
     from oregonwaterdataportal_etl_spark.lake import MaintenancePolicy
@@ -377,7 +397,7 @@ def test_runner_policy_cadence_partitioned(spark, tmp_path):
     runner.run_window(200, 399)   # days 2-3
     runner.run_window(400, 499)   # day 4
     # each cadence kept only the newest 2 partition values
-    assert sorted(t.partitions()) == ["2024-01-03", "2024-01-04"]
+    assert t.partitions() == ["2024-01-03", "2024-01-04"]
     assert {k[1] for k in _state(t, spark)} == {3, 4}
 
 
@@ -407,10 +427,10 @@ from hypothesis import strategies as st  # noqa: E402
 def test_partitioned_chaos_schedule_equals_oracle_fold(
     spark, tmp_path_factory, raw, modes, maint, cmode
 ):
-    """Partition-tree chaos property: ANY interleaving of cow merges,
-    mor appends, fan-out compacts, METADATA-ONLY retention drops and
-    vacuums over an arbitrary (day, key) event list must leave the
-    tree in exactly the state of a sequential oracle that replays the
+    """Partitioned-table chaos property: ANY interleaving of cow merges,
+    mor appends, compacts, METADATA-ONLY retention drops and vacuums
+    over an arbitrary (day, key) event list must leave the table in
+    exactly the state of a sequential oracle that replays the
     same schedule (LWW per (day, key); a drop permanently removes the
     days below its cutoff, later events re-create those partitions
     with only later rows). One schedule, both commit modes."""
@@ -421,10 +441,7 @@ def test_partitioned_chaos_schedule_equals_oracle_fold(
         (i, d, idx, op, txt)  # (id, day, lsn, op, v) for _events
         for idx, (op, i, d, txt) in enumerate(raw, start=1)
     ]
-    t = PartitionedLakeTable.create(
-        str(tmp / "pt"), SCHEMA, key_cols=["id"], partition_col="ts",
-        num_buckets=2, commit_mode=cmode,
-    )
+    t = _create(tmp, num_buckets=2, commit_mode=cmode)
     # sequential oracle over the SAME schedule
     state: dict = {}
     n, nb = len(rows), len(modes)
@@ -464,29 +481,27 @@ def test_partitioned_chaos_schedule_equals_oracle_fold(
 
 
 def test_partitioned_wal_zero_exchange_merge(spark, tmp_path):
-    """The at-scale steady state composed: day-routed WAL + per-day
-    zero-exchange resolve. Final state == the ordinary merge path, and
-    NO Exchange appears in any per-day resolve plan."""
-    from oregonwaterdataportal_etl_spark.lake import write_partitioned_wal
-
+    """The at-scale steady state composed: a bucketed WAL of events on
+    several days applies through ONE zero-exchange resolve+write job,
+    which touches only the WAL days' groups. Final state == the
+    ordinary merge path."""
     rows1 = [(i, 1 + i % 3, i, "insert", f"v{i}") for i in range(1, 10)]
     rows2 = [(1, 1, 20, "update", "x"), (4, 1, 21, "delete", None),
              (2, 2, 22, "update", "y"), (100, 4, 23, "insert", "new")]
     t = _create(tmp_path)
     t.merge(_events(spark, rows1))
-    wal = write_partitioned_wal(_events(spark, rows2), str(tmp_path / "wal"), t)
+    day3 = _files_of(t, "2024-01-03")
+    wal = write_bucketed_wal(_events(spark, rows2), str(tmp_path / "wal"), 4, ["id"])
     with recorded_writes(spark) as writes:
         res = t.merge_prebucketed(spark, wal)
-    assert sorted(res.partitions) == ["2024-01-01", "2024-01-02", "2024-01-04"]
-    assert len(writes) == 3, writes  # one per day, child applies on pool threads
+    assert set(_touched_parts(res)) <= {"2024-01-01", "2024-01-02", "2024-01-04"}
+    assert _files_of(t, "2024-01-03") == day3  # outside the WAL's day range
+    assert len(writes) == 1, writes  # one job for all days
     for tree, details in writes:
         assert "Exchange" not in tree, tree
         assert "Bucketed: true" in details
     # oracle: ordinary merge path on a twin table
-    t2 = PartitionedLakeTable.create(
-        str(tmp_path / "twin"), SCHEMA, key_cols=["id"],
-        partition_col="ts", num_buckets=4,
-    )
+    t2 = _create(tmp_path, "twin")
     t2.merge(_events(spark, rows1))
     t2.merge(_events(spark, rows2))
     assert _state(t, spark) == _state(t2, spark)
@@ -498,16 +513,15 @@ def test_partitioned_wal_zero_exchange_merge(spark, tmp_path):
 
 def test_runner_zero_exchange_partitioned_wal(spark, tmp_path):
     """The full production loop composed: CdcRunner windows over a
-    PartitionedWalSource apply through the tree's merge_prebucketed
-    (time-routed AND exchange-free); final state equals the plain
-    thunk-source runner; replay no-ops."""
+    BucketedWalSource apply through the partitioned table's
+    merge_prebucketed (time-pruned AND exchange-free); final state
+    equals the plain thunk-source runner; replay no-ops."""
     from oregonwaterdataportal_etl_spark.cdc import (
+        BucketedWalSource,
         CdcRunner,
         ManifestLog,
         OffsetLog,
-        PartitionedWalSource,
     )
-    from oregonwaterdataportal_etl_spark.lake import write_partitioned_wal
 
     rows = (
         [(i, 1 + i % 3, i, "insert", f"v{i}") for i in range(1, 13)]
@@ -516,28 +530,22 @@ def test_runner_zero_exchange_partitioned_wal(spark, tmp_path):
     )
     t = _create(tmp_path)
     wal_dir = str(tmp_path / "wal")
-    write_partitioned_wal(_events(spark, [r for r in rows if r[2] < 10]),
-                          wal_dir, t)
-    write_partitioned_wal(_events(spark, [r for r in rows if r[2] >= 10]),
-                          wal_dir, t)
+    for part in ([r for r in rows if r[2] < 10], [r for r in rows if r[2] >= 10]):
+        write_bucketed_wal(_events(spark, part), wal_dir, 4, ["id"])
     runner = CdcRunner(
         table=t,
         offsets=OffsetLog(str(tmp_path / "off"), "src"),
         manifests=ManifestLog(str(tmp_path / "man")),
-        source=PartitionedWalSource(spark, wal_dir),
+        source=BucketedWalSource(spark, wal_dir),
     )
     runner.run_window(1, 9)
     runner.run_window(10, 22)
     assert runner.run_window(10, 22) is None   # committed replay no-op
-    # windows went through the zero-exchange tree path
     ops = [t.snapshot(v)["summary"]["operation"]
            for v in range(1, t.current_version() + 1)]
-    assert ops.count("merge_prebucketed") == 2, ops
-    # oracle: plain-source runner on a twin tree
-    t2 = PartitionedLakeTable.create(
-        str(tmp_path / "twin"), SCHEMA, key_cols=["id"],
-        partition_col="ts", num_buckets=4,
-    )
+    assert ops.count("merge-prebucketed") == 2, ops
+    # oracle: plain-source runner on a twin table
+    t2 = _create(tmp_path, "twin")
     ev = _events(spark, rows).localCheckpoint(eager=True)
     r2 = CdcRunner(
         table=t2,
@@ -551,52 +559,44 @@ def test_runner_zero_exchange_partitioned_wal(spark, tmp_path):
 
 
 def test_wal_misconfiguration_guards(spark, tmp_path):
-    """Review fixes: a flat WAL into a partitioned tree fails loudly
-    (never a silent zero-row commit); a payload column named 'p' is
-    refused by the WAL writer; a failed pruned_dir build leaks nothing."""
-    from oregonwaterdataportal_etl_spark.cdc import PartitionedWalSource
-    from oregonwaterdataportal_etl_spark.lake import (
-        write_bucketed_wal,
-        write_partitioned_wal,
-    )
-
+    """A WAL that cannot route into a partitioned table fails loudly
+    (never a silent zero-row commit): one without the partition
+    column, and one whose key type differs from the stored one."""
     t = _create(tmp_path)
-    flat = str(tmp_path / "flatwal")
-    write_bucketed_wal(_events(spark, [(1, 1, 1, "insert", "a")]), flat, 4,
-                       ["id"])
-    with pytest.raises(ValueError, match="flat WAL"):
-        t.merge_prebucketed(spark, flat)
-    with pytest.raises(ValueError, match="reserved"):
-        write_partitioned_wal(
-            _events(spark, [(1, 1, 1, "insert", "a")]).withColumn(
-                "p", F.lit("x")),
-            str(tmp_path / "w2"), t)
-    # flat files under a PartitionedWalSource: loud error, no leaked dir
-    src = PartitionedWalSource(spark, flat)
-    with pytest.raises(ValueError, match="p=<value>"):
-        src.pruned_dir(1, 1)
-    assert not [d for d in os.listdir(flat) if d.startswith(".pwalwin")]
+    no_ts = str(tmp_path / "nots")
+    write_bucketed_wal(
+        _events(spark, [(1, 1, 1, "insert", "a")]).drop("ts"), no_ts, 4, ["id"]
+    )
+    with pytest.raises(ValueError, match="partition column ts"):
+        t.merge_prebucketed(spark, no_ts)
+    int_key = str(tmp_path / "intkey")
+    write_bucketed_wal(
+        _events(spark, [(1, 1, 1, "insert", "a")]).withColumn(
+            "id", F.col("id").cast("int")),
+        int_key, 4, ["id"],
+    )
+    with pytest.raises(ValueError, match="WAL key column id"):
+        t.merge_prebucketed(spark, int_key)
+    assert t.current_version() == 0
 
 
 def test_months_transform(spark, tmp_path):
-    t = PartitionedLakeTable.create(
-        str(tmp_path / "m"), SCHEMA, key_cols=["id"],
-        partition_col="ts", transform="months", num_buckets=2,
-    )
+    t = _create(tmp_path, "m", transform="months", num_buckets=2)
     t.merge(spark.createDataFrame(
         [Row(id=1, ts=datetime.datetime(2024, 1, 5), lsn=1, op="insert", v="a"),
          Row(id=2, ts=datetime.datetime(2024, 2, 20), lsn=2, op="insert", v="b"),
          Row(id=1, ts=datetime.datetime(2024, 2, 9), lsn=3, op="insert", v="c")],
     ))
-    assert sorted(t.partitions()) == ["2024-01", "2024-02"]
+    assert t.partitions() == ["2024-01", "2024-02"]
     assert t.drop_partitions(before="2024-02") == ["2024-01"]
     assert {r["id"] for r in t.read(spark).collect()} == {1, 2}
 
 
 def test_concurrent_writers_different_partitions(spark, tmp_path):
-    """Two writers racing root commits on DIFFERENT days both land:
-    the vector max-merge retry composes their updates (the losing
-    writer re-reads and re-applies its pin on the fresh root)."""
+    """Two writers racing commits on DIFFERENT days both land under the
+    engine's retry policy: the loser of the commit race re-reads the
+    winner's snapshot and re-merges (a no-op for rows already applied)
+    on top of it."""
     import threading
 
     t = _create(tmp_path)
@@ -605,7 +605,9 @@ def test_concurrent_writers_different_partitions(spark, tmp_path):
 
     def writer(day, lsn, val):
         try:
-            t.merge(_events(spark, [(9, day, lsn, "insert", val)]))
+            retry_on_conflict(
+                lambda: t.merge(_events(spark, [(9, day, lsn, "insert", val)]))
+            )
         except Exception as e:  # pragma: no cover
             errs.append(e)
 
@@ -620,9 +622,9 @@ def test_concurrent_writers_different_partitions(spark, tmp_path):
 
 def test_recreated_partition_does_not_resurrect_dropped_rows(spark, tmp_path):
     """Regression (found by the chaos property): merging into a day
-    that was DROPPED but not yet vacuumed must start a fresh
-    incarnation — the stale child dir's rows may not resurrect.
-    Pre-drop root time travel still sees the old incarnation."""
+    that was DROPPED but not yet vacuumed must start it afresh — the
+    dropped rows may not resurrect. Pre-drop time travel still sees
+    them."""
     t = _create(tmp_path)
     t.merge(_events(spark, [(5, 3, 1, "update", "yz"),
                             (5, 1, 2, "update", "bxzacy")]))
@@ -636,12 +638,10 @@ def test_recreated_partition_does_not_resurrect_dropped_rows(spark, tmp_path):
     assert _state(t, spark, version=v_pre) == {
         (1, 1): "", (5, 1): "bxzacy", (5, 3): "yz",
     }
-    # zx route re-creates through the same guard
-    from oregonwaterdataportal_etl_spark.lake import write_partitioned_wal
-
+    # the zero-exchange route re-creates it the same way
     t.drop_partitions(before="2024-01-02")
-    wal = write_partitioned_wal(
-        _events(spark, [(2, 1, 7, "insert", "fresh")]), str(tmp_path / "w"), t)
+    wal = write_bucketed_wal(
+        _events(spark, [(2, 1, 7, "insert", "fresh")]), str(tmp_path / "w"), 4, ["id"])
     t.merge_prebucketed(spark, wal)
     assert _state(t, spark) == {(2, 1): "fresh", (5, 3): "yz"}
 
@@ -650,19 +650,21 @@ def test_metadata_frames_tree(spark, tmp_path):
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 1, 1, "insert", "a"), (2, 2, 2, "insert", "b")]))
     t.merge(_events(spark, [(3, 2, 3, "insert", "c")]), mode="mor")
-    parts = {r["partition"]: r for r in
-             t.metadata_df(spark, "partitions").collect()}
+    groups = t.metadata_df(spark, "partitions").collect()
+    parts: dict = {}
+    for r in groups:  # one row per (partition, bucket) group
+        agg = parts.setdefault(r["partition"], {"rows_base": 0, "delta_files": 0})
+        agg["rows_base"] += r["rows_base"]
+        agg["delta_files"] += r["delta_files"]
     assert set(parts) == {"2024-01-01", "2024-01-02"}
     assert parts["2024-01-01"]["rows_base"] == 1
     assert parts["2024-01-02"]["delta_files"] >= 1  # pending MOR delta
-    assert parts["2024-01-02"]["pinned_version"] == t.partitions()["2024-01-02"]
     files = t.metadata_df(spark, "files").collect()
-    assert all(f"p={r['partition']}" in r["path"] for r in files)
+    assert all(r["path"] in _files_of(t, r["partition"]) for r in files)
     assert {r["kind"] for r in files} == {"base", "delta"}
     hist = {r["version"]: r for r in t.metadata_df(spark, "history").collect()}
-    assert hist[2]["operation"] == "merge"
-    assert hist[2]["touched_partitions"] == "2024-01-02"
-    assert hist[2]["num_partitions"] == 2
+    assert hist[1]["operation"] == "merge"
+    assert hist[2]["operation"] == "merge-mor"
     with pytest.raises(ValueError, match="unknown metadata"):
         t.metadata_df(spark, "nope")
 
@@ -675,13 +677,16 @@ def test_delete_where_cross_partition(spark, tmp_path):
         (8, 1, 3, "insert", "keep"), (7, 3, 4, "insert", "subj"),
     ]))
     res = t.delete_where(spark, F.col("id") == 7)
-    assert sorted(res) == ["2024-01-01", "2024-01-02", "2024-01-03"]
+    assert res.rows_deleted == 3
+    assert _touched_parts(res) == ["2024-01-01", "2024-01-02", "2024-01-03"]
     assert _state(t, spark) == {(8, 1): "keep"}
     # stale replay of an erased row cannot resurrect (tombstones)
     t.merge(_events(spark, [(7, 1, 1, "insert", "subj")]))
     assert _state(t, spark) == {(8, 1): "keep"}
     # idempotent: second call touches nothing
-    assert t.delete_where(spark, F.col("id") == 7) == {}
+    v = t.current_version()
+    assert t.delete_where(spark, F.col("id") == 7).empty
+    assert t.current_version() == v
 
 
 def test_clone_tree_is_deep_and_independent(spark, tmp_path):
@@ -692,7 +697,7 @@ def test_clone_tree_is_deep_and_independent(spark, tmp_path):
     snap_state = _state(t, spark)
     c = t.clone_to(str(tmp_path / "clone"))
     assert _state(c, spark) == snap_state == {(1, 1): "a2"}
-    assert sorted(c.partitions()) == ["2024-01-01"]  # dropped day not cloned
+    assert c.partitions() == ["2024-01-01"]  # dropped day not cloned
     # independence: mutate + vacuum the source — clone unaffected
     t.merge(_events(spark, [(1, 1, 9, "update", "zz")]))
     t.compact(spark)
@@ -739,63 +744,59 @@ def test_empty_merge_commits_nothing(spark, tmp_path):
 
 
 def test_keep_partitions_zero_drops_all(spark, tmp_path):
-    from oregonwaterdataportal_etl_spark.lake import MaintenancePolicy
+    from oregonwaterdataportal_etl_spark.lake import MaintenancePolicy, maintain
 
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 1, 1, "insert", "a"), (2, 2, 2, "insert", "b")]))
-    report = t.maintain(spark, MaintenancePolicy(
+    report = maintain(spark, t, MaintenancePolicy(
         max_files_per_bucket=None, max_delta_files_per_bucket=None,
         keep_partitions=0))
     assert sorted(report["drop_partitions"]) == ["2024-01-01", "2024-01-02"]
-    assert t.partitions() == {}
+    assert t.partitions() == []
 
 
 def test_reincarnation_arbitration_under_stale_root(spark, tmp_path):
-    """A writer holding a PRE-reincarnation root snapshot must not
-    truncate a chain another writer already reincarnated (the
-    concurrent-recreate race, closed by the dropped_at record)."""
+    """A writer holding a snapshot from before another writer re-created
+    a dropped partition cannot commit over it: the commit race
+    arbitrates, and the re-created partition keeps that writer's
+    rows."""
+    from oregonwaterdataportal_etl_spark.lake.table import (
+        CommitConflictError,
+        _next_snapshot,
+    )
+
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 1, 1, "insert", "old")]))
     t.drop_partitions(values=["2024-01-01"])
-    stale_root = t.snapshot()  # both writers start from this root
-    # writer B reincarnates and lands its rows + root commit
+    stale = t.snapshot()  # both writers start from this snapshot
+    # writer B re-creates the day and commits its rows
     t.merge(_events(spark, [(2, 1, 5, "insert", "bnew")]))
-    child = t.partition_table("2024-01-01")
-    v_after_b = child.current_version()
-    # writer A, still holding the stale root, routes into the same day:
-    # it must observe B's incarnation (chain advanced past dropped_at)
-    # and NOT truncate B's committed rows
-    t._ensure_partition("2024-01-01", stale_root)
-    assert child.current_version() == v_after_b
-    assert {r["v"] for r in child.read(spark).collect()} == {"bnew"}
+    # writer A, still holding the stale snapshot, loses the race
+    with pytest.raises(CommitConflictError):
+        t._commit(_next_snapshot(stale, {"operation": "merge"}))
+    assert _state(t, spark) == {(2, 1): "bnew"}
 
 
 def test_reincarnated_child_carries_config_and_starts_empty(spark, tmp_path):
-    """The truncate-reincarnate child commit is built by the shared
-    snapshot envelope: the table config carries forward, the file maps
-    start empty, and only the new incarnation's rows read back."""
+    """Merging into a dropped partition value keeps the table's config
+    (every commit is built by the shared snapshot envelope) and only
+    the new rows read back."""
     t = _create(tmp_path, dict_cols={"v": ["old", "new"]},
                 tiebreak_family="md5", commit_mode="rename-free")
     t.merge(_events(spark, [(1, 1, 1, "insert", "old"),
                             (2, 1, 2, "insert", "old")]))
+    prior = t.snapshot()
     t.drop_partitions(values=["2024-01-01"])
+    assert t.snapshot()["files"] == {} and t.snapshot()["row_counts"] == {}
     t.merge(_events(spark, [(3, 1, 3, "insert", "new")]))
-    child = t.partition_table("2024-01-01")
-    hist = child.history()
-    (trunc,) = [s for s in hist
-                if s["summary"]["operation"] == "truncate-reincarnate"]
-    prior = next(s for s in hist if s["version"] == trunc["parent"])
-    assert prior["files"]  # the old incarnation held data
+    snap = t.snapshot()
     for k in ("schema", "key_cols", "num_buckets", "dict_cols",
-              "tiebreak_family", "commit_mode"):
-        assert trunc[k] == prior[k], k
-    assert trunc["dict_cols"] == {"v": ["old", "new"]}
-    assert trunc["tiebreak_family"] == "md5"
-    assert trunc["commit_mode"] == "rename-free"
-    for k in ("files", "deltas", "tombstones", "row_counts"):
-        assert trunc[k] == {}, k
+              "tiebreak_family", "commit_mode", "partition_col", "transform"):
+        assert snap[k] == prior[k], k
+    assert snap["dict_cols"] == {"v": ["old", "new"]}
+    assert snap["tiebreak_family"] == "md5"
+    assert snap["commit_mode"] == "rename-free"
     assert _state(t, spark) == {(3, 1): "new"}
-    assert [r["v"] for r in child.read(spark).collect()] == ["new"]
 
 
 def test_single_partition_batch_routes_from_one_evaluation(spark, tmp_path):
@@ -819,31 +820,33 @@ def test_single_partition_batch_routes_from_one_evaluation(spark, tmp_path):
     t = _create(tmp_path)
     batch = _events(spark, [(i, 1, i, "insert", f"v{i}") for i in range(1, 9)])
     t.merge(batch.withColumn("ts", drift("id")))
-    assert sorted(t.partitions()) == ["2024-01-01"]
+    assert t.partitions() == ["2024-01-01"]
     assert _state(t, spark) == {(i, 1): f"v{i}" for i in range(1, 9)}
 
 
 def test_tree_rebucket_is_root_level_under_policy(spark, tmp_path):
-    """max_rows_per_bucket acts on the WHOLE tree (never one child):
-    every child and the root agree on the new count afterwards."""
-    from oregonwaterdataportal_etl_spark.lake import MaintenancePolicy
+    """max_rows_per_bucket counts rows per (partition, bucket) group
+    and rebuckets the whole table: every group is laid out for the new
+    count afterwards, and the rows are unchanged."""
+    from oregonwaterdataportal_etl_spark.lake import MaintenancePolicy, maintain
 
     t = _create(tmp_path)  # num_buckets=4
     t.merge(_events(spark, [(i, 1 + i % 2, i, "insert", f"v{i}")
                             for i in range(1, 41)]))
-    report = t.maintain(spark, MaintenancePolicy(
+    before = _state(t, spark)
+    report = maintain(spark, t, MaintenancePolicy(
         max_files_per_bucket=None, max_delta_files_per_bucket=None,
         max_rows_per_bucket=2))
     assert "rebucket" in report
     nb = t.snapshot()["num_buckets"]
     assert nb > 4
-    for v in t.partitions():
-        assert t.partition_table(v).snapshot()["num_buckets"] == nb
+    assert all(int(g.split("/")[1]) < nb for g in t.snapshot()["files"])
+    assert _state(t, spark) == before
 
 
 def test_incremental_view_over_tree_with_drop(spark, tmp_path):
-    """IncrementalAggView maintains itself from the TREE's changelog
-    unchanged — including a retention drop, whose per-row deletes fold
+    """IncrementalAggView maintains itself from a partitioned table's
+    changelog unchanged — including a retention drop, whose per-row deletes fold
     the dropped rows OUT of the aggregates (a retention-aware
     materialized view for free)."""
     from oregonwaterdataportal_etl_spark.lake import AggSpec, IncrementalAggView
@@ -869,19 +872,16 @@ def test_incremental_view_over_tree_with_drop(spark, tmp_path):
 
 def test_tree_to_tree_replication(spark, tmp_path):
     """replicate_available with BOTH sides partitioned: the changelog
-    carries ts, so the replica tree routes by day on its own."""
+    carries ts, so the replica routes by day on its own."""
     from oregonwaterdataportal_etl_spark.cdc import OffsetLog, replicate_available
 
     src = _create(tmp_path)
     src.merge(_events(spark, [(1, 1, 1, "insert", "a"), (2, 2, 2, "insert", "b")]))
-    replica = PartitionedLakeTable.create(
-        str(tmp_path / "rep"), SCHEMA, key_cols=["id"],
-        partition_col="ts", num_buckets=2,  # bucket counts may differ
-    )
+    replica = _create(tmp_path, "rep", num_buckets=2)  # bucket counts may differ
     off = OffsetLog(str(tmp_path / "o"), "f")
     replicate_available(spark, src, replica, off)
     assert _state(replica, spark) == _state(src, spark)
-    assert sorted(replica.partitions()) == ["2024-01-01", "2024-01-02"]
+    assert replica.partitions() == ["2024-01-01", "2024-01-02"]
     src.merge(_events(spark, [(1, 1, 3, "delete", None), (3, 3, 4, "insert", "c")]))
     src.drop_partitions(values=["2024-01-02"])
     replicate_available(spark, src, replica, off)
@@ -889,9 +889,9 @@ def test_tree_to_tree_replication(spark, tmp_path):
 
 
 def test_tree_wap_stage_publish_abort(spark, tmp_path):
-    """Write-audit-publish over the tree: staged merges invisible to
-    main (root AND children), audits gate, publish is one atomic
-    vector pin, abort leaks nothing into later main merges."""
+    """Write-audit-publish over a partitioned table: staged merges
+    invisible to main, audits gate, publish is one atomic commit, abort
+    leaks nothing into later main merges."""
     from oregonwaterdataportal_etl_spark.lake import (
         NotNull,
         RowBounds,
@@ -919,7 +919,7 @@ def test_tree_wap_stage_publish_abort(spark, tmp_path):
     # passing audits -> one atomic publish
     stage.publish(spark, audits=[NotNull("v"), RowBounds(min_rows=3)])
     assert _state(t, spark) == {(1, 1): "a2", (2, 2): "b", (3, 3): "c"}
-    assert sorted(t.partitions()) == ["2024-01-01", "2024-01-02", "2024-01-03"]
+    assert t.partitions() == ["2024-01-01", "2024-01-02", "2024-01-03"]
 
     # abort path: staged rows must never reach main, even via a later
     # main merge into the same partitions
@@ -935,8 +935,8 @@ def test_tree_wap_stage_publish_abort(spark, tmp_path):
 
 
 def test_tree_wap_conflict_rolls_children_back(spark, tmp_path):
-    """Main moving while a tree stage is open refuses the publish and
-    leaves main's children exactly as main committed them."""
+    """Main moving while a stage of a partitioned table is open refuses
+    the publish and leaves main exactly as main committed it."""
     from oregonwaterdataportal_etl_spark.lake import WapConflictError
 
     t = _create(tmp_path)
@@ -955,8 +955,9 @@ def test_tree_wap_conflict_rolls_children_back(spark, tmp_path):
 
 
 def test_tree_wap_runner_composition(spark, tmp_path):
-    """Audited ingest by composition: CdcRunner pointed AT a tree
-    stage, publish once at the end — zero integration code."""
+    """Audited ingest by composition: CdcRunner pointed AT a stage of a
+    partitioned table, publish once at the end — zero integration
+    code."""
     from oregonwaterdataportal_etl_spark.cdc import CdcRunner, ManifestLog, OffsetLog
     from oregonwaterdataportal_etl_spark.lake import UniqueKeys
 
@@ -976,3 +977,101 @@ def test_tree_wap_runner_composition(spark, tmp_path):
     assert _state(t, spark) == {}  # invisible until published
     stage.publish(spark, audits=[UniqueKeys(["id", "ts"])])
     assert len(_state(t, spark)) == 8
+
+
+def test_routing_is_utc_whatever_the_session_time_zone(spark, tmp_path):
+    """A key merged under a UTC session and again under a
+    America/Los_Angeles session lands in ONE partition (the UTC day),
+    so the table holds one live row for it: routing is integer UTC
+    arithmetic, not a session-zone date format. 2024-01-02 03:00 UTC is
+    still 2024-01-01 in Los Angeles."""
+    t = _create(tmp_path)
+    ts = datetime.datetime(2024, 1, 2, 3, tzinfo=datetime.timezone.utc)
+    schema = "id long, ts timestamp, lsn long, op string, v string"
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for lsn, zone in ((1, "UTC"), (2, "America/Los_Angeles")):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            t.merge(spark.createDataFrame(
+                [Row(id=1, ts=ts, lsn=lsn, op="upsert", v=zone)], schema
+            ))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+    rows = t.read(spark).collect()
+    assert [r["v"] for r in rows] == ["America/Los_Angeles"]
+    assert t.partitions() == ["2024-01-02"]
+
+
+def test_merge_spanning_days_is_one_job_and_one_commit(spark, tmp_path):
+    """One merge() of a batch spanning three days runs ONE write job
+    (the resolve+write) and makes ONE manifest commit, whatever the
+    number of partitions it touches."""
+    t = _create(tmp_path)
+    t.merge(_events(spark, [(i, 1 + i % 3, i, "insert", f"v{i}") for i in range(1, 13)]))
+    v = t.current_version()
+    batch = _events(spark, [(i, 1 + i % 3, 100 + i, "update", f"u{i}")
+                            for i in range(1, 13)])
+    with recorded_writes(spark) as writes:
+        res = t.merge(batch)
+    assert len(writes) == 1, writes
+    assert _touched_parts(res) == ["2024-01-01", "2024-01-02", "2024-01-03"]
+    assert t.current_version() == v + 1
+    assert [s["version"] for s in t.history()][-2:] == [v, v + 1]
+
+
+def test_convert_partition_tree_reads_equal(spark, tmp_path):
+    """A partition tree on disk — real child LakeTables under p=<value>/
+    plus a hand-written root snap- manifest pinning their versions —
+    converts into one partitioned LakeTable that reads equal to the
+    tree, without rewriting a data file, and merges on correctly."""
+    import json
+
+    from oregonwaterdataportal_etl_spark.lake import convert_partition_tree
+
+    root = tmp_path / "tree"
+    pinned = {}
+    for day, rows in (
+        (1, [(1, 1, 1, "insert", "a"), (2, 1, 2, "insert", "b")]),
+        (2, [(1, 2, 3, "insert", "c"), (3, 2, 4, "insert", "d")]),
+    ):
+        value = f"2024-01-0{day}"
+        child = LakeTable.create(str(root / f"p={value}"), SCHEMA, ["id"], num_buckets=4)
+        child.merge(_events(spark, rows))
+        # a pending delete tombstone and a pending MOR delta
+        child.merge(_events(spark, [(rows[1][0], day, 10 + day, "delete", None)]))
+        child.merge(_events(spark, [(rows[0][0], day, 20 + day, "update", f"m{day}")]),
+                    mode="mor")
+        pinned[value] = child.current_version()
+        # a later child commit no root pins: not part of the tree's state
+        child.merge(_events(spark, [(9, day, 30 + day, "insert", "unpinned")]))
+    os.makedirs(root / "_meta")
+    manifest = {
+        "version": 3, "parent": 2, "schema": SCHEMA.json(), "key_cols": ["id"],
+        "partition_col": "ts", "transform": "days", "num_buckets": 4,
+        "dict_cols": {}, "tiebreak_family": "xxhash64", "commit_mode": "pointer",
+        "partitions": pinned, "dropped_at": {}, "summary": {"operation": "merge"},
+    }
+    (root / "_meta" / "snap-00000003.json").write_text(json.dumps(manifest))
+    (root / "_meta" / "CURRENT").write_text("3")
+    tree_state = {
+        (r["id"], r["ts"].day): r["v"]
+        for value, cv in pinned.items()
+        for r in LakeTable(str(root / f"p={value}")).read(spark, version=cv).collect()
+    }
+    assert tree_state == {(1, 1): "m1", (1, 2): "m2"}
+    child_inodes = {
+        os.stat(f).st_ino
+        for value, cv in pinned.items()
+        for f in LakeTable._snap_files(LakeTable(str(root / f"p={value}")).snapshot(cv))
+    }
+
+    t = convert_partition_tree(str(root))
+    assert t.current_version() == 4
+    assert _state(t, spark) == tree_state
+    assert t.partitions() == ["2024-01-01", "2024-01-02"]
+    assert {os.stat(f).st_ino for f in LakeTable._snap_files(t.snapshot())} == child_inodes
+    # merges go on with the tree's identity: a key's row per day
+    t.merge(_events(spark, [(1, 1, 40, "update", "x"), (2, 2, 41, "insert", "y")]))
+    assert _state(t, spark) == {(1, 1): "x", (1, 2): "m2", (2, 2): "y"}
+    t.compact(spark)
+    assert _state(t, spark) == {(1, 1): "x", (1, 2): "m2", (2, 2): "y"}

@@ -241,6 +241,56 @@ def test_cow_merge_write_plan_shuffles_only_the_batch(spark, tmp_path):
     _assert_exchange_ships_the_payload(tree, details)
 
 
+def test_partitioned_merge_plans_never_shuffle_the_base(spark, tmp_path):
+    """A time-partitioned table (days(ts) x bucket) keeps the flat pins:
+    its copy-on-write merge() runs ONE exchange, the batch's, with the
+    bucketed base scan joined in place (the partition value joins as a
+    residual, so the join keys stay the bucketing keys), and its
+    merge_prebucketed of a bucketed WAL runs no Exchange at all."""
+    from oregonwaterdataportal_etl_spark.cdc.changegen import (
+        TRANSCRIPT_SCHEMA,
+        generate_changes_pdf,
+    )
+    from oregonwaterdataportal_etl_spark.lake import LakeTable, write_bucketed_wal
+
+    keys = ["conv_id", "turn_idx"]
+    t = LakeTable.create(
+        str(tmp_path / "t"), TRANSCRIPT_SCHEMA, keys, num_buckets=4,
+        partition_col="ts",
+    )
+
+    def batch(n, seed, lsn_start):
+        # events over three days
+        return spark.createDataFrame(
+            generate_changes_pdf(n, 100, seed=seed, lsn_start=lsn_start)
+        ).withColumn("ts", F.expr("timestampadd(DAY, int(lsn % 3), ts)"))
+
+    t.merge(batch(2000, 1, 0))
+    t.merge(batch(300, 3, 2000), mode="mor")
+    snap = t.snapshot()
+    assert snap["files"] and snap["tombstones"] and snap["deltas"]
+    assert len(t.partitions()) == 3
+    batch_path = str(tmp_path / "batch.parquet")
+    batch(500, 2, 3000).write.parquet(batch_path)
+    with recorded_writes(spark) as writes:
+        t.merge(spark.read.parquet(batch_path))
+    (tree, details), = writes
+    assert len(set(re.findall(r"\bExchange \((\d+)\)", tree))) == 1, tree
+    below = _subtree(tree, "Exchange (")
+    assert not any("spark_catalog" in ln for ln in below), tree
+    assert "ShuffledHashJoin FullOuter" in tree, tree
+    assert re.search(
+        r"\(\d+\) Scan parquet spark_catalog\.\S+\n(?:.+\n)*?Bucketed: true", details
+    ), details
+
+    wal = write_bucketed_wal(batch(500, 4, 4000), str(tmp_path / "wal"), 4, keys)
+    with recorded_writes(spark) as writes:
+        t.merge_prebucketed(spark, wal)
+    (tree, details), = writes
+    assert "Exchange" not in tree, tree
+    assert "Bucketed: true" in details
+
+
 def test_mor_merge_write_plan_ships_only_the_payload(spark, tmp_path):
     """The MOR append's one exchange (the batch's repartition before its
     LWW dedup) carries the tagged payload — declared dict columns as

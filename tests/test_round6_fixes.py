@@ -1,7 +1,8 @@
-"""Round-6 correctness fixes: crash-safe tree WAP publish (intent
-marker, idempotent re-attach, foreign-commit guard, in-stage-drop
-sweep) and drop_partitions' fresh-vector drop marks under commit
-retry."""
+"""Round-6 correctness fixes, on a time-partitioned table: a WAP
+publish that crashes before or after its main commit resumes or
+aborts cleanly, an in-stage partition drop publishes without leaving
+staged manifests, and drop_partitions retries a commit race on a fresh
+snapshot."""
 
 import datetime
 import os
@@ -10,11 +11,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
-from oregonwaterdataportal_etl_spark.lake import (
-    LakeTable,
-    PartitionedLakeTable,
-    WapConflictError,
-)
+from oregonwaterdataportal_etl_spark.lake import LakeTable
 from oregonwaterdataportal_etl_spark.lake.table import CommitConflictError
 
 SCHEMA = T.StructType(
@@ -46,7 +43,7 @@ def _events(spark, rows):
 
 
 def _create(tmp_path, **kw):
-    return PartitionedLakeTable.create(
+    return LakeTable.create(
         str(tmp_path / "pt"), SCHEMA, key_cols=["id"],
         partition_col="ts", num_buckets=4, **kw,
     )
@@ -60,32 +57,26 @@ def _state(t, spark, **kw):
 
 class _Crash(BaseException):
     """Simulated process death: NOT an Exception, so no except-clause
-    in the publish protocol can catch it (like a real crash)."""
+    in the publish path can catch it (like a real crash)."""
 
 
-def _wap_manifests(child_dir: str, wap_id: str) -> list[str]:
-    md = os.path.join(child_dir, "_meta")
-    if not os.path.isdir(md):
-        return []
+def _wap_manifests(table_dir: str, wap_id: str) -> list[str]:
+    md = os.path.join(table_dir, "_meta")
     return [n for n in os.listdir(md) if n.startswith(f"wap-{wap_id}-")]
 
 
 def test_tree_publish_crash_before_root_commit_resumes(
     spark, tmp_path, monkeypatch
 ):
-    """Crash AFTER the child-publish loop but BEFORE the root commit:
-    the re-attached publish must pin the children's PUBLISHED main
-    versions (from the intent marker), not the staged chain numbers —
-    with >1 staged commits per child the staged numbers do not even
-    exist on the main chain (pre-fix: FileNotFoundError or silently
-    wrong pins)."""
+    """Crash in the main commit of a publish whose stage merged into
+    several partitions over several staged commits: main stays at its
+    base version, and the re-attached stage publishes every staged
+    partition in one commit."""
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 1, 1, "insert", "a"), (2, 2, 2, "insert", "b")]))
-    base_root = t.current_version()
+    base = t.current_version()
 
     stage = t.begin_wap("crashpub")
-    # TWO staged commits into the same child: staged tip = pre+2,
-    # published main version = pre+1 — the numbers must diverge
     stage.merge(_events(spark, [(1, 1, 10, "update", "a2")]))
     stage.merge(_events(spark, [(3, 1, 11, "insert", "c")]))
     stage.merge(_events(spark, [(4, 2, 12, "insert", "d")]))
@@ -93,55 +84,46 @@ def test_tree_publish_crash_before_root_commit_resumes(
     def crash_commit(self, snap):
         raise _Crash()
 
-    monkeypatch.setattr(PartitionedLakeTable, "_commit", crash_commit)
+    monkeypatch.setattr(LakeTable, "_commit", crash_commit)
     with pytest.raises(_Crash):
         stage.publish(spark)
     monkeypatch.undo()
+    assert t.current_version() == base
 
-    # children are published on their main chains; root still at base
-    assert t.current_version() == base_root
-
-    again = t.begin_wap("crashpub")
-    v = again.publish(spark)
-    assert v == base_root + 1
-    # every pinned child version must exist and read cleanly
+    assert t.begin_wap("crashpub").publish(spark) == base + 1
     assert _state(t, spark) == {
         (1, 1): "a2", (2, 2): "b", (3, 1): "c", (4, 2): "d",
     }
-    # stage fully cleaned up: no staged manifests, no intent marker
     assert _wap_manifests(str(tmp_path / "pt"), "crashpub") == []
-    for name in os.listdir(str(tmp_path / "pt")):
-        if name.startswith("p="):
-            assert _wap_manifests(str(tmp_path / "pt" / name), "crashpub") == []
 
 
 def test_tree_publish_crash_after_root_commit_is_idempotent(
     spark, tmp_path, monkeypatch
 ):
-    """Crash AFTER the root commit but BEFORE cleanup: the re-attached
+    """Crash AFTER the main commit but BEFORE cleanup: the re-attached
     publish must recognize its OWN completed commit and finish the
     cleanup instead of raising 'main moved'."""
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 1, 1, "insert", "a")]))
-    base_root = t.current_version()
+    base = t.current_version()
 
     stage = t.begin_wap("latecrash")
     stage.merge(_events(spark, [(2, 1, 10, "insert", "b")]))
 
-    real_commit = PartitionedLakeTable._commit
+    real_commit = LakeTable._commit
 
     def commit_then_crash(self, snap):
         real_commit(self, snap)
         raise _Crash()
 
-    monkeypatch.setattr(PartitionedLakeTable, "_commit", commit_then_crash)
+    monkeypatch.setattr(LakeTable, "_commit", commit_then_crash)
     with pytest.raises(_Crash):
         stage.publish(spark)
     monkeypatch.undo()
-    assert t.current_version() == base_root + 1  # root commit landed
+    assert t.current_version() == base + 1  # main commit landed
 
     again = t.begin_wap("latecrash")
-    assert again.publish(spark) == base_root + 1  # idempotent, no conflict
+    assert again.publish(spark) == base + 1  # idempotent, no conflict
     assert _state(t, spark) == {(1, 1): "a", (2, 1): "b"}
     assert _wap_manifests(str(tmp_path / "pt"), "latecrash") == []
 
@@ -149,88 +131,33 @@ def test_tree_publish_crash_after_root_commit_is_idempotent(
 def test_tree_abort_rolls_back_crashed_publish_children(
     spark, tmp_path, monkeypatch
 ):
-    """abort() after a mid-protocol publish crash must un-publish the
-    children recorded in the intent marker, so no staged row leaks
-    into later main merges."""
+    """abort() after a publish that crashed before its main commit
+    leaves main at the stage's base, and no staged row leaks into a
+    later main merge of the same partition."""
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 1, 1, "insert", "a")]))
-    base = _state(t, spark)
-    base_root = t.current_version()
+    base_state, base = _state(t, spark), t.current_version()
 
     stage = t.begin_wap("crashabort")
     stage.merge(_events(spark, [(1, 1, 10, "update", "STAGED")]))
-
     monkeypatch.setattr(
-        PartitionedLakeTable, "_commit",
-        lambda self, snap: (_ for _ in ()).throw(_Crash()),
+        LakeTable, "_commit", lambda self, snap: (_ for _ in ()).throw(_Crash()),
     )
     with pytest.raises(_Crash):
         stage.publish(spark)
     monkeypatch.undo()
 
     t.begin_wap("crashabort").abort()
-    assert t.current_version() == base_root
-    assert _state(t, spark) == base
-    # a later main merge into the same partition sees no staged rows
+    assert t.current_version() == base
+    assert _state(t, spark) == base_state
     t.merge(_events(spark, [(2, 1, 20, "insert", "real")]))
-    st = _state(t, spark)
-    assert st == {(1, 1): "a", (2, 1): "real"}
-
-
-def test_tree_abort_refuses_foreign_commit_on_published_child(
-    spark, tmp_path, monkeypatch
-):
-    """If a concurrent MAIN merge lands on a child that a crashed
-    publish had published, rollback would silently drop that writer's
-    rows — abort must fail loudly instead (operator repair)."""
-    t = _create(tmp_path)
-    t.merge(_events(spark, [(1, 1, 1, "insert", "a")]))
-
-    stage = t.begin_wap("foreign")
-    stage.merge(_events(spark, [(1, 1, 10, "update", "STAGED")]))
-    monkeypatch.setattr(
-        PartitionedLakeTable, "_commit",
-        lambda self, snap: (_ for _ in ()).throw(_Crash()),
-    )
-    with pytest.raises(_Crash):
-        stage.publish(spark)
-    monkeypatch.undo()
-
-    # a foreign main merge builds on the (published, unaudited) child
-    t.merge(_events(spark, [(2, 1, 20, "insert", "foreign-row")]))
-
-    with pytest.raises(WapConflictError, match="operator repair"):
-        t.begin_wap("foreign").abort()
-
-
-def test_tree_publish_rejects_unexpected_child_version(
-    spark, tmp_path, monkeypatch
-):
-    """The intent marker records pub = pre + 1 before each child
-    publish; a child that publishes any other version must stop the
-    publish with an explicit error (not a bare assert, which python -O
-    strips)."""
-    from oregonwaterdataportal_etl_spark.lake.wap import WapStage
-
-    t = _create(tmp_path)
-    t.merge(_events(spark, [(1, 1, 1, "insert", "a")]))
-    stage = t.begin_wap("skew")
-    stage.merge(_events(spark, [(1, 1, 10, "update", "STAGED")]))
-
-    publish = WapStage.publish
-    monkeypatch.setattr(
-        WapStage, "publish", lambda self, *a, **k: publish(self, *a, **k) + 1
-    )
-    with pytest.raises(RuntimeError, match="published version") as ei:
-        stage.publish(spark)
-    assert ei.type is RuntimeError
+    assert _state(t, spark) == {(1, 1): "a", (2, 1): "real"}
 
 
 def test_tree_publish_sweeps_in_stage_dropped_child(spark, tmp_path):
-    """A child merged and then drop_partitions'd INSIDE the stage is
-    absent from the published vector; publish must still abort its
-    staged chain so the wap manifests (and the staged data files they
-    pin) do not linger forever."""
+    """A partition merged and then dropped INSIDE the stage is absent
+    from the published state, and the publish leaves no staged
+    manifest behind."""
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 2, 1, "insert", "keep")]))
 
@@ -240,33 +167,29 @@ def test_tree_publish_sweeps_in_stage_dropped_child(spark, tmp_path):
     stage.drop_partitions(before="2024-01-02")
     stage.publish(spark)
 
-    assert sorted(t.partitions()) == ["2024-01-02"]
+    assert t.partitions() == ["2024-01-02"]
     assert _state(t, spark) == {(1, 2): "keep", (2, 2): "kept2"}
-    # the dropped child's staged chain must be gone
-    assert _wap_manifests(str(tmp_path / "pt" / "p=2024-01-01"), "dropper") == []
+    assert _wap_manifests(str(tmp_path / "pt"), "dropper") == []
 
 
 def test_drop_partitions_retry_takes_fresh_drop_marks(spark, tmp_path):
-    """A CommitConflictError retry inside drop_partitions must take
-    the drop mark from the FRESH root read: a concurrent merge that
-    advanced the child between the pre-commit mark read and the retry
-    would otherwise leave dropped_at stale, the reincarnation truncate
-    would be skipped (child version > dropped_at), and the dropped
-    rows would resurrect through the next merge."""
+    """A CommitConflictError retry inside drop_partitions works on the
+    FRESH snapshot: rows a concurrent merge added to the dropped
+    partition between the drop's read and its commit are dropped too,
+    and a re-created partition holds only its new rows."""
     t = _create(tmp_path)
     t.merge(_events(spark, [(1, 1, 1, "insert", "old")]))
 
-    t2 = PartitionedLakeTable(str(tmp_path / "pt"))  # concurrent writer
+    t2 = LakeTable(str(tmp_path / "pt"))  # concurrent writer
     calls = {"n": 0}
-    real_commit = PartitionedLakeTable._commit
+    real_commit = LakeTable._commit
 
     def racing_commit(snap):
         calls["n"] += 1
         if calls["n"] == 1:
-            # between t's mark read and its root commit, a concurrent
-            # merge advances the child AND the root vector; then t's
-            # own commit attempt loses (conflict) and retries mutate
-            # against the fresh root
+            # between t's snapshot read and its commit, a concurrent
+            # merge lands rows in the partition being dropped; then t's
+            # own commit attempt loses and retries on the fresh snapshot
             t2.merge(_events(spark, [(2, 1, 2, "insert", "concurrent")]))
             raise CommitConflictError("simulated lost race")
         return real_commit(t, snap)
@@ -274,10 +197,8 @@ def test_drop_partitions_retry_takes_fresh_drop_marks(spark, tmp_path):
     t._commit = racing_commit
     dropped = t.drop_partitions(before="2024-01-02")
     del t._commit
-    assert dropped == ["2024-01-01"]
+    assert dropped == ["2024-01-01"] and calls["n"] == 2
     assert _state(t, spark) == {}
 
-    # re-create the partition: the truncate must fire, so neither the
-    # original nor the concurrent rows resurrect
     t.merge(_events(spark, [(3, 1, 10, "insert", "fresh")]))
     assert _state(t, spark) == {(3, 1): "fresh"}

@@ -259,11 +259,11 @@ def test_streaming_cdc_folds_pending_mor_deltas(spark, tmp_path):
 
 
 def test_streaming_cdc_partitioned_tree(spark, tmp_path):
-    """start_cdc_stream pointed at a PartitionedLakeTable: each
-    micro-batch routes through the tree's merge; the state equals a
-    twin tree fed by batch merges, also after a restart that picks up
+    """start_cdc_stream pointed at a time-partitioned LakeTable: each
+    micro-batch routes through the table's merge; the state equals a
+    twin table fed by batch merges, also after a restart that picks up
     a newly appended file."""
-    from oregonwaterdataportal_etl_spark.lake import PartitionedLakeTable
+    from oregonwaterdataportal_etl_spark.lake import LakeTable
 
     def spread_days(df):
         # conv-stable day offset so routing is deterministic per key
@@ -272,7 +272,7 @@ def test_streaming_cdc_partitioned_tree(spark, tmp_path):
         )
 
     def create(name):
-        return PartitionedLakeTable.create(
+        return LakeTable.create(
             str(tmp_path / name), TRANSCRIPT_SCHEMA,
             key_cols=["conv_id", "turn_idx"], partition_col="ts", num_buckets=4,
         )

@@ -18,13 +18,10 @@ from oregonwaterdataportal_etl_spark.cdc import (
     LsnRangedParquetSource,
     ManifestLog,
     OffsetLog,
-    PartitionedWalSource,
 )
 from oregonwaterdataportal_etl_spark.lake import (
     LakeTable,
-    PartitionedLakeTable,
     write_bucketed_wal,
-    write_partitioned_wal,
 )
 
 SCHEMA = T.StructType(
@@ -157,13 +154,13 @@ def test_empty_windows_over_bucketed_wal(spark, tmp_path, no_batch_probe):
 
 
 def test_empty_window_over_partition_tree(spark, tmp_path, no_batch_probe):
-    """Partition tree over a PartitionedWalSource: an empty window
-    (straddling day files) commits no child and no root snapshot; the
-    tree's merge_prebucketed reports it empty."""
+    """A time-partitioned table over a BucketedWalSource: an empty
+    window (straddling the day's file) commits no snapshot; the table's
+    merge_prebucketed reports it empty."""
     import datetime
 
     schema = T.StructType(SCHEMA.fields + [T.StructField("ts", T.TimestampType())])
-    t = PartitionedLakeTable.create(
+    t = LakeTable.create(
         str(tmp_path / "pt"), schema, key_cols=["id"], partition_col="ts",
         num_buckets=NB,
     )
@@ -172,8 +169,8 @@ def test_empty_window_over_partition_tree(spark, tmp_path, no_batch_probe):
         [Row(id=1, v="x", ts=day, lsn=lsn, op="insert") for lsn in (1, 50)],
     )
     wal = str(tmp_path / "wal")
-    batch_dir = write_partitioned_wal(rows, wal, t)
-    src = PartitionedWalSource(spark, wal)
+    batch_dir = write_bucketed_wal(rows, wal, NB, ["id"])
+    src = BucketedWalSource(spark, wal)
     runner = CdcRunner(
         t, OffsetLog(str(tmp_path / "off"), "s"), ManifestLog(str(tmp_path / "man")), src,
     )
