@@ -1631,7 +1631,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # exact replica of lake.table.tiebreak_cols: md5 over the
         # canonical payload rendering (non-lsn columns in order, nulls
-        # -> chr(0), chr(31)-joined), split into two 60-bit limbs
+        # -> chr(0), chr(31)-joined), two 60-bit limbs, ranked by their
+        # xor
         "lww_tiebreak": """
             WITH ev AS (
               SELECT user_id, event_id % 8 AS lsn, event_type, props
@@ -1647,8 +1648,8 @@ def oracle_sql() -> dict[str, str]:
                      row_number() OVER (
                        PARTITION BY user_id
                        ORDER BY lsn DESC,
-                         cast(concat('0x', substr(h, 1, 15)) AS BIGINT) DESC,
-                         cast(concat('0x', substr(h, 17, 15)) AS BIGINT) DESC
+                         xor(cast(concat('0x', substr(h, 1, 15)) AS BIGINT),
+                             cast(concat('0x', substr(h, 17, 15)) AS BIGINT)) DESC
                      ) rn
               FROM tb
             )

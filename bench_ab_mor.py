@@ -79,10 +79,7 @@ def worker(variant: str, stream_dir: str, incr_dir: str, workdir: str) -> None:
 
         lt._rows_per_bucket = spark_count
     elif variant == "nolimb":
-        lt.tiebreak_cols = lambda cols, family="xxhash64": (
-            F.lit(None).cast("long"),
-            F.lit(None).cast("long"),
-        )
+        lt.tiebreak_cols = lambda cols, family="xxhash64": F.lit(None).cast("long")
 
     table = fresh("table")
     changes = spark.read.parquet(stream_dir)

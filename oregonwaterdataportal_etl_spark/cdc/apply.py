@@ -56,8 +56,8 @@ def lww_dedup(
         # normalized op, matching merge's _update_tiebreak and the
         # oracle fold (unknown ops are upserts -> hash as "insert")
         tb_in.append(_op_decode(_op_code(F.col(op_col))))
-    t1, t2 = tiebreak_cols(tb_in, family=tiebreak_family)
-    return _lww_top1(changes, list(key_cols), lsn_col, t1, t2)
+    tb = tiebreak_cols(tb_in, family=tiebreak_family)
+    return _lww_top1(changes, list(key_cols), lsn_col, tb)
 
 
 def oracle_fold(
@@ -72,7 +72,7 @@ def oracle_fold(
     Equal-LSN ties are resolved by the SAME deterministic payload-hash
     total order as the engine (lake.table.tiebreak_py over the non-lsn
     non-op values, then op): per key, the event with the
-    lexicographically greatest (lsn, limb1, limb2) wins — an
+    lexicographically greatest (lsn, tb) wins — an
     engine-independent winner, stable across runs and input orderings.
 
     columns: EXPLICIT hash-input column order. The engine hashes in
@@ -98,10 +98,10 @@ def oracle_fold(
         return tiebreak_py(vals)
 
     state: dict = {}
-    applied: dict = {}  # key -> (lsn, limb1, limb2) of the applied event
+    applied: dict = {}  # key -> (lsn, tb) of the applied event
     for ev in sorted(events, key=lambda e: (e["lsn"], tb(e))):
         key = tuple(ev[k] for k in key_cols)
-        rank = (ev["lsn"], *tb(ev))
+        rank = (ev["lsn"], tb(ev))
         if key in applied and applied[key] >= rank:
             continue
         applied[key] = rank

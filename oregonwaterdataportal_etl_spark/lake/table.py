@@ -347,11 +347,6 @@ class ManifestChain:
     def path(self, version: int) -> str:
         return os.path.join(self.meta_dir, f"{self.prefix}{version:08d}.json")
 
-    def aux_path(self, name: str) -> str:
-        """A side file of this chain, ``<prefix><name>``, never listed
-        as a version."""
-        return os.path.join(self.meta_dir, self.prefix + name)
-
     @property
     def _pointer_path(self) -> str:
         return os.path.join(self.meta_dir, POINTER)
@@ -471,14 +466,13 @@ _BUCKET_COL = "_b"
 _ACTION_COL = "_action"  # per-row merge outcome, counted, never written
 _DEL_COL = "_del"  # partition dir holding tombstones (winning deletes)
 _OP_COL = "_op"  # op column persisted in merge-on-read delta files
-# equal-LSN tie-break limbs persisted in base, tombstone and MOR delta
+# equal-LSN tie-break value persisted in base, tombstone and MOR delta
 # files: computed ONCE per batch row, after the merge's exchange
 # (LakeTable._resolve_batch), so every later resolve orders
 # same-(key,lsn) events from different batches without touching
 # payload columns (payload hashing at read time would defeat column
 # pruning)
-_TB1_COL = "_tb1"
-_TB2_COL = "_tb2"
+_TB_COL = "_tb"
 # codec of every data file the lake writes (base, tombstone, MOR delta,
 # bucketed WAL), set per write so it overrides the session's
 # spark.sql.parquet.compression.codec: the format does not depend on
@@ -541,7 +535,7 @@ def _dict_decode(code, fallback, values: list[str]):
 # Two BATCH events with the same (key, lsn) had no defined winner
 # through round 2 (base-vs-batch ties break by __src). "Replay
 # equality" as a contract needs a TOTAL order, so the final tie-break
-# is a deterministic two-limb hash of the payload — higher hash wins
+# is a deterministic 64-bit hash of the payload — higher hash wins
 # (desc), matching the "highest sorts first" convention of the LSN.
 #
 # Two families, the same split as the dedup operators:
@@ -567,10 +561,10 @@ _TIEBREAK_NULL = "\x00"
 TIEBREAK_FAMILIES = ("xxhash64", "md5")
 
 
-def tiebreak_cols(cols: list, family: str = "xxhash64") -> tuple["F.Column", "F.Column"]:
-    """(limb1, limb2) tie-break limbs over ``cols``. The merges evaluate
-    them on batch rows only, after the batch's exchange (the limbs are
-    functions of the payload that rides it), and persist them."""
+def tiebreak_cols(cols: list, family: str = "xxhash64") -> "F.Column":
+    """The tie-break value over ``cols``: limb1 XOR limb2, one long. The
+    merges evaluate it on batch rows only, after the batch's exchange
+    (it is a function of the payload that rides it), and persist it."""
     if family == "md5":
         canon = F.concat_ws(
             _TIEBREAK_SEP,
@@ -579,13 +573,12 @@ def tiebreak_cols(cols: list, family: str = "xxhash64") -> tuple["F.Column", "F.
         h = F.md5(canon)
         limb1 = F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
         limb2 = F.conv(F.substring(h, 17, 15), 16, 10).cast("long")
-        return limb1, limb2
+        return limb1.bitwiseXOR(limb2)
     if family != "xxhash64":
         raise ValueError(f"unknown tiebreak family {family!r}")
     # one hash pass total: columns are SPLIT between the limbs (any
-    # differing column differentiates its limb, so the pair is as
-    # discriminating as a 128-bit hash at half the compute — measured
-    # 27.5s -> ~26s on the 32M apply vs two full passes)
+    # differing column differentiates its limb, and so the XOR —
+    # measured 27.5s -> ~26s on the 32M apply vs two full passes)
     even: list = []
     odd: list = []
     for i, c in enumerate(cols):
@@ -593,10 +586,23 @@ def tiebreak_cols(cols: list, family: str = "xxhash64") -> tuple["F.Column", "F.
         side += [c, F.isnull(c)]
     limb1 = F.xxhash64(*even) if even else F.lit(0).cast("long")
     limb2 = F.xxhash64(*odd) if odd else F.lit(0).cast("long")
-    return limb1, limb2
+    return limb1.bitwiseXOR(limb2)
 
 
-def tiebreak_py(values) -> tuple[int, int]:
+_LEGACY_TB = ("_tb1", "_tb2")  # the two limbs legacy files store in place of _tb
+
+
+def _with_stored_tb(df: DataFrame) -> DataFrame:
+    """A frame of _side_stored columns with the one _tb: _tb, or a
+    legacy file's limb1 XOR limb2, so old and new rows rank alike (null
+    in files older than the limbs: such rows lose an exact-LSN tie)."""
+    l1, l2 = _LEGACY_TB
+    return df.withColumn(
+        _TB_COL, F.coalesce(F.col(_TB_COL), F.col(l1).bitwiseXOR(F.col(l2)))
+    ).drop(l1, l2)
+
+
+def tiebreak_py(values) -> int:
     """Pure-Python twin of tiebreak_cols(family="md5") for the
     sequential oracle (xxhash64 is JVM-internal and deliberately has no
     Python twin — use md5-family tables wherever oracle tie equality is
@@ -616,34 +622,30 @@ def tiebreak_py(values) -> tuple[int, int]:
 
     s = _TIEBREAK_SEP.join(canon(v) for v in values)
     h = hashlib.md5(s.encode("utf-8")).hexdigest()
-    return int(h[0:15], 16), int(h[16:31], 16)
+    return int(h[0:15], 16) ^ int(h[16:31], 16)
 
 
-def _lww_order(lsn, tb1, tb2, src=None) -> list["F.Column"]:
+def _lww_order(lsn, tb, src=None) -> list["F.Column"]:
     """THE last-writer-wins total order, as an orderBy list (first row
-    wins): lsn desc, then the tie-break limbs desc with nulls last
-    (legacy null-limb rows lose an exact-LSN tie), then — for sides
+    wins): lsn desc, then the tie-break value desc with nulls last
+    (legacy rows without one lose an exact-LSN tie), then — for sides
     that mix base and batch rows — src asc, so the base wins a full tie
-    and a redelivered identical event is a no-op. The limbs come BEFORE
-    src so a cross-batch same-(key, lsn) tie has the same winner whether
-    the earlier event already reached the base (cow) or still sits in a
-    delta (mor). Arguments are column
-    names or Columns. The zero-exchange resolve compares the same order
-    as one struct (_zx_cand), whose null fields sort smallest."""
+    and a redelivered identical event is a no-op. The tie-break comes
+    BEFORE src so a cross-batch same-(key, lsn) tie has the same winner
+    whether the earlier event already reached the base (cow) or still
+    sits in a delta (mor). Arguments are column names or Columns. The
+    zero-exchange resolve compares the same order as one struct
+    (_zx_cand), whose null fields sort smallest."""
     def col(c):
         return F.col(c) if isinstance(c, str) else c
 
-    order = [
-        col(lsn).desc(),
-        col(tb1).desc_nulls_last(),
-        col(tb2).desc_nulls_last(),
-    ]
+    order = [col(lsn).desc(), col(tb).desc_nulls_last()]
     if src is not None:
         order.append(col(src).asc())
     return order
 
 
-def _lww_top1(df: DataFrame, key_cols: list[str], lsn, tb1, tb2, src=None,
+def _lww_top1(df: DataFrame, key_cols: list[str], lsn, tb, src=None,
               full_frame: dict | None = None,
               radix: bool = True) -> DataFrame:
     """THE per-key LWW window: each key's first row in the _lww_order
@@ -661,7 +663,7 @@ def _lww_top1(df: DataFrame, key_cols: list[str], lsn, tb1, tb2, src=None,
     keys = [F.col(c) for c in key_cols]
     prefix = [F.xxhash64(*keys)] if radix else []
     w = Window.partitionBy(*prefix, *keys).orderBy(
-        *_lww_order(lsn, tb1, tb2, src=src)
+        *_lww_order(lsn, tb, src=src)
     )
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
@@ -1162,7 +1164,7 @@ class LakeTable:
         plain `.select()` above read() — verified on Spark 4.1.2 that
         Catalyst pushes the projection through the dedup window and the
         winner struct identically (the rank depends only on keys, _lsn,
-        the tie-break limbs and the side), so both forms prune `text`
+        the tie-break and the side), so both forms prune `text`
         from the scan. Pinned by
         tests/test_round2_fixes.py::test_read_column_pruning_through_mor_resolve,
         which exists to catch a Catalyst regression, not to justify
@@ -1242,7 +1244,7 @@ class LakeTable:
         # shared dedup window, whose clustering the coalesce(1)'s
         # SinglePartition satisfies — no Exchange
         union = reduce(DataFrame.unionByName, [
-            self._with_partition(spark.read.schema(self._side_stored(snap)).parquet(*fl), snap)
+            self._with_partition(self._read_stored(spark, snap, fl), snap)
             .filter(pred).withColumn("side", F.lit(side))
             for side, fl in scans.items() if fl
         ]).coalesce(1)
@@ -1502,11 +1504,11 @@ class LakeTable:
         df_cols: list[str], evolved: T.StructType, op_col: str,
         family: str = "xxhash64",
     ):
-        """Equal-LSN total-order tie-break limbs of a raw change batch's
-        rows: two limbs over (evolved payload values in schema order, a
+        """Equal-LSN total-order tie-break of a raw change batch's
+        rows: one value over (evolved payload values in schema order, a
         column the batch lacks as a typed null; then the normalized op
         string) — the md5 family follows the exact convention of
-        cdc.apply.oracle_fold/tiebreak_py. These are the limbs every
+        cdc.apply.oracle_fold/tiebreak_py. This is the value every
         merge persists for a batch row; the batch kernel (_resolve_batch)
         evaluates the same values after its exchange, over the decoded
         payload and op code that rode it (tests/test_batch_kernel.py
@@ -1528,8 +1530,7 @@ class LakeTable:
         _lww_order total order, with no base side. The MOR append and
         both copy-on-write merges (_batch_cand) dedup their batch here.
         Returns the evolved payload (dict columns decoded) plus __lsn,
-        the op code __op and the tie-break limbs __tb1/__tb2, one row
-        per key.
+        the op code __op and the tie-break __tb, one row per key.
 
         The batch is tagged first: the _tag_select payload, __lsn and
         the 1-byte op code. With ``n_buckets`` the tagged batch
@@ -1542,7 +1543,7 @@ class LakeTable:
 
         Everything else the rank needs is a function of the tagged
         columns, so it is computed above the exchange: the decoded dict
-        columns, the limbs (the values of _update_tiebreak, over the
+        columns, the tie-break (the value of _update_tiebreak, over the
         decoded payload and op), a partitioned table's partition value
         (_p, part of the row's identity: _ident) and the window's radix
         prefix. Random 64-bit hashes do not compress: shipping the three
@@ -1567,14 +1568,11 @@ class LakeTable:
         batch = self._with_partition(
             tagged.select(*self._payload_out(evolved, dicts), "__lsn", "__op"), snap
         )
-        t1, t2 = tiebreak_cols(
+        tb = tiebreak_cols(
             [F.col(f.name) for f in evolved.fields] + [_op_decode(F.col("__op"))],
             family=snap.get("tiebreak_family", "xxhash64"),
         )
-        return _lww_top1(
-            batch.withColumns({"__tb1": t1, "__tb2": t2}),
-            self._ident(snap), "__lsn", "__tb1", "__tb2",
-        )
+        return _lww_top1(batch.withColumn("__tb", tb), self._ident(snap), "__lsn", "__tb")
 
     def _with_partition(self, df: DataFrame, snap: dict) -> DataFrame:
         """``df`` (payload columns) plus a partitioned table's partition
@@ -1596,7 +1594,7 @@ class LakeTable:
             spark.read.schema(stored).parquet(*files) if files
             else spark.createDataFrame([], stored)
         )
-        return rows.drop(LSN_COL, _TB1_COL, _TB2_COL)
+        return rows.drop(LSN_COL, _TB_COL, *_LEGACY_TB)
 
     # ---------------------------------------------------------- create
     @staticmethod
@@ -1710,8 +1708,8 @@ class LakeTable:
         already clustered by key."""
         batch = self._resolve_batch(upd, snap, evolved, op_col, lsn_col, n_buckets)
         return self._zx_cand(
-            batch, 1, F.col("__lsn"), F.col("__op"),
-            F.col("__tb1"), F.col("__tb2"), self._ident(snap), nonkey,
+            batch, 1, F.col("__lsn"), F.col("__op"), F.col("__tb"),
+            self._ident(snap), nonkey,
         ).withColumnRenamed("__cand", "__cand_u")
 
     @staticmethod
@@ -2029,6 +2027,8 @@ class LakeTable:
         out = df
         if LSN_COL not in df.columns:
             out = out.withColumn(LSN_COL, F.lit(lsn).cast("long"))
+        # no event payload to hash: the rows lose an exact-LSN tie
+        out = out.withColumn(_TB_COL, F.lit(None).cast("long"))
         files = self._write_buckets(out.withColumns(self._group_cols(snap)), snap)
         new = _next_snapshot(
             snap,
@@ -2332,7 +2332,7 @@ class LakeTable:
         strict: bool = True,
     ) -> MergeResult:
         """Shared copy-on-write tail: winners (columns = decoded payload
-        + __lsn/__tb1/__tb2/__op/__src/__all_chg/__in_u, one storage
+        + __lsn/__tb/__op/__src/__all_chg/__in_u, one storage
         bucket per task) -> action classification -> single-pass
         bucketed write with observed metrics -> snapshot commit. Called
         only by _cow_commit.
@@ -2375,10 +2375,9 @@ class LakeTable:
         out = winners.select(
             *[F.col(f.name) for f in evolved.fields],
             F.col("__lsn").alias(LSN_COL),
-            # the winner's limbs persist into base/tombstone files so the
-            # NEXT merge can order an exact-LSN rematch deterministically
-            F.col("__tb1").alias(_TB1_COL),
-            F.col("__tb2").alias(_TB2_COL),
+            # the winner's tie-break persists into base/tombstone files so
+            # the NEXT merge can order an exact-LSN rematch deterministically
+            F.col("__tb").alias(_TB_COL),
             action.alias(_ACTION_COL),
             *[e.alias(c) for c, e in self._group_cols(snap).items()],
             F.col("__op").isin(_OP_DELETE, _OP_TOMBSTONE).alias(_DEL_COL),
@@ -2478,12 +2477,12 @@ class LakeTable:
 
     # ---------------------------------------- zero-exchange machinery
     @staticmethod
-    def _zx_cand(df, src, lsn_expr, op_expr, t1, t2,
+    def _zx_cand(df, src, lsn_expr, op_expr, tb,
                  key_cols: list[str], nonkey: list,
                  extra: tuple = ()) -> DataFrame:
         """One side's per-key candidate struct: rank fields FIRST so a
         single greatest() applies the _lww_order total order —
-        (lsn, tb1, tb2, -src); struct comparison treats null fields as
+        (lsn, tb, -src); struct comparison treats null fields as
         smallest, matching desc_nulls_last. ``src`` is an int for a
         homogeneous side or a Column of per-row src values (the
         delta-folding base side mixes src=0 b/t rows with src=1 delta
@@ -2495,8 +2494,7 @@ class LakeTable:
             *[F.col(c) for c in key_cols],
             F.struct(
                 lsn_expr.cast("long").alias("l"),
-                t1.cast("long").alias("t1"),
-                t2.cast("long").alias("t2"),
+                tb.cast("long").alias("t"),
                 ns.cast("int").alias("ns"),
                 op_expr.cast("tinyint").alias("op"),
                 *[
@@ -2572,12 +2570,12 @@ class LakeTable:
             name=name, partition_col="side", if_not_exists=True,
         )
         spark.sql(f"ALTER TABLE `{name}` RECOVER PARTITIONS")
-        bt = self._with_partition(spark.table(name), snap)
+        bt = self._with_partition(_with_stored_tb(spark.table(name)), snap)
         key_cols = self._ident(snap)
         if not os.path.isdir(os.path.join(bt_dir, "side=d")):
             return self._zx_cand(
-                bt, 0, F.col(LSN_COL), _side_op(),
-                F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
+                bt, 0, F.col(LSN_COL), _side_op(), F.col(_TB_COL),
+                key_cols, nonkey,
                 extra=(F.lit(True).alias("__had_bt"),),
             ).withColumnRenamed("__cand", "__cand_b")
         return self._side_winners(bt, key_cols, nonkey, radix=radix)
@@ -2585,25 +2583,30 @@ class LakeTable:
     @staticmethod
     def _side_stored(snap: dict, side: str | None = None) -> T.StructType:
         """THE stored schema of the data files, from the pinned snap:
-        the payload, the LSN guard and the tie-break limbs, plus the op
+        the payload, the LSN guard and the tie-break value, plus the op
         column that only delta files carry. ``side`` 'b' or 't' gives
         the schema of base or tombstone files alone; by default the
         files of all sides read as one, and base and tombstone files
-        null-fill the op column (parquet by-name resolution), as do
-        files written before the tie-break limbs were persisted (null
-        limbs sort last). The limbs persist in base files too: a
-        cross-batch same-(key, lsn) tie must resolve identically whether
-        the earlier event already reached the base (cow) or still sits
-        in a delta (mor)."""
+        null-fill the op column (parquet by-name resolution), as legacy
+        files do _tb (_with_stored_tb reads their limbs). The tie-break
+        persists in base files too: a cross-batch same-(key, lsn) tie
+        must resolve identically whether the earlier event already
+        reached the base (cow) or still sits in a delta (mor)."""
         return T.StructType(
             list(T.StructType.fromJson(json.loads(snap["schema"])).fields)
             + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                T.StructField(_TB1_COL, T.LongType(), True),
-                T.StructField(_TB2_COL, T.LongType(), True),
+                T.StructField(c, T.LongType(), True)
+                for c in (LSN_COL, _TB_COL, *_LEGACY_TB)
             ]
             + ([T.StructField(_OP_COL, T.StringType(), True)]
                if side in (None, "d") else [])
+        )
+
+    def _read_stored(self, spark: SparkSession, snap: dict, files: list[str],
+                     side: str | None = None) -> DataFrame:
+        """Data ``files`` of ``snap`` as _side_stored columns, one _tb."""
+        return _with_stored_tb(
+            spark.read.schema(self._side_stored(snap, side)).parquet(*files)
         )
 
     @classmethod
@@ -2611,8 +2614,8 @@ class LakeTable:
                       nonkey: list, radix: bool = True) -> DataFrame:
         """THE per-key LWW resolve of base, tombstone and delta rows: one
         winner per key, as the __cand_b candidate struct plus __had_bt.
-        ``df`` holds _side_stored columns plus ``side`` ('b' base, 't'
-        tombstone, 'd' delta), which sets each row's op and src bit.
+        ``df`` holds _side_stored columns (one _tb) plus ``side`` ('b'
+        base, 't' tombstone, 'd' delta), which sets each row's op and src bit.
         Every reader of a version (read, lookup), the copy-on-write
         merge's base side, the compaction fold and the changelog resolve
         here. ``df`` must already be clustered by key — a bucketed scan's
@@ -2624,13 +2627,13 @@ class LakeTable:
         above."""
         src = F.when(F.col("side") == "d", F.lit(1)).otherwise(F.lit(0))
         bt1 = _lww_top1(
-            df, key_cols, LSN_COL, _TB1_COL, _TB2_COL, src=src,
+            df, key_cols, LSN_COL, _TB_COL, src=src,
             full_frame={"__had_bt": F.max(F.col("side") != "d")},
             radix=radix,
         )
         return cls._zx_cand(
-            bt1, src, F.col(LSN_COL), _side_op(),
-            F.col(_TB1_COL), F.col(_TB2_COL), key_cols, nonkey,
+            bt1, src, F.col(LSN_COL), _side_op(), F.col(_TB_COL),
+            key_cols, nonkey,
             extra=(F.col("__had_bt"),),
         ).withColumnRenamed("__cand", "__cand_b")
 
@@ -2647,7 +2650,7 @@ class LakeTable:
         same bucket count (merge()) reports the same partitioning, so
         the join adds no exchange there either. Output columns are
         _finalize_cow's contract: payload +
-        __lsn/__tb1/__tb2/__op/__src/__all_chg, and __in_u (the batch
+        __lsn/__tb/__op/__src/__all_chg, and __in_u (the batch
         side holds the key, whether or not it won).
 
         upd_side=None is the delta-FOLD degenerate case (zero-exchange
@@ -2689,8 +2692,7 @@ class LakeTable:
             *[F.col(c) for c in key_cols],
             *[winner[f"p_{f.name}"].alias(f.name) for f in nonkey],
             winner["l"].alias("__lsn"),
-            winner["t1"].alias("__tb1"),
-            winner["t2"].alias("__tb2"),
+            winner["t"].alias("__tb"),
             winner["op"].alias("__op"),
             F.when(winner["ns"] == 0, 0).otherwise(1).alias("__src"),
             F.when(base_side_present, 0).otherwise(1).alias("__all_chg"),
@@ -2729,7 +2731,7 @@ class LakeTable:
         base side's window when deltas are pending).
 
         Semantics are IDENTICAL to merge(): the join compares the same
-        (lsn, tb1 desc-nulls-last, tb2, base-first) total order via a
+        (lsn, tb desc-nulls-last, base-first) total order via a
         single greatest() over per-side candidate structs, and the
         winner feeds the same _finalize_cow tail (action metrics,
         bucketed write, snapshot commit).
@@ -2908,11 +2910,10 @@ class LakeTable:
             F.col("__lsn").alias(LSN_COL),
             # delta files keep the public string op (normalized)
             _op_decode(F.col("__op")).alias(_OP_COL),
-            # persist the tie-break limbs so the read-path resolve can
+            # persist the tie-break so the read-path resolve can
             # totally order cross-batch equal-LSN events WITHOUT hashing
             # payload (which would defeat read-side column pruning)
-            F.col("__tb1").alias(_TB1_COL),
-            F.col("__tb2").alias(_TB2_COL),
+            F.col("__tb").alias(_TB_COL),
             *[e.alias(c) for c, e in self._group_cols(snap).items()],
         )
         new_delta = self._write_buckets(out, snap, prefix="d", pre_partitioned=True)
@@ -3075,7 +3076,7 @@ class LakeTable:
         if not to_rewrite:
             return snap["version"]
         all_small = [f for fl in to_rewrite.values() for f in fl]
-        df = spark.read.schema(self._side_stored(snap, "b")).parquet(*all_small)
+        df = self._read_stored(spark, snap, all_small, "b")
         out = df.withColumns(self._group_cols(snap))
         sort_expr = None
         if cluster_by is not None:
@@ -3150,8 +3151,9 @@ class LakeTable:
         OPERATION, not a new table.
 
         The resolved row set is bit-identical before and after: every
-        stored artifact (payload, __lsn, tie-break limbs, delta __op)
-        is carried verbatim — only file placement changes. Three
+        stored artifact (payload, __lsn, tie-break, delta __op) is
+        carried verbatim (a legacy file's limbs as their XOR, the one
+        _tb) — only file placement changes. Three
         rewrite passes, each ONE key-hash shuffle at the new count,
         sorted within buckets for compact()'s tight row-group key
         clustering.
@@ -3176,9 +3178,7 @@ class LakeTable:
             flist = [f for fl in files_map.values() for f in fl]
             if not flist:
                 return {}
-            df = spark.read.schema(self._side_stored(snap, side)).parquet(
-                *flist
-            ).withColumns(gcols)
+            df = self._read_stored(spark, snap, flist, side).withColumns(gcols)
             return self._write_buckets(df, nsnap, sort_within=True)
 
         out = {side: rewrite(side, m) for side, m in _side_maps(snap).items()}
@@ -3365,7 +3365,7 @@ class LakeTable:
         tombs = [f for side, *_g, f in snapshot_files(snap) if side == "t"]
         if not tombs:
             return 0
-        df = spark.read.schema(self._side_stored(snap, "t")).parquet(*tombs)
+        df = self._read_stored(spark, snap, tombs, "t")
         removed = df.filter(F.col(LSN_COL) < below_lsn).count()
         if removed == 0:
             return 0

@@ -377,12 +377,10 @@ def simhash_dedup_pairs(
     cbits = 15 if hash_family == "md5" else 16
     cmask = (1 << cbits) - 1
     sig = df.select(id_col, simhash64(text_col, hash_family=hash_family).alias("__sim"))
-    # pin the signatures: the chunk self-join scans this frame on BOTH
-    # sides and (unlike minhash's banded exchange) the planner does not
-    # reuse one computation across them — without the pin the whole
-    # signature pass ran twice (measured 18s -> 5.7s at the 5k-doc
-    # corpus, local[32]). NOTE: executes a Spark job at BUILD time.
-    sig = sig.localCheckpoint(eager=True)
+    # the chunk self-join scans this frame on BOTH sides; the explicit
+    # join-key exchange below the two aliased sides is one identical
+    # subtree, so the planner reuses it (ReusedExchange) and the
+    # signature pass runs once, with no job at build time
     chunks = sig.select(
         id_col,
         "__sim",
@@ -394,7 +392,7 @@ def simhash_dedup_pairs(
                 ]
             )
         ).alias("chunk_idx", "chunk"),
-    )
+    ).repartition("chunk_idx", "chunk")
     a = chunks.select("chunk_idx", "chunk", F.col(id_col).alias("id_a"), F.col("__sim").alias("__sa"))
     b = chunks.select("chunk_idx", "chunk", F.col(id_col).alias("id_b"), F.col("__sim").alias("__sb"))
     ham = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))

@@ -298,7 +298,7 @@ def write_plans(spark, tmp: str) -> None:
         (
             "Copy-on-write merge (one exchange: the batch)",
             "batch -> ONE repartition on the keys, carrying the payload, "
-            "the LSN and the op code -> tie-break limbs -> LWW dedup window "
+            "the LSN and the op code -> tie-break hash -> LWW dedup window "
             "-> full-outer SHUFFLE_HASH join (build = the batch) against the "
             "bucketed scan of the touched buckets' base+tombstones+deltas, "
             "which needs no exchange -> bucket-aligned write. Pinned by "
@@ -321,7 +321,7 @@ def write_plans(spark, tmp: str) -> None:
             "MOR append (one exchange: the batch)",
             "merge(mode=\"mor\"): batch -> ONE repartition on the keys, "
             "carrying the payload (declared dict columns as codes), the LSN "
-            "and the op code -> dict decode + tie-break limbs -> LWW dedup "
+            "and the op code -> dict decode + tie-break hash -> LWW dedup "
             "window -> per-bucket delta files, no second exchange. Pinned by "
             "test_mor_merge_write_plan_ships_only_the_payload",
             mor_append_plan(spark, tmp),
@@ -330,7 +330,7 @@ def write_plans(spark, tmp: str) -> None:
             "MOR read (zero exchange)",
             "read() with pending deltas: the version's base, tombstone and "
             "delta files as one side-partitioned bucketed scan -> ONE LWW "
-            "dedup window (tie-break limbs and side in the sort), which the "
+            "dedup window (tie-break and side in the sort), which the "
             "scan's partitioning satisfies: NO Exchange. Pinned by "
             "test_mor_read_and_lookup_plans_have_no_exchange",
             mor_read,
@@ -347,7 +347,7 @@ def write_plans(spark, tmp: str) -> None:
             "Standalone LWW dedup (lww_dedup)",
             "one hash exchange on the keys' xxhash64 radix prefix and the "
             "keys -> the engine's one LWW window (_lww_top1, the window "
-            "every resolve ranks with), tie-break limbs hashed JVM-side. "
+            "every resolve ranks with), tie-break hashed JVM-side. "
             "Pinned by test_lww_dedup_plan_one_exchange_one_window",
             lww_dedup_plan(spark),
         ),

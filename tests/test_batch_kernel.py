@@ -1,9 +1,9 @@
 """The batch kernel (LakeTable._resolve_batch) and what the merges write.
 
-The tie-break limbs a merge persists are a function of the raw change
-row (LakeTable._update_tiebreak, and for md5-family tables also the
+The tie-break a merge persists is a function of the raw change row
+(LakeTable._update_tiebreak, and for md5-family tables also the
 pure-Python tiebreak_py): however the kernel moves and encodes the batch
-before it hashes, the stored _tb1/_tb2 must be exactly those values.
+before it hashes, the stored _tb must be exactly that value.
 And a copy-on-write merge counts each row's action without writing it.
 """
 
@@ -47,11 +47,11 @@ def _normalized_op(op: str) -> str:
     return op if op in ("delete", "update", "tombstone", "base") else "insert"
 
 
-def _persisted_limbs(spark, files: list[str]) -> dict:
+def _persisted_tiebreaks(spark, files: list[str]) -> dict:
     rows = spark.read.parquet(*files).select(
-        "conv_id", "turn_idx", "_lsn", "_tb1", "_tb2"
+        "conv_id", "turn_idx", "_lsn", "_tb"
     ).collect()
-    return {(r[0], r[1], r[2]): (r[3], r[4]) for r in rows}
+    return {(r[0], r[1], r[2]): r[3] for r in rows}
 
 
 @pytest.mark.parametrize("family", ["xxhash64", "md5"])
@@ -59,7 +59,7 @@ def _persisted_limbs(spark, files: list[str]) -> dict:
 def test_persisted_limbs_equal_the_raw_batch_limbs(spark, tmp_path, family, mode):
     """Every batch row is its key's only event, so each one persists:
     cow writes it to a base or tombstone file, mor to a delta file. Its
-    stored limbs equal _update_tiebreak over the raw batch (dict columns
+    stored _tb equals _update_tiebreak over the raw batch (dict columns
     as strings, ts as a typed null, the op as written), and for md5 also
     tiebreak_py over the same values."""
     t = LakeTable.create(
@@ -75,14 +75,12 @@ def test_persisted_limbs_equal_the_raw_batch_limbs(spark, tmp_path, family, mode
     assert evolved.fieldNames() == TRANSCRIPT_SCHEMA.fieldNames() + ["lang"]
     sides = {side for side, *_ in snapshot_files(snap)}
     assert sides == ({"d"} if mode == "mor" else {"b", "t"})
-    persisted = _persisted_limbs(spark, [f for *_, f in snapshot_files(snap)])
+    persisted = _persisted_tiebreaks(spark, [f for *_, f in snapshot_files(snap)])
 
-    t1, t2 = LakeTable._update_tiebreak(batch.columns, evolved, "op", family)
+    tb = LakeTable._update_tiebreak(batch.columns, evolved, "op", family)
     expected = {
-        (r[0], r[1], r[2]): (r[3], r[4])
-        for r in batch.select(
-            "conv_id", "turn_idx", "lsn", t1.alias("t1"), t2.alias("t2")
-        ).collect()
+        (r[0], r[1], r[2]): r[3]
+        for r in batch.select("conv_id", "turn_idx", "lsn", tb.alias("tb")).collect()
     }
     assert len(expected) == len(BATCH)
     assert persisted == expected
@@ -136,7 +134,7 @@ def test_cow_merge_counts_actions_without_writing_them(spark, tmp_path):
     for f in files:
         names = pq.read_schema(f).names
         assert "_action" not in names, (f, names)
-        assert {"_lsn", "_tb1", "_tb2"} <= set(names), (f, names)
+        assert {"_lsn", "_tb"} <= set(names), (f, names)
     assert sorted(
         (r["conv_id"], r["text"]) for r in t.read(spark).collect()
     ) == sorted(

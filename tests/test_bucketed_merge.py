@@ -304,7 +304,7 @@ def test_prebucketed_merge_folds_pending_mor_deltas(spark, tmp_path):
     b1 = _stream(spark, 2500, seed=101).localCheckpoint()
     b2 = _stream(spark, 1500, seed=102, lsn_start=2500).localCheckpoint()
     # b3 replays half of b2 verbatim (same key, lsn AND payload: the
-    # delta copy vs WAL copy have identical tie-break limbs) plus new
+    # delta copy vs WAL copy have identical tie-break values) plus new
     # higher-LSN events contesting delta keys
     b3 = (
         b2.sample(0.5, seed=7)

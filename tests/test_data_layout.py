@@ -2,11 +2,17 @@
 one merge.
 
 Layout: after each writing operation every file the snapshot lists
-exists, is listed once, carries the op column exactly when it is a
-delta file, holds only rows whose bucket (the table's own bucket
-expression) is the bucket it is listed under, is zstd in every column
-chunk although the session asks for snappy, and no bucket lists a key
-both as a base row and as a tombstone."""
+exists, is listed once, stores exactly the payload, _lsn and the one
+tie-break value _tb, plus the op column exactly when it is a delta file,
+holds only rows whose bucket (the table's own bucket expression) is the
+bucket it is listed under, is zstd in every column chunk although the
+session asks for snappy, and no bucket lists a key both as a base row
+and as a tombstone.
+
+Legacy files, which store the tie-break as two limbs _tb1/_tb2, still
+resolve under the same order: their rows read the limbs' XOR."""
+
+import hashlib
 
 import os
 from urllib.parse import urlparse
@@ -15,16 +21,23 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oregonwaterdataportal_etl_spark.cdc import oracle_fold
 from oregonwaterdataportal_etl_spark.cdc.changegen import (
+    CHANGE_SCHEMA,
     TRANSCRIPT_SCHEMA,
     generate_changes_pdf,
 )
 from oregonwaterdataportal_etl_spark.lake import LakeTable
 from oregonwaterdataportal_etl_spark.lake.bucketed import write_bucketed_wal
-from oregonwaterdataportal_etl_spark.lake.table import ManifestChain
+from oregonwaterdataportal_etl_spark.lake.table import (
+    ManifestChain,
+    snapshot_files,
+    tiebreak_py,
+)
 
 KEYS = ["conv_id", "turn_idx"]
 SIDES = {"b": "files", "t": "tombstones", "d": "deltas"}
+PAYLOAD = TRANSCRIPT_SCHEMA.fieldNames()
 
 
 @pytest.fixture
@@ -74,9 +87,10 @@ def _check_layout(spark, t: LakeTable, step: str) -> None:
                 assert os.path.exists(f), f"{step}: listed file missing: {f}"
                 assert f not in listed, f"{step}: {f} listed twice"
                 listed[f] = (side, int(b))
-                has_op = "_op" in pq.ParquetFile(f).schema_arrow.names
-                assert has_op == (side == "d"), (
-                    f"{step}: {side} file {f} has_op={has_op}"
+                stored = pq.ParquetFile(f).schema_arrow.names
+                want = PAYLOAD + ["_lsn", "_tb"] + (["_op"] if side == "d" else [])
+                assert sorted(stored) == sorted(want), (
+                    f"{step}: {side} file {f} stores {stored}"
                 )
                 _assert_zstd(f, step)
     if not listed:
@@ -278,3 +292,148 @@ def test_merge_reads_its_manifest_once(spark, tmp_path, monkeypatch, mode):
     monkeypatch.setattr(ManifestChain, "read", counting)
     t.merge(batch, mode=mode)
     assert len(reads) == 1, reads
+
+
+# ------------------------------------------------ legacy two-limb files
+# events as (op, lsn, conv_id, turn_idx, role, text): c0..c5 stay live,
+# c6 and c7 end as tombstones
+LEGACY_EVENTS = [("insert", 10 + i, f"c{i}", 0, "user", f"t{i}") for i in range(8)] + [
+    ("delete", 30, "c6", 0, None, None),
+    ("delete", 31, "c7", 0, None, None),
+]
+
+
+def _event(op, lsn, conv_id, turn_idx, role, text) -> dict:
+    return {"op": op, "lsn": lsn, "conv_id": conv_id, "turn_idx": turn_idx,
+            "role": role, "text": text, "tool": None, "ts": None}
+
+
+def _changes_df(spark, events: list[dict]):
+    return spark.createDataFrame(
+        [tuple(ev[c] for c in CHANGE_SCHEMA.fieldNames()) for ev in events],
+        CHANGE_SCHEMA,
+    )
+
+
+def _hash_values(ev: dict) -> list:
+    """The md5 family's hash input of an event: the payload in schema
+    order, then the op."""
+    return [ev[c] for c in PAYLOAD] + [ev["op"]]
+
+
+def _legacy_limbs(values: list) -> tuple[int, int]:
+    """The two 60-bit md5 limbs that legacy files stored; tiebreak_py is
+    their XOR."""
+    canon = "\x1f".join("\x00" if v is None else str(v) for v in values)
+    h = hashlib.md5(canon.encode("utf-8")).hexdigest()
+    limbs = int(h[0:15], 16), int(h[16:31], 16)
+    assert limbs[0] ^ limbs[1] == tiebreak_py(values)
+    return limbs
+
+
+def _tie(ev: dict, win: bool) -> dict:
+    """An event of ``ev``'s key and LSN with another payload, chosen to
+    win (or lose) the tie against ``ev``."""
+    tb = tiebreak_py(_hash_values(ev))
+    for i in range(100):
+        cand = {**ev, "op": "update", "role": "assistant", "text": f"tie-{i}"}
+        if (tiebreak_py(_hash_values(cand)) > tb) == win:
+            return cand
+    raise AssertionError("no tie candidate")
+
+
+def _legacy_table(spark, path: str) -> LakeTable:
+    """An md5-family table whose base and tombstone files store the
+    legacy limbs _tb1/_tb2 in place of _tb."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(path, TRANSCRIPT_SCHEMA, KEYS, num_buckets=2,
+                         tiebreak_family="md5")
+    events = [_event(*e) for e in LEGACY_EVENTS]
+    t.merge(_changes_df(spark, events))
+    by_row = {(ev["conv_id"], ev["turn_idx"], ev["lsn"]): ev for ev in events}
+    files = [f for side, *_g, f in snapshot_files(t.snapshot())]
+    assert {side for side, *_ in snapshot_files(t.snapshot())} == {"b", "t"}
+    for f in files:
+        tbl = pq.read_table(f)
+        limbs = []
+        for conv_id, turn_idx, lsn, tb in zip(*(
+            tbl.column(c).to_pylist() for c in ("conv_id", "turn_idx", "_lsn", "_tb")
+        )):
+            l1, l2 = _legacy_limbs(_hash_values(by_row[(conv_id, turn_idx, lsn)]))
+            assert l1 ^ l2 == tb
+            limbs.append((l1, l2))
+        tbl = tbl.drop_columns(["_tb"])
+        for i, name in enumerate(("_tb1", "_tb2")):
+            tbl = tbl.append_column(name, pa.array([lb[i] for lb in limbs], pa.int64()))
+        pq.write_table(tbl, f + ".tmp", compression="zstd")
+        os.replace(f + ".tmp", f)
+        # the local filesystem's checksum of the file Spark wrote
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    return t
+
+
+def _ties() -> list[dict]:
+    """Same-(key, LSN) different-payload events against legacy rows: a
+    base row and a tombstone the new event beats, and one of each that
+    beats it."""
+    ev = {(e[2], e[1]): _event(*e) for e in LEGACY_EVENTS}
+    return [_tie(ev[("c0", 10)], True), _tie(ev[("c1", 11)], False),
+            _tie(ev[("c6", 30)], True), _tie(ev[("c7", 31)], False)]
+
+
+def _oracle(events: list[dict]) -> dict:
+    state = oracle_fold(events, KEYS, columns=PAYLOAD)
+    return {k: tuple(row[c] for c in PAYLOAD) for k, row in state.items()}
+
+
+def _rows(df) -> dict:
+    return {(r["conv_id"], r["turn_idx"]): tuple(r[c] for c in PAYLOAD)
+            for r in df.collect()}
+
+
+def test_legacy_limb_files_resolve_like_one_tiebreak(spark, tmp_path):
+    """A table whose base and tombstone files store the two legacy limbs
+    takes same-(key, LSN) events by a mor append, a cow merge and a
+    zero-exchange merge. read, lookup, read_changes, compact and
+    merge_prebucketed all equal the oracle fold, which ranks by the
+    limbs' XOR; rewritten files store _tb alone."""
+    import pyarrow.parquet as pq
+
+    base = [_event(*e) for e in LEGACY_EVENTS]
+    ties = _ties()
+    before, after = _oracle(base), _oracle(base + ties)
+    # the ties really decide: two keys change, two do not
+    assert after[("c0", 0)][3] == ties[0]["text"] and after[("c1", 0)] == before[("c1", 0)]
+    assert after[("c6", 0)][3] == ties[2]["text"] and ("c7", 0) not in after
+
+    # mor append: the legacy base and tombstones resolve against deltas
+    t = _legacy_table(spark, str(tmp_path / "mor"))
+    assert _rows(t.read(spark)) == before
+    t.merge(_changes_df(spark, ties), mode="mor")
+    assert _rows(t.read(spark)) == after
+    for k in after:
+        assert _rows(t.lookup(spark, conv_id=k[0], turn_idx=k[1])) == {k: after[k]}
+    assert _rows(t.lookup(spark, conv_id="c7", turn_idx=0)) == {}
+    # from the empty origin every live row is an insert
+    changes = t.read_changes(spark, 0)
+    assert {r["_change_type"] for r in changes.collect()} == {"insert"}
+    assert _rows(changes) == after
+    t.compact(spark, target_files_per_bucket=0)
+    assert not t.snapshot()["deltas"]
+    assert _rows(t.read(spark)) == after
+    for f in (f for fl in t.snapshot()["files"].values() for f in fl):
+        assert "_tb1" not in pq.read_schema(f).names, f
+
+    # cow merge and zero-exchange merge: the legacy rows meet the batch
+    t = _legacy_table(spark, str(tmp_path / "cow"))
+    t.merge(_changes_df(spark, ties))
+    assert _rows(t.read(spark)) == after
+    t = _legacy_table(spark, str(tmp_path / "zx"))
+    wal = write_bucketed_wal(_changes_df(spark, ties), str(tmp_path / "wal"), 2, KEYS)
+    t.merge_prebucketed(spark, wal)
+    assert _rows(t.read(spark)) == after
+    _check_layout(spark, t, "merge_prebucketed over legacy files")

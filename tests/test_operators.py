@@ -147,6 +147,19 @@ def test_simhash_md5_family(spark, docs):
     assert all(4 not in k and 5 not in k for k in got)
 
 
+def test_simhash_pairs_build_lazily_and_share_one_exchange(spark, docs):
+    """Building the simhash pairs frame runs no Spark job, and both sides
+    of the chunk self-join read one exchange: the executed plan reuses
+    it, so the signature pass runs once."""
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    pairs = dedup.simhash_dedup_pairs(docs, max_hamming=3)
+    assert set(st.getJobIdsForGroup(None)) == before
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} >= {(1, 2)}
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in plan, plan
+
+
 def test_ngram_jaccard(spark, docs):
     pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.5)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}

@@ -86,7 +86,7 @@ def test_mor_read_and_lookup_plans_have_no_exchange(spark, tmp_path):
     """Every MOR reader resolves through the one dedup window
     (LakeTable._side_winners) with no Exchange. read() of a version with
     base rows, tombstones and pending deltas: ONE Window over the
-    bucketed scan, the tie-break limbs in its sort, no Python
+    bucketed scan, the tie-break value in its sort, no Python
     evaluation. lookup(): the key's files, unioned and coalesced to one
     partition, with no registration dir and no catalog entry."""
     import os
@@ -129,14 +129,14 @@ def test_mor_read_and_lookup_plans_have_no_exchange(spark, tmp_path):
     assert "Exchange" not in plan, plan
     windows = [ln for ln in plan.splitlines() if re.search(r"\bWindow\b", ln)]
     assert len(windows) == 1, plan
-    assert re.search(r"(?<!_)_tb1#", windows[0]) and re.search(r"(?<!_)_tb2#", windows[0])
+    assert re.search(r"(?<!_)_tb#", windows[0]), windows[0]
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_lww_dedup_plan_one_exchange_one_window(spark):
     """cdc.apply.lww_dedup ranks through the engine's one LWW window
     (lake.table._lww_top1): ONE Exchange on the keys' radix prefix and
-    the keys, ONE Window, and the tie-break limbs hash JVM-side (no
+    the keys, ONE Window, and the tie-break hashes JVM-side (no
     Python evaluation)."""
     from oregonwaterdataportal_etl_spark.cdc import lww_dedup
     from oregonwaterdataportal_etl_spark.cdc.changegen import generate_changes_pdf
@@ -184,11 +184,11 @@ def _batch_exchange(tree: str, details: str) -> tuple[str, list[str]]:
 
 def _assert_exchange_ships_the_payload(tree: str, details: str) -> None:
     """The batch's exchange carries the tagged payload, __lsn and the op
-    code, and nothing derived from them: the tie-break limbs and the
+    code, and nothing derived from them: the tie-break and the
     window's radix prefix are hashed above it."""
     shipped, below = _batch_exchange(tree, details)
     assert "__lsn" in shipped and "__op" in shipped, shipped
-    for derived in ("__tb1", "__tb2", "__kh"):
+    for derived in ("__tb", "__kh"):
         assert derived not in shipped, shipped
     for block in below:
         assert "xxhash64(" not in block and "md5(" not in block, block
@@ -294,7 +294,7 @@ def test_partitioned_merge_plans_never_shuffle_the_base(spark, tmp_path):
 def test_mor_merge_write_plan_ships_only_the_payload(spark, tmp_path):
     """The MOR append's one exchange (the batch's repartition before its
     LWW dedup) carries the tagged payload — declared dict columns as
-    codes — __lsn and the op code; the limbs, the radix prefix and the
+    codes — __lsn and the op code; the tie-break, the radix prefix and the
     dict decode are computed above it."""
     from oregonwaterdataportal_etl_spark.cdc.changegen import (
         TRANSCRIPT_DICT_COLS,

@@ -1146,7 +1146,7 @@ def test_watermark_concurrent_update_retries(spark, tmp_path):
 def test_equal_lsn_tiebreak_across_cow_batches(spark, tmp_path):
     """Review finding (round 3): a cross-batch same-(key,lsn) tie must
     resolve identically whether the earlier event already reached the
-    BASE (COW, limbs persisted in base files) or sits in a delta (MOR)
+    BASE (COW, tie-break persisted in base files) or sits in a delta (MOR)
     — mode-, batching- and compaction-independent, matching the oracle.
     Pre-fix, COW let the base row win ties via the src bit, so merge
     order decided the winner."""
@@ -1165,8 +1165,8 @@ def test_equal_lsn_tiebreak_across_cow_batches(spark, tmp_path):
             f"COW cross-batch tie winner depends on merge order ({i})"
         )
         # and one more rematch after the state settled: re-merging the
-        # LOSER again stays a no-op (its limbs lose to the persisted
-        # winner limbs)
+        # LOSER again stays a no-op (its tie-break loses to the persisted
+        # winner's)
         loser = rows[0] if expected != rows[0][5] else rows[1]
         t.merge(spark.createDataFrame([loser], schema=CHANGE_SCHEMA))
         assert [r["text"] for r in t.read(spark).collect()] == [expected]

@@ -336,7 +336,7 @@ def test_watermark_legacy_vdir_swept_after_supersession(spark, tmp_path):
 def test_rebucket_preserves_state_and_serves_new_layout(spark, tmp_path):
     """Bucket-count evolution: rebucket(4 -> 8) must preserve the
     resolved row set bit-exactly WITH pending MOR deltas and tombstones
-    in flight, re-home every stored artifact (lsn, limbs, delta ops)
+    in flight, re-home every stored artifact (lsn, tie-break, delta ops)
     into the new layout, keep lookup() and the zero-exchange paths
     working at the new count, reject a stale-count WAL loudly, and read
     as file churn (not a data change) to ANN staleness."""
